@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.LongInputTypes
 import org.apache.spark.sql.types._
 
 /** Bounded top-k aggregate over (score: long, id: long) pairs, ordered
@@ -20,6 +21,9 @@ import org.apache.spark.sql.types._
   * buffer; the built-in struct-sort alternatives (`slice(array_sort(
   * collect_list(...)))`) still gather ALL candidates into one aggregation
   * buffer. This keeps O(k) state per group at every stage.
+  *
+  * Both inputs must be LONG: any other type fails analysis (a data type
+  * mismatch), never a ClassCastException inside a task.
   */
 case class TopKAgg(
     score: Expression,
@@ -27,7 +31,7 @@ case class TopKAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKAgg.Buffer] {
+  extends TypedImperativeAggregate[TopKAgg.Buffer] with LongInputTypes {
 
   require(k > 0, s"TopKAgg: k must be positive, got $k")
 

@@ -2,6 +2,8 @@ package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
@@ -30,8 +32,20 @@ import scala.jdk.CollectionConverters._
   * from the Parquet footers). Files are written sorted by `_hkey` and split
   * at `targetFileRows`, so each covers a narrow, disjoint key slice — the
   * copy-on-write unit shrinks from a whole bucket to the files actually
-  * containing delta keys. A manifest never requires listing directories: all
-  * reads plan from the snapshot JSON alone.
+  * containing delta keys.
+  *
+  * Base-file reads plan from the snapshot's manifests alone: every scan goes
+  * through a [[ManifestFileIndex]] built from the manifest entries (path,
+  * bucket, `_hkey` range, byte size), so no data directory is listed and no
+  * file is statted. A read whose filter pins one key with
+  * `repo = '<r>' AND path = '<p>'` opens only the files that can hold it:
+  * bucket label == bucket(r, p) and minKey <= xxhash64(r, p) <= maxKey — the
+  * test the copy-on-write merge already uses to pick files to rewrite. Any
+  * other filter reads every selected file. Merge-on-read DELTA files are
+  * still listed and read through Spark's file source (their reads infer a
+  * merged schema), and key filters do not reach the base files a MOR read
+  * joins against deltas (its `coalesce(d.repo, b.repo)` projection blocks
+  * them).
   *
   * Every data file carries three internal columns beyond the user schema:
   * `_seq` (log sequence number of the last writer — LWW conflict resolution),
@@ -60,7 +74,7 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     * deterministic across sessions, so bucketing is stable for the table's
     * lifetime. */
   def bucketExpr(repo: Column, path: Column): Column =
-    pmod(hash(repo, path), lit(snap.numBuckets))
+    LakeTable.bucketExpr(repo, path, snap.numBuckets)
 
   /** file-pruning / sort key — independent of the bucket hash (xxhash64 vs
     * Murmur3), so within a bucket the key space is uniformly covered. */
@@ -86,7 +100,9 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
   /** Internal read of selected manifest files: current-schema columns + _seq +
     * _deleted, tombstones included. Old-schema files are mapped to the
     * current schema BY COLUMN ID (rename-safe) with Catalyst-safe casts
-    * (widen-safe); columns missing from a file read as null. */
+    * (widen-safe); columns missing from a file read as null. Each schema
+    * group scans through a [[ManifestFileIndex]]: no listing, and a filter
+    * pinning one (repo, path) key reads only the files that can hold it. */
   def readInternal(s: Snapshot, files: Seq[DataFile]): DataFrame = {
     val cur = s.schema
     val groups = files.groupBy(_.schemaId)
@@ -98,9 +114,12 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
           case None => lit(null).cast(TableSchema.toSpark(c.dataType)).as(c.name)
         }
       } ++ Seq(col("_seq"), col("_deleted"))
-      spark.read
-        .schema(StructType(fileSchema.sparkType.fields ++ LakeTable.internalFields))
-        .parquet(fs.map(f => resolve(f.path)): _*)
+      // file columns read as nullable, as every file source reads them
+      val dataSchema = StructType((fileSchema.sparkType.fields ++ LakeTable.internalFields)
+        .map(_.copy(nullable = true)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+          new ManifestFileIndex(this, s.numBuckets, fs), new StructType(), dataSchema,
+          None, new ParquetFileFormat, Map.empty)(spark))
         .select(projection: _*)
     }
     parts.reduceOption(_ unionByName _).getOrElse(emptyInternal(cur))
@@ -425,6 +444,10 @@ object LakeTable {
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(16,
         (r: Runnable) => { val t = new Thread(r, "lake-meta"); t.setDaemon(true); t }))
+
+  /** bucket assignment under `numBuckets`: pmod(Murmur3 hash(repo, path), n). */
+  def bucketExpr(repo: Column, path: Column, numBuckets: Int): Column =
+    pmod(hash(repo, path), lit(numBuckets))
 
   val SeqCol = "_seq"
   val DeletedCol = "_deleted"

@@ -108,7 +108,7 @@ object Maintenance {
     val spark = table.spark
     val base = table.readInternal(snap, snap.files)
     // the NEW bucket function — table.bucketExpr still reads the old count
-    val newBucket = pmod(hash(col("repo"), col("path")), lit(newBuckets))
+    val newBucket = LakeTable.bucketExpr(col("repo"), col("path"), newBuckets)
     val routed = base
       .withColumn("_bucket", newBucket)
       .withColumn(LakeTable.HkeyCol, table.hkeyExpr(col("repo"), col("path")))

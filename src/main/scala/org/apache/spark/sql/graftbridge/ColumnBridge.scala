@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, LongType}
 
 /** Spark 4's public `Column` wraps a Connect-compatible ColumnNode and no
   * longer exposes its catalyst Expression; the classic-runtime converter
@@ -15,4 +16,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** `ExpectsInputTypes` requiring every child to be LONG, for engine
+  * expressions outside `org.apache.spark.sql` (`AbstractDataType`, the type
+  * of `inputTypes`, is `private[sql]`). A mismatch fails analysis. */
+trait LongInputTypes extends ExpectsInputTypes { self: Expression =>
+  override def inputTypes: Seq[AbstractDataType] = children.map(_ => LongType)
 }

@@ -52,6 +52,16 @@ class KernelParitySpec extends AnyFunSuite {
     assert(got === Set((1L, 10L, 1), (1L, 11L, 2), (2L, 20L, 1)))
   }
 
+  test("TopKAgg rejects a non-long score at analysis, before any job runs") {
+    val df = Seq((1L, 10L, "5")).toDF("g", "item", "score")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      // analysis is eager: the error surfaces while the frame is built
+      df.groupBy(col("g")).agg(TopKAgg.topK(col("score"), col("item"), 2).as("tk"))
+    }
+    assert(e.getCondition === "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+    assert(e.getMessage.contains("bounded_topk"), e.getMessage)
+  }
+
   test("VecSumAgg == per-dimension sum(round(x*1e6)) incl. nulls and short vectors") {
     val dims = 5
     val vecs = spark.range(0L, 400L).select(col("id"),
