@@ -326,5 +326,5 @@ object Main {
       |  version
       |env: GRAFT_MOR=0 (opt run/tail back into copy-on-write; merge-on-read is the default),
       |     GRAFT_SIGSTORE=<dir> (maintain a near-dup signature store from run/tail/replay),
-      |     GRAFT_HTTP_PORT=<p> (tail control plane), SPARK_GRAFT_CPUS, GRAFT_PROF""".stripMargin)
+      |     GRAFT_HTTP_PORT=<p> (tail control plane), SPARK_GRAFT_CPUS""".stripMargin)
 }

@@ -1,8 +1,9 @@
 package graft.ingest
 
-import graft.lake.LakeTable
+import graft.functions.PartitionLongAgg
+import graft.lake.{ImageBinding, LakeTable, Snapshot}
 import graft.model.Ops
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,21 +21,22 @@ import org.apache.spark.sql.types._
   * DDL's `seq`, rows below it apply under the old schema, then the schema
   * evolves (a schema-only snapshot commit), then the rest applies.
   *
-  * Job economy (scale note): one batch costs exactly TWO distributed jobs —
-  * a per-partition stats pass (counts, high-water marks, dead-letter counts,
-  * and affected-bucket discovery via collect_set) and the dedup→merge→write
-  * pipeline (lineage metrics ride it via Dataset.observe) — plus tiny
-  * driver-side footer reads and a JSONL lineage append. No per-event driver
-  * work, no collect of event data.
+  * One flow serves both write modes: stats → dead letters → segments (split
+  * only at barrier DDLs) → writer per segment (COW `MergeApply.merge`, or the
+  * MOR delta commit) → one finish step (metrics, lineage, `_pending` drain).
+  *
+  * Job economy (scale note): a batch runs ONE stats aggregate — counts, the
+  * fence and per-partition event counts, the DDL list and, on a table with
+  * files, the file selection — and ONE dedup→merge→write pipeline, plus tiny
+  * driver-side footer reads and a JSONL lineage append. Counted in Spark
+  * jobs (AQE runs each exchange's map stage as its own job; pinned by
+  * ApplyPipelineSpec): 5 for a fresh-table batch with or without commuting
+  * DDLs (stats 2, insert-only write 3), 6 for a small batch merged into a
+  * table with files, and 2 for a merge-on-read micro-batch, whose stats ride
+  * the delta write as an Observation. Barrier DDLs add a selection pass and
+  * a merge per segment. No per-event driver work, no collect of event data.
   */
 object Ingest {
-
-  private val prof = sys.env.contains("GRAFT_PROF")
-  private def timed[T](name: String)(f: => T): T =
-    if (!prof) f else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[prof-ingest] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
 
   final case class IngestConfig(
       filter: FilterChain = FilterChain.passAll,
@@ -173,7 +175,7 @@ object Ingest {
 
   /** Condition marking a row as NOT applicable under the current schema: a
     * non-null value in an image field the schema cannot resolve. */
-  private def holdCondition(unresolved: Set[String]): org.apache.spark.sql.Column =
+  private def holdCondition(unresolved: Set[String]): Column =
     unresolved.toSeq.sorted.map(f => col(s"after.$f").isNotNull)
       .reduceOption(_ || _).getOrElse(lit(false))
 
@@ -185,7 +187,7 @@ object Ingest {
     * when deltas fold into base. */
   private[ingest] def holdBack(table: LakeTable, seg: DataFrame, imageFields: Set[String],
       batchId: Long, segIdx: Int): (DataFrame, Long) = {
-    val unresolved = MergeApply.bindImageFields(table.snapshot, imageFields)._2
+    val unresolved = ImageBinding.bind(table.snapshot, imageFields)._2
     if (unresolved.isEmpty) return (seg, 0L)
     val cond = holdCondition(unresolved)
     val held = seg.filter(cond)
@@ -208,17 +210,13 @@ object Ingest {
     import java.nio.file.Files
     val root = pendingRoot(table)
     if (!Files.isDirectory(root)) return 0L
-    val subdirs = graft.lake.LakeTable.listDir(root).filter(Files.isDirectory(_))
+    val subdirs = LakeTable.listDir(root).filter(Files.isDirectory(_))
     if (subdirs.isEmpty) return 0L
     val spark = table.spark
     val all = subdirs
       .map(d => spark.read.parquet(d.toString))
       .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    val imageFields: Set[String] = all.schema("after").dataType match {
-      case s: StructType => s.fieldNames.toSet
-      case _ => Set.empty
-    }
-    val unresolved = MergeApply.bindImageFields(table.snapshot, imageFields)._2
+    val unresolved = ImageBinding.bind(table.snapshot, ImageBinding.imageFields(all))._2
     val cond = holdCondition(unresolved)
     val resolvable = all.filter(!cond)
     val nResolvable = resolvable.count()
@@ -243,13 +241,12 @@ object Ingest {
       table: LakeTable,
       batch: DataFrame,
       batchId: Long = -1L,
-      cfg: IngestConfig = IngestConfig()): BatchMetrics = timed(s"batch-$batchId-total") {
-    val spark = table.spark
+      cfg: IngestConfig = IngestConfig()): BatchMetrics = {
     val snap0 = table.refresh()
 
     if (batchId >= 0 && batchId <= snap0.committedBatchId) {
       // foreachBatch retry of an already-committed batch: exact no-op.
-      return BatchMetrics(batchId, 0, 0, 0, 0, 0, 0, 0, 0, snap0.version)
+      return idle(batchId, snap0.version)
     }
 
     // Termination-tick fast path: Trigger.AvailableNow delivers one final
@@ -259,516 +256,237 @@ object Ingest {
     // job, write job, footer list) collapses to one fence-only commit that
     // still records the batchId for the exactly-once fence.
     if (batchIsPlanEmpty(batch)) {
-      graft.lake.LakeTable.withCommitRetry(table)(table.commit(
+      LakeTable.withCommitRetry(table)(table.commit(
         Set.empty, Seq.empty, Map.empty,
         Map("eventsSeen" -> 0L, "batches" -> 1L), batchId))
-      return BatchMetrics(batchId, 0, 0, 0, 0, 0, 0, 0, 0, table.snapshot.version)
+      return idle(batchId, table.snapshot.version)
     }
 
-    // Merge-on-read batches take a dedicated fused path: ONE distributed job
-    // per micro-batch (appends are schema-agnostic, so no probe/barrier pass
-    // is needed — see applyBatchMor).
-    if (cfg.morMode) return applyBatchMor(table, batch, batchId, cfg)
-
-    // predicate pieces (pure Columns — composed into ONE stats pass)
-    // try_element_at: a partition absent from the fence map must read as
-    // "no fence" (null→-1), not an ANSI MAP_KEY_DOES_NOT_EXIST error
+    // predicate pieces, built once (pure Columns). try_element_at: a
+    // partition absent from the fence map must read as "no fence"
+    // (null→-1), not an ANSI MAP_KEY_DOES_NOT_EXIST error
     val fenceCol =
       if (snap0.fence.isEmpty) lit(-1L)
       else coalesce(try_element_at(typedLit(snap0.fence), col("partition")), lit(-1L))
-    val pastFence = col("offset") > fenceCol
     // row-level fence filtering only under an ordered-delivery contract
-    val unfenced = if (cfg.orderedDelivery) pastFence else lit(true)
+    val unfenced = if (cfg.orderedDelivery) col("offset") > fenceCol else lit(true)
     val err = Validate.errorExpr
-    val isRowOp = col("op").isin(Ops.rowOps.toSeq: _*)
-    val passes = cfg.filter.expr
+    val validRow = err.isNull && col("op").isin(Ops.rowOps.toSeq: _*) && cfg.filter.expr
+    val isLiveRow = unfenced && validRow
+    val isDeadLetter = unfenced && err.isNotNull
 
-    // opt-in signature-store maintenance rides the batch BEFORE the merge
+    // opt-in signature-store maintenance rides the batch BEFORE the apply
     // (same filter chain as the table; fence filtering is unnecessary —
     // re-delivered old events append below the head seq, which reads drop)
-    cfg.sigStoreDir.foreach(d => timed(s"batch-$batchId-sigstore")(
-      graft.operators.SigStore.maintainFromEvents(
-        d, batch.filter(err.isNull && isRowOp && passes), cfg.sigStoreCfg)))
+    cfg.sigStoreDir.foreach(d =>
+      graft.operators.SigStore.maintainFromEvents(d, batch.filter(validRow), cfg.sigStoreCfg))
 
-    // Deliberately NOT persisting the batch: for parquet-backed micro-batches
-    // a columnar cache build costs far more than the two vectorized re-scans
-    // this pipeline does (one stats pass, one dedup pass) — measured 4×
-    // slower with persist at 2M events.
-    val cached = batch
+    // The batch's statistics: ONE global aggregate (counts, the fence and
+    // per-partition event counts, and the — rare, tiny — DDL list). COW
+    // runs it as its own job; MOR observes it on the delta write's scan.
+    val statAggs = Seq(
+      count(lit(1)).as("total"),
+      sum(when(unfenced, 1L).otherwise(0L)).as("unfenced"),
+      sum(when(isDeadLetter, 1L).otherwise(0L)).as("deadLetters"),
+      sum(when(isLiveRow, 1L).otherwise(0L)).as("rows"),
+      sum(when(isLiveRow && col("op") === Ops.Delete, 1L).otherwise(0L)).as("deletes"),
+      collect_list(when(unfenced && err.isNull && col("op") === Ops.Ddl,
+        struct(col("seq"), col("ddl")))).as("ddls"),
+      PartitionLongAgg.partitionMax(col("partition"), col("offset")).as("fence"),
+      PartitionLongAgg.partitionSum(col("partition"), lit(1L)).as("perPartRows"))
+    val imageFields = ImageBinding.imageFields(batch)
+    val (stats, write) =
+      if (cfg.morMode) morWriter(table, batch, batchId, cfg, statAggs, isLiveRow)
+      else cowWriter(table, snap0, batch, batchId, cfg, statAggs, isLiveRow, imageFields)
 
-    // ---- fresh-table fast path (initial load / bulk replay) --------------
-    // With no manifest files there is nothing to select, so the expensive
-    // per-partition stats scan is unnecessary: a NARROW probe job (op, seq,
-    // ddl + one leaf per image struct — nested schema pruning keeps content
-    // out) collects DDLs and counts, and the fence/per-partition stats ride
-    // the merge job itself via Dataset.observe (PartitionLongAgg). One full
-    // scan per batch saved — at bulk-replay scale that is ~30% of wall-clock
-    // and DRAM traffic.
-    if (snap0.files.isEmpty) {
-      val isLiveRow = unfenced && err.isNull && isRowOp && passes
-      val probe = timed("probe-job")(cached.select(
-        count(lit(1)).as("total"),
-        sum(when(pastFence, 1L).otherwise(0L)).as("pastFence"),
-        sum(when(unfenced && err.isNotNull, 1L).otherwise(0L)).as("dl"),
-        sum(when(isLiveRow, 1L).otherwise(0L)).as("nrows"),
-        collect_list(when(unfenced && err.isNull && col("op") === Ops.Ddl,
-          struct(col("seq"), col("ddl")))).as("ddls"))
-        .collect()(0))
-      def pL(i: Int): Long = if (probe.isNullAt(i)) 0L else probe.getLong(i)
-      val total = pL(0); val pastFenceN = pL(1); val dlCount = pL(2); val rowCount = pL(3)
-      val unfencedN = if (cfg.orderedDelivery) pastFenceN else total
-      val ddls = probe.getSeq[Row](4).map(r => (r.getLong(0), r.getStruct(1))).sortBy(_._1)
-      val imageFields: Set[String] = cached.schema("after").dataType match {
-        case s: StructType => s.fieldNames.toSet
-        case _ => Set.empty
+    if (stats.deadLetters > 0) appendDeadLetters(table, batch.filter(isDeadLetter), batchId)
+
+    // A DDL only needs a BARRIER (batch split before/after it) when it
+    // touches a column the row images actually carry — otherwise it
+    // commutes with row application: add_column of a fresh column reads
+    // null either way; widen/rename of a column no image mentions produces
+    // the same bytes whether existing values are cast/renamed before or
+    // after the rows merge (updates preserve uncarried columns). Splitting
+    // costs a full scan+dedup+merge PER SEGMENT, so recognizing commuting
+    // DDLs keeps a schema-evolving replay at O(one merge) instead of
+    // O(#DDLs) merges. MOR never splits: delta appends store events
+    // schema-agnostically and bind image fields at read/fold time, so the
+    // schema-only DDL commits simply land before the data commit (a crash
+    // between them re-runs the batch and re-skips the applied DDL).
+    val rowEvents = batch.filter(isLiveRow)
+    val results =
+      if (cfg.morMode || !stats.ddls.exists { case (_, ddl) => isBarrier(ddl, imageFields) }) {
+        stats.ddls.foreach { case (ddlSeq, ddl) => applyDdl(table, ddlSeq, ddl) }
+        Seq(write(rowEvents, stats.fence, whole = true, last = true))
+      } else {
+        var lower = Long.MinValue
+        stats.ddls.map { case (ddlSeq, ddl) =>
+          val r = write(rowEvents.filter(col("seq") > lower && col("seq") < ddlSeq),
+            Map.empty, whole = false, last = false)
+          applyDdl(table, ddlSeq, ddl)
+          lower = ddlSeq
+          r
+        } :+ write(rowEvents.filter(col("seq") > lower), stats.fence, whole = false, last = true)
       }
-      def isBarrier(ddl: Row): Boolean = {
-        def s(name: String): String = {
-          val i = ddl.fieldIndex(name)
-          if (ddl.isNullAt(i)) null else ddl.getString(i)
-        }
-        imageFields.contains(s("column")) ||
-          (s("kind") == "rename_column" && imageFields.contains(s("newName")))
-      }
-      if (ddls.forall { case (_, ddl) => !isBarrier(ddl) }) {
-        if (dlCount > 0) appendDeadLetters(table, cached.filter(unfenced && err.isNotNull), batchId)
-        ddls.foreach { case (ddlSeq, ddl) =>
-          if (ddlSeq > table.snapshot.ddlSeq) applyDdl(table, ddlSeq, ddl)
-        }
-        val extra = Map("deadLetters" -> dlCount, "eventsSeen" -> total)
-        val (bm, fenceDelta, perPartRows) =
-          if (rowCount == 0) {
-            // nothing to merge: fence via a tiny dedicated agg, fence-only commit
-            val f = cached.groupBy(col("partition")).agg(
-              max(col("offset")).as("m"),
-              sum(when(isLiveRow, 1L).otherwise(0L)).as("n")).collect()
-            val fence = f.map(r => r.getInt(0) -> r.getLong(1)).toMap
-            val rows = f.map(r => r.getInt(0) -> (if (r.isNullAt(2)) 0L else r.getLong(2))).toMap
-            // fence-only commit is snapshot-independent — pure re-commit on a race
-            graft.lake.LakeTable.withCommitRetry(table)(
-              table.commit(Set.empty, Seq.empty, fence, extra + ("batches" -> 1L), batchId))
-            (BatchMetrics(batchId, total, dlCount,
-              math.max(unfencedN - dlCount - ddls.length - rowCount, 0),
-              total - unfencedN, 0, 0, 0, ddls.length, table.snapshot.version),
-              fence, rows)
-          } else {
-            val obs = org.apache.spark.sql.Observation(s"ingest-${java.util.UUID.randomUUID()}")
-            // perPartRows counts RAW events per partition (not live rows):
-            // re-evaluating the validity predicate inside an interpreted
-            // per-row aggregate would cost more than the statistic is worth
-            val observed = cached.observe(obs,
-              graft.functions.PartitionLongAgg.partitionMax(col("partition"), col("offset")).as("fence"),
-              graft.functions.PartitionLongAgg.partitionSum(col("partition"), lit(1L)).as("perPartRows"))
-            val rowEvents0 = observed.filter(unfenced && err.isNull && isRowOp && passes)
-            // rows whose image fields outran their DDL wait in _pending
-            val (rowEvents, heldN) = holdBack(table, rowEvents0, imageFields, batchId, 0)
-            def obsFence: Map[Int, Long] =
-              graft.functions.PartitionLongAgg.metricMap(obs.get.apply("fence"))
-            if (heldN == rowCount) {
-              // EVERY live row was held back: no merge (an all-empty observed
-              // merge risks AQE pruning the metrics node); the hold-back count
-              // job already ran the observed scan, so the fence is available
-              val fence = obsFence
-              val rows = graft.functions.PartitionLongAgg.metricMap(obs.get.apply("perPartRows"))
-              graft.lake.LakeTable.withCommitRetry(table)(table.commit(
-                Set.empty, Seq.empty, fence,
-                extra + ("batches" -> 1L, "pendingHeldBack" -> heldN), batchId))
-              (BatchMetrics(batchId, total, dlCount,
-                math.max(unfencedN - dlCount - ddls.length - rowCount, 0),
-                total - unfencedN, 0, 0, 0, ddls.length, table.snapshot.version),
-                fence, rows)
-            } else {
-              val deduped =
-                if (cfg.saltedDedup > 1) Dedup.lastWriterPerKeySalted(rowEvents, cfg.saltedDedup)
-                else Dedup.lastWriterPerKey(rowEvents)
-              val extraM =
-                if (heldN > 0) extra + ("pendingHeldBack" -> heldN) else extra
-              val r =
-                MergeApply.merge(table, deduped,
-                  fenceDelta = obsFence, batchId = batchId, salt = cfg.salt,
-                  extraMetrics = extraM,
-                  selection = Some(MergeApply.FileSelection(
-                    Seq.empty, (0 until table.numBuckets).toSet, rowCount - heldN)))
-              val fence = obsFence
-              val rows = graft.functions.PartitionLongAgg.metricMap(obs.get.apply("perPartRows"))
-              (BatchMetrics(batchId, total, dlCount,
-                math.max(unfencedN - dlCount - ddls.length - rowCount, 0),
-                total - unfencedN, r.eventsApplied, r.tombstonesWritten, r.conflictsLww,
-                ddls.length, table.snapshot.version),
-                fence, rows)
-            }
-          }
-        timed("lineage-append")(appendLineage(table, bm, fenceDelta, perPartRows))
-        drainPending(table)
-        return bm
-      }
-      // barrier DDL on a fresh table: fall through to the stats path below
+
+    val bm = BatchMetrics(batchId, stats.total, stats.deadLetters,
+      math.max(stats.unfenced - stats.deadLetters - stats.ddls.length - stats.rows, 0),
+      stats.total - stats.unfenced, results.map(_.eventsApplied).sum,
+      results.map(_.tombstonesWritten).sum, results.map(_.conflictsLww).sum,
+      stats.ddls.length, table.snapshot.version)
+    appendLineage(table, bm, stats.fence, stats.perPartRows)
+    drainPending(table)
+    bm
+  }
+
+  private def idle(batchId: Long, version: Long): BatchMetrics =
+    BatchMetrics(batchId, 0, 0, 0, 0, 0, 0, 0, 0, version)
+
+  /** Applies one segment of a batch: its rows, the fence to commit with it,
+    * whether it is the whole batch, and whether it is the batch's last. */
+  private trait SegmentWriter {
+    def apply(seg: DataFrame, fence: Map[Int, Long], whole: Boolean,
+        last: Boolean): MergeApply.MergeResult
+  }
+
+  /** A batch's statistics, read from the `statAggs` row or observation. */
+  private final case class BatchStats(m: Map[String, Any]) {
+    private def long(name: String): Long = MergeApply.longMetric(m, name)
+    private def seq(name: String): Seq[Any] = m.get(name) match {
+      case Some(s: scala.collection.Seq[_]) => s.toSeq
+      case _ => Seq.empty
     }
+    val total: Long = long("total"); val unfenced: Long = long("unfenced")
+    val deadLetters: Long = long("deadLetters")
+    val rows: Long = long("rows"); val deletes: Long = long("deletes")
+    val ddls: Seq[(Long, Row)] =
+      seq("ddls").collect { case r: Row => (r.getLong(0), r.getStruct(1)) }.sortBy(_._1)
+    val fence: Map[Int, Long] = PartitionLongAgg.metricMap(m.getOrElse("fence", null))
+    val perPartRows: Map[Int, Long] = PartitionLongAgg.metricMap(m.getOrElse("perPartRows", null))
+    // COW selection stats (present only on a table with files)
+    def buckets: Set[Int] = seq("buckets").collect { case b: Int => b }.toSet
+    def keys: Long = math.min(rows, long("keys"))
+    def hits: Seq[Int] = seq("hits")
+      .flatMap { case s: scala.collection.Seq[_] => s.collect { case i: Int => i } }
+      .distinct.sorted
+  }
 
-    locally {
-      // ---- single per-partition stats job (counts + high-water marks +
-      //      affected buckets + hit manifest files for the COW pruning) ----
-      val isLiveRow = unfenced && err.isNull && isRowOp && passes
-      val bucketOf = pmod(hash(col("repo"), col("path")), lit(table.numBuckets))
-      val hkeyOf = xxhash64(col("repo"), col("path"))
-      val baseAggs = Seq(
-        count(lit(1)).as("total"),
-        max(col("offset")).as("maxOff"),
-        sum(when(pastFence, 1L).otherwise(0L)).as("unfenced"),
-        sum(when(unfenced && err.isNotNull, 1L).otherwise(0L)).as("dl"),
-        sum(when(unfenced && err.isNull && col("op") === Ops.Ddl, 1L).otherwise(0L)).as("nddl"),
-        sum(when(isLiveRow, 1L).otherwise(0L)).as("nrows"),
-        collect_set(when(isLiveRow, bucketOf)).as("buckets"),
+  private def statsJob(batch: DataFrame, aggs: Seq[Column]): BatchStats = {
+    val r = batch.agg(aggs.head, aggs.tail: _*).collect()(0)
+    BatchStats(r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+  }
+
+  private def dedup(rows: DataFrame, cfg: IngestConfig): DataFrame =
+    if (cfg.saltedDedup > 1) Dedup.lastWriterPerKeySalted(rows, cfg.saltedDedup)
+    else Dedup.lastWriterPerKey(rows)
+
+  /** Copy-on-write: the stats job also selects the whole batch's files.
+    * With no files yet that is strategy 1 (insert-only into every bucket)
+    * with no selection columns at all; otherwise the live rows' buckets,
+    * distinct keys and hit files (the latter through a second narrow job
+    * when the manifest is too large for a plan literal — plan size must stay
+    * O(1) in the file count). Each segment holds back rows whose image
+    * fields the current schema cannot resolve, dedups, and merges. */
+  private def cowWriter(table: LakeTable, snap0: Snapshot, batch: DataFrame, batchId: Long,
+      cfg: IngestConfig, statAggs: Seq[Column], isLiveRow: Column,
+      imageFields: Set[String]): (BatchStats, SegmentWriter) = {
+    val bucketOf = table.bucketExpr(col("repo"), col("path"))
+    val hkeyOf = table.hkeyExpr(col("repo"), col("path"))
+    val literalHits = MergeApply.useLiteralManifest(snap0)
+    val selectionAggs =
+      if (snap0.files.isEmpty) Seq.empty
+      else Seq(collect_set(when(isLiveRow, bucketOf)).as("buckets"),
         // the merge joins the DEDUPED delta, so the broadcast-vs-shuffle
         // strategy must be sized by distinct KEYS, not raw events (a CDC
-        // batch re-touching hot keys dedups 10-100×). Summing per-partition
-        // approx counts can only OVER-estimate — errs toward the shuffle.
-        approx_count_distinct(when(isLiveRow, hkeyOf)).as("keys"))
-      // file hits ride the same pass when the manifest is small enough for
-      // the plan-literal lookup; a large manifest (10^5+ files at 100 TB)
-      // goes through a SECOND narrow job with a broadcast range join instead
-      // — plan size must stay O(1) in the file count
-      val literalHits =
-        snap0.files.nonEmpty && MergeApply.useLiteralManifest(snap0)
-      val aggs =
-        if (!literalHits) baseAggs
-        else baseAggs :+ collect_set(
-          when(isLiveRow, MergeApply.fileHitExpr(snap0, bucketOf, hkeyOf))).as("hits")
-      val stats = timed("stats-job")(cached.groupBy(col("partition"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect())
-      def sumL(i: Int): Long = stats.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
-      val total = sumL(1); val pastFenceN = sumL(3)
-      val unfencedN = if (cfg.orderedDelivery) pastFenceN else total
-      val dlCount = sumL(4); val ddlCount = sumL(5); val rowCount = sumL(6)
-      val fenceDelta: Map[Int, Long] =
-        stats.map(r => r.getInt(0) -> r.getLong(2)).toMap
-      val perPartRows: Map[Int, Long] =
-        stats.map(r => r.getInt(0) -> (if (r.isNullAt(6)) 0L else r.getLong(6))).toMap
-      val affectedBuckets: Set[Int] =
-        stats.flatMap(r => r.getSeq[Int](7)).toSet
-      // post-dedup sizing hints for the merge-strategy choice
-      val keysHint: Long =
-        math.min(rowCount, stats.map(r => if (r.isNullAt(8)) 0L else r.getLong(8)).sum)
-      // byte estimate WITHOUT touching the content column (an octet_length in
-      // the stats pass would defeat the scan's column pruning — measured 1.7×
-      // on bulk replay): compressed source-file bytes scaled by the dedup
-      // ratio. Underestimates by the compression ratio (~2-3× for text),
-      // which the 64 MB broadcast gate's headroom absorbs; the gate exists
-      // to stop multi-GB blob pathologies, not to be exact.
-      val bytesHint: Long = {
-        val src = try cached.inputFiles.map { f =>
+        // batch re-touching hot keys dedups 10-100×)
+        approx_count_distinct(when(isLiveRow, hkeyOf)).as("keys")) ++
+        (if (!literalHits) Seq.empty
+         else Seq(collect_set(when(isLiveRow,
+           MergeApply.fileHitExpr(snap0, bucketOf, hkeyOf))).as("hits")))
+    val stats = statsJob(batch, statAggs ++ selectionAggs)
+
+    // The batch-wide selection is exact only for the undivided batch with
+    // no rows held back; anything else re-selects inside merge.
+    def selection(rowsLeft: Long): Option[MergeApply.FileSelection] =
+      if (snap0.files.isEmpty)
+        Some(MergeApply.FileSelection(Seq.empty,
+          if (rowsLeft > 0) (0 until snap0.numBuckets).toSet else Set.empty, rowsLeft))
+      else if (rowsLeft < stats.rows) None
+      else {
+        val hitFiles =
+          if (literalHits) stats.hits.map(snap0.files)
+          else MergeApply.hitFiles(table, snap0, batch.filter(isLiveRow), bucketOf, hkeyOf)
+        // byte estimate WITHOUT touching the content column (an octet_length
+        // in the stats pass would defeat the scan's column pruning — measured
+        // 1.7× on bulk replay): compressed source-file bytes scaled by the
+        // dedup ratio. Underestimates by the compression ratio (~2-3× for
+        // text), which the 64 MB broadcast gate's headroom absorbs.
+        val src = try batch.inputFiles.map { f =>
           try java.nio.file.Files.size(java.nio.file.Paths.get(new java.net.URI(f)))
           catch { case _: Exception => 0L }
         }.sum catch { case _: Exception => -1L }
-        if (src >= 0 && total > 0) (src.toDouble * keysHint / total).toLong else -1L
-      }
-      val hitFiles: Seq[graft.lake.DataFile] =
-        if (snap0.files.isEmpty) Seq.empty
-        else if (literalHits)
-          stats.flatMap(_.getSeq[scala.collection.Seq[Int]](9).flatten)
-            .distinct.sorted.map(snap0.files)
-        else {
-          val byPath = snap0.files.iterator.map(f => f.path -> f).toMap
-          MergeApply.fileHitsDF(table, snap0,
-            cached.filter(unfenced && err.isNull && isRowOp && passes),
-            bucketOf, hkeyOf)
-            .collect().map(_.getString(0)).sorted.toSeq.map(byPath)
-        }
-
-      if (dlCount > 0) appendDeadLetters(table, cached.filter(unfenced && err.isNotNull), batchId)
-
-      val rowEvents = cached.filter(unfenced && err.isNull && isRowOp && passes)
-
-      var applied = 0L; var tombstones = 0L; var conflicts = 0L
-      var heldTotal = 0L; var segIdx = 0
-
-      val imageFieldsStats: Set[String] = cached.schema("after").dataType match {
-        case s: StructType => s.fieldNames.toSet
-        case _ => Set.empty
+        val bytesHint =
+          if (src >= 0 && stats.total > 0) (src.toDouble * stats.keys / stats.total).toLong else -1L
+        Some(MergeApply.FileSelection(hitFiles, stats.buckets, stats.keys, bytesHint))
       }
 
-      def mergeSegment(seg: DataFrame, fence: Map[Int, Long], isLast: Boolean,
-          wholeBatch: Boolean): Unit = {
-        // cross-batch DDL ordering: rows whose image fields the CURRENT
-        // schema (as of this segment) cannot resolve are held back durably
-        val (segLive, heldN) = holdBack(table, seg, imageFieldsStats, batchId, segIdx)
-        segIdx += 1; heldTotal += heldN
-        val deduped =
-          if (cfg.saltedDedup > 1) Dedup.lastWriterPerKeySalted(segLive, cfg.saltedDedup)
-          else Dedup.lastWriterPerKey(segLive)
-        // the stats pass discovered buckets/files for the WHOLE batch; that
-        // selection is exact only for the undivided batch (and only when no
-        // rows were held back). A DDL-split segment must discover its own
-        // selection (merge's fallback pass) or every segment would
-        // copy-on-write-rewrite every file the batch touches.
-        val selection =
-          if (!wholeBatch || heldN > 0) None
-          else Some(MergeApply.FileSelection(hitFiles, affectedBuckets, keysHint, bytesHint))
-        val extras =
-          if (!isLast) Map.empty[String, Long]
-          else {
-            val m = Map("deadLetters" -> dlCount, "eventsSeen" -> total)
-            if (heldTotal > 0) m + ("pendingHeldBack" -> heldTotal) else m
-          }
-        val r = MergeApply.merge(table, deduped, fence,
-          batchId = if (isLast) batchId else -1L, salt = cfg.salt,
-          extraMetrics = extras,
-          selection = selection)
-        applied += r.eventsApplied; tombstones += r.tombstonesWritten
-        conflicts += r.conflictsLww
-      }
-
-      // ---- DDL barriers (rare; collect is tiny by construction) ----
-      val ddls: Array[(Long, Row)] =
-        if (ddlCount == 0) Array.empty
-        else cached.filter(unfenced && err.isNull && col("op") === Ops.Ddl)
-          .select(col("seq"), col("ddl"))
-          .collect()
-          .map(r => (r.getLong(0), r.getStruct(1)))
-          .sortBy(_._1)
-
-      // A DDL only needs a BARRIER (batch split before/after it) when it
-      // touches a column the row images actually carry — otherwise it
-      // commutes with row application: add_column of a fresh column reads
-      // null either way; widen/rename of a column no image mentions produces
-      // the same bytes whether existing values are cast/renamed before or
-      // after the rows merge (updates preserve uncarried columns). Splitting
-      // costs a full scan+dedup+merge PER SEGMENT, so recognizing commuting
-      // DDLs keeps a schema-evolving replay at O(one merge) instead of
-      // O(#DDLs) merges.
-      def isBarrier(ddl: Row): Boolean = {
-        def s(name: String): String = {
-          val i = ddl.fieldIndex(name)
-          if (ddl.isNullAt(i)) null else ddl.getString(i)
-        }
-        imageFieldsStats.contains(s("column")) ||
-          (s("kind") == "rename_column" && imageFieldsStats.contains(s("newName")))
-      }
-
-      if (ddls.isEmpty) {
-        mergeSegment(rowEvents, fenceDelta, isLast = true, wholeBatch = true)
-      } else if (ddls.forall { case (_, ddl) => !isBarrier(ddl) }) {
-        // all DDLs commute with this batch's rows: schema-only commits in seq
-        // order, then ONE merge of the whole batch
-        ddls.foreach { case (ddlSeq, ddl) =>
-          if (ddlSeq > table.snapshot.ddlSeq) applyDdl(table, ddlSeq, ddl)
-        }
-        mergeSegment(rowEvents, fenceDelta, isLast = true, wholeBatch = true)
-      } else {
-        var lower = Long.MinValue
-        ddls.foreach { case (ddlSeq, ddl) =>
-          mergeSegment(rowEvents.filter(col("seq") > lower && col("seq") < ddlSeq),
-            Map.empty, isLast = false, wholeBatch = false)
-          // DDL fence: a retried batch skips DDL already in the schema log —
-          // per-op checks cannot recognize an add→widen→rename chain as done
-          if (ddlSeq > table.snapshot.ddlSeq) applyDdl(table, ddlSeq, ddl)
-          lower = ddlSeq
-        }
-        mergeSegment(rowEvents.filter(col("seq") > lower), fenceDelta,
-          isLast = true, wholeBatch = false)
-      }
-
-      val snap1 = table.snapshot
-      val bm = BatchMetrics(batchId, total, dlCount,
-        math.max(unfencedN - dlCount - ddlCount - rowCount, 0),
-        total - unfencedN, applied, tombstones, conflicts, ddls.length, snap1.version)
-      timed("lineage-append")(appendLineage(table, bm, fenceDelta, perPartRows))
-      drainPending(table)
-      bm
+    var segIdx = 0; var heldTotal = 0L
+    val write: SegmentWriter = (seg, fence, whole, last) => {
+      // cross-batch DDL ordering: rows whose image fields the CURRENT
+      // schema (as of this segment) cannot resolve are held back durably
+      val (live, heldN) =
+        if (stats.rows == 0) (seg, 0L) else holdBack(table, seg, imageFields, batchId, segIdx)
+      segIdx += 1; heldTotal += heldN
+      val extras =
+        if (!last) Map.empty[String, Long]
+        else Map("deadLetters" -> stats.deadLetters, "eventsSeen" -> stats.total) ++
+          (if (heldTotal > 0) Map("pendingHeldBack" -> heldTotal) else Map.empty)
+      MergeApply.merge(table, dedup(live, cfg), fence,
+        batchId = if (last) batchId else -1L, salt = cfg.salt, extraMetrics = extras,
+        selection = if (whole) selection(stats.rows - heldN) else None)
     }
+    (stats, write)
   }
 
-  /** Merge-on-read batch application — ONE distributed job per micro-batch.
-    *
-    * Why appends need no probe/barrier pass: a delta append stores EVENTS
-    * verbatim (repo, path, op, seq, after-image) — nothing is resolved
-    * against the schema at write time. All schema sensitivity lives at READ
-    * and FOLD time, where [[graft.lake.ImageBinding]] binds image fields
-    * through the schema log by column id (rename-safe) and `Mor.fold` holds
-    * back rows whose fields the schema STILL cannot resolve (the cross-batch
-    * DDL hole, handled once at the resolve point instead of per batch). So:
-    *
-    *  - counts, fence high-water marks, dead-letter counts, the batch's max
-    *    seq AND the (rare, tiny) DDL list all ride the append job as ONE
-    *    Observation on the source scan — no separate probe job;
-    *  - in-batch DDL ordering needs no barrier split: events commute with
-    *    schema-only commits because binding happens later. DDL schema
-    *    commits are applied (ddlSeq-fenced) BEFORE the data commit, so a
-    *    crash between them re-runs the batch and re-skips the applied DDL;
-    *  - the data commit (fence + batchId + delta files) remains the single
-    *    atomic exactly-once point, exactly like the COW path.
-    *
-    * Steady-state cost per micro-batch: one scan(+optional dedup shuffle) +
-    * flat parquet write + a handful of footer reads + one pointer commit. */
-  private def applyBatchMor(
-      table: LakeTable,
-      batch: DataFrame,
-      batchId: Long,
-      cfg: IngestConfig): BatchMetrics = timed(s"mor-batch-$batchId") {
-    val snap0 = table.snapshot
-    val fenceCol =
-      if (snap0.fence.isEmpty) lit(-1L)
-      else coalesce(try_element_at(typedLit(snap0.fence), col("partition")), lit(-1L))
-    val pastFence = col("offset") > fenceCol
-    val unfenced = if (cfg.orderedDelivery) pastFence else lit(true)
-    val err = Validate.errorExpr
-    val isRowOp = col("op").isin(Ops.rowOps.toSeq: _*)
-    val passes = cfg.filter.expr
-    val isLiveRow = unfenced && err.isNull && isRowOp && passes
-
-    // opt-in signature-store maintenance (see applyBatch; same semantics)
-    cfg.sigStoreDir.foreach(d => timed(s"mor-batch-$batchId-sigstore")(
-      graft.operators.SigStore.maintainFromEvents(
-        d, batch.filter(err.isNull && isRowOp && passes), cfg.sigStoreCfg)))
-
-    val obs = org.apache.spark.sql.Observation(s"mor-${java.util.UUID.randomUUID()}")
-    val observed = batch.observe(obs,
-      graft.functions.PartitionLongAgg.partitionMax(col("partition"), col("offset")).as("fence"),
-      graft.functions.PartitionLongAgg.partitionSum(col("partition"), lit(1L)).as("perPartRows"),
-      count(lit(1)).as("total"),
-      sum(when(pastFence, 1L).otherwise(0L)).as("pastFence"),
-      sum(when(unfenced && err.isNotNull, 1L).otherwise(0L)).as("dl"),
-      sum(when(isLiveRow, 1L).otherwise(0L)).as("nrows"),
-      sum(when(isLiveRow && col("op") === Ops.Delete, 1L).otherwise(0L)).as("ndel"),
-      max(when(isLiveRow, col("seq"))).as("maxSeq"),
-      collect_list(when(unfenced && err.isNull && col("op") === Ops.Ddl,
-        struct(col("seq"), col("ddl")))).as("ddls"))
-    val rowEvents = observed.filter(isLiveRow)
-    val payload0 =
-      if (!cfg.morDedupPerBatch)
-        rowEvents.select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
-      else if (cfg.saltedDedup > 1) Dedup.lastWriterPerKeySalted(rowEvents, cfg.saltedDedup)
-      else Dedup.lastWriterPerKey(rowEvents)
-    // Second observation ON THE WRITTEN PAYLOAD (post-dedup): the per-bucket
-    // histogram must count exactly the delta FILE contents so the snapshot's
-    // flatDeltaHist (fold scheduling, Snapshot.flatDeltaHist) stays exact.
-    // Same fused-job principle — conditional sums ride the write, no extra
-    // job. Disabled above HistMaxBuckets (Add(None) ⇒ scan fallback).
-    val histN =
-      if (!cfg.morBatchHistogram) 0
-      else if (snap0.numBuckets <= graft.lake.Snapshot.HistMaxBuckets) snap0.numBuckets else 0
-    val histObs = org.apache.spark.sql.Observation(s"mor-hist-${java.util.UUID.randomUUID()}")
+  /** Merge-on-read: the delta write IS the stats job — the stats aggregate
+    * rides its source scan as an Observation, so a micro-batch costs one
+    * distributed job (scan + optional dedup shuffle + flat parquet write).
+    * Its segment step is the commit of the already-written delta files.
+    * `eventsApplied`/`tombstonesWritten` count live events BEFORE the
+    * per-batch dedup (the delta files hold what survives it). */
+  private def morWriter(table: LakeTable, batch: DataFrame, batchId: Long, cfg: IngestConfig,
+      statAggs: Seq[Column], isLiveRow: Column): (BatchStats, SegmentWriter) = {
+    val obs = Observation(s"mor-${java.util.UUID.randomUUID()}")
+    val live = batch.observe(obs, statAggs.head, statAggs.tail: _*).filter(isLiveRow)
     val payload =
-      if (histN == 0) payload0
-      else {
-        val aggs = (0 until histN)
-          .map(i => sum(when(col("_hb") === i, 1L).otherwise(0L)).as(s"_h$i"))
-        payload0.withColumn("_hb", table.bucketExpr(col("repo"), col("path")))
-          .observe(histObs, aggs.head, aggs.tail: _*)
-          .drop("_hb")
-      }
-
-    // the write job IS the stats job (observation above rides its scan);
-    // an empty batch writes no files and the commit is fence-only
-    val commitDir = table.newCommitDataDir()
-    timed(s"mor-$batchId-write")(payload.write.mode("overwrite")
-      .options(Map("compression" -> MergeApply.deltaFileCodec,
-        "maxRecordsPerFile" -> snap0.targetFileRows.toString))
-      .parquet(commitDir))
-    val newDeltas = timed(s"mor-$batchId-footers")(table.listWrittenFilesFlat(commitDir, snap0.schemaId))
-
-    // timed read (MergeApply.observedMetrics): a pruned metrics node must
-    // surface loudly, never hang the stream. When the written payload is
-    // EMPTY (all rows fenced/filtered, or an empty trigger), AQE's
-    // empty-relation propagation can drop the CollectMetrics node and the
-    // observation comes back EMPTY — exactly the round-2 hazard the COW path
-    // dodges with its rowCount==0 special case. Those batches (and only
-    // those) fall back to one dedicated per-partition stats job.
-    // a blocked (never-delivering) observation surfaces as TimeoutException
-    // after 120s — treat like the empty case and recompute from the source
-    val mm0 = timed(s"mor-$batchId-obs")(try MergeApply.observedMetrics(obs)
-      catch { case _: java.util.concurrent.TimeoutException => Map.empty[String, Any] })
-    val mm: Map[String, Any] =
-      if (mm0.nonEmpty) mm0
-      else {
-        val rows = batch.groupBy(col("partition")).agg(
-          count(lit(1)).as("n"),
-          max(col("offset")).as("maxOff"),
-          sum(when(pastFence, 1L).otherwise(0L)).as("pastFence"),
-          sum(when(unfenced && err.isNotNull, 1L).otherwise(0L)).as("dl"),
-          sum(when(isLiveRow, 1L).otherwise(0L)).as("nrows"),
-          sum(when(isLiveRow && col("op") === Ops.Delete, 1L).otherwise(0L)).as("ndel"),
-          max(when(isLiveRow, col("seq"))).as("maxSeq"),
-          collect_list(when(unfenced && err.isNull && col("op") === Ops.Ddl,
-            struct(col("seq"), col("ddl")))).as("ddls")).collect()
-        def sumL(i: Int): Long = rows.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
-        Map(
-          "total" -> sumL(1),
-          "pastFence" -> sumL(3), "dl" -> sumL(4), "nrows" -> sumL(5), "ndel" -> sumL(6),
-          "maxSeq" -> rows.flatMap(r => if (r.isNullAt(7)) None else Some(r.getLong(7)))
-            .maxOption.getOrElse(-1L),
-          "fence" -> rows.map(r => r.getInt(0) -> r.getLong(2)).toMap,
-          "perPartRows" -> rows.map(r => r.getInt(0) -> r.getLong(1)).toMap,
-          "ddls" -> rows.flatMap(_.getSeq[Row](8)).toSeq)
-      }
-    def metricL(name: String): Long = mm.get(name) match {
-      case Some(v: Long) => v
-      case Some(v: java.lang.Long) => v.longValue()
-      case _ => if (name == "maxSeq") -1L else 0L
+      if (cfg.morDedupPerBatch) dedup(live, cfg)
+      else live.select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
+    val staged = MergeApply.writeDelta(table, payload, cfg.morBatchHistogram)
+    // When the payload is EMPTY (all rows fenced/filtered) AQE's empty-
+    // relation propagation can drop the CollectMetrics node and the
+    // observation comes back empty, or never arrives (timeout): those
+    // batches, and only those, run the same aggregate as its own job.
+    val observed = try MergeApply.observedMetrics(obs)
+      catch { case _: java.util.concurrent.TimeoutException => Map.empty[String, Any] }
+    val stats = if (observed.nonEmpty) BatchStats(observed) else statsJob(batch, statAggs)
+    val write: SegmentWriter = (_, fence, _, _) => {
+      MergeApply.commitDelta(table, staged, fence, batchId, Map(
+        "eventsApplied" -> stats.rows, "tombstonesWritten" -> stats.deletes,
+        "deadLetters" -> stats.deadLetters, "eventsSeen" -> stats.total))
+      MergeApply.MergeResult(stats.rows, stats.rows - stats.deletes, stats.deletes,
+        0, 0, 0, 0, staged.files.size)
     }
-    val total = metricL("total"); val dlCount = metricL("dl")
-    val rowCount = metricL("nrows"); val ndel = metricL("ndel")
-    val unfencedN = if (cfg.orderedDelivery) metricL("pastFence") else total
-    val fenceDelta = graft.functions.PartitionLongAgg.metricMap(mm("fence"))
-    val perPartRows = graft.functions.PartitionLongAgg.metricMap(mm("perPartRows"))
-    val ddls: Seq[(Long, Row)] = (mm("ddls") match {
-      case s: scala.collection.Seq[_] => s.collect { case r: Row => (r.getLong(0), r.getStruct(1)) }
-      case _ => Seq.empty
-    }).sortBy(_._1).toSeq
+    (stats, write)
+  }
 
-    if (dlCount > 0)
-      appendDeadLetters(table, batch.filter(unfenced && err.isNotNull), batchId)
-    // schema-only DDL commits FIRST (ddlSeq-fenced; see ordering note above)
-    ddls.foreach { case (ddlSeq, ddl) =>
-      if (ddlSeq > table.snapshot.ddlSeq) applyDdl(table, ddlSeq, ddl)
-    }
-    // delta files carry no bucket layout, so a racing rebucket cannot
-    // invalidate them — plain optimistic retry suffices for the data commit
-    val batchHist: Option[Map[Int, Long]] =
-      if (histN == 0 || newDeltas.isEmpty) None
-      else try {
-        val hm = MergeApply.observedMetrics(histObs)
-        if (hm.isEmpty) None // AQE empty-relation hazard: poison, scan fallback
-        else Some((0 until histN).iterator.map { i =>
-          i -> (hm.get(s"_h$i") match {
-            case Some(v: Long) => v
-            case Some(v: java.lang.Long) => v.longValue()
-            case _ => 0L
-          })
-        }.filter(_._2 > 0L).toMap)
-      } catch { case _: java.util.concurrent.TimeoutException => None }
-    timed(s"mor-$batchId-commit")(graft.lake.LakeTable.withCommitRetry(table) {
-      // the histogram was computed under snap0's bucket layout (_hb used
-      // table.bucketExpr at plan-build time); a rebucket racing this batch
-      // would land a histogram keyed to the OLD layout — same blast radius
-      // as a wrong-exact histogram. Recheck inside the retry and poison to
-      // scan fallback when the layout moved (mirrors RebucketedDuringAppend
-      // in appendDelta, which must redo the write; delta files themselves
-      // carry no layout so Add(None) suffices here).
-      val hist =
-        if (newDeltas.isEmpty) graft.lake.FlatHistOp.Keep
-        else if (table.snapshot.numBuckets != snap0.numBuckets)
-          graft.lake.FlatHistOp.Add(None)
-        else graft.lake.FlatHistOp.Add(batchHist)
-      table.commit(
-        Set.empty, Seq.empty, fenceDelta,
-        Map("eventsApplied" -> rowCount,
-          "tombstonesWritten" -> ndel,
-          "deltaEventsAppended" -> newDeltas.iterator.map(_.rows).sum,
-          "deltaFilesWritten" -> newDeltas.size.toLong,
-          "deadLetters" -> dlCount, "eventsSeen" -> total,
-          "batches" -> 1L),
-        batchId, maxSeq = metricL("maxSeq"), newDeltaFiles = newDeltas,
-        flatHistOp = hist)
-    })
+  /** Whether `ddl` touches a column the batch's row images carry. */
+  private def isBarrier(ddl: Row, imageFields: Set[String]): Boolean =
+    imageFields.contains(ddlField(ddl, "column")) ||
+      (ddlField(ddl, "kind") == "rename_column" && imageFields.contains(ddlField(ddl, "newName")))
 
-    val bm = BatchMetrics(batchId, total, dlCount,
-      math.max(unfencedN - dlCount - ddls.length - rowCount, 0),
-      total - unfencedN, rowCount, ndel, 0, ddls.length, table.snapshot.version)
-    timed("lineage-append")(appendLineage(table, bm, fenceDelta, perPartRows))
-    drainPending(table)
-    bm
+  private def ddlField(ddl: Row, name: String): String = {
+    val i = ddl.fieldIndex(name)
+    if (ddl.isNullAt(i)) null else ddl.getString(i)
   }
 
   /** True iff the batch is provably empty from the plan alone (no job, no
@@ -794,15 +512,15 @@ object Ingest {
     * already present is a no-op, a conflicting one dead-letters.
     */
   private def applyDdl(table: LakeTable, ddlSeq: Long, ddl: Row): Unit =
-    // schema-only commits retry on version races (checks below are idempotent
-    // and re-read the refreshed schema)
-    graft.lake.LakeTable.withCommitRetry(table)(applyDdlOnce(table, ddlSeq, ddl))
+    // DDL fence: a retried batch skips DDL already in the schema log — per-op
+    // checks cannot recognize an add→widen→rename chain as done. Schema-only
+    // commits retry on version races (the checks below are idempotent and
+    // re-read the refreshed schema).
+    if (ddlSeq > table.snapshot.ddlSeq)
+      LakeTable.withCommitRetry(table)(applyDdlOnce(table, ddlSeq, ddl))
 
   private def applyDdlOnce(table: LakeTable, ddlSeq: Long, ddl: Row): Unit = {
-    def s(name: String): String = {
-      val i = ddl.fieldIndex(name)
-      if (ddl.isNullAt(i)) null else ddl.getString(i)
-    }
+    def s(name: String): String = ddlField(ddl, name)
     val sch = table.schema
     s("kind") match {
       case "add_column" =>

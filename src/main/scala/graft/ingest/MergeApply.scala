@@ -1,6 +1,7 @@
 package graft.ingest
 
-import graft.lake.{CommitConflictException, DataFile, FlatHistOp, LakeTable, Snapshot, TableSchema}
+import graft.lake.{CommitConflictException, DataFile, FlatHistOp, ImageBinding, LakeTable,
+  Snapshot, TableSchema}
 import graft.model.Ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -64,24 +65,14 @@ import org.apache.spark.sql.functions._
   */
 object MergeApply {
 
-  private val prof = sys.env.contains("GRAFT_PROF")
-
   /** Codec for short-lived delta EVENT files (MOR appends and compacted
     * delta logs). Base files stay zstd — they live until rewritten and
     * dominate table bytes at rest — but deltas are written once, read
     * once or twice (MorRead / fold) and dropped, so encode speed beats
-    * ratio on the streaming hot path (Hudi log-file trade). Runtime-
-    * overridable for A/B and byte-constrained object stores. */
-  def deltaFileCodec: String = sys.props.getOrElse("graft.delta.codec",
-    sys.env.getOrElse("GRAFT_DELTA_CODEC", "snappy"))
+    * ratio on the streaming hot path (Hudi log-file trade). */
+  val deltaFileCodec: String = "snappy"
 
-  private def timed[T](name: String)(f: => T): T =
-    if (!prof) f else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[prof-merge] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-
-  /** daemon pool for observation reads (bounded; see metric()). */
+  /** daemon pool for observation reads (bounded; see observedMetrics). */
   private lazy val metricPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newCachedThreadPool(
@@ -98,11 +89,12 @@ object MergeApply {
     Await.result(Future(obs.get)(metricPool), 120.seconds)
   }
 
-  private def readMetric(obs: Observation, name: String): Long =
-    observedMetrics(obs).get(name) match {
+  /** A long metric of an observation or collected row; null (a sum or max
+    * over no rows) reads as `default`. */
+  private[ingest] def longMetric(m: Map[String, Any], name: String, default: Long = 0L): Long =
+    m.get(name) match {
       case Some(v: Long) => v
-      case Some(v: java.lang.Long) => v.longValue()
-      case _ => if (name == "maxSeq") -1L else 0L // max over empty = null = "no rows"
+      case _ => default
     }
 
   final case class MergeResult(
@@ -186,12 +178,8 @@ object MergeApply {
     val basePaths = graft.lake.Manifest.absolutePaths(
       table.dir, snap, graft.lake.Manifest.BaseKind)
     if (snap.files.size >= ScanManifestMinFiles && basePaths.nonEmpty) {
-      val sch = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("minKey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("maxKey", org.apache.spark.sql.types.LongType)))
-      spark.read.schema(sch).json(basePaths: _*)
+      spark.read.schema("bucket INT, path STRING, minKey BIGINT, maxKey BIGINT")
+        .json(basePaths: _*)
         .select(col("bucket").as("_mb"), col("minKey").as("_mmin"),
           col("maxKey").as("_mmax"), col("path").as("_mpath"))
     } else {
@@ -206,13 +194,19 @@ object MergeApply {
     * the delta's (repo, path); the hit set is tiny by construction (bounded
     * by the manifest), so the distinct is a cheap partial aggregation. */
   def fileHitsDF(table: LakeTable, snap: Snapshot, keys: DataFrame,
-      bucket: Column, hkey: Column): DataFrame = {
-    val m = manifestDF(table, snap)
+      bucket: Column, hkey: Column): DataFrame =
     keys.select(bucket.as("_b"), hkey.as("_hk"))
-      .join(broadcast(m),
+      .join(broadcast(manifestDF(table, snap)),
         col("_b") === col("_mb") && col("_hk") >= col("_mmin") && col("_hk") <= col("_mmax"))
       .select(col("_mpath"))
       .distinct()
+
+  /** [[fileHitsDF]] resolved to manifest entries (one narrow job). */
+  def hitFiles(table: LakeTable, snap: Snapshot, keys: DataFrame,
+      bucket: Column, hkey: Column): Seq[DataFile] = {
+    val byPath = snap.files.iterator.map(f => f.path -> f).toMap
+    fileHitsDF(table, snap, keys, bucket, hkey).collect()
+      .map(_.getString(0)).sorted.toSeq.map(byPath)
   }
 
   /** Per-row file-hit expression: array of manifest-file indices whose
@@ -231,49 +225,28 @@ object MergeApply {
         r => r.getField("_3")))
   }
 
-  /** Bind after-image field names to current schema columns: by name first,
-    * else by stable column id through the schema log (rename-safe). Returns
-    * (currentColumnName -> imageFieldName, unresolvable image fields). */
-  private[ingest] def bindImageFields(
-      snap: Snapshot, imageFields: Set[String]): (Map[String, String], Set[String]) =
-    graft.lake.ImageBinding.bind(snap, imageFields)
-
   /** Fallback selection pass (one small job over the delta keys) for callers
     * that did not piggyback selection on their own stats job. */
   def selectFiles(table: LakeTable, delta: DataFrame): FileSelection = {
     val snap = table.snapshot
     val bucketCol = table.bucketExpr(col("repo"), col("path"))
     val hkeyCol = table.hkeyExpr(col("repo"), col("path"))
-    if (snap.files.isEmpty) {
-      val rows = delta.groupBy(bucketCol.as("_b"))
-        .agg(count(lit(1)).as("n"), sum(deltaBytesExpr(delta)).as("bytes")).collect()
-      FileSelection(Seq.empty, rows.map(_.getInt(0)).toSet, rows.map(_.getLong(1)).sum,
-        rows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum)
-    } else if (useLiteralManifest(snap)) {
-      val rows = delta
-        .select(bucketCol.as("_b"), fileHitExpr(snap, bucketCol, hkeyCol).as("_hits"),
-          deltaBytesExpr(delta).as("_bytes"))
-        .groupBy(col("_b"))
-        .agg(count(lit(1)).as("n"), collect_set(col("_hits")).as("hs"),
-          sum(col("_bytes")).as("bytes"))
-        .collect()
-      val idxs = rows.flatMap(_.getSeq[scala.collection.Seq[Int]](2).flatten).distinct.sorted
-      FileSelection(idxs.map(snap.files), rows.map(_.getInt(0)).toSet,
-        rows.map(_.getLong(1)).sum,
-        rows.map(r => if (r.isNullAt(3)) 0L else r.getLong(3)).sum)
-    } else {
-      // large manifest: per-bucket counts in one narrow job, hit files via
-      // the broadcast range join (two slim scans beat a 10^5-entry plan
-      // literal in every dimension that matters at 100 TB)
-      val rows = delta.groupBy(bucketCol.as("_b"))
-        .agg(count(lit(1)).as("n"), sum(deltaBytesExpr(delta)).as("bytes")).collect()
-      val byPath = snap.files.iterator.map(f => f.path -> f).toMap
-      val hits = fileHitsDF(table, snap, delta, bucketCol, hkeyCol)
-        .collect().map(_.getString(0)).sorted.toSeq
-      FileSelection(hits.map(byPath), rows.map(_.getInt(0)).toSet,
-        rows.map(_.getLong(1)).sum,
-        rows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum)
-    }
+    val literalHits = snap.files.nonEmpty && useLiteralManifest(snap)
+    val hitsAgg =
+      if (literalHits) Seq(collect_set(fileHitExpr(snap, bucketCol, hkeyCol)).as("hs")) else Nil
+    val rows = delta.groupBy(bucketCol.as("_b"))
+      .agg(count(lit(1)).as("n"), sum(deltaBytesExpr(delta)).as("bytes") +: hitsAgg: _*)
+      .collect()
+    // a large manifest finds its hit files through the broadcast range join
+    // (two slim scans beat a 10^5-entry plan literal at 100 TB)
+    val files =
+      if (literalHits)
+        rows.flatMap(_.getSeq[scala.collection.Seq[Int]](3).flatten)
+          .distinct.sorted.toSeq.map(snap.files)
+      else if (snap.files.isEmpty) Seq.empty
+      else hitFiles(table, snap, delta, bucketCol, hkeyCol)
+    FileSelection(files, rows.map(_.getInt(0)).toSet, rows.map(_.getLong(1)).sum,
+      rows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum)
   }
 
   /** @param delta  one row per key: (repo, path, op, seq, after:struct)
@@ -288,12 +261,10 @@ object MergeApply {
   def merge(
       table: LakeTable,
       delta: DataFrame,
-      // by-name: callers may derive the fence/metrics from an Observation
-      // riding the merge job itself — evaluated only AFTER the write ran
-      fenceDelta: => Map[Int, Long],
+      fenceDelta: Map[Int, Long],
       batchId: Long = -1L,
       salt: Int = 1,
-      extraMetrics: => Map[String, Long] = Map.empty,
+      extraMetrics: Map[String, Long] = Map.empty,
       selection: Option[FileSelection] = None,
       /** extra manifest paths dropped in the SAME commit (Mor.fold removes
         * the folded delta files atomically with the rewritten base). */
@@ -312,28 +283,17 @@ object MergeApply {
     // selection is stale after a conflict (the manifest changed), so retries
     // re-select. Value-correct because the delta is re-derivable and LWW
     // convergence is order-independent.
-    var attempt = 0
     var sel = selection
-    while (true) {
-      try return mergeOnce(table, delta, fenceDelta, batchId, salt, extraMetrics, sel,
+    LakeTable.withCommitRetry(table) {
+      try mergeOnce(table, delta, fenceDelta, batchId, salt, extraMetrics, sel,
         alsoReplacePaths, alsoNewDeltaFiles, flatHistOp)
-      catch {
-        case e: CommitConflictException =>
-          attempt += 1
-          if (attempt >= MaxCommitAttempts) throw e
-          table.refresh()
-          sel = None
-      }
+      finally sel = None
     }
-    throw new IllegalStateException("unreachable")
   }
 
-  /** Bounded optimistic-retry budget for snapshot version races. */
-  val MaxCommitAttempts = 5
-
-  /** Merge-on-read WRITE half: append the deduped batch as bucketed delta
-    * EVENT files — no base read, no file selection, no rewrite. Write cost is
-    * O(batch) regardless of how many base files the keys touch (the COW path
+  /** Merge-on-read WRITE half: append the batch as flat delta EVENT files —
+    * no base read, no file selection, no rewrite. Write cost is O(batch)
+    * regardless of how many base files the keys touch (the COW path
     * rewrites every hit file; a full-key-range micro-batch makes that
     * O(table) per batch — the reason streaming throughput trailed batch
     * replay by ~7×). Reads resolve via [[graft.lake.MorRead]]; `Mor.fold`
@@ -346,144 +306,119 @@ object MergeApply {
     * (Hudi log-file shape; see IngestConfig.morDedupPerBatch for the
     * trade-off). Fence/batchId/exactly-once semantics identical to merge: a
     * retried batch is skipped by the batchId fence before this is called,
-    * so delta files are never double-appended. */
+    * so delta files are never double-appended.
+    *
+    * This is [[writeDelta]] then [[commitDelta]]; `Ingest.applyBatch` calls
+    * the two itself so that its DDL commits land between them. */
   def appendDelta(
       table: LakeTable,
       delta: DataFrame,
-      fenceDelta: => Map[Int, Long],
+      fenceDelta: Map[Int, Long],
       batchId: Long = -1L,
-      extraMetrics: => Map[String, Long] = Map.empty,
-      /** true when the caller cannot rule out an empty delta (e.g. a
-        * barrier-DDL segment with no rows in its seq range) — costs one
-        * small pre-count job; an empty observed write risks the AQE
-        * empty-relation/CollectMetrics hazard and a junk commit. */
-      mayBeEmpty: Boolean = false): MergeResult = {
-    // A rebucket can race an append (rebucket requires deltaFiles empty, so
-    // the window is exactly the FIRST delta append after a fold): the delta
-    // files we wrote carry the OLD bucket layout. A re-commit alone would
-    // silently mix bucketings in the manifest — redo the whole write against
-    // the refreshed snapshot instead.
-    var attempt = 0
-    while (true) {
-      try return appendDeltaOnce(table, delta, fenceDelta, batchId, extraMetrics, mayBeEmpty)
-      catch {
-        case _: RebucketedDuringAppend if attempt < MaxCommitAttempts =>
-          attempt += 1
-          table.refresh()
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      extraMetrics: Map[String, Long] = Map.empty): MergeResult = {
+    val staged = writeDelta(table, delta)
+    commitDelta(table, staged, fenceDelta, batchId, extraMetrics)
+    MergeResult(staged.events, staged.events - staged.deletes, staged.deletes,
+      conflictsLww = 0, duplicatesIgnored = 0, affectedBuckets = 0,
+      filesRewritten = 0, filesAdded = staged.files.size)
   }
 
-  private final class RebucketedDuringAppend extends RuntimeException
+  /** Delta files written by [[writeDelta]], not yet committed: their events'
+    * delete count and max seq, and the per-bucket event histogram counted
+    * under `numBuckets` (None = unknown). */
+  final case class StagedDelta(files: Seq[DataFile], deletes: Long, maxSeq: Long,
+      hist: Option[Map[Int, Long]], numBuckets: Int) {
+    def events: Long = files.iterator.map(_.rows).sum
+  }
 
-  private def appendDeltaOnce(
-      table: LakeTable,
-      delta: DataFrame,
-      fenceDelta: => Map[Int, Long],
-      batchId: Long,
-      extraMetrics: => Map[String, Long],
-      mayBeEmpty: Boolean): MergeResult = {
-    val spark = table.spark
+  /** Write `delta` as flat delta files into a fresh commit dir. Delta EVENT
+    * files are read wholesale (never pruned by bucket or key: MorRead
+    * re-groups by key, fold re-derives layout), so the append does NO
+    * layout work at all: no repartition-by-bucket (one whole extra exchange
+    * per micro-batch), no partitionBy (≈ numBuckets files + footer opens per
+    * batch), no sort — the rows are written as-is in their incoming
+    * partitioning (AQE has already coalesced small batches to a handful of
+    * partitions ⇒ a handful of files).
+    *
+    * The per-bucket histogram (`histogram`, up to [[Snapshot.HistMaxBuckets]])
+    * rides the write as conditional sums in one Observation and lands in the
+    * snapshot (Snapshot.flatDeltaHist), so fold scheduling never scans the
+    * flat backlog. */
+  private[ingest] def writeDelta(table: LakeTable, delta: DataFrame,
+      histogram: Boolean = true): StagedDelta = {
     val snap = table.snapshot
-    val sch = snap.schema
-    if (mayBeEmpty && delta.isEmpty) {
-      graft.lake.LakeTable.withCommitRetry(table)(
-        table.commit(Set.empty, Seq.empty, fenceDelta,
-          extraMetrics + ("batches" -> 1L), batchId))
-      return MergeResult(0, 0, 0, 0, 0, 0, 0, 0)
-    }
-    val commitDir = table.newCommitDataDir()
-    // Delta EVENT files are read wholesale (never pruned by bucket or key:
-    // MorRead re-groups by key, fold re-derives layout), so the append does
-    // NO layout work at all: no repartition-by-bucket (one whole extra
-    // exchange per micro-batch), no 64-way partitionBy (≈ numBuckets files +
-    // footer opens per batch — the dominant per-batch fixed cost at small
-    // batch sizes), no sort. The deduped delta is written as-is in its
-    // dedup-output partitioning (AQE has already coalesced small batches to
-    // a handful of partitions ⇒ a handful of files).
-    val obs = Observation(s"mor-append-${java.util.UUID.randomUUID()}")
-    // Per-bucket histogram rides the SAME observation pass (codegen'd
-    // conditional sums over a precomputed bucket column, no extra job/
-    // shuffle) and lands in the snapshot (Snapshot.flatDeltaHist) so fold
-    // scheduling never scans the flat backlog. Disabled above HistMaxBuckets.
-    val histN = if (snap.numBuckets <= Snapshot.HistMaxBuckets) snap.numBuckets else 0
-    val histAggs: Seq[Column] = (0 until histN)
-      .map(i => sum(when(col("_hb") === i, 1L).otherwise(0L)).as(s"_h$i"))
-    val obsAggs: Seq[Column] = Seq(
-      count(lit(1)).as("appended"),
+    val histN =
+      if (histogram && snap.numBuckets <= Snapshot.HistMaxBuckets) snap.numBuckets else 0
+    val countAggs = Seq(
       sum(when(col("op") === Ops.Delete, 1L).otherwise(0L)).as("deletes"),
-      max(col("seq")).as("maxSeq")) ++ histAggs
-    val rows = delta
-      .withColumn("_hb", table.bucketExpr(col("repo"), col("path")))
-      .observe(obs, obsAggs.head, obsAggs.tail: _*)
+      max(col("seq")).as("maxSeq"))
+    val aggs = countAggs ++ (0 until histN)
+      .map(i => sum(when(col("_hb") === i, 1L).otherwise(0L)).as(s"_h$i"))
+    val obs = Observation(s"mor-append-${java.util.UUID.randomUUID()}")
+    val commitDir = table.newCommitDataDir()
+    delta.withColumn("_hb", table.bucketExpr(col("repo"), col("path")))
+      .observe(obs, aggs.head, aggs.tail: _*)
       .drop("_hb")
-    rows.write.mode("overwrite") // commitDir is fresh; overwrite = retry-safe
+      .write.mode("overwrite") // commitDir is fresh; overwrite = retry-safe
       .options(Map("compression" -> deltaFileCodec,
         "maxRecordsPerFile" -> snap.targetFileRows.toString))
       .parquet(commitDir)
-    val newDeltas = table.listWrittenFilesFlat(commitDir, sch.schemaId)
-    // Fetch the observation ONCE. If it comes back empty (AQE empty-relation
-    // hazard: the CollectMetrics node pruned from the plan) or without the
-    // "appended" key while files WERE written, per-metric reads would
-    // silently report 0 — an exact-but-wrong histogram that foldPartial
-    // would trust (dropping unselected winners) and pruned MOR reads would
-    // trip on. Mirror applyBatchMor: poison the histogram to None (scan
-    // fallback) and recover the counts from the written files instead.
-    val om: Map[String, Any] =
-      try observedMetrics(obs)
+    val files = table.listWrittenFilesFlat(commitDir, snap.schemaId)
+    if (files.isEmpty) return StagedDelta(files, 0L, -1L, None, snap.numBuckets)
+    // A lost (AQE-pruned) or timed-out observation must not read as zero
+    // counts — an exact-but-wrong histogram that foldPartial would trust and
+    // pruned MOR reads would trip on. Recount from the written files instead
+    // and record the histogram as unknown (scan fallback).
+    val om = try observedMetrics(obs)
       catch { case _: java.util.concurrent.TimeoutException => Map.empty[String, Any] }
-    def omL(name: String): Long = om.get(name) match {
-      case Some(v: Long) => v
-      case Some(v: java.lang.Long) => v.longValue()
-      case _ => if (name == "maxSeq") -1L else 0L
-    }
-    val obsLost = newDeltas.nonEmpty && !om.contains("appended")
-    val (appended, deletes, maxSeqV) =
-      if (!obsLost) (omL("appended"), omL("deletes"), omL("maxSeq"))
-      else { // rare recovery path: one dedicated stats job over the new files
-        val r = table.spark.read.parquet(commitDir).agg(
-          count(lit(1)), sum(when(col("op") === Ops.Delete, 1L).otherwise(0L)),
-          max(col("seq"))).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2))
+    val m =
+      if (om.nonEmpty) om
+      else {
+        val r = table.spark.read.parquet(commitDir)
+          .agg(countAggs.head, countAggs.tail: _*).collect()(0)
+        r.getValuesMap[Any](r.schema.fieldNames.toSeq)
       }
-    val batchHist: Option[Map[Int, Long]] =
-      if (histN == 0 || obsLost) None
-      else Some((0 until histN).iterator.map(i => i -> omL(s"_h$i"))
+    val hist =
+      if (histN == 0 || om.isEmpty) None
+      else Some((0 until histN).iterator.map(i => i -> longMetric(om, s"_h$i"))
         .filter(_._2 > 0L).toMap)
-    graft.lake.LakeTable.withCommitRetry(table) {
-      if (table.snapshot.numBuckets != snap.numBuckets)
-        throw new RebucketedDuringAppend // escape the retry; redo the write
-      table.commit(Set.empty, Seq.empty, fenceDelta,
-        Map("deltaEventsAppended" -> appended,
-          "deltaFilesWritten" -> newDeltas.size.toLong,
-          "batches" -> 1L) ++ extraMetrics,
-        batchId, maxSeq = maxSeqV, newDeltaFiles = newDeltas,
-        flatHistOp = FlatHistOp.Add(batchHist))
-    }
-    MergeResult(
-      eventsApplied = appended,
-      upserts = appended - deletes,
-      tombstonesWritten = deletes,
-      conflictsLww = 0, duplicatesIgnored = 0, affectedBuckets = 0,
-      filesRewritten = 0, filesAdded = newDeltas.size)
+    StagedDelta(files, longMetric(m, "deletes"), longMetric(m, "maxSeq", -1L), hist,
+      snap.numBuckets)
   }
+
+  /** Commit staged delta files with the batch's fence. Delta files carry
+    * no bucket layout (`bucket = -1`), so a rebucket racing the append leaves
+    * them valid and a plain optimistic retry suffices; only the histogram,
+    * counted under the old layout, is wrong then — it is recorded as
+    * unknown. */
+  private[ingest] def commitDelta(table: LakeTable, staged: StagedDelta,
+      fenceDelta: Map[Int, Long], batchId: Long, extraMetrics: Map[String, Long]): Unit =
+    LakeTable.withCommitRetry(table) {
+      val hist =
+        if (staged.files.isEmpty) FlatHistOp.Keep
+        else if (table.snapshot.numBuckets != staged.numBuckets) FlatHistOp.Add(None)
+        else FlatHistOp.Add(staged.hist)
+      table.commit(Set.empty, Seq.empty, fenceDelta,
+        Map("deltaEventsAppended" -> staged.events,
+          "deltaFilesWritten" -> staged.files.size.toLong,
+          "batches" -> 1L) ++ extraMetrics,
+        batchId, maxSeq = staged.maxSeq, newDeltaFiles = staged.files, flatHistOp = hist)
+    }
 
   private def mergeOnce(
       table: LakeTable,
       delta: DataFrame,
-      fenceDelta: => Map[Int, Long],
+      fenceDelta: Map[Int, Long],
       batchId: Long,
       salt: Int,
-      extraMetrics: => Map[String, Long],
+      extraMetrics: Map[String, Long],
       selection: Option[FileSelection],
       alsoReplacePaths: Set[String] = Set.empty,
       alsoNewDeltaFiles: Seq[DataFile] = Seq.empty,
       flatHistOp: FlatHistOp = FlatHistOp.Keep): MergeResult = {
     val spark = table.spark
     val snap = table.snapshot
-    val sel = selection.getOrElse(timed("select-files")(selectFiles(table, delta)))
+    val sel = selection.getOrElse(selectFiles(table, delta))
 
     if (sel.buckets.isEmpty && sel.deltaRowsHint == 0L) {
       // Nothing to apply — still advance the fence/lineage atomically (and
@@ -496,17 +431,14 @@ object MergeApply {
     }
 
     val sch = snap.schema
-    val imageFieldNames: Set[String] = delta.schema("after").dataType match {
-      case s: org.apache.spark.sql.types.StructType => s.fieldNames.toSet
-      case _ => Set.empty
-    }
     // Rename-safe image binding: an after-image written before a
     // rename_column DDL carries the OLD field name; resolve it to the current
     // column through the schema log's stable column ids instead of silently
     // dropping the value. Truly unresolvable fields are surfaced as a metric
     // (never lost silently — the reference forwards raw DDL and has no such
     // protection, /root/reference/event/sql_maker.go:72-78).
-    val (imageBinding, unresolvedImageFields) = bindImageFields(snap, imageFieldNames)
+    val (imageBinding, unresolvedImageFields) =
+      ImageBinding.bind(snap, ImageBinding.imageFields(delta))
     /** image field feeding schema column `c`, if any. */
     def imageField(c: String): Option[String] = imageBinding.get(c)
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -624,14 +556,10 @@ object MergeApply {
       obs
     }
 
-    def write(df: DataFrame): Unit = timed("merge-write") {
+    def write(df: DataFrame): Unit = {
       if (sys.env.contains("GRAFT_EXPLAIN")) df.explain("formatted")
-      var w = df.write.mode("overwrite")
-      writeOpts.foreach { case (k, v) => w = w.option(k, v) }
-      w.partitionBy("_bucket").parquet(commitDir)
+      df.write.mode("overwrite").options(writeOpts).partitionBy("_bucket").parquet(commitDir)
     }
-
-    def metric(obs: Observation, name: String): Long = readMetric(obs, name)
 
     val obs: Observation = if (sel.files.isEmpty) {
       // ---- strategy 1: insert-only (no join) ----
@@ -680,12 +608,14 @@ object MergeApply {
         else merged.repartition(p, col("_bucket"))
       observeAndWrite(routed)
     }
-    val applied = metric(obs, "applied"); val tombstones = metric(obs, "tombstones")
-    val upserts = metric(obs, "upserts"); val conflicts = metric(obs, "conflicts")
-    val duplicates = metric(obs, "duplicates"); val noops = metric(obs, "noopUpdates")
+    val om = observedMetrics(obs)
+    def metric(name: String): Long = longMetric(om, name)
+    val applied = metric("applied"); val tombstones = metric("tombstones")
+    val upserts = metric("upserts"); val conflicts = metric("conflicts")
+    val duplicates = metric("duplicates"); val noops = metric("noopUpdates")
+    val maxSeq = longMetric(om, "maxSeq", -1L)
 
-    val newFiles: Seq[DataFile] =
-      timed("footer-list")(table.listWrittenFiles(commitDir, sch.schemaId))
+    val newFiles: Seq[DataFile] = table.listWrittenFiles(commitDir, sch.schemaId)
     val metricsDelta = Map(
       "eventsApplied" -> applied,
       "upserts" -> upserts,
@@ -697,7 +627,7 @@ object MergeApply {
       // rows that APPLIED while carrying a non-null value in an image field
       // the schema could not resolve — data actually dropped (Ingest's
       // hold-back keeps this at zero for the streaming path)
-      "unresolvedImageFields" -> metric(obs, "unresolvedVals"),
+      "unresolvedImageFields" -> metric("unresolvedVals"),
       "batches" -> 1L) ++ extraMetrics
     // Final commit with one cheap revalidated re-attempt: if a concurrent
     // commit raced us but did NOT touch any of our input files (fence-only
@@ -709,16 +639,14 @@ object MergeApply {
     def commitFinal(): Unit =
       try {
         table.commit(replaced, newFiles, fenceDelta, metricsDelta, batchId,
-          maxSeq = metric(obs, "maxSeq"), newDeltaFiles = alsoNewDeltaFiles,
-          flatHistOp = flatHistOp)
+          maxSeq = maxSeq, newDeltaFiles = alsoNewDeltaFiles, flatHistOp = flatHistOp)
         ()
       } catch {
         case e: CommitConflictException =>
           val live = table.refresh().files.iterator.map(_.path).toSet
           if (sel.files.forall(f => live.contains(f.path)))
             table.commit(replaced, newFiles, fenceDelta, metricsDelta,
-              batchId, maxSeq = metric(obs, "maxSeq"), newDeltaFiles = alsoNewDeltaFiles,
-              flatHistOp = flatHistOp)
+              batchId, maxSeq = maxSeq, newDeltaFiles = alsoNewDeltaFiles, flatHistOp = flatHistOp)
           else throw e
       }
     commitFinal()

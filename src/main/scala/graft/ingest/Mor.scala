@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.lake.{DataFile, FlatHistOp, LakeTable, MorRead}
+import graft.lake.{DataFile, FlatHistOp, ImageBinding, LakeTable, MorRead}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -82,18 +82,12 @@ object Mor {
       // bounded by the backlog's distinct keys.
       val winners = MorRead.deltaWinners(table, snap)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      try foldFull(table, winners, imageFieldsOf(winners),
+      try foldFull(table, winners, ImageBinding.imageFields(winners),
         snap.deltaFiles.map(_.path).toSet,
         FlatHistOp.Sub(snap.flatDeltaHist.getOrElse(Map.empty)))
       finally { winners.unpersist(blocking = false); () }
     } else foldPartial(table, snap, minEventsPerBucket)
   }
-
-  private def imageFieldsOf(winners: DataFrame): Set[String] =
-    winners.schema("after").dataType match {
-      case s: org.apache.spark.sql.types.StructType => s.fieldNames.toSet
-      case _ => Set.empty
-    }
 
   /** Partial fold: schedule by per-bucket backlog, fold only dense buckets,
     * defer the rest as per-bucket compacted delta files. See class doc. */
@@ -165,7 +159,7 @@ object Mor {
           if ((backlog.keySet -- sel).isEmpty) (Seq.empty[DataFile], 0L)
           else writeDeltaCompact(table, winners.filter(!inSel))
         val (resolvable, heldN) =
-          Ingest.holdBack(table, winners.filter(inSel), imageFieldsOf(winners), -1L, 0)
+          Ingest.holdBack(table, winners.filter(inSel), ImageBinding.imageFields(winners), -1L, 0)
         val extra = Map("morFolds" -> 1L, "morPartialFolds" -> 1L) ++
           (if (heldN > 0) Map("pendingHeldBack" -> heldN) else Map.empty)
         val r = MergeApply.merge(table, resolvable, Map.empty,

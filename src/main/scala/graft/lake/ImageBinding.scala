@@ -1,5 +1,8 @@
 package graft.lake
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
+
 /** Rename-safe binding of after-image field names to current-schema columns
   * (shared by the COW merge and the merge-on-read resolver — ONE definition
   * of which image field feeds which column).
@@ -25,5 +28,11 @@ object ImageBinding {
       }.toMap
     val resolved = byName ++ byId
     (resolved, imageFields -- resolved.values)
+  }
+
+  /** The field names of a change-event frame's `after` image. */
+  def imageFields(events: DataFrame): Set[String] = events.schema("after").dataType match {
+    case s: StructType => s.fieldNames.toSet
+    case _ => Set.empty
   }
 }

@@ -84,12 +84,6 @@ object StreamIngest {
         if (pauseMarkerAtBoundary.exists(java.nio.file.Files.exists(_)))
           throw new StreamIngest.GracefulPauseException
         Ingest.applyBatch(table, batch, batchId, effCfg)
-        // MOR compaction cadence: fold is idempotent and fenced like any
-        // commit, so a crash-retry of this batch at worst re-folds a no-op.
-        // Async by default — compaction overlaps the next micro-batches
-        // instead of stalling the trigger loop (failures surface at the
-        // next tick or at drain).
-        //
         // SUPPRESSED under Trigger.AvailableNow: cadence folds exist to bound
         // READ amplification on a steady tail; a bounded catch-up replay ends
         // anyway, and every bucket keeps receiving events throughout, so each
@@ -97,17 +91,25 @@ object StreamIngest {
         // explicit `fold`) rewrites again — measured +23% wall on the 2M-event
         // bulk stream (interleaved A/B vs the fold-at-end binary, BENCH r6).
         // Write amp per bucket is O(events/foldThreshold) folds vs exactly 1.
-        if (cfg.morMode && cfg.morFoldEvery > 0 && !availableNow && batchId > 0 &&
-            batchId % cfg.morFoldEvery == 0) {
-          if (cfg.morFoldAsync)
-            graft.ingest.MorFolds.submit(table.spark, tableDir, cfg.morFoldMinEventsPerBucket)
-          else graft.ingest.Mor.fold(table, cfg.morFoldMinEventsPerBucket)
-          ()
-        }
+        if (!availableNow) foldOnCadence(table, tableDir, cfg, batchId)
         ()
       }
       .start()
   }
+
+  /** MOR compaction cadence after batch `batchId`: fold is idempotent and
+    * fenced like any commit, so a crash-retry of the batch at worst re-folds
+    * a no-op. Async by default — compaction overlaps the next micro-batches
+    * instead of stalling the trigger loop (failures surface at the next tick
+    * or at drain). */
+  private def foldOnCadence(table: LakeTable, tableDir: String, cfg: IngestConfig,
+      batchId: Long): Unit =
+    if (cfg.morMode && cfg.morFoldEvery > 0 && batchId > 0 && batchId % cfg.morFoldEvery == 0) {
+      if (cfg.morFoldAsync)
+        graft.ingest.MorFolds.submit(table.spark, tableDir, cfg.morFoldMinEventsPerBucket)
+      else graft.ingest.Mor.fold(table, cfg.morFoldMinEventsPerBucket)
+      ()
+    }
 
   /** Run to completion over the currently-available log (AvailableNow). */
   def runAvailable(
@@ -288,14 +290,7 @@ object StreamIngest {
               Ingest.applyBatch(table, shared, batchId,
                 rule.cfg.copy(orderedDelivery = true))
             } else Ingest.applyBatch(table, shared, batchId, rule.cfg)
-            if (rule.cfg.morMode && rule.cfg.morFoldEvery > 0 && batchId > 0 &&
-                batchId % rule.cfg.morFoldEvery == 0) {
-              if (rule.cfg.morFoldAsync)
-                graft.ingest.MorFolds.submit(spark, rule.tableDir,
-                  rule.cfg.morFoldMinEventsPerBucket)
-              else graft.ingest.Mor.fold(table, rule.cfg.morFoldMinEventsPerBucket)
-              ()
-            }
+            foldOnCadence(table, rule.tableDir, rule.cfg, batchId)
           } finally {
             if (active.size > 1) { shared.unpersist(blocking = false); () }
           }

@@ -21,4 +21,39 @@ object TestSpark {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs `body` starts, counted by a SparkListener. Marker jobs run
+    * before and after `body`; listener events arrive in order, so once the
+    * closing marker has ended every job in between has been seen. */
+  def jobsDuring[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val markerProp = "graft.test.marker"
+    val events = scala.collection.mutable.ArrayBuffer.empty[String] // "job" or a marker name
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    var closingJob = -1
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        events.synchronized {
+          val marker = Option(e.properties).flatMap(p => Option(p.getProperty(markerProp)))
+          events += marker.getOrElse("job")
+          if (marker.contains("close")) closingJob = e.jobId
+        }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        events.synchronized { if (e.jobId == closingJob) ended.countDown() }
+    }
+    def marker(name: String): Unit = {
+      sc.setLocalProperty(markerProp, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerProp, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("open")
+      val out = body
+      marker("close")
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker")
+      val seen = events.synchronized(events.toList)
+      (seen.dropWhile(_ != "open").drop(1).takeWhile(_ != "close").size, out)
+    } finally sc.removeSparkListener(listener)
+  }
 }
