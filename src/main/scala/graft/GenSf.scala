@@ -92,14 +92,7 @@ object GenSf {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val mult = args(1).toLong
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gensf").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Main.session("graft-gensf")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     writeOne(documents(spark, 5000L * mult), s"$outDir/documents.parquet")
     writeOne(embeddings(spark, 2000L * mult), s"$outDir/embeddings.parquet")

@@ -2,7 +2,7 @@ package graft
 
 import graft.ingest.MergeApply
 import graft.lake.LakeTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Steady-state CDC write amplification: after a bulk load, how much of the
@@ -20,13 +20,7 @@ object IncrementalBench {
     val nBase = if (args.nonEmpty) args(0).toLong else 2000000L
     val keysPerBatch = if (args.length > 1) args(1).toInt else 20
     val nBatches = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Main.session("graft-incr")
 
     def delta(ids: Seq[Long], op: String, seqBase: Long): DataFrame = {
       import spark.implicits._

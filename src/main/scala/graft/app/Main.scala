@@ -30,11 +30,25 @@ object Main {
         s"scala ${scala.util.Properties.versionNumberString})")
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+    val cli = cliConfig()
+    val spark = session("graft-cdc")
+    try dispatch(spark, cli, args)
+    finally spark.stop()
+  }
+
+  /** The one session builder of the engine's mains (`Main`, `GenSf`,
+    * `IncrementalBench`, `Diag`). `cores` pins `local[cores]`; otherwise the
+    * master is SPARK_GRAFT_MASTER, else `local[SPARK_GRAFT_CPUS]` (default:
+    * every core). Shuffle partitions follow the core count. */
+  def session(appName: String, cores: Option[Int] = None): SparkSession = {
+    val cpus = cores.getOrElse(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors()))
+    val master = if (cores.isDefined) s"local[$cpus]"
+      else sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-cdc")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(master)
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.files.maxPartitionBytes", "33554432")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
       .config("spark.sql.session.timeZone", "UTC")
@@ -50,46 +64,56 @@ object Main {
       // 64M events: 16-core replay 7% faster than lz4, 4-core 4% slower —
       // the CPU-bound low-parallelism regime pays, the bandwidth-bound
       // regime a real multi-executor shuffle lives in wins)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_SHUFFLE_CODEC", "zstd"))
+      .config("spark.io.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try dispatch(spark, args)
-    finally spark.stop()
+    spark
   }
 
-  /** Streaming entry points (`run`/`tail`/`tailrules`) default to
-    * merge-on-read with the async partial-fold cadence
-    * ([[graft.ingest.Ingest.IngestConfig.streamingDefault]]) — the
+  /** The CLI's settings from its environment. `streaming` is the config of
+    * `run`/`tail`/`tailrules`: merge-on-read with the async partial-fold
+    * cadence ([[graft.ingest.Ingest.IngestConfig.streamingDefault]]) — the
     * high-throughput shape. GRAFT_MOR=0 opts back into copy-on-write
-    * streaming (one merge per micro-batch; the right shape only when
-    * batches are large and keys cluster). */
-  private def defaultCfg: graft.ingest.Ingest.IngestConfig = {
-    val base = graft.ingest.Ingest.IngestConfig.streamingDefault
-    base.copy(
-      morMode = !sys.env.get("GRAFT_MOR").exists(v => v == "0" || v == "false"),
-      morFoldEvery = sys.env.get("GRAFT_MOR_FOLD_EVERY").map(_.toInt)
-        .getOrElse(base.morFoldEvery),
-      // cadence folds are PARTIAL by default (only buckets whose backlog
-      // reached this many events rewrite base — a cadence tick must never be
-      // O(table)); GRAFT_MOR_FOLD_MIN_PER_BUCKET=0 forces unconditional
-      // folds, and the explicit CLI `fold <table> [minEvents]` is always
-      // available for a final full compaction
-      morFoldMinEventsPerBucket =
-        sys.env.get("GRAFT_MOR_FOLD_MIN_PER_BUCKET").map(_.toLong)
-          .getOrElse(base.morFoldMinEventsPerBucket),
-      // GRAFT_MOR_RAW=1: shuffle-free raw appends (skip per-batch LWW dedup;
-      // right for low-duplication sources — see IngestConfig.morDedupPerBatch)
-      morDedupPerBatch = !sys.env.get("GRAFT_MOR_RAW").exists(v => v == "1" || v == "true"),
-      // GRAFT_SIGSTORE=<dir>: maintain a persisted near-dup signature store
-      // alongside the table (SigStore.maintainFromEvents per micro-batch) so
-      // incoming batches can be near-dup-checked in O(batch) via
-      // SigStore.incrementalPairs — no corpus rescan
-      sigStoreDir = sys.env.get("GRAFT_SIGSTORE").filter(_.nonEmpty))
+    * streaming (one merge per micro-batch; the right shape only when batches
+    * are large and keys cluster). */
+  final case class CliConfig(streaming: Ingest.IngestConfig, httpPort: Int) {
+    /** `replay`: a whole-log batch replay is trivially "ordered" delivery —
+      * the fence may filter (everything at-or-below it was fully applied). */
+    def replay: Ingest.IngestConfig =
+      Ingest.IngestConfig(orderedDelivery = true, sigStoreDir = streaming.sigStoreDir)
   }
 
-  private def dispatch(spark: SparkSession, args: Array[String]): Unit = args(0) match {
+  /** Every CLI knob, read once (the env table in README). */
+  def cliConfig(env: Map[String, String] = sys.env): CliConfig = {
+    val base = Ingest.IngestConfig.streamingDefault
+    def flag(name: String, values: String*) = env.get(name).exists(values.contains)
+    CliConfig(
+      base.copy(
+        morMode = !flag("GRAFT_MOR", "0", "false"),
+        morFoldEvery = env.get("GRAFT_MOR_FOLD_EVERY").map(_.toInt).getOrElse(base.morFoldEvery),
+        // cadence folds are PARTIAL by default (only buckets whose backlog
+        // reached this many events rewrite base — a cadence tick must never
+        // be O(table)); GRAFT_MOR_FOLD_MIN_PER_BUCKET=0 forces unconditional
+        // folds, and the explicit CLI `fold <table> [minEvents]` is always
+        // available for a final full compaction
+        morFoldMinEventsPerBucket = env.get("GRAFT_MOR_FOLD_MIN_PER_BUCKET").map(_.toLong)
+          .getOrElse(base.morFoldMinEventsPerBucket),
+        // GRAFT_MOR_RAW=1: shuffle-free raw appends (skip per-batch LWW
+        // dedup; right for low-duplication sources — see
+        // IngestConfig.morDedupPerBatch)
+        morDedupPerBatch = !flag("GRAFT_MOR_RAW", "1", "true"),
+        // GRAFT_SIGSTORE=<dir>: maintain a persisted near-dup signature store
+        // alongside the table (SigStore.maintainFromEvents per batch) so
+        // incoming batches can be near-dup-checked in O(batch) via
+        // SigStore.incrementalPairs — no corpus rescan
+        sigStoreDir = env.get("GRAFT_SIGSTORE").filter(_.nonEmpty)),
+      // tail control plane; 0 = ephemeral, the bound port is published to
+      // <tableDir>/_control/http.port
+      httpPort = env.get("GRAFT_HTTP_PORT").map(_.toInt).getOrElse(0))
+  }
+
+  private def dispatch(spark: SparkSession, cli: CliConfig, args: Array[String]): Unit = args(0) match {
     case "gen" =>
       val dir = args(1)
       def a(i: Int, d: Long): Long = if (args.length > i) args(i).toLong else d
@@ -106,7 +130,7 @@ object Main {
       val Array(_, logDir, tableDir, ckptDir) = args.take(4)
       val mft = if (args.length > 4) args(4).toInt else 8
       if (!LakeTable.exists(tableDir)) LakeTable.create(spark, tableDir)
-      StreamIngest.runAvailable(spark, logDir, tableDir, ckptDir, mft, cfg = defaultCfg)
+      StreamIngest.runAvailable(spark, logDir, tableDir, ckptDir, mft, cfg = cli.streaming)
       report(spark, tableDir)
 
     case "fold" =>
@@ -124,11 +148,7 @@ object Main {
       val Array(_, logDir, tableDir) = args.take(3)
       if (!LakeTable.exists(tableDir)) LakeTable.create(spark, tableDir)
       val table = LakeTable.load(spark, tableDir)
-      // a whole-log batch replay is trivially "ordered" delivery: the fence
-      // may filter (everything at-or-below it was fully applied before)
-      val bm = Ingest.replayLog(table, ChangeLog.readDF(spark, logDir),
-        Ingest.IngestConfig(orderedDelivery = true,
-          sigStoreDir = sys.env.get("GRAFT_SIGSTORE").filter(_.nonEmpty)))
+      val bm = Ingest.replayLog(table, ChangeLog.readDF(spark, logDir), cli.replay)
       println(s"replayed: seen=${bm.eventsSeen} applied=${bm.eventsApplied} " +
         s"tombstones=${bm.tombstonesWritten} conflicts=${bm.conflictsLww} " +
         s"deadLetters=${bm.deadLetters} fencedOut=${bm.skippedByFence} ddl=${bm.ddlApplied}")
@@ -141,9 +161,8 @@ object Main {
       val Array(_, logDir, tableDir, ckptDir) = args.take(4)
       val mft = if (args.length > 4) args(4).toInt else 8
       if (!LakeTable.exists(tableDir)) LakeTable.create(spark, tableDir)
-      val port = sys.env.get("GRAFT_HTTP_PORT").map(_.toInt).getOrElse(0)
-      StreamIngest.tail(spark, logDir, tableDir, ckptDir, mft, cfg = defaultCfg,
-        httpPort = Some(port))
+      StreamIngest.tail(spark, logDir, tableDir, ckptDir, mft, cfg = cli.streaming,
+        httpPort = Some(cli.httpPort))
       report(spark, tableDir)
 
     case "tailrules" =>
@@ -157,11 +176,10 @@ object Main {
       val rules = args.drop(4).toSeq.map { spec =>
         val Array(name, dir) = spec.split("=", 2)
         if (!LakeTable.exists(dir)) LakeTable.create(spark, dir)
-        StreamIngest.Rule(name, dir, defaultCfg)
+        StreamIngest.Rule(name, dir, cli.streaming)
       }
-      val rport = sys.env.get("GRAFT_HTTP_PORT").map(_.toInt).getOrElse(0)
       StreamIngest.tailRules(spark, logDir, rules, ckptDir, mftS.toInt,
-        httpPort = Some(rport))
+        httpPort = Some(cli.httpPort))
       rules.foreach(r => report(spark, r.tableDir))
 
     case "stop" =>
@@ -324,7 +342,14 @@ object Main {
       |  expire  <tableDir> [keepSnapshots]
       |  verify  <logDir> <tableDir>
       |  version
-      |env: GRAFT_MOR=0 (opt run/tail back into copy-on-write; merge-on-read is the default),
-      |     GRAFT_SIGSTORE=<dir> (maintain a near-dup signature store from run/tail/replay),
-      |     GRAFT_HTTP_PORT=<p> (tail control plane), SPARK_GRAFT_CPUS""".stripMargin)
+      |env (read once at start; the table in README):
+      |  GRAFT_MOR=0|false                  run/tail/tailrules copy-on-write (default: merge-on-read)
+      |  GRAFT_MOR_FOLD_EVERY=<n>           MOR fold cadence in micro-batches (default 2)
+      |  GRAFT_MOR_FOLD_MIN_PER_BUCKET=<n>  cadence folds rewrite buckets with >= n events (default 16384)
+      |  GRAFT_MOR_RAW=1|true               MOR appends skip per-batch LWW dedup (default: dedup)
+      |  GRAFT_SIGSTORE=<dir>               maintain a near-dup signature store from run/tail/replay
+      |  GRAFT_HTTP_PORT=<p>                tail/tailrules control plane port (default 0: ephemeral)
+      |  SPARK_GRAFT_CPUS=<n>               local cores and shuffle partitions (default: every core)
+      |  SPARK_GRAFT_MASTER=<url>           Spark master (default: local[SPARK_GRAFT_CPUS])
+      |  SPARK_DRIVER_MEM=<size>            driver heap under sbt or tools/jrun.sh (default 12g)""".stripMargin)
 }

@@ -557,7 +557,6 @@ object MergeApply {
     }
 
     def write(df: DataFrame): Unit = {
-      if (sys.env.contains("GRAFT_EXPLAIN")) df.explain("formatted")
       df.write.mode("overwrite").options(writeOpts).partitionBy("_bucket").parquet(commitDir)
     }
 

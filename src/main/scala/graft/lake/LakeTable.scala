@@ -411,10 +411,9 @@ object LakeTable {
     * threads, while even a shuffle-free job pays scheduling + collect
     * latency — the round-5 512-file default put a measured ~2.5-8 s Spark
     * job on EVERY bulk-replay commit and cost ~7 s per 32M-event replay
-    * (same-window A/B vs the pool, BENCH/runs.md). GRAFT_FOOTER_JOB_MIN_FILES
-    * overrides (ops knob + A/B lever). */
-  val DistributedFooterStatsMinFiles: Int =
-    sys.env.get("GRAFT_FOOTER_JOB_MIN_FILES").map(_.toInt).getOrElse(4096)
+    * (same-window A/B vs the pool, BENCH/runs.md). Tests drive both paths
+    * through `listWrittenFiles`' `distributedMinFiles` parameter. */
+  val DistributedFooterStatsMinFiles: Int = 4096
 
   /** (rowCount, min(_hkey), max(_hkey)) from one parquet footer. Missing
     * stats degrade to the full range — pruning stays sound (over-inclusive).

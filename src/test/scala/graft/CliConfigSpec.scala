@@ -1,0 +1,49 @@
+package graft
+
+import graft.app.Main
+import graft.ingest.Ingest.IngestConfig
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The CLI's environment-to-config mapping (`Main.cliConfig`), without a
+  * Spark session. */
+class CliConfigSpec extends AnyFunSuite {
+  private def cfg(env: (String, String)*) = Main.cliConfig(env.toMap)
+
+  test("an empty environment gives the streaming default and an ephemeral port") {
+    val c = cfg()
+    assert(c.streaming === IngestConfig.streamingDefault)
+    assert(c.streaming.morMode)
+    assert(c.httpPort === 0)
+    // FilterChain has no value equality: compare the rest
+    val replay = c.replay
+    assert(replay === IngestConfig(orderedDelivery = true).copy(filter = replay.filter))
+  }
+
+  test("GRAFT_MOR=0 and GRAFT_MOR=false opt into copy-on-write; other values keep MOR") {
+    assert(!cfg("GRAFT_MOR" -> "0").streaming.morMode)
+    assert(!cfg("GRAFT_MOR" -> "false").streaming.morMode)
+    assert(cfg("GRAFT_MOR" -> "1").streaming.morMode)
+    assert(cfg("GRAFT_MOR" -> "0").streaming.copy(morMode = true) === IngestConfig.streamingDefault)
+  }
+
+  test("fold cadence, fold threshold and raw appends map to their fields") {
+    val c = cfg("GRAFT_MOR_FOLD_EVERY" -> "7", "GRAFT_MOR_FOLD_MIN_PER_BUCKET" -> "0",
+      "GRAFT_MOR_RAW" -> "1").streaming
+    assert(c.morFoldEvery === 7)
+    assert(c.morFoldMinEventsPerBucket === 0L)
+    assert(!c.morDedupPerBatch)
+    assert(!cfg("GRAFT_MOR_RAW" -> "true").streaming.morDedupPerBatch)
+    assert(cfg("GRAFT_MOR_RAW" -> "0").streaming.morDedupPerBatch)
+  }
+
+  test("GRAFT_SIGSTORE reaches streaming and replay; empty means none") {
+    val c = cfg("GRAFT_SIGSTORE" -> "/data/sigs", "GRAFT_HTTP_PORT" -> "8099")
+    assert(c.streaming.sigStoreDir === Some("/data/sigs"))
+    assert(c.replay.sigStoreDir === Some("/data/sigs"))
+    assert(c.replay.orderedDelivery)
+    assert(c.httpPort === 8099)
+    val empty = cfg("GRAFT_SIGSTORE" -> "")
+    assert(empty.streaming.sigStoreDir === None)
+    assert(empty.replay.sigStoreDir === None)
+  }
+}

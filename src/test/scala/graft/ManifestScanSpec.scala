@@ -2,14 +2,12 @@ package graft
 
 import graft.ingest.MergeApply
 import graft.lake.{LakeTable, Maintenance, Snapshot}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.collection.mutable
 import scala.util.Random
 
 /** Base-file scans plan from the manifest: no listing job, and a read whose
@@ -48,40 +46,6 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case s: FileSourceScanExec => s.metrics("numFiles").value
     }.sum
 
-  /** Spark jobs `body` starts, counted by a SparkListener. Marker jobs run
-    * before and after `body`; listener events arrive in order, so once the
-    * closing marker has ended every job in between has been seen. */
-  private def jobsDuring[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val markerProp = "graft.test.marker"
-    val events = mutable.ArrayBuffer.empty[String] // "job" or a marker name
-    val ended = new java.util.concurrent.CountDownLatch(1)
-    var closingJob = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = events.synchronized {
-        val marker = Option(e.properties).flatMap(p => Option(p.getProperty(markerProp)))
-        events += marker.getOrElse("job")
-        if (marker.contains("close")) closingJob = e.jobId
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = events.synchronized {
-        if (e.jobId == closingJob) ended.countDown()
-      }
-    }
-    def marker(name: String): Unit = {
-      sc.setLocalProperty(markerProp, name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(markerProp, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("open")
-      val out = body
-      marker("close")
-      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the marker")
-      val seen = events.synchronized(events.toList)
-      (seen.dropWhile(_ != "open").drop(1).takeWhile(_ != "close").size, out)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def rowsOf(rows: Array[Row]): Seq[Seq[Any]] = rows.toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
   /** Pruned keyed reads of live, tombstoned and absent keys equal the
@@ -112,7 +76,7 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(table.snapshot.files.size > 32, "the listing path only parallelizes above 32 files")
 
     val key = keyOf(1234L)
-    val (jobs, (rows, df)) = jobsDuring {
+    val (jobs, (rows, df)) = TestSpark.jobsDuring {
       val df = keyed(table.read(), key)
       (df.collect(), df)
     }

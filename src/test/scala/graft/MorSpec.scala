@@ -118,8 +118,8 @@ class MorSpec extends AnyFunSuite {
       .map(x => x.getString(0) -> x.getString(1)).toMap
     (0 until 100).foreach(id => assert(contents(s"f$id") === s"v${id + 1000}"))
 
-    // the fused MOR batch path (applyBatchMor, its own observation) must
-    // keep the histogram exact too — the round-5 CLI drive caught a stale
+    // the fused MOR batch path (Ingest.applyBatch's MOR segment writer, its
+    // own observation) must keep the histogram exact too — the round-5 CLI drive caught a stale
     // Some(empty) here when only the manual appendDelta path carried it
     val logDir = TestSpark.tmpDir("graft-mor-hist-log")
     ChangeLog.write(ChangelogGen.events(spark, cfg), logDir, segmentsPerPartition = 2)
