@@ -10,13 +10,18 @@ import scala.jdk.CollectionConverters._
 
 /** spark-submit entry point — the engine's CLI, mirroring the reference's
   * command surface (/root/reference/cmd/run.go:29-72,
-  * cmd/positions/report.go, cmd/positions/save.go):
+  * cmd/positions/report.go, cmd/positions/save.go). Its 18 verbs (arguments
+  * in [[usage]]):
   *
   * {{{
-  *   gen     <logDir> [nEvents] [nRepos] [pathsPerRepo] [nPartitions] [ddlEvery]
-  *   run     <logDir> <tableDir> <checkpointDir> [maxFilesPerTrigger]   # streaming tail
-  *   replay  <logDir> <tableDir>                                        # batch replay
-  *   report  <tableDir>                                                 # position + lineage report
+  *   gen                               write a deterministic changelog
+  *   run | replay                      bounded ingest: AvailableNow stream | batch replay
+  *   tail | tailrules                  continuous stream: one table | N named rules
+  *   stop | pause | start              stop a tail; pause/resume one rule (lossless)
+  *   report | readat | changes         position + lineage, time travel, change feed
+  *   chain                             derived-table sync off a change feed
+  *   fold | compact | rebucket | expire  table maintenance
+  *   verify | version                  replay-convergence check, engine version
   * }}}
   */
 object Main {
@@ -172,13 +177,17 @@ object Main {
       // while the others keep consuming; `start` resumes it losslessly via a
       // catch-up replay from the rule's own offset fence. POST /stop (or a
       // stop marker in <ckptDir>/_graftctl) ends the whole pipeline.
-      val Array(_, logDir, ckptDir, mftS) = args.take(4)
-      val rules = args.drop(4).toSeq.map { spec =>
-        val Array(name, dir) = spec.split("=", 2)
-        if (!LakeTable.exists(dir)) LakeTable.create(spark, dir)
-        StreamIngest.Rule(name, dir, cli.streaming)
+      // every argument is checked before any table is created
+      val specs = ruleSpecs(args.drop(4).toSeq).filterOrElse(_ => args(3).toIntOption.isDefined,
+        s"maxFiles '${args(3)}' is not an integer")
+      val rules = specs match {
+        case Left(why) => System.err.println(s"tailrules: $why"); usage(); sys.exit(2)
+        case Right(ok) => ok.map { case (name, dir) =>
+          if (!LakeTable.exists(dir)) LakeTable.create(spark, dir)
+          StreamIngest.Rule(name, dir, cli.streaming)
+        }
       }
-      StreamIngest.tailRules(spark, logDir, rules, ckptDir, mftS.toInt,
+      StreamIngest.tailRules(spark, args(1), rules, args(2), args(3).toInt,
         httpPort = Some(cli.httpPort))
       rules.foreach(r => report(spark, r.tableDir))
 
@@ -190,21 +199,21 @@ object Main {
         "boundary; the in-flight micro-batch finishes its commit first)")
 
     case "pause" =>
-      // reference /rules/{name}/stop analog: the tail's query ends at the
-      // next batch boundary but the process stays up; `start` resumes it
+      // reference /rules/{name}/stop analog: the tail (or the rule of a
+      // `tailrules`) writing this table skips it from the next batch on; the
+      // stream and the process stay up. Durable until `start`
       StreamIngest.requestPause(args(1))
       println(s"pause requested for ${args(1)} (resume with `start`)")
 
     case "start" =>
-      // reference /rules/{name}/start analog: a paused tail relaunches from
-      // its checkpoint — lossless (everything that arrived while paused
-      // is processed on resume)
+      // reference /rules/{name}/start analog: lossless — the driver replays
+      // everything above the table's own fence before its next apply
       StreamIngest.requestStart(args(1))
       println(s"start requested for ${args(1)}")
 
     case "report" =>
       report(spark, args(1))
-      val prog = java.nio.file.Paths.get(args(1), "_progress", "progress.jsonl")
+      val prog = graft.streaming.ProgressListener.file(args(1))
       if (java.nio.file.Files.exists(prog)) {
         val lines = java.nio.file.Files.readAllLines(prog)
         println(s"progress: ${lines.size()} events; last:")
@@ -248,7 +257,7 @@ object Main {
       val intervalSec = if (args.length > 3) math.max(1, args(3).toInt) else -1
       if (intervalSec < 0) { syncOnce(); report(spark, args(2)) }
       else { // continuous chain: poll the source, `Main stop <dstTable>` ends it
-        val marker = java.nio.file.Paths.get(args(2), "_control", "stop")
+        val marker = StreamIngest.stopMarker(args(2))
         println(s"chaining every ${intervalSec}s; `stop ${args(2)}` ends it after a final sync")
         var stop = false
         while (!stop) {
@@ -321,15 +330,30 @@ object Main {
     println(s"liveRows=${table.read().count()}")
   }
 
+  /** `name=tableDir` rule specs of `tailrules`: every name non-empty and
+    * unique, every table dir non-empty, at least one rule. */
+  def ruleSpecs(specs: Seq[String]): Either[String, Seq[(String, String)]] = {
+    val names = specs.map(_.takeWhile(_ != '='))
+    if (specs.isEmpty) Left("at least one name=tableDir rule")
+    else specs.find(!_.matches("[^=]+=.+")) match {
+      case Some(bad) => Left(s"rule spec '$bad' is not name=tableDir")
+      case None => names.diff(names.distinct).headOption match {
+        case Some(dup) => Left(s"duplicate rule name '$dup'")
+        case None => Right(names.zip(specs.map(s => s.drop(s.indexOf('=') + 1))))
+      }
+    }
+  }
+
   private def usage(): Unit = System.err.println(
     """usage: graft.app.Main <command> ...
       |  gen     <logDir> [nEvents] [nRepos] [pathsPerRepo] [nPartitions] [ddlEvery]
-      |  run     <logDir> <tableDir> <checkpointDir> [maxFilesPerTrigger]
+      |  run     <logDir> <tableDir> <checkpointDir> [maxFilesPerTrigger]  # bounded (AvailableNow)
       |  tail    <logDir> <tableDir> <checkpointDir> [maxFilesPerTrigger]  # continuous; `stop` ends it
       |  tailrules <logDir> <checkpointDir> <maxFiles> name=tableDir...    # continuous N-rule tail; per-rule pause/start
       |  stop    <tableDir>
-      |  pause   <tableDir>                 # suspend a tail at a batch boundary (process stays up)
-      |  start   <tableDir>                 # resume a paused tail from its checkpoint
+      |  pause   <tableDir>                 # stop applying to this table from the next batch (tail or
+      |                                     # tailrules rule; the stream runs on; durable until start)
+      |  start   <tableDir>                 # resume: replay what it missed above its fence, then rejoin
       |  replay  <logDir> <tableDir>
       |  report  <tableDir>
       |  fold    <tableDir>                 # compact merge-on-read deltas into base

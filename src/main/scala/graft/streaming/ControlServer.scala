@@ -1,131 +1,45 @@
 package graft.streaming
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.lake.LakeTable
+import graft.lake.{Json, LakeTable}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-/** Live HTTP control/metrics plane for a running `tail` — the reference's
-  * operator surface re-expressed over the LakeTable's durable artifacts:
+/** Live HTTP control plane of a running [[StreamIngest]] pipeline — the
+  * reference's operator surface (reference rules/factory_http.go:10-89,
+  * cobra/cobra_http.go:50-61, cobra/handler_http.go:10-50) re-expressed over
+  * the durable per-rule markers and snapshots:
   *
-  *   GET /report    — snapshot JSON: version, schema log, files, offset
-  *                    fence, gtid (maxSeq), cumulative metrics
-  *                    (reference: /cobra/position + /rules/report,
-  *                    /root/reference/cobra/cobra_http.go:50-61,
-  *                    /root/reference/rules/factory_http.go:50-89)
-  *   GET /progress  — tail of the streaming run-report JSONL
-  *                    (/root/reference/cobra/handler_http.go:10-50)
-  *   GET /stop      — request a graceful stop (the marker the tail's batch
-  *                    boundary checks; /root/reference/rules/factory_http.go:10-25)
-  *
-  * Driver-side only, loopback by default; state comes from the snapshot log
-  * on disk, so serving a request costs no Spark job. The bound port is
-  * published to `<tableDir>/_control/http.port` for operators/tests.
-  */
-class ControlServer(tableDir: String, port: Int = 0) extends AutoCloseable {
-
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(null) // single-threaded default executor: metadata-only replies
-
-  private def respond(x: HttpExchange, code: Int, body: String, ctype: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", ctype)
-    x.sendResponseHeaders(code, bytes.length.toLong)
-    val os = x.getResponseBody
-    try os.write(bytes) finally os.close()
-  }
-
-  /** Exception messages (Spark/IO errors routinely carry quotes and newlines)
-    * must be JSON-escaped or the operator surface serves invalid JSON. */
-  private def errorJson(e: Exception): String =
-    graft.lake.Json.obj("error" -> graft.lake.Json.quote(String.valueOf(e.getMessage)))
-
-  server.createContext("/report", (x: HttpExchange) =>
-    try {
-      val json = LakeTable.peekSnapshot(tableDir)
-        .map(_.toJson).getOrElse("""{"error":"not a LakeTable"}""")
-      respond(x, 200, json, "application/json")
-    } catch { case e: Exception => respond(x, 500, errorJson(e), "application/json") })
-
-  server.createContext("/progress", (x: HttpExchange) =>
-    try {
-      val p = Paths.get(tableDir, "_progress", "progress.jsonl")
-      val lines =
-        if (Files.exists(p)) Files.readAllLines(p).asScala.takeRight(50) else Seq.empty
-      respond(x, 200, lines.mkString("[", ",\n", "]"), "application/json")
-    } catch { case e: Exception => respond(x, 500, errorJson(e), "application/json") })
-
-  // POST only: these mutate state, and a GET would let any local page drive
-  // the pipeline via a cross-origin request to 127.0.0.1
-  private def postOnly(x: HttpExchange)(body: => String): Unit =
-    try {
-      if (x.getRequestMethod != "POST")
-        respond(x, 405, """{"error":"use POST"}""", "application/json")
-      else respond(x, 200, body, "application/json")
-    } catch { case e: Exception => respond(x, 500, errorJson(e), "application/json") }
-
-  server.createContext("/stop", (x: HttpExchange) =>
-    postOnly(x) { StreamIngest.requestStop(tableDir); """{"stop":"requested"}""" })
-
-  // the reference's per-rule stop/start (/rules/{name}/stop + /start,
-  // /root/reference/rules/factory_http.go:10-48): /pause ends the query at a
-  // batch boundary but keeps the tail process + control plane alive; /start
-  // relaunches from the same checkpoint — lossless resume
-  server.createContext("/pause", (x: HttpExchange) =>
-    postOnly(x) { StreamIngest.requestPause(tableDir); """{"pause":"requested"}""" })
-
-  server.createContext("/start", (x: HttpExchange) =>
-    postOnly(x) { StreamIngest.requestStart(tableDir); """{"start":"requested"}""" })
-
-  // current loop state ("running"/"paused"), written by the tail loop
-  server.createContext("/state", (x: HttpExchange) =>
-    try {
-      val p = Paths.get(tableDir, "_control", "state")
-      val s = if (Files.exists(p)) Files.readString(p).trim else "unknown"
-      respond(x, 200, graft.lake.Json.obj("state" -> graft.lake.Json.quote(s)), "application/json")
-    } catch { case e: Exception => respond(x, 500, errorJson(e), "application/json") })
-
-  def start(): Int = {
-    server.start()
-    val bound = server.getAddress.getPort
-    val dir = Paths.get(tableDir, "_control")
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve("http.port"), bound.toString)
-    bound
-  }
-
-  override def close(): Unit = {
-    server.stop(0)
-    Files.deleteIfExists(Paths.get(tableDir, "_control", "http.port"))
-    ()
-  }
-}
-
-/** Control plane for a CONTINUOUS multi-rule tail ([[StreamIngest.tailRules]])
-  * — the reference's per-rule HTTP routes
-  * (/root/reference/rules/factory_http.go:10-89) re-expressed over durable
-  * per-rule markers and snapshots:
-  *
-  *   GET  /rules                — [{"name","state","tableDir"}] (state =
-  *                                "paused" iff the rule's pause marker exists)
-  *   GET  /rules/{name}/report  — that rule's table snapshot JSON
-  *   POST /rules/{name}/pause   — stop ONE rule at the next micro-batch; the
-  *                                stream and the other rules keep consuming
+  *   GET  /rules                — [{"name","state","tableDir"}]; state is the
+  *                                REQUESTED one ("paused" iff the rule's pause
+  *                                marker exists)
+  *   GET  /rules/{name}/report  — that rule's table snapshot JSON: version,
+  *                                schema log, manifest-list pointer, offset
+  *                                fence, gtid (maxSeq), cumulative metrics
+  *   POST /rules/{name}/pause   — stop applying ONE rule at the next batch
+  *                                boundary; the stream and the other rules
+  *                                keep consuming
   *   POST /rules/{name}/start   — lossless resume (catch-up replay from the
   *                                rule's own offset fence, then rejoin live)
-  *   GET  /progress             — tail of the pipeline's run-report JSONL
-  *   POST /stop                 — graceful stop of the WHOLE pipeline
+  *   GET  /rules/{name}/state   — the driver's OBSERVED state: "paused" only
+  *                                once it has stopped applying the rule
+  *   GET  /progress             — tail of the run-report JSONL, as an array
+  *   POST /stop                 — graceful stop of the whole pipeline
   *
-  * Same driver-side, loopback, metadata-only, POST-for-mutations contract as
-  * [[ControlServer]]. The bound port is published to `<ctlDir>/http.port`.
+  * With one rule, `/report`, `/pause`, `/start` and `/state` are that rule's
+  * routes.
+  *
+  * Driver-side only, loopback; state comes from files on disk, so serving a
+  * request costs no Spark job. Mutations are POST-only: a GET would let any
+  * local page drive the pipeline via a cross-origin request to 127.0.0.1.
   */
-class RulesControlServer(ctlDir: String, ruleTables: Seq[(String, String)],
-    port: Int = 0) extends AutoCloseable {
-  private val byName = ruleTables.toMap
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(null)
+final class ControlServer(rules: Seq[StreamIngest.Rule], progress: Path, stop: () => Unit,
+    pausedNow: String => Boolean, requestedPort: Int) extends AutoCloseable {
+
+  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", requestedPort), 0)
+  server.setExecutor(null) // single-threaded default executor: metadata-only replies
 
   private def respond(x: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -135,74 +49,51 @@ class RulesControlServer(ctlDir: String, ruleTables: Seq[(String, String)],
     try os.write(bytes) finally os.close()
   }
 
-  private def errorJson(e: Exception): String =
-    graft.lake.Json.obj("error" -> graft.lake.Json.quote(String.valueOf(e.getMessage)))
+  /** Messages (Spark/IO errors, request paths) routinely carry quotes and
+    * newlines: quoted, or the operator surface serves invalid JSON. */
+  private def error(msg: String): String = Json.obj("error" -> Json.quote(msg))
 
-  private def ruleJson(name: String, dir: String): String = graft.lake.Json.obj(
-    "name" -> graft.lake.Json.quote(name),
-    "state" -> graft.lake.Json.quote(
-      if (StreamIngest.pauseRequested(dir)) "paused" else "running"),
-    "tableDir" -> graft.lake.Json.quote(dir))
+  private def mutate(x: HttpExchange, what: String, rule: Option[StreamIngest.Rule])(
+      action: => Unit): Unit =
+    if (x.getRequestMethod != "POST") respond(x, 405, error("use POST"))
+    else {
+      action
+      respond(x, 200, Json.obj(rule.map(r => "rule" -> Json.quote(r.name)).toSeq :+
+        (what -> Json.quote("requested")): _*))
+    }
 
-  // one context dispatches every /rules path (longest-prefix match)
-  server.createContext("/rules", (x: HttpExchange) =>
-    try {
-      val segs = x.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
-      (segs, x.getRequestMethod) match {
-        case (List("rules"), "GET") =>
-          respond(x, 200,
-            ruleTables.map { case (n, d) => ruleJson(n, d) }.mkString("[", ",", "]"))
-        case (List("rules", name, action), method) =>
-          byName.get(name) match {
-            case None => respond(x, 404, s"""{"error":"no such rule: ${name.replaceAll("[\"\\\\]", "")}"}""")
-            case Some(dir) => (action, method) match {
-              case ("report", "GET") =>
-                respond(x, 200, graft.lake.LakeTable.peekSnapshot(dir)
-                  .map(_.toJson).getOrElse("""{"error":"not a LakeTable"}"""))
-              case ("pause", "POST") =>
-                StreamIngest.requestPause(dir)
-                respond(x, 200, s"""{"rule":"$name","pause":"requested"}""")
-              case ("start", "POST") =>
-                StreamIngest.requestStart(dir)
-                respond(x, 200, s"""{"rule":"$name","start":"requested"}""")
-              case ("pause" | "start", _) =>
-                respond(x, 405, """{"error":"use POST"}""")
-              case _ => respond(x, 404, """{"error":"unknown action"}""")
-            }
-          }
-        case _ => respond(x, 404, """{"error":"unknown route"}""")
+  private def ruleRoute(x: HttpExchange, rule: StreamIngest.Rule, action: String): Unit =
+    action match {
+      case "report" => respond(x, 200, LakeTable.peekSnapshot(rule.tableDir)
+        .map(_.toJson).getOrElse(error("not a LakeTable")))
+      case "pause" => mutate(x, "pause", Some(rule))(StreamIngest.requestPause(rule.tableDir))
+      case "start" => mutate(x, "start", Some(rule))(StreamIngest.requestStart(rule.tableDir))
+      case "state" => respond(x, 200,
+        Json.obj("state" -> Json.quote(if (pausedNow(rule.name)) "paused" else "running")))
+      case _ => respond(x, 404, error(s"unknown action: $action"))
+    }
+
+  server.createContext("/", (x: HttpExchange) =>
+    try x.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList match {
+      case List("rules") => respond(x, 200, rules.map(r => Json.obj(
+        "name" -> Json.quote(r.name),
+        "state" -> Json.quote(if (StreamIngest.pauseRequested(r.tableDir)) "paused" else "running"),
+        "tableDir" -> Json.quote(r.tableDir))).mkString("[", ",", "]"))
+      case List("rules", name, action) => rules.find(_.name == name) match {
+        case Some(r) => ruleRoute(x, r, action)
+        case None => respond(x, 404, error(s"no such rule: $name"))
       }
-    } catch { case e: Exception => respond(x, 500, errorJson(e)) })
+      case List("progress") =>
+        val lines = if (Files.exists(progress)) Files.readAllLines(progress).asScala.takeRight(50) else Nil
+        respond(x, 200, lines.mkString("[", ",\n", "]"))
+      case List("stop") => mutate(x, "stop", None)(stop())
+      case List(action) if rules.size == 1 => ruleRoute(x, rules.head, action)
+      case _ => respond(x, 404, error(s"unknown route: ${x.getRequestURI.getPath}"))
+    } catch { case e: Exception => respond(x, 500, error(String.valueOf(e.getMessage))) })
+  server.start()
 
-  server.createContext("/progress", (x: HttpExchange) =>
-    try {
-      val p = Paths.get(ctlDir, "_progress", "progress.jsonl")
-      val lines =
-        if (Files.exists(p)) Files.readAllLines(p).asScala.takeRight(50) else Seq.empty
-      respond(x, 200, lines.mkString("[", ",\n", "]"))
-    } catch { case e: Exception => respond(x, 500, errorJson(e)) })
+  /** The bound port (ephemeral when 0 was requested). */
+  val port: Int = server.getAddress.getPort
 
-  server.createContext("/stop", (x: HttpExchange) =>
-    try {
-      if (x.getRequestMethod != "POST") respond(x, 405, """{"error":"use POST"}""")
-      else {
-        Files.createDirectories(Paths.get(ctlDir))
-        Files.writeString(Paths.get(ctlDir, "stop"), java.time.Instant.now().toString)
-        respond(x, 200, """{"stop":"requested"}""")
-      }
-    } catch { case e: Exception => respond(x, 500, errorJson(e)) })
-
-  def start(): Int = {
-    server.start()
-    val bound = server.getAddress.getPort
-    Files.createDirectories(Paths.get(ctlDir))
-    Files.writeString(Paths.get(ctlDir, "http.port"), bound.toString)
-    bound
-  }
-
-  override def close(): Unit = {
-    server.stop(0)
-    Files.deleteIfExists(Paths.get(ctlDir, "http.port"))
-    ()
-  }
+  override def close(): Unit = server.stop(0)
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.lake.Json
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 /** Run-report listener — the Spark-native replacement for the reference's
   * HTTP `/rules/report` plane (/root/reference/rules/factory_http.go:50-89,
@@ -14,11 +15,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * fence/lineage.
   */
 class ProgressListener(tableDir: String) extends StreamingQueryListener {
-  private val dir = Paths.get(tableDir, "_progress")
+  private val file = ProgressListener.file(tableDir)
 
   private def append(line: String): Unit = synchronized {
-    Files.createDirectories(dir)
-    Files.writeString(dir.resolve("progress.jsonl"), line + "\n",
+    Files.createDirectories(file.getParent)
+    Files.writeString(file, line + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
@@ -28,7 +29,17 @@ class ProgressListener(tableDir: String) extends StreamingQueryListener {
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
     append(e.progress.json)
 
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+  /** A boundary stop is not a failure: its record carries `"exception":null`.
+    * A real failure's text (a multi-line stack trace) is JSON-quoted, so the
+    * record stays one line. */
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+    val failure = e.exception.filterNot(_.contains(classOf[StreamIngest.GracefulStopException].getName))
     append(s"""{"event":"terminated","id":"${e.id}","runId":"${e.runId}",""" +
-      s""""exception":${e.exception.map(x => "\"" + x.replace("\"", "'").take(300) + "\"").getOrElse("null")}}""")
+      s""""exception":${Json.quote(failure.map(_.take(300)).orNull)}}""")
+  }
+}
+
+object ProgressListener {
+  /** The run-report JSONL a listener on `home` appends to. */
+  def file(home: String): Path = Paths.get(home, "_progress", "progress.jsonl")
 }

@@ -46,4 +46,12 @@ class CliConfigSpec extends AnyFunSuite {
     assert(empty.streaming.sigStoreDir === None)
     assert(empty.replay.sigStoreDir === None)
   }
+
+  test("tailrules rule specs: malformed specs and duplicate names are rejected before any table exists") {
+    assert(Main.ruleSpecs(Seq("a=/t/a", "b=/t/b=x")) === Right(Seq("a" -> "/t/a", "b" -> "/t/b=x")))
+    assert(Main.ruleSpecs(Nil).isLeft)
+    Seq("a", "=/t/a", "a=", "").foreach(bad =>
+      assert(Main.ruleSpecs(Seq("ok=/t/ok", bad)).left.exists(_.contains(s"'$bad'")), bad))
+    assert(Main.ruleSpecs(Seq("a=/t/1", "b=/t/2", "a=/t/3")) === Left("duplicate rule name 'a'"))
+  }
 }

@@ -333,7 +333,7 @@ class MorSpec extends AnyFunSuite {
   test("auto-fold cadence: morFoldEvery bounds the delta backlog and still converges") {
     // cadence folds are a CONTINUOUS-TAIL feature (suppressed under
     // AvailableNow, where fold-at-end does strictly less base rewriting —
-    // see StreamIngest.start), so this drives a live tail and stops it.
+    // see StreamIngest), so this drives a live tail and stops it.
     val logDir = TestSpark.tmpDir("graft-morf-log")
     val tableDir = TestSpark.tmpDir("graft-morf-table")
     ChangeLog.write(ChangelogGen.events(spark, cfg), logDir, segmentsPerPartition = 4)
