@@ -64,11 +64,8 @@ object ChainApply {
     // (0, to] feed (which reads every added file of the whole history twice)
     val feed: DataFrame =
       if (from == 0L) {
-        val live =
-          if (head.deltaFiles.nonEmpty)
-            MorRead.resolveInternalOn(src, head, head.files, head.deltaFiles)
-          else src.readInternal(head, head.files)
-        live.filter(!col("_deleted"))
+        MorRead.resolveOn(src, head, head.files, head.deltaFiles)
+          .filter(!col("_deleted"))
           .withColumn(ChangeFeed.OpColName, lit("insert"))
           .drop("_deleted")
       } else {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * and (b) multiple changes to one key in one batch, of which only the last
   * writer can matter under LWW.
   *
-  * Implemented as groupBy + max_by, a DeclarativeAggregate with map-side
+  * Implemented as groupBy + the `LastWriterAgg` aggregate with map-side
   * partial aggregation: a hot key (one file updated millions of times) is
   * reduced per-partition BEFORE the shuffle, so key skew does not serialize
   * (the fix for the reference's one-goroutine-per-hot-key bottleneck,
@@ -18,15 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** One-pass formulation — the default: map-side partial max_by collapses
-    * each task's events to one candidate per locally-seen key BEFORE the
-    * shuffle (events of a key cluster in a log partition, so the reduction
-    * factor ≈ events-per-key), and the single shuffle moves only candidates.
-    *
-    * An alternative broadcast formulation (narrow max(seq) winners +
-    * broadcast semi-join, [[lastWriterPerKeyBroadcast]]) avoids wide map-side
-    * buffers but pays a driver-serial broadcast build proportional to the
-    * batch's key count — measured strictly worse at high parallelism. */
+  /** One-pass formulation — the default: map-side partial aggregation
+    * collapses each task's events to one candidate per locally-seen key
+    * BEFORE the shuffle (events of a key cluster in a log partition, so the
+    * reduction factor ≈ events-per-key), and the single shuffle moves only
+    * candidates. The engine's one LWW per-key aggregate: merge-on-read delta
+    * winners ([[graft.lake.MorRead.deltaWinners]]) run it too. */
   def lastWriterPerKey(events: DataFrame): DataFrame =
     events
       .groupBy(col("repo"), col("path"))
@@ -44,19 +41,6 @@ object Dedup {
       .agg(max_by(struct(col("op"), col("seq"), col("after")), col("seq")).as("_w"))
       .select(col("repo"), col("path"),
         col("_w.op").as("op"), col("_w.seq").as("seq"), col("_w.after").as("after"))
-
-  /** Broadcast variant: winner seqs via narrow Tungsten max + broadcast
-    * semi-join. Useful when map-side buffers must stay minimal AND the
-    * per-batch key count is small; the broadcast build is driver-serial. */
-  def lastWriterPerKeyBroadcast(events: DataFrame): DataFrame = {
-    val winners = events
-      .groupBy(col("repo"), col("path"))
-      .agg(max(col("seq")).as("seq"))
-    events
-      .join(broadcast(winners), Seq("repo", "path", "seq"), "left_semi")
-      .select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
-      .dropDuplicates("repo", "path", "seq") // exact re-deliveries collapse
-  }
 
   /** Explicitly salted two-phase variant: pre-aggregate on (key, salt) to
     * split a pathologically hot key across `salt` reducers, then finish on

@@ -53,8 +53,11 @@ object Ingest {
         * (0 = never; fold manually via `Mor.fold`/CLI `fold`). The fold
         * cadence bounds read amplification AND delta-file count — the MOR
         * compaction-scheduling knob (Hudi's compaction trigger analog).
-        * Folding is concurrency-safe beside the appends (optimistic retry;
-        * late appends survive by path-level replacement). */
+        * Cadence folds run ASYNC on a per-table daemon thread
+        * ([[MorFolds]]), so compaction overlaps ingest instead of blocking
+        * the micro-batch loop; a tick whose previous fold is still running
+        * skips. Folding is concurrency-safe beside the appends (optimistic
+        * retry; late appends survive by path-level replacement). */
       morFoldEvery: Int = 0,
       /** Partial-fold threshold forwarded to [[Mor.fold]] on each cadence
         * tick: > 0 folds only buckets whose backlog reached this many
@@ -63,15 +66,6 @@ object Ingest {
         * compacts the rest of the delta log; 0 keeps cadence folds
         * unconditional. */
       morFoldMinEventsPerBucket: Long = 0L,
-      /** Run cadence folds ASYNC on a per-table daemon thread
-        * ([[MorFolds]]) so compaction overlaps ingest instead of blocking
-        * the micro-batch loop (Hudi async-compaction shape; safe by the
-        * same optimistic-concurrency machinery that lets a manual fold run
-        * beside a live tail). A tick whose previous fold is still running
-        * skips — backlog rides to the next tick. false = fold inline in
-        * the batch (strict backlog bound per tick, at ingest-latency
-        * cost). */
-      morFoldAsync: Boolean = true,
       /** In MOR mode, LWW-dedup each micro-batch before appending it (the
         * default). Semantically optional — read resolution and fold ALREADY
         * dedup across all delta files with the same LastWriterAgg — so this
@@ -115,11 +109,9 @@ object Ingest {
         * near-dup-checked against the whole corpus in O(batch) via
         * [[graft.operators.SigStore.incrementalPairs]] — no corpus rescan.
         * Store writes are append-only and idempotent, so they need no extra
-        * exactly-once machinery beyond the stream's own batch retry. */
-      sigStoreDir: Option[String] = None,
-      /** Signature parameters for [[sigStoreDir]] (bands, rows per band,
-        * shard fan-out). Must match across all writers of one store. */
-      sigStoreCfg: graft.operators.SigStore.Config = graft.operators.SigStore.Config())
+        * exactly-once machinery beyond the stream's own batch retry. The
+        * store is signed with the default `SigStore.Config()`. */
+      sigStoreDir: Option[String] = None)
 
   object IngestConfig {
     /** Default config for STREAMING entry points (`run`/`tail`/`tailrules`):
@@ -278,8 +270,8 @@ object Ingest {
     // opt-in signature-store maintenance rides the batch BEFORE the apply
     // (same filter chain as the table; fence filtering is unnecessary —
     // re-delivered old events append below the head seq, which reads drop)
-    cfg.sigStoreDir.foreach(d =>
-      graft.operators.SigStore.maintainFromEvents(d, batch.filter(validRow), cfg.sigStoreCfg))
+    cfg.sigStoreDir.foreach(d => graft.operators.SigStore.maintainFromEvents(
+      d, batch.filter(validRow), graft.operators.SigStore.Config()))
 
     // The batch's statistics: ONE global aggregate (counts, the fence and
     // per-partition event counts, and the — rare, tiny — DDL list). COW

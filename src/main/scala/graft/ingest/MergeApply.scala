@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.lake.{CommitConflictException, DataFile, FlatHistOp, ImageBinding, LakeTable,
-  Snapshot, TableSchema}
+  Snapshot}
 import graft.model.Ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -439,8 +439,6 @@ object MergeApply {
     // protection, /root/reference/event/sql_maker.go:72-78).
     val (imageBinding, unresolvedImageFields) =
       ImageBinding.bind(snap, ImageBinding.imageFields(delta))
-    /** image field feeding schema column `c`, if any. */
-    def imageField(c: String): Option[String] = imageBinding.get(c)
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val saltN = math.max(salt, 1)
 
@@ -480,26 +478,19 @@ object MergeApply {
     /** delta row becomes a fresh row (insert or absorbing tombstone). */
     def insertProjection(d: DataFrame): DataFrame = {
       val isDel = isDelOf(col("op"))
-      val cols = sch.columns.map { c =>
-        val tp = TableSchema.toSpark(c.dataType)
-        if (c.name == "repo" || c.name == "path") col(c.name)
-        else imageField(c.name) match {
-          case Some(f) =>
-            when(!isDel, col(s"after.$f").cast(tp)).otherwise(lit(null).cast(tp)).as(c.name)
-          case None => lit(null).cast(tp).as(c.name)
-        }
-      } ++ Seq(col("seq").as(LakeTable.SeqCol), isDel.as(LakeTable.DeletedCol),
+      d.select(ImageBinding.lwwColumns(sch, imageBinding, col, None) ++ Seq(
         lit(1L).as("_fApplied"), flag(isDel).as("_fTombstone"),
         flag(!isDel).as("_fUpsert"), lit(0L).as("_fConflict"),
         lit(0L).as("_fDuplicate"), lit(0L).as("_fNoop"),
-        flag(!isDel && unresValue(f => col(s"after.$f"))).as("_fUnres"))
-      d.select(cols: _*)
+        flag(!isDel && unresValue(f => col(s"after.$f"))).as("_fUnres")): _*)
     }
 
     /** matched-side resolution: base vs delta under LWW, with metric flags. */
     def resolveMatched(joined: DataFrame): DataFrame = {
-      val baseSeq = col(s"b.${LakeTable.SeqCol}")
-      val dWins = col("d.seq").isNotNull && (baseSeq.isNull || col("d.seq") > baseSeq)
+      val dCol = (n: String) => col(s"d.$n")
+      val bCol = (n: String) => col(s"b.$n")
+      val baseSeq = bCol(LakeTable.SeqCol)
+      val dWins = ImageBinding.deltaWins(dCol, bCol)
       val dStale = col("d.seq").isNotNull && baseSeq.isNotNull && col("d.seq") < baseSeq
       val dDup = col("d.seq").isNotNull && baseSeq.isNotNull && col("d.seq") === baseSeq
       val isDel = isDelOf(col("d.op"))
@@ -510,30 +501,14 @@ object MergeApply {
       val imageUnchanged = imageBinding
         .map { case (c, f) => col(s"d.after.$f") <=> col(s"b.$c") }
         .reduceOption(_ && _).getOrElse(lit(false))
-      val outCols = sch.columns.map { c =>
-        val tp = TableSchema.toSpark(c.dataType)
-        if (c.name == "repo" || c.name == "path")
-          coalesce(col(s"d.${c.name}"), col(s"b.${c.name}")).as(c.name)
-        else imageField(c.name) match {
-          case Some(f) =>
-            when(dWins && !isDel, col(s"d.after.$f").cast(tp))
-              .when(dWins && isDel, lit(null).cast(tp))
-              .otherwise(col(s"b.${c.name}")).as(c.name)
-          case None => // schema column not carried by the image: preserve current value
-            when(dWins && isDel, lit(null).cast(tp))
-              .otherwise(col(s"b.${c.name}")).as(c.name)
-        }
-      } ++ Seq(
-        when(dWins, col("d.seq")).otherwise(baseSeq).as(LakeTable.SeqCol),
-        when(dWins, isDel).otherwise(col(s"b.${LakeTable.DeletedCol}")).as(LakeTable.DeletedCol),
+      joined.select(ImageBinding.lwwColumns(sch, imageBinding, dCol, Some(bCol)) ++ Seq(
         flag(dWins).as("_fApplied"),
         flag(dWins && isDel).as("_fTombstone"),
         flag(dWins && !isDel).as("_fUpsert"),
         flag(dStale).as("_fConflict"),
         flag(dDup).as("_fDuplicate"),
         flag(dWins && !isDel && baseSeq.isNotNull && imageUnchanged).as("_fNoop"),
-        flag(dWins && !isDel && unresValue(f => col(s"d.after.$f"))).as("_fUnres"))
-      joined.select(outCols: _*)
+        flag(dWins && !isDel && unresValue(f => col(s"d.after.$f"))).as("_fUnres")): _*)
     }
 
     /** sum the flags via one CollectMetrics node above the final output,

@@ -85,7 +85,6 @@ object ChangeFeed {
       : (DataFrame, FeedStats) = {
     require(fromVersion <= toVersion,
       s"changesBetween: fromVersion $fromVersion > toVersion $toVersion")
-    val spark = table.spark
     val s2 = table.snapshotAt(toVersion)
     def emptyStats: FeedStats = FeedStats(0, 0, 0, 0, 0, 0L, 0, 0L,
       s2.files.size + s2.deltaFiles.size,
@@ -118,19 +117,11 @@ object ChangeFeed {
 
     // ---- 2. candidate keys: every key a window-file holds (superset of the
     //         changed keys; non-changes are dropped by the seq-equal filter)
-    val candParts = Seq(
-      if (addedBase.nonEmpty)
-        Some(table.readInternal(s2, addedBase).select(col("repo"), col("path"))) else None,
-      if (removedBase.nonEmpty)
-        Some(table.readInternal(s1, removedBase).select(col("repo"), col("path"))) else None,
-      if (addedDelta.nonEmpty)
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(addedDelta.map(f => table.resolve(f.path)): _*)
-          .select(col("repo"), col("path"))) else None,
-      if (removedDelta.nonEmpty)
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(removedDelta.map(f => table.resolve(f.path)): _*)
-          .select(col("repo"), col("path"))) else None).flatten
+    val candParts =
+      Seq(addedBase -> s2, removedBase -> s1).collect { case (fs, s) if fs.nonEmpty =>
+        table.readInternal(s, fs).select(col("repo"), col("path")) } ++
+      Seq(addedDelta, removedDelta).collect { case fs if fs.nonEmpty =>
+        MorRead.deltaEvents(table, fs).select(col("repo"), col("path")) }
     if (candParts.isEmpty) // fence/metrics-only commits
       return (emptyFeed(table, s2), emptyStats)
     // materialized once: feeds the range aggregate and both semi joins
@@ -144,11 +135,10 @@ object ChangeFeed {
     //         distant candidates in one bucket don't drag in every file
     //         between them); above the cap it degrades to per-bucket
     //         envelopes (sound: pruning only ever widens to a superset).
-    val h = xxhash64(col("repo"), col("path"))
-    val keyRows: Array[Row] = candKeys.select(
-        pmod(hash(col("repo"), col("path")), lit(s1.numBuckets)).as("b1"),
-        pmod(hash(col("repo"), col("path")), lit(s2.numBuckets)).as("b2"),
-        h.as("h"))
+    def bucketCol(numBuckets: Int): Column = LakeTable.bucketExpr(col("repo"), col("path"), numBuckets)
+    val h = table.hkeyExpr(col("repo"), col("path"))
+    val keyRows: Array[Row] = candKeys
+      .select(bucketCol(s1.numBuckets).as("b1"), bucketCol(s2.numBuckets).as("b2"), h.as("h"))
       .limit(MaxExactPruneKeys + 1)
       .collect()
     val exact = keyRows.length <= MaxExactPruneKeys
@@ -169,8 +159,7 @@ object ChangeFeed {
       val byBucket: Map[Int, Array[Long]] =
         if (exact) hkeysPerBucket(bucketOf)
         else { // envelope fallback: one [min,max] per bucket from a full aggregate
-          candKeys.select(
-              pmod(hash(col("repo"), col("path")), lit(numBuckets)).as("b"), h.as("h"))
+          candKeys.select(bucketCol(numBuckets).as("b"), h.as("h"))
             .groupBy(col("b")).agg(min(col("h")).as("mn"), max(col("h")).as("mx"))
             .collect().map(r => r.getInt(0) -> Array(r.getLong(1), r.getLong(2))).toMap
         }
@@ -191,8 +180,8 @@ object ChangeFeed {
     //         keys a one-sided prune covers only partially)
     val oldBase = pruneBase1(s1.files); val oldDelta = pruneDelta1(s1.deltaFiles)
     val newBase = pruneBase2(s2.files); val newDelta = pruneDelta2(s2.deltaFiles)
-    val old0 = MorRead.resolveInternalOn(table, s1, oldBase, oldDelta)
-    val new0 = MorRead.resolveInternalOn(table, s2, newBase, newDelta)
+    val old0 = MorRead.resolveOn(table, s1, oldBase, oldDelta)
+    val new0 = MorRead.resolveOn(table, s2, newBase, newDelta)
 
     // old rows projected to the CURRENT schema by column id (rename/widen-safe)
     val cur = s2.schema

@@ -1,18 +1,29 @@
 package graft.lake
 
-import org.apache.spark.sql.DataFrame
+import graft.model.Ops
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Rename-safe binding of after-image field names to current-schema columns
-  * (shared by the COW merge and the merge-on-read resolver — ONE definition
-  * of which image field feeds which column).
+/** The engine's last-writer-wins (LWW) column policy — ONE definition of
+  * which image field feeds which column, shared by the copy-on-write merge
+  * (`MergeApply`) and the merge-on-read resolver ([[MorRead]]).
   *
-  * An after-image written before a rename_column DDL carries the OLD field
-  * name; it resolves to the current column through the schema log's stable
-  * column ids instead of being silently dropped. Returns
-  * (column-name → image-field, unresolvable-image-fields).
+  *  - [[bind]]: rename-safe binding of after-image field names to
+  *    current-schema columns. An after-image written before a rename_column
+  *    DDL carries the OLD field name; it resolves to the current column
+  *    through the schema log's stable column ids instead of being silently
+  *    dropped.
+  *  - [[lwwColumns]]: the row a change event and the base row resolve to. A
+  *    delta wins on a strictly greater `seq` (equal is a duplicate and the
+  *    base stands); a winning delete tombstones and nulls every non-key
+  *    column; a winning upsert takes image-bound columns from `after` and
+  *    PRESERVES columns the image does not carry (added by a later DDL) from
+  *    the base row; `_seq`/`_deleted` are the winner's.
   */
 object ImageBinding {
+
+  /** (column-name → image-field, unresolvable-image-fields). */
   def bind(snap: Snapshot, imageFields: Set[String]): (Map[String, String], Set[String]) = {
     val cur = snap.schema
     val byName: Map[String, String] =
@@ -34,5 +45,48 @@ object ImageBinding {
   def imageFields(events: DataFrame): Set[String] = events.schema("after").dataType match {
     case s: StructType => s.fieldNames.toSet
     case _ => Set.empty
+  }
+
+  /** Whether the change event `d` beats the base row `b` (either side's
+    * columns may be null: an unmatched outer-join row). */
+  def deltaWins(d: String => Column, b: String => Column): Column =
+    d("seq").isNotNull && (b(LakeTable.SeqCol).isNull || d("seq") > b(LakeTable.SeqCol))
+
+  /** The resolved row: `sch`'s columns, `_seq` and `_deleted`. `d` names a
+    * change-event field (`repo`, `path`, `op`, `seq`, `after.<field>`);
+    * `base` names a base-row column, or is None where no base row can exist
+    * (the event is an insert or an absorbing tombstone). */
+  def lwwColumns(sch: TableSchema, binding: Map[String, String],
+      d: String => Column, base: Option[String => Column]): Seq[Column] = {
+    val isDel = d("op") === Ops.Delete
+    def isKey(name: String) = name == "repo" || name == "path"
+    base match {
+      case None =>
+        sch.columns.map { c =>
+          val tp = TableSchema.toSpark(c.dataType)
+          if (isKey(c.name)) d(c.name)
+          else binding.get(c.name) match {
+            case Some(f) =>
+              when(!isDel, d(s"after.$f").cast(tp)).otherwise(lit(null).cast(tp)).as(c.name)
+            case None => lit(null).cast(tp).as(c.name)
+          }
+        } ++ Seq(d("seq").as(LakeTable.SeqCol), isDel.as(LakeTable.DeletedCol))
+      case Some(b) =>
+        val dWins = deltaWins(d, b)
+        sch.columns.map { c =>
+          val tp = TableSchema.toSpark(c.dataType)
+          if (isKey(c.name)) coalesce(d(c.name), b(c.name)).as(c.name)
+          else binding.get(c.name) match {
+            case Some(f) =>
+              when(dWins && !isDel, d(s"after.$f").cast(tp))
+                .when(dWins && isDel, lit(null).cast(tp))
+                .otherwise(b(c.name)).as(c.name)
+            case None => // not carried by the image: preserve the base value
+              when(dWins && isDel, lit(null).cast(tp)).otherwise(b(c.name)).as(c.name)
+          }
+        } ++ Seq(
+          when(dWins, d("seq")).otherwise(b(LakeTable.SeqCol)).as(LakeTable.SeqCol),
+          when(dWins, isDel).otherwise(b(LakeTable.DeletedCol)).as(LakeTable.DeletedCol))
+    }
   }
 }

@@ -41,11 +41,11 @@ import scala.jdk.CollectionConverters._
   * `repo = '<r>' AND path = '<p>'` opens only the files that can hold it:
   * bucket label == bucket(r, p) and minKey <= xxhash64(r, p) <= maxKey — the
   * test the copy-on-write merge already uses to pick files to rewrite. Any
-  * other filter reads every selected file. Merge-on-read DELTA files are
-  * still listed and read through Spark's file source (their reads infer a
-  * merged schema), and key filters do not reach the base files a MOR read
-  * joins against deltas (its `coalesce(d.repo, b.repo)` projection blocks
-  * them).
+  * other filter reads every selected file. Merge-on-read DELTA files have
+  * one read, [[MorRead.deltaEvents]]: it still lists them through Spark's
+  * file source (inferring a merged schema), and key filters do not reach the
+  * base files a MOR read joins against deltas (its `coalesce(d.repo, b.repo)`
+  * projection blocks them).
   *
   * Every data file carries three internal columns beyond the user schema:
   * `_seq` (log sequence number of the last writer — LWW conflict resolution),

@@ -1,60 +1,46 @@
 package graft.lake
 
-import graft.model.Ops
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ingest.{Dedup, MergeApply}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Merge-on-read resolution (the read half of MOR mode; the write half is
-  * `MergeApply.appendDelta`, the fold is `Mor.fold`).
+/** The merge-on-read resolver (the read half of MOR mode; the write half is
+  * `MergeApply.appendDelta`, the fold is `Mor.fold`). Every MOR read — the
+  * public [[resolve]], the change feed's two state reads, the chain
+  * bootstrap and the fold's winners — goes through the functions below.
   *
-  * Delta files are bucketed EVENT logs: (repo, path, op, seq, after-image).
-  * A read resolves them against the base files with exactly the COW merge's
-  * semantics — last-writer-wins on `seq` (strictly greater beats base; equal
-  * is a duplicate and base stands), winning deletes suppress the row,
-  * winning updates take image-bound columns from the after-image and
-  * PRESERVE uncarried columns from the base row (the same rename-safe
-  * [[ImageBinding]] both paths share). MorSpec asserts read-resolution ==
-  * COW result on identical inputs, including the uncarried-column and
-  * stale-replay-tombstone cases, and that both physical shapes below agree.
+  * Delta files are EVENT logs: (repo, path, op, seq, after-image).
+  *  - [[deltaEvents]] is the engine's one delta-file read. It still lists
+  *    the files and infers their merged schema (one job), because the image
+  *    struct may gain fields across batches.
+  *  - [[deltaWinners]] is those events through the one LWW per-key aggregate
+  *    (`Dedup.lastWriterPerKey`, the ingest dedup's too).
+  *  - [[resolveOn]] joins winners against base files under the LWW column
+  *    policy of [[ImageBinding.lwwColumns]] — the COW merge's own — so a read
+  *    resolves exactly as a fold would write. MorSpec asserts read-resolution
+  *    == COW result, including uncarried columns and stale-replay tombstones.
   *
   * Two physical shapes, mirroring the COW merge's strategy choice:
-  *  - '''broadcast''' (delta winners ≤ [[graft lake broadcast threshold]] —
-  *    the common between-folds state, bounded by `snapshot.deltaRows`):
-  *    base LEFT OUTER broadcast(delta) + keys-only anti-join insert residue.
-  *    The base is NEVER shuffled — at 100 TB the read costs one base scan
-  *    plus a broadcast, not a table-wide exchange.
+  *  - '''broadcast''' (delta events ≤ `MergeApply.BroadcastDeltaMaxRows` and
+  *    delta bytes ≤ `broadcastMaxBytes` — the common between-folds state):
+  *    base LEFT OUTER broadcast(winners) + a keys-only anti-join insert
+  *    residue. The base is never shuffled.
   *  - '''full-outer shuffle''' for large unfolded backlogs (full-outer
-  *    broadcast joins are unsupported in Spark, so both sides exchange on
-  *    the key).
-  * Read amplification overall is bounded by fold cadence (fold turns this
-  * whole resolution into the ordinary bucket-aligned COW merge).
+  *    broadcast joins are unsupported in Spark, so both sides exchange).
+  * Read amplification is bounded by fold cadence.
   */
 object MorRead {
 
-  /** Above this many delta EVENT rows (an upper bound on distinct winners,
-    * known exactly from the snapshot — no counting job) the broadcast shape
-    * is abandoned. Same sizing rationale as MergeApply.BroadcastDeltaMaxRows. */
-  val BroadcastWinnersMaxRows = 100000L
+  /** Above this many delta BYTES (on-disk, from the manifest) the broadcast
+    * shape is abandoned regardless of row count — the COW merge's gate (a
+    * row-count gate alone lets 100k events of 1 MB contents build a ~100 GB
+    * broadcast and OOM every executor on every MOR read). */
+  val BroadcastDeltaMaxBytes: Long = MergeApply.BroadcastDeltaMaxBytes
 
-  /** Above this many delta BYTES (on-disk compressed, from the manifest) the
-    * broadcast shape is abandoned regardless of row count — the same
-    * semantics as the COW merge's [[graft.ingest.MergeApply.BroadcastDeltaMaxBytes]]
-    * gate (a row-count gate alone lets 100k events of 1 MB contents build a
-    * ~100 GB broadcast and OOM every executor on every MOR read). */
-  val BroadcastDeltaMaxBytes: Long = graft.ingest.MergeApply.BroadcastDeltaMaxBytes
-
-  /** Total on-disk bytes of a snapshot's delta files. Manifest `bytes` when
-    * recorded; legacy entries (bytes=0) fall back to a driver-cheap stat; a
-    * failed stat counts as effectively-infinite, so unknown sizes degrade to
-    * the safe (non-broadcast) shape, never to an OOM. */
-  def deltaBytes(table: LakeTable, s: Snapshot): Long =
-    deltaBytesOf(table, s.deltaFiles)
-
-  /** [[deltaBytes]] over an explicit file subset (partial resolution paths:
-    * [[resolveInternalOn]] gates its broadcast shape on the subset it joins,
-    * not the whole snapshot's backlog). */
-  def deltaBytesOf(table: LakeTable, files: Seq[DataFile]): Long =
+  /** On-disk bytes of delta `files`: manifest `bytes` when recorded, else a
+    * driver-cheap stat; a failed stat counts as effectively infinite, so
+    * unknown sizes degrade to the safe (non-broadcast) shape, never an OOM. */
+  private def deltaBytes(table: LakeTable, files: Seq[DataFile]): Long =
     files.iterator.map { f =>
       if (f.bytes > 0L) f.bytes
       else
@@ -62,30 +48,20 @@ object MorRead {
         catch { case _: java.io.IOException => Long.MaxValue / 1024 }
     }.foldLeft(0L)((a, b) => if (a + b < 0) Long.MaxValue else a + b)
 
-  /** The deduped winning event per key across all delta files. */
-  def deltaWinners(table: LakeTable, s: Snapshot): DataFrame =
-    deltaWinnersOf(table, s.deltaFiles)
-
-  /** Winners over a SUBSET of delta files (partial-fold file-group pruning:
-    * `Mor.foldPartial` reads only the flat append files plus the compacted
-    * per-bucket files of the buckets it folds). LWW over a subset is exact
-    * for the keys it covers as long as the caller folds only rows routed to
-    * buckets whose every delta file is IN the subset — max over a union
-    * commutes with partial maxima, so events left in kept-out files keep
-    * competing at read/fold time unchanged. */
-  def deltaWinnersOf(table: LakeTable, files: Seq[DataFile]): DataFrame = {
-    val spark = table.spark
-    val events = spark.read
+  /** The events of delta `files` as (repo, path, op, seq, after) — the one
+    * delta-file read (planning delta scans from the manifest changes here). */
+  def deltaEvents(table: LakeTable, files: Seq[DataFile]): DataFrame =
+    table.spark.read
       .option("mergeSchema", "true") // image struct may gain fields across batches
       .parquet(files.map(f => table.resolve(f.path)): _*)
       .select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
-    events
-      .groupBy(col("repo"), col("path"))
-      .agg(graft.functions.LastWriterAgg.lastWriter(
-        struct(col("op"), col("seq"), col("after")), col("seq")).as("_w"))
-      .select(col("repo"), col("path"),
-        col("_w.op").as("op"), col("_w.seq").as("seq"), col("_w.after").as("after"))
-  }
+
+  /** The winning event per key across delta `files`. LWW over a SUBSET of
+    * a snapshot's delta files is exact for the keys whose every delta file is
+    * in the subset — max over a union commutes with partial maxima, so events
+    * left in other files keep competing at read/fold time unchanged. */
+  def deltaWinners(table: LakeTable, files: Seq[DataFile]): DataFrame =
+    Dedup.lastWriterPerKey(deltaEvents(table, files))
 
   /** The buckets that can hold delta events, from METADATA only: labeled
     * delta files carry their bucket in the manifest; flat append files are
@@ -103,162 +79,69 @@ object MorRead {
     t.filter(tb => tb.nonEmpty || s.deltaRows == 0L)
   }
 
-  /** Current rows of a MOR snapshot: base resolved against deduped deltas.
+  /** Current rows of a MOR snapshot.
     *
-    * '''Bucket pruning''' (the 100 TB read shape): base files whose bucket
-    * holds NO delta backlog (per [[touchedBuckets]]) never enter the
-    * resolution join at all — they pass through as an identity scan. A
-    * bucket-localized backlog on a huge table then costs: touched buckets
-    * join (exchanged only in the full-outer shape), everything else is a
-    * plain pruned scan — instead of exchanging (full-outer) or anti-join
-    * re-scanning (broadcast residue) the ENTIRE base. Pruning trusts the
-    * manifest's bucket labels and the transactional flat histogram; both are
-    * engine-written (labels by the compaction's own bucketExpr partitioning,
-    * the histogram by the append job's observation pass) and rebucket
-    * refuses to run while deltas exist — and because a silent mismatch would
-    * mean wrong results, the pruned plan carries a codegen'd guard that
-    * raise_errors on any delta winner routing outside the touched set
-    * (evaluated with the winner's seq — no extra job, no silent staleness). */
+    * '''Bucket pruning''': base files whose bucket holds NO delta backlog
+    * (per [[touchedBuckets]]) never enter the join — they pass through as a
+    * plain scan. Pruning trusts the manifest's bucket labels and the
+    * transactional flat histogram (both engine-written; rebucket refuses to
+    * run while deltas exist), and because a silent mismatch would mean wrong
+    * results, the pruned plan guards every delta winner: one routing outside
+    * the touched set raise_errors (no extra job, no silent staleness). */
   def resolve(table: LakeTable, s: Snapshot,
-      broadcastMaxRows: Long = BroadcastWinnersMaxRows,
       broadcastMaxBytes: Long = BroadcastDeltaMaxBytes): DataFrame = {
-    val sch = s.schema
-    val d0 = deltaWinners(table, s)
-    val imageFields: Set[String] = d0.schema("after").dataType match {
-      case st: StructType => st.fieldNames.toSet
-      case _ => Set.empty
-    }
-    val (imageBinding, _) = ImageBinding.bind(s, imageFields)
-
-    def outCols(bCol: String => Column, dWins: Column, baseSeq: Column): Seq[Column] =
-      outColsFor(sch, imageBinding, bCol, dWins, baseSeq)
-
-    // ---- bucket pruning: split base into join side / identity passthrough
     val touched = touchedBuckets(s)
     val (joinFiles, passFiles) = touched match {
       case Some(tb) => s.files.partition(f => tb.contains(f.bucket))
       case None => (s.files, Seq.empty[DataFile])
     }
-    // runtime guard (pruned plans only): a delta winner routing outside the
-    // touched set means the labels/histogram lied — fail the query, never
-    // silently skip the passthrough rows it should have resolved against
-    val dGuarded = touched match {
-      case Some(tb) if passFiles.nonEmpty =>
-        val bOf = table.bucketExpr(col("repo"), col("path"))
-        d0.withColumn("seq",
-          when(bOf.isin(tb.toSeq.map(Int.box): _*), col("seq"))
-            .otherwise(raise_error(concat(
-              lit("MOR bucket pruning: delta winner outside the touched bucket set, bucket="),
-              bOf.cast("string")))))
-      case _ => d0
-    }
-
-    val b = table.readInternal(s, joinFiles).alias("b")
-    val d = dGuarded.alias("d")
-    val baseSeq = col(s"b.${LakeTable.SeqCol}")
-    val dWins = col("d.seq").isNotNull && (baseSeq.isNull || col("d.seq") > baseSeq)
-    val keyCond = col("b.repo") === col("d.repo") && col("b.path") === col("d.path")
-
-    val resolvedJoin =
-      if (s.deltaRows <= broadcastMaxRows && deltaBytes(table, s) <= broadcastMaxBytes) {
-        // broadcast shape: the base side keeps its scan partitioning (no
-        // exchange); full-outer is decomposed into matched + insert residue
-        // exactly like the COW merge's broadcast-incremental strategy
-        val matched = b.join(broadcast(d), keyCond, "left_outer")
-          .select(outCols(n => col(s"b.$n"), dWins, baseSeq): _*)
-        val baseKeys = table.readInternal(s, joinFiles).select(col("repo"), col("path"))
-        val inserts = dGuarded.join(baseKeys, Seq("repo", "path"), "left_anti").alias("d")
-          .select(outCols(n => lit(null), lit(true), lit(null).cast("long")): _*)
-        matched.unionByName(inserts)
-      } else {
-        b.join(d, keyCond, "full_outer")
-          .select(outCols(n => col(s"b.$n"), dWins, baseSeq): _*)
-      }
-    val resolvedInternal =
-      if (passFiles.isEmpty) resolvedJoin
-      else resolvedJoin.unionByName(
-        table.readInternal(s, passFiles).select(
-          (sch.columns.map(c => col(c.name)) :+
-            col(LakeTable.SeqCol) :+
-            coalesce(col(LakeTable.DeletedCol), lit(false)).as(LakeTable.DeletedCol)): _*))
-
-    resolvedInternal
-      .filter(!col(LakeTable.DeletedCol))
-      .select(sch.columns.map(c => col(c.name)): _*)
+    val joined = resolveOn(table, s, joinFiles, s.deltaFiles,
+      touched.filter(_ => passFiles.nonEmpty), broadcastMaxBytes)
+    val resolved =
+      if (passFiles.isEmpty) joined
+      else joined.unionByName(withDeleted(s, table.readInternal(s, passFiles)))
+    resolved.filter(!col(LakeTable.DeletedCol)).select(s.schema.columns.map(c => col(c.name)): _*)
   }
 
-  /** The COW merge's column resolution, shared by [[resolve]] and
-    * [[resolveInternalOn]]; `bCol` abstracts over whether a base row exists
-    * (join-matched) or is known absent (insert residue). */
-  private def outColsFor(
-      sch: TableSchema, imageBinding: Map[String, String],
-      bCol: String => Column, dWins: Column, baseSeq: Column): Seq[Column] = {
-    val isDel = col("d.op") === Ops.Delete
-    sch.columns.map { c =>
-      val tp = TableSchema.toSpark(c.dataType)
-      if (c.name == "repo" || c.name == "path")
-        coalesce(col(s"d.${c.name}"), bCol(c.name)).as(c.name)
-      else imageBinding.get(c.name) match {
-        case Some(f) =>
-          when(dWins && !isDel, col(s"d.after.$f").cast(tp))
-            .when(dWins && isDel, lit(null).cast(tp))
-            .otherwise(bCol(c.name)).as(c.name)
-        case None => // column not carried by the image: preserve current value
-          when(dWins && isDel, lit(null).cast(tp))
-            .otherwise(bCol(c.name)).as(c.name)
-      }
-    } ++ Seq(
-      when(dWins, col("d.seq")).otherwise(baseSeq).as(LakeTable.SeqCol),
-      when(dWins, isDel).otherwise(coalesce(bCol(LakeTable.DeletedCol), lit(false)))
-        .as(LakeTable.DeletedCol))
-  }
-
-  /** Internal MOR resolution over EXPLICIT file subsets: `baseFiles` joined
-    * against the deduped winners of `deltaFiles`, under snapshot `s`'s
-    * current schema. Output = s.schema columns + `_seq` + `_deleted`,
-    * TOMBSTONES INCLUDED (callers that want the public view filter).
-    *
-    * Unlike [[resolve]] there is no bucket-pruning split and no staleness
-    * guard — the caller picked the subsets and owns their coverage contract:
-    * LWW over a subset is exact for every key all of whose base/delta files
-    * are in the subset (see [[graft.lake.ChangeFeed]], which prunes by
-    * candidate key ranges and then restricts to candidate keys, so partially
-    * covered keys never reach its output). */
-  private[graft] def resolveInternalOn(
-      table: LakeTable, s: Snapshot,
+  /** `baseFiles` resolved against the winners of `deltaFiles` under `s`'s
+    * current schema: its columns + `_seq` + `_deleted`, TOMBSTONES INCLUDED.
+    * LWW over file subsets is exact for every key all of whose files are in
+    * them; callers that pick subsets own that coverage (see [[ChangeFeed]]).
+    * `guard`: the touched bucket set every winner must route into. */
+  private[graft] def resolveOn(table: LakeTable, s: Snapshot,
       baseFiles: Seq[DataFile], deltaFiles: Seq[DataFile],
-      broadcastMaxRows: Long = BroadcastWinnersMaxRows,
+      guard: Option[Set[Int]] = None,
       broadcastMaxBytes: Long = BroadcastDeltaMaxBytes): DataFrame = {
-    val sch = s.schema
-    val withDeleted = (df: DataFrame) => df.select(
-      (sch.columns.map(c => col(c.name)) :+
-        col(LakeTable.SeqCol) :+
-        coalesce(col(LakeTable.DeletedCol), lit(false)).as(LakeTable.DeletedCol)): _*)
-    if (deltaFiles.isEmpty) return withDeleted(table.readInternal(s, baseFiles))
-
-    val d0 = deltaWinnersOf(table, deltaFiles)
-    val imageFields: Set[String] = d0.schema("after").dataType match {
-      case st: StructType => st.fieldNames.toSet
-      case _ => Set.empty
+    if (deltaFiles.isEmpty) return withDeleted(s, table.readInternal(s, baseFiles))
+    val winners = deltaWinners(table, deltaFiles)
+    val (binding, _) = ImageBinding.bind(s, ImageBinding.imageFields(winners))
+    val d0 = guard.fold(winners) { tb =>
+      val bOf = table.bucketExpr(col("repo"), col("path"))
+      winners.withColumn("seq", when(bOf.isin(tb.toSeq.map(Int.box): _*), col("seq"))
+        .otherwise(raise_error(concat(
+          lit("MOR bucket pruning: delta winner outside the touched bucket set, bucket="),
+          bOf.cast("string")))))
     }
-    val (imageBinding, _) = ImageBinding.bind(s, imageFields)
     val b = table.readInternal(s, baseFiles).alias("b")
     val d = d0.alias("d")
-    val baseSeq = col(s"b.${LakeTable.SeqCol}")
-    val dWins = col("d.seq").isNotNull && (baseSeq.isNull || col("d.seq") > baseSeq)
+    val dCol = (n: String) => col(s"d.$n")
+    val resolved = ImageBinding.lwwColumns(s.schema, binding, dCol, Some(n => col(s"b.$n")))
     val keyCond = col("b.repo") === col("d.repo") && col("b.path") === col("d.path")
-    val deltaRows = deltaFiles.iterator.map(_.rows).sum
-
-    if (deltaRows <= broadcastMaxRows && deltaBytesOf(table, deltaFiles) <= broadcastMaxBytes) {
-      val matched = b.join(broadcast(d), keyCond, "left_outer")
-        .select(outColsFor(sch, imageBinding, n => col(s"b.$n"), dWins, baseSeq): _*)
+    if (deltaFiles.iterator.map(_.rows).sum <= MergeApply.BroadcastDeltaMaxRows &&
+        deltaBytes(table, deltaFiles) <= broadcastMaxBytes) {
+      // the base keeps its scan partitioning (no exchange); full-outer is
+      // decomposed into matched + insert residue like the COW merge's
+      // broadcast-incremental strategy
+      val matched = b.join(broadcast(d), keyCond, "left_outer").select(resolved: _*)
       val baseKeys = table.readInternal(s, baseFiles).select(col("repo"), col("path"))
       val inserts = d0.join(baseKeys, Seq("repo", "path"), "left_anti").alias("d")
-        .select(outColsFor(sch, imageBinding, n => lit(null), lit(true), lit(null).cast("long")): _*)
+        .select(ImageBinding.lwwColumns(s.schema, binding, dCol, None): _*)
       matched.unionByName(inserts)
-    } else {
-      b.join(d, keyCond, "full_outer")
-        .select(outColsFor(sch, imageBinding, n => col(s"b.$n"), dWins, baseSeq): _*)
-    }
+    } else b.join(d, keyCond, "full_outer").select(resolved: _*)
   }
+
+  /** Internal rows with a non-null `_deleted`, as [[resolveOn]] returns them. */
+  private def withDeleted(s: Snapshot, internal: DataFrame): DataFrame = internal.select(
+    (s.schema.columns.map(c => col(c.name)) :+ col(LakeTable.SeqCol) :+
+      coalesce(col(LakeTable.DeletedCol), lit(false)).as(LakeTable.DeletedCol)): _*)
 }

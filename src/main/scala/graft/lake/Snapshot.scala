@@ -1,7 +1,7 @@
 package graft.lake
 
 /** One data file in the manifest: a Parquet file holding rows of exactly one
-  * bucket (bucket = pmod(hash(repo, path), numBuckets)), written under
+  * bucket ([[LakeTable.bucketExpr]] of its keys), written under
   * `schemaId`, with min/max statistics over the rows' 64-bit key hash
   * `_hkey = xxhash64(repo, path)` taken from the Parquet footer.
   *

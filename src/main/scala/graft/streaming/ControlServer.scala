@@ -25,7 +25,8 @@ import scala.jdk.CollectionConverters._
   *                                rule's own offset fence, then rejoin live)
   *   GET  /rules/{name}/state   — the driver's OBSERVED state: "paused" only
   *                                once it has stopped applying the rule
-  *   GET  /progress             — tail of the run-report JSONL, as an array
+  *   GET  /progress             — tail of the first rule's run-report JSONL,
+  *                                as an array
   *   POST /stop                 — graceful stop of the whole pipeline
   *
   * With one rule, `/report`, `/pause`, `/start` and `/state` are that rule's

@@ -7,20 +7,23 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 /** Run-report listener — the Spark-native replacement for the reference's
   * HTTP `/rules/report` plane (/root/reference/rules/factory_http.go:50-89,
   * cobra/handler_http.go:10-50): every micro-batch's progress (rows, offsets,
-  * durations) is appended as JSONL under `<tableDir>/_progress/`, alongside
-  * the engine's own `_lineage`. `graft.app.Main report` reads it back.
+  * durations) is appended as JSONL under `<tableDir>/_progress/` of every
+  * table the pipeline writes, alongside the engine's own `_lineage`.
+  * `graft.app.Main report <tableDir>` reads it back.
   *
   * Progress lines are observability metadata (at-least-once on retries, like
   * Spark's own progress log) — exactly-once truth lives in the snapshot
   * fence/lineage.
   */
-class ProgressListener(tableDir: String) extends StreamingQueryListener {
-  private val file = ProgressListener.file(tableDir)
+class ProgressListener(tableDirs: Seq[String]) extends StreamingQueryListener {
+  private val files = tableDirs.map(ProgressListener.file)
 
   private def append(line: String): Unit = synchronized {
-    Files.createDirectories(file.getParent)
-    Files.writeString(file, line + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    files.foreach { file =>
+      Files.createDirectories(file.getParent)
+      Files.writeString(file, line + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    }
   }
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
@@ -40,6 +43,6 @@ class ProgressListener(tableDir: String) extends StreamingQueryListener {
 }
 
 object ProgressListener {
-  /** The run-report JSONL a listener on `home` appends to. */
-  def file(home: String): Path = Paths.get(home, "_progress", "progress.jsonl")
+  /** The run-report JSONL of the table at `tableDir`. */
+  def file(tableDir: String): Path = Paths.get(tableDir, "_progress", "progress.jsonl")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ingest.{Ingest, Mor, MorFolds}
+import graft.ingest.{Ingest, MorFolds}
 import graft.ingest.Ingest.IngestConfig
 import graft.lake.LakeTable
 import graft.log.ChangeLog
@@ -121,7 +121,7 @@ object StreamIngest {
       httpPort: Option[Int], oneTable: Boolean): Unit = {
     require(rules.nonEmpty, "at least one rule")
     require(rules.map(_.name).distinct.size == rules.size, "rule names must be unique")
-    val (ctl, progressHome) = pipelineHome(rules, checkpointDir, oneTable)
+    val ctl = pipelineHome(rules, checkpointDir, oneTable)
     // A bounded AvailableNow catch-up schedules no cadence folds and ends in
     // a full fold that self-heals the MOR histogram, so both are live-tail
     // only: the per-batch histogram Observation measured ~15% of bulk-stream
@@ -176,10 +176,10 @@ object StreamIngest {
       p == paused.contains(r.name) && (p || !Files.exists(catchupMarker(r.tableDir)))
     }
 
-    val listener = new ProgressListener(progressHome)
+    val listener = new ProgressListener(rules.map(_.tableDir))
     spark.streams.addListener(listener)
     val control = httpPort.map { p =>
-      val c = new ControlServer(rules, ProgressListener.file(progressHome),
+      val c = new ControlServer(rules, ProgressListener.file(rules.head.tableDir),
         () => touch(stop), paused.contains, p)
       Files.writeString(ctl.resolve("http.port"), c.port.toString)
       println(s"control plane on http://127.0.0.1:${c.port} (/rules /rules/{name}/report|pause|start " +
@@ -203,7 +203,7 @@ object StreamIngest {
               // the scan instead of re-merged through LWW
               Ingest.applyBatch(table, shared, batchId,
                 if (caughtUp) cfg.copy(orderedDelivery = true) else cfg)
-              if (live) foldOnCadence(table, r.tableDir, r.cfg, batchId)
+              if (live) foldOnCadence(spark, r.tableDir, r.cfg, batchId)
             } finally if (active.size > 1) { shared.unpersist(blocking = false); () }
           }
           ()
@@ -239,14 +239,13 @@ object StreamIngest {
 
   /** MOR compaction cadence after batch `batchId`: fold is idempotent and
     * fenced like any commit, so a crash-retry of the batch at worst re-folds
-    * a no-op. Async by default — compaction overlaps the next micro-batches
-    * instead of stalling the trigger loop (failures surface at the next tick
-    * or at drain). */
-  private def foldOnCadence(table: LakeTable, tableDir: String, cfg: IngestConfig,
+    * a no-op. Async — compaction overlaps the next micro-batches instead of
+    * stalling the trigger loop (failures surface at the next tick or at
+    * drain). */
+  private def foldOnCadence(spark: SparkSession, tableDir: String, cfg: IngestConfig,
       batchId: Long): Unit =
     if (cfg.morMode && cfg.morFoldEvery > 0 && batchId > 0 && batchId % cfg.morFoldEvery == 0) {
-      if (cfg.morFoldAsync) MorFolds.submit(table.spark, tableDir, cfg.morFoldMinEventsPerBucket)
-      else Mor.fold(table, cfg.morFoldMinEventsPerBucket)
+      MorFolds.submit(spark, tableDir, cfg.morFoldMinEventsPerBucket)
       ()
     }
 
@@ -254,13 +253,11 @@ object StreamIngest {
 
   private def controlDir(tableDir: String): Path = Paths.get(tableDir, "_control")
 
-  /** Where a pipeline keeps its stop marker and published HTTP port, and
-    * the home of its run report: the table for a one-table pipeline,
-    * [[rulesControlDir]] for a rule pipeline. */
-  private def pipelineHome(rules: Seq[Rule], checkpointDir: String,
-      oneTable: Boolean): (Path, String) =
-    if (oneTable) (controlDir(rules.head.tableDir), rules.head.tableDir)
-    else (Paths.get(rulesControlDir(checkpointDir)), rulesControlDir(checkpointDir))
+  /** Where a pipeline keeps its stop marker and published HTTP port: the
+    * table's control dir for a one-table pipeline, [[rulesControlDir]] for a
+    * rule pipeline. (Its run report lives beside every rule's table.) */
+  private def pipelineHome(rules: Seq[Rule], checkpointDir: String, oneTable: Boolean): Path =
+    if (oneTable) controlDir(rules.head.tableDir) else Paths.get(rulesControlDir(checkpointDir))
   private def pauseMarker(tableDir: String): Path = controlDir(tableDir).resolve("pause")
   private def catchupMarker(tableDir: String): Path = controlDir(tableDir).resolve("catchup")
 

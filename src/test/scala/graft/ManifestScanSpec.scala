@@ -1,7 +1,8 @@
 package graft
 
-import graft.ingest.MergeApply
-import graft.lake.{LakeTable, Maintenance, Snapshot}
+import graft.gen.{ChangelogGen, GenConfig, Oracle}
+import graft.ingest.{ChainApply, Ingest, MergeApply, Mor}
+import graft.lake.{ChangeFeed, LakeTable, Maintenance, Snapshot}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -12,7 +13,8 @@ import scala.util.Random
 
 /** Base-file scans plan from the manifest: no listing job, and a read whose
   * filter pins one (repo, path) key opens only the file(s) whose bucket and
-  * `_hkey` range can hold it — without ever changing an answer.
+  * `_hkey` range can hold it — without ever changing an answer. Merge-on-read
+  * reads (which still list their delta files) have their Spark jobs pinned.
   */
 class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -121,5 +123,59 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assertPruningExact(table, table.snapshot, rnd, "after rebucket")
     // time travel across the rebucket prunes under the OLD bucket count
     assertPruningExact(table, table.snapshotAt(beforeRebucket.version), rnd, "pre-rebucket snapshot")
+  }
+
+  test("merge-on-read reads pin their Spark jobs: full, keyed, change-feed window, chain bootstrap") {
+    val cfg = GenConfig(seed = 61L, nEvents = 3000L, nRepos = 20, pathsPerRepo = 10,
+      nPartitions = 2, contentLen = 40)
+    val events = ChangelogGen.eventsLocal(cfg)
+    val log = ChangelogGen.events(spark, cfg).toDF()
+    val mor = Ingest.IngestConfig(morMode = true)
+    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mscan-mor"), numBuckets = 8)
+    // base files, then flat deltas that a partial fold splits into folded
+    // buckets and per-bucket compacted deltas, then more flat deltas
+    Ingest.replayLog(table, log.filter(col("seq") <= 1000L))
+    Ingest.replayLog(table, log.filter(col("seq") > 1000L && col("seq") <= 2000L), mor)
+    Mor.fold(table, minEventsPerBucket = table.snapshot.flatDeltaHist.get.values.max)
+    val v1 = table.snapshot.version
+    Ingest.replayLog(table, log.filter(col("seq") > 2000L), mor)
+    val s = table.snapshot
+    assert(s.files.nonEmpty && s.deltaFiles.exists(_.bucket >= 0) && s.deltaFiles.exists(_.bucket < 0),
+      "fixture: base files, compacted per-bucket deltas and flat deltas")
+
+    def shas(rows: Array[Row]): Set[(String, String, String)] = rows.map(r =>
+      (r.getAs[String]("repo"), r.getAs[String]("path"), Oracle.sha256Hex(r.getAs[String]("content")))).toSet
+    val want = Oracle.contentSha(Oracle.replay(events)).map { case ((r, p), (sha, _)) => (r, p, sha) }.toSet
+
+    val (fullJobs, all) = TestSpark.jobsDuring(table.read().collect())
+    assert(shas(all) === want)
+
+    val key = events.filter(e => e.seq > 2000L && e.op == "update").map(e => (e.repo, e.path))
+      .find(k => want.exists(w => (w._1, w._2) == k)).get
+    val (keyedJobs, one) = TestSpark.jobsDuring(keyed(table.read(), key).collect())
+    assert(shas(one) === want.filter(w => (w._1, w._2) == key))
+
+    val (feedJobs, feed) = TestSpark.jobsDuring(ChangeFeed.changesBetween(table, v1, s.version).collect())
+    val before = Oracle.replay(events.filter(_.seq <= 2000L)).rows
+    val after = Oracle.replay(events).rows
+    val wantFeed = (before.keySet ++ after.keySet).flatMap { k =>
+      (before.get(k), after.get(k)) match {
+        case (None, Some(n)) => Some((k, "insert", Oracle.sha256Hex(n.row.content)))
+        case (Some(o), Some(n)) if o.seq != n.seq => Some((k, "update", Oracle.sha256Hex(n.row.content)))
+        case (Some(o), None) => Some((k, "delete", Oracle.sha256Hex(o.row.content)))
+        case _ => None
+      }
+    }
+    assert(feed.map(r => ((r.getAs[String]("repo"), r.getAs[String]("path")),
+      r.getAs[String](ChangeFeed.OpColName), Oracle.sha256Hex(r.getAs[String]("content")))).toSet === wantFeed)
+
+    val dst = LakeTable.create(spark, TestSpark.tmpDir("graft-mscan-chain"), numBuckets = 8)
+    val (chainJobs, _) = TestSpark.jobsDuring(ChainApply.sync(table, dst))
+    assert(shas(dst.read().collect()) === want)
+
+    // today's counts: a keyed MOR read still lists its delta files, merges
+    // their schemas and joins every delta-touched base file
+    assert((fullJobs, keyedJobs, feedJobs, chainJobs) === ((6, 6, 15, 18)),
+      "Spark jobs of (full read, keyed read, change-feed window, chain bootstrap)")
   }
 }

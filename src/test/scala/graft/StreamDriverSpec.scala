@@ -36,8 +36,9 @@ object StreamDriverSpecHooks {
 /** The one stream driver: its run report stays parseable through a graceful
   * stop, a rule that fails mid-batch leaves the rules that already
   * committed that batch untouched when the batch is redelivered, a pause
-  * that skipped no batch costs nothing on resume, and a failure of the idle
-  * watcher ends the tail instead of hanging it. */
+  * that skipped no batch costs nothing on resume, a failure of the idle
+  * watcher ends the tail instead of hanging it, and a rule pipeline writes
+  * its run report beside every rule's table. */
 class StreamDriverSpec extends AnyFunSuite {
   import StreamDriverSpecHooks._
   private lazy val spark = TestSpark.spark
@@ -291,5 +292,27 @@ class StreamDriverSpec extends AnyFunSuite {
     }
     assert(!again.isAlive, "tail must stop")
     assert(shaSet(tableDir) === oracle(cfg))
+  }
+
+  test("a rule pipeline's run report lives beside every rule's table") {
+    val cfg = GenConfig(seed = 67L, nEvents = 2000L, nRepos = 20, pathsPerRepo = 10,
+      nPartitions = 2, contentLen = 60)
+    val logDir = TestSpark.tmpDir("graft-sd-report-log")
+    val dirs = Seq("a", "b").map(n => n -> TestSpark.tmpDir(s"graft-sd-report-$n"))
+    ChangeLog.write(ChangelogGen.events(spark, cfg), logDir, segmentsPerPartition = 2)
+    dirs.foreach { case (_, d) => LakeTable.create(spark, d, numBuckets = 4) }
+    StreamIngest.runRulesAvailable(spark, logDir, dirs.map { case (n, d) => Rule(n, d, Ingest.IngestConfig()) },
+      TestSpark.tmpDir("graft-sd-report-ckpt"))
+    dirs.foreach { case (n, d) =>
+      val progress = ProgressListener.file(d)
+      assert(Files.exists(progress), s"rule $n: no run report at $progress")
+      val records = Files.readAllLines(progress).asScala.toSeq.map { l =>
+        assert(scala.util.Try(Json.parse(l)).isSuccess, s"rule $n: unparseable progress line: ${l.take(200)}")
+        Json.parse(l)
+      }
+      val last = records.last
+      assert(Option(last.get("event")).map(_.asText).contains("terminated") && last.get("exception").isNull,
+        s"rule $n: the last record is a clean termination, got $last")
+    }
   }
 }
