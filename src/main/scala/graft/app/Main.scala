@@ -104,10 +104,6 @@ object Main {
         // available for a final full compaction
         morFoldMinEventsPerBucket = env.get("GRAFT_MOR_FOLD_MIN_PER_BUCKET").map(_.toLong)
           .getOrElse(base.morFoldMinEventsPerBucket),
-        // GRAFT_MOR_RAW=1: shuffle-free raw appends (skip per-batch LWW
-        // dedup; right for low-duplication sources — see
-        // IngestConfig.morDedupPerBatch)
-        morDedupPerBatch = !flag("GRAFT_MOR_RAW", "1", "true"),
         // GRAFT_SIGSTORE=<dir>: maintain a persisted near-dup signature store
         // alongside the table (SigStore.maintainFromEvents per batch) so
         // incoming batches can be near-dup-checked in O(batch) via
@@ -370,7 +366,6 @@ object Main {
       |  GRAFT_MOR=0|false                  run/tail/tailrules copy-on-write (default: merge-on-read)
       |  GRAFT_MOR_FOLD_EVERY=<n>           MOR fold cadence in micro-batches (default 2)
       |  GRAFT_MOR_FOLD_MIN_PER_BUCKET=<n>  cadence folds rewrite buckets with >= n events (default 16384)
-      |  GRAFT_MOR_RAW=1|true               MOR appends skip per-batch LWW dedup (default: dedup)
       |  GRAFT_SIGSTORE=<dir>               maintain a near-dup signature store from run/tail/replay
       |  GRAFT_HTTP_PORT=<p>                tail/tailrules control plane port (default 0: ephemeral)
       |  SPARK_GRAFT_CPUS=<n>               local cores and shuffle partitions (default: every core)

@@ -33,31 +33,12 @@ object Dedup {
         col("_w.op").as("op"), col("_w.seq").as("seq"), col("_w.after").as("after"))
 
   /** Built-in-functions form (max_by) — identical semantics, but Spark plans
-    * it as a SortAggregate (struct buffer ⇒ no hash aggregation); kept for
-    * comparison benchmarks and as the zero-custom-code fallback. */
+    * it as a SortAggregate (struct buffer ⇒ no hash aggregation); kept as
+    * the unit test's reference form and the zero-custom-code fallback. */
   def lastWriterPerKeyMaxBy(events: DataFrame): DataFrame =
     events
       .groupBy(col("repo"), col("path"))
       .agg(max_by(struct(col("op"), col("seq"), col("after")), col("seq")).as("_w"))
       .select(col("repo"), col("path"),
         col("_w.op").as("op"), col("_w.seq").as("seq"), col("_w.after").as("after"))
-
-  /** Explicitly salted two-phase variant: pre-aggregate on (key, salt) to
-    * split a pathologically hot key across `salt` reducers, then finish on
-    * the key (the north rule's "salted repartitioning breaks hot-repo skew").
-    * With max_by's partial aggregation the unsalted form is already
-    * skew-safe; this exists for the (rare) case where per-map-task partial
-    * state must stay tiny, and as the explicit skew-handling surface.
-    */
-  def lastWriterPerKeySalted(events: DataFrame, salt: Int): DataFrame = {
-    require(salt > 1, "salt must be > 1")
-    events
-      .withColumn("_salt", pmod(hash(col("offset")), lit(salt)))
-      .groupBy(col("repo"), col("path"), col("_salt"))
-      .agg(max_by(struct(col("op"), col("seq"), col("after")), col("seq")).as("_w"))
-      .groupBy(col("repo"), col("path"))
-      .agg(max_by(col("_w"), col("_w.seq")).as("_w"))
-      .select(col("repo"), col("path"),
-        col("_w.op").as("op"), col("_w.seq").as("seq"), col("_w.after").as("after"))
-  }
 }

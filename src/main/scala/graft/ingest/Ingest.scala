@@ -40,7 +40,6 @@ object Ingest {
 
   final case class IngestConfig(
       filter: FilterChain = FilterChain.passAll,
-      salt: Int = 1,
       /** Merge-on-read mode (Hudi-MOR / Iceberg-v2 analog): row batches are
         * APPENDED as bucketed delta event files (O(batch) write cost) instead
         * of copy-on-write merged (O(touched files)); reads resolve deltas by
@@ -66,17 +65,6 @@ object Ingest {
         * compacts the rest of the delta log; 0 keeps cadence folds
         * unconditional. */
       morFoldMinEventsPerBucket: Long = 0L,
-      /** In MOR mode, LWW-dedup each micro-batch before appending it (the
-        * default). Semantically optional — read resolution and fold ALREADY
-        * dedup across all delta files with the same LastWriterAgg — so this
-        * is purely a cost trade: dedup pays one shuffle per batch to shrink
-        * the written delta volume by the batch's key-duplication ratio; raw
-        * appends (false — the Hudi log-file shape) make a micro-batch one
-        * shuffle-free scan+filter+write job but write every event. Measured
-        * on the 2M-event bench log (≈7× in-batch duplication): dedup wins;
-        * a low-duplication source (unique keys per batch) should turn this
-        * off and skip the shuffle. */
-      morDedupPerBatch: Boolean = true,
       /** Maintain the transactional per-bucket flat-delta histogram on each
         * MOR append (numBuckets conditional sums riding the write job's
         * Observation). The histogram buys zero-job fold scheduling and
@@ -87,9 +75,6 @@ object Ingest {
         * buckets). Off ⇒ commits poison the histogram (Add(None)) and
         * schedulers fall back to one narrow scan. */
       morBatchHistogram: Boolean = true,
-      /** dedup via explicit two-phase salted aggregation instead of relying
-        * on max_by partial aggregation */
-      saltedDedup: Int = 0,
       /** Whether the source guarantees per-partition offset-ordered delivery
         * across micro-batches (a live binlog/Kafka tail, or a replay of a
         * fully-applied log). Only then may the offset fence FILTER rows —
@@ -289,7 +274,7 @@ object Ingest {
     val imageFields = ImageBinding.imageFields(batch)
     val (stats, write) =
       if (cfg.morMode) morWriter(table, batch, batchId, cfg, statAggs, isLiveRow)
-      else cowWriter(table, snap0, batch, batchId, cfg, statAggs, isLiveRow, imageFields)
+      else cowWriter(table, snap0, batch, batchId, statAggs, isLiveRow, imageFields)
 
     if (stats.deadLetters > 0) appendDeadLetters(table, batch.filter(isDeadLetter), batchId)
 
@@ -368,10 +353,6 @@ object Ingest {
     BatchStats(r.getValuesMap[Any](r.schema.fieldNames.toSeq))
   }
 
-  private def dedup(rows: DataFrame, cfg: IngestConfig): DataFrame =
-    if (cfg.saltedDedup > 1) Dedup.lastWriterPerKeySalted(rows, cfg.saltedDedup)
-    else Dedup.lastWriterPerKey(rows)
-
   /** Copy-on-write: the stats job also selects the whole batch's files.
     * With no files yet that is strategy 1 (insert-only into every bucket)
     * with no selection columns at all; otherwise the live rows' buckets,
@@ -380,7 +361,7 @@ object Ingest {
     * O(1) in the file count). Each segment holds back rows whose image
     * fields the current schema cannot resolve, dedups, and merges. */
   private def cowWriter(table: LakeTable, snap0: Snapshot, batch: DataFrame, batchId: Long,
-      cfg: IngestConfig, statAggs: Seq[Column], isLiveRow: Column,
+      statAggs: Seq[Column], isLiveRow: Column,
       imageFields: Set[String]): (BatchStats, SegmentWriter) = {
     val bucketOf = table.bucketExpr(col("repo"), col("path"))
     val hkeyOf = table.hkeyExpr(col("repo"), col("path"))
@@ -433,8 +414,8 @@ object Ingest {
         if (!last) Map.empty[String, Long]
         else Map("deadLetters" -> stats.deadLetters, "eventsSeen" -> stats.total) ++
           (if (heldTotal > 0) Map("pendingHeldBack" -> heldTotal) else Map.empty)
-      MergeApply.merge(table, dedup(live, cfg), fence,
-        batchId = if (last) batchId else -1L, salt = cfg.salt, extraMetrics = extras,
+      MergeApply.merge(table, Dedup.lastWriterPerKey(live), fence,
+        batchId = if (last) batchId else -1L, extraMetrics = extras,
         selection = if (whole) selection(stats.rows - heldN) else None)
     }
     (stats, write)
@@ -442,18 +423,17 @@ object Ingest {
 
   /** Merge-on-read: the delta write IS the stats job — the stats aggregate
     * rides its source scan as an Observation, so a micro-batch costs one
-    * distributed job (scan + optional dedup shuffle + flat parquet write).
+    * distributed job (scan + dedup shuffle + flat parquet write).
     * Its segment step is the commit of the already-written delta files.
     * `eventsApplied`/`tombstonesWritten` count live events BEFORE the
     * per-batch dedup (the delta files hold what survives it). */
   private def morWriter(table: LakeTable, batch: DataFrame, batchId: Long, cfg: IngestConfig,
       statAggs: Seq[Column], isLiveRow: Column): (BatchStats, SegmentWriter) = {
     val obs = Observation(s"mor-${java.util.UUID.randomUUID()}")
+    // per-batch LWW dedup: one shuffle that shrinks the written delta by the
+    // batch's key-duplication ratio (reads and folds dedup across files anyway)
     val live = batch.observe(obs, statAggs.head, statAggs.tail: _*).filter(isLiveRow)
-    val payload =
-      if (cfg.morDedupPerBatch) dedup(live, cfg)
-      else live.select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
-    val staged = MergeApply.writeDelta(table, payload, cfg.morBatchHistogram)
+    val staged = MergeApply.writeDelta(table, Dedup.lastWriterPerKey(live), cfg.morBatchHistogram)
     // When the payload is EMPTY (all rows fenced/filtered) AQE's empty-
     // relation propagation can drop the CollectMetrics node and the
     // observation comes back empty, or never arrives (timeout): those

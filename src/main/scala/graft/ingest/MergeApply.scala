@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * Copy-on-write at FILE granularity: manifest key-range stats (min/max of
   * `_hkey = xxhash64(repo, path)` per file) select exactly the files that can
   * contain a delta key; only those are read and rewritten, everything else
-  * survives the commit untouched. Output files are written sorted by
-  * (_bucket, _hkey) and split at `targetFileRows`, so each covers a narrow
-  * key slice and future merges prune well.
+  * survives the commit untouched. Output files go through
+  * `LakeTable.writeFiles` (sorted by (_bucket, _hkey), split at
+  * `targetFileRows`), so each covers a narrow key slice and future merges
+  * prune well.
   *
   * Three physical strategies, chosen per batch from the selection stats:
   *
@@ -47,10 +48,10 @@ import org.apache.spark.sql.functions._
   *     load, bulk replay): full-outer join on the key (repo, path) — the
   *     delta side usually arrives partitioned by exactly those keys from the
   *     ingest's LWW dedup, so only the base side exchanges — then ONE
-  *     explicit repartition of the merged output on (_bucket[, salt]) feeds
-  *     the partitioned write, bounding the commit's file count at
-  *     buckets × salt. (An earlier design joined on (bucket[, salt], repo,
-  *     path) with both sides pre-repartitioned by bucket, expecting subset
+  *     explicit repartition of the merged output on _bucket feeds the
+  *     partitioned write, bounding the commit's file count at the bucket
+  *     count. (An earlier design joined on (bucket, repo, path) with both
+  *     sides pre-repartitioned by bucket, expecting subset
   *     co-partitioning to make the join exchange double as the write layout;
   *     Spark 4 rewrites those repartitions into a full-key exchange, which
   *     silently degraded every commit into a tasks × buckets small-file
@@ -64,13 +65,6 @@ import org.apache.spark.sql.functions._
   * for its two uses and unpersisted before return.
   */
 object MergeApply {
-
-  /** Codec for short-lived delta EVENT files (MOR appends and compacted
-    * delta logs). Base files stay zstd — they live until rewritten and
-    * dominate table bytes at rest — but deltas are written once, read
-    * once or twice (MorRead / fold) and dropped, so encode speed beats
-    * ratio on the streaming hot path (Hudi log-file trade). */
-  val deltaFileCodec: String = "snappy"
 
   /** daemon pool for observation reads (bounded; see observedMetrics). */
   private lazy val metricPool: scala.concurrent.ExecutionContext =
@@ -252,10 +246,6 @@ object MergeApply {
   /** @param delta  one row per key: (repo, path, op, seq, after:struct)
     * @param fenceDelta per-log-partition max offsets covered by this delta's
     *                   source batch — committed atomically with the data
-    * @param salt   >1 spreads each rewritten bucket's shuffle/write work
-    *               across `salt` tasks (hot-bucket skew); the salt column is
-    *               a pure function of `path`, so it is safe as an extra join
-    *               key
     * @param selection precomputed file selection (else one extra small job)
     */
   def merge(
@@ -263,7 +253,6 @@ object MergeApply {
       delta: DataFrame,
       fenceDelta: Map[Int, Long],
       batchId: Long = -1L,
-      salt: Int = 1,
       extraMetrics: Map[String, Long] = Map.empty,
       selection: Option[FileSelection] = None,
       /** extra manifest paths dropped in the SAME commit (Mor.fold removes
@@ -285,7 +274,7 @@ object MergeApply {
     // convergence is order-independent.
     var sel = selection
     LakeTable.withCommitRetry(table) {
-      try mergeOnce(table, delta, fenceDelta, batchId, salt, extraMetrics, sel,
+      try mergeOnce(table, delta, fenceDelta, batchId, extraMetrics, sel,
         alsoReplacePaths, alsoNewDeltaFiles, flatHistOp)
       finally sel = None
     }
@@ -299,12 +288,12 @@ object MergeApply {
     * replay by ~7×). Reads resolve via [[graft.lake.MorRead]]; `Mor.fold`
     * (compaction) turns the accumulated deltas into one ordinary COW merge.
     *
-    * `delta` may carry RAW events (several per key): unlike [[merge]], the
+    * `delta` may carry several events per key: unlike [[merge]], the
     * one-row-per-key contract is NOT required here, because read resolution
     * ([[graft.lake.MorRead.deltaWinners]]) and fold LWW-dedup across ALL
-    * delta files anyway — appending raw keeps the micro-batch shuffle-free
-    * (Hudi log-file shape; see IngestConfig.morDedupPerBatch for the
-    * trade-off). Fence/batchId/exactly-once semantics identical to merge: a
+    * delta files anyway (`Ingest.applyBatch` still dedups each micro-batch:
+    * it shrinks the written delta by the batch's key-duplication ratio).
+    * Fence/batchId/exactly-once semantics identical to merge: a
     * retried batch is skipped by the batchId fence before this is called,
     * so delta files are never double-appended.
     *
@@ -331,14 +320,14 @@ object MergeApply {
     def events: Long = files.iterator.map(_.rows).sum
   }
 
-  /** Write `delta` as flat delta files into a fresh commit dir. Delta EVENT
-    * files are read wholesale (never pruned by bucket or key: MorRead
-    * re-groups by key, fold re-derives layout), so the append does NO
-    * layout work at all: no repartition-by-bucket (one whole extra exchange
-    * per micro-batch), no partitionBy (≈ numBuckets files + footer opens per
-    * batch), no sort — the rows are written as-is in their incoming
-    * partitioning (AQE has already coalesced small batches to a handful of
-    * partitions ⇒ a handful of files).
+  /** Write `delta` as flat delta files (`LakeTable.writeFiles` without
+    * layout columns). Delta EVENT files are read wholesale (never pruned by
+    * bucket or key: MorRead re-groups by key, fold re-derives layout), so
+    * the append does NO layout work at all: no repartition-by-bucket (one
+    * whole extra exchange per micro-batch), no bucket dirs (≈ numBuckets
+    * files + footer opens per batch), no sort — the rows are written as-is
+    * in their incoming partitioning (AQE has already coalesced small batches
+    * to a handful of partitions ⇒ a handful of files).
     *
     * The per-bucket histogram (`histogram`, up to [[Snapshot.HistMaxBuckets]])
     * rides the write as conditional sums in one Observation and lands in the
@@ -355,15 +344,11 @@ object MergeApply {
     val aggs = countAggs ++ (0 until histN)
       .map(i => sum(when(col("_hb") === i, 1L).otherwise(0L)).as(s"_h$i"))
     val obs = Observation(s"mor-append-${java.util.UUID.randomUUID()}")
-    val commitDir = table.newCommitDataDir()
-    delta.withColumn("_hb", table.bucketExpr(col("repo"), col("path")))
-      .observe(obs, aggs.head, aggs.tail: _*)
-      .drop("_hb")
-      .write.mode("overwrite") // commitDir is fresh; overwrite = retry-safe
-      .options(Map("compression" -> deltaFileCodec,
-        "maxRecordsPerFile" -> snap.targetFileRows.toString))
-      .parquet(commitDir)
-    val files = table.listWrittenFilesFlat(commitDir, snap.schemaId)
+    val files = table.writeFiles(
+      delta.withColumn("_hb", table.bucketExpr(col("repo"), col("path")))
+        .observe(obs, aggs.head, aggs.tail: _*)
+        .drop("_hb"),
+      base = false)
     if (files.isEmpty) return StagedDelta(files, 0L, -1L, None, snap.numBuckets)
     // A lost (AQE-pruned) or timed-out observation must not read as zero
     // counts — an exact-but-wrong histogram that foldPartial would trust and
@@ -374,7 +359,7 @@ object MergeApply {
     val m =
       if (om.nonEmpty) om
       else {
-        val r = table.spark.read.parquet(commitDir)
+        val r = table.spark.read.parquet(files.map(f => table.resolve(f.path)): _*)
           .agg(countAggs.head, countAggs.tail: _*).collect()(0)
         r.getValuesMap[Any](r.schema.fieldNames.toSeq)
       }
@@ -410,13 +395,11 @@ object MergeApply {
       delta: DataFrame,
       fenceDelta: Map[Int, Long],
       batchId: Long,
-      salt: Int,
       extraMetrics: Map[String, Long],
       selection: Option[FileSelection],
       alsoReplacePaths: Set[String] = Set.empty,
       alsoNewDeltaFiles: Seq[DataFile] = Seq.empty,
       flatHistOp: FlatHistOp = FlatHistOp.Keep): MergeResult = {
-    val spark = table.spark
     val snap = table.snapshot
     val sel = selection.getOrElse(selectFiles(table, delta))
 
@@ -439,21 +422,15 @@ object MergeApply {
     // protection, /root/reference/event/sql_maker.go:72-78).
     val (imageBinding, unresolvedImageFields) =
       ImageBinding.bind(snap, ImageBinding.imageFields(delta))
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val saltN = math.max(salt, 1)
 
     val useBroadcast = sel.files.nonEmpty &&
       sel.deltaRowsHint >= 0 && sel.deltaRowsHint <= BroadcastDeltaMaxRows &&
       estimatedDeltaBytes(sel) <= BroadcastDeltaMaxBytes &&
       sel.files.iterator.map(_.rows).sum > 2 * sel.deltaRowsHint
 
-    val commitDir = table.newCommitDataDir()
-    val writeOpts = Map("compression" -> "zstd",
-      "maxRecordsPerFile" -> snap.targetFileRows.toString)
-
-    def withLayout(df: DataFrame): DataFrame = df
-      .withColumn("_bucket", table.bucketExpr(col("repo"), col("path")))
-      .withColumn(LakeTable.HkeyCol, table.hkeyExpr(col("repo"), col("path")))
+    // every rewritten bucket's rows are routed to one writing task
+    def laidOut(df: DataFrame, routed: Boolean = true): DataFrame =
+      table.bucketRows(df, base = true, if (routed) Some(sel.buckets.size) else None)
 
     // --- per-branch projections -------------------------------------------
     def isDelOf(dop: Column): Column = dop === Ops.Delete
@@ -514,7 +491,7 @@ object MergeApply {
     /** sum the flags via one CollectMetrics node above the final output,
       * drop the flags, write. The observed node feeds the writer directly,
       * so it can never be pruned while there is anything to write. */
-    def observeAndWrite(df: DataFrame): Observation = {
+    def observeAndWrite(df: DataFrame): (Observation, Seq[DataFile]) = {
       val obs = Observation(s"merge-${java.util.UUID.randomUUID()}")
       val observed = df.observe(obs,
         sum(col("_fApplied")).as("applied"),
@@ -526,24 +503,12 @@ object MergeApply {
         sum(col("_fUnres")).as("unresolvedVals"),
         // GTID analog: newest log seq now present in the table
         max(col(LakeTable.SeqCol)).as("maxSeq"))
-      write(observed.drop(flagCols: _*)
-        .sortWithinPartitions(col("_bucket"), col(LakeTable.HkeyCol)))
-      obs
+      (obs, table.writeFiles(observed.drop(flagCols: _*), base = true))
     }
 
-    def write(df: DataFrame): Unit = {
-      df.write.mode("overwrite").options(writeOpts).partitionBy("_bucket").parquet(commitDir)
-    }
-
-    val obs: Observation = if (sel.files.isEmpty) {
+    val (obs, newFiles) = if (sel.files.isEmpty) {
       // ---- strategy 1: insert-only (no join) ----
-      val rows = withLayout(insertProjection(delta))
-      val p = math.max(1, math.min(sel.buckets.size * saltN, shufflePartitions))
-      val routed =
-        if (saltN > 1)
-          rows.repartition(p, col("_bucket"), pmod(hash(col("path")), lit(saltN)))
-        else rows.repartition(p, col("_bucket"))
-      observeAndWrite(routed)
+      observeAndWrite(laidOut(insertProjection(delta)))
     } else if (useBroadcast) {
       // ---- strategy 2: broadcast-incremental (base never shuffles) ----
       val d0 = delta.persist() // two consumers (matched join + anti join)
@@ -558,29 +523,21 @@ object MergeApply {
         // reads just the two key columns of the selected files)
         val baseKeys = table.readInternal(snap, sel.files).select(col("repo"), col("path"))
         val inserts = insertProjection(d0.join(baseKeys, Seq("repo", "path"), "left_anti"))
-        val pIns = math.max(1, math.min(sel.buckets.size, shufflePartitions))
-        observeAndWrite(withLayout(matched)
-          .unionByName(withLayout(inserts).repartition(pIns, col("_bucket"))))
+        // the matched side keeps the base scan's partitioning; only the
+        // insert residue is routed
+        observeAndWrite(laidOut(matched, routed = false).unionByName(laidOut(inserts)))
       } finally d0.unpersist(blocking = false)
     } else {
       // ---- strategy 3: shuffle merge + bucket-routed write ----
       // Join on the real key: the delta side's LWW dedup already hash-
       // partitioned it by (repo, path), so the join reuses that exchange and
-      // only the base side shuffles. In the join there is no bucket skew to
-      // salt (one row per key per side); salt spreads the WRITE of a hot
-      // bucket across `saltN` tasks instead.
+      // only the base side shuffles.
       val b = table.readInternal(snap, sel.files).alias("b")
       val d = delta.alias("d")
       val joined = b.join(d,
         col("b.repo") === col("d.repo") && col("b.path") === col("d.path"),
         "full_outer")
-      val merged = withLayout(resolveMatched(joined))
-      val p = math.max(1, math.min(sel.buckets.size * saltN, shufflePartitions))
-      val routed =
-        if (saltN > 1)
-          merged.repartition(p, col("_bucket"), pmod(hash(col("path")), lit(saltN)))
-        else merged.repartition(p, col("_bucket"))
-      observeAndWrite(routed)
+      observeAndWrite(laidOut(resolveMatched(joined)))
     }
     val om = observedMetrics(obs)
     def metric(name: String): Long = longMetric(om, name)
@@ -589,7 +546,6 @@ object MergeApply {
     val duplicates = metric("duplicates"); val noops = metric("noopUpdates")
     val maxSeq = longMetric(om, "maxSeq", -1L)
 
-    val newFiles: Seq[DataFile] = table.listWrittenFiles(commitDir, sch.schemaId)
     val metricsDelta = Map(
       "eventsApplied" -> applied,
       "upserts" -> upserts,

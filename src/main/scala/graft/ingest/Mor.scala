@@ -5,8 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Merge-on-read orchestration (the fold half; writes go through
-  * [[MergeApply.appendDelta]], reads through [[graft.lake.MorRead]]).
+/** Merge-on-read orchestration (the fold half; appends go through
+  * [[MergeApply.appendDelta]], reads through [[graft.lake.MorRead]], and
+  * every data file a fold writes — rewritten base files, per-bucket
+  * compacted deltas — through `LakeTable.writeFiles`).
   *
   * `fold` compacts the accumulated delta EVENT files into the base through
   * the ordinary COW merge — the same battle-tested path every batch uses —
@@ -223,8 +225,9 @@ object Mor {
   }
 
   /** Write a winners DataFrame as PER-BUCKET compacted delta files
-    * (`_bucket=N` dirs; one task per bucket group, so each bucket lands in
-    * one file) and list them with bucket labels + footer stats. The labels
+    * (`_bucket=N` dirs through `LakeTable.writeFiles`; routed to one task
+    * per bucket group, so each bucket lands in one file) with bucket labels
+    * in their manifest entries. The labels
     * are what buy partial folds their file-group pruning: the next fold of
     * bucket set S reads only `_bucket∈S` files plus recent flat appends,
     * and the scheduling backlog for labeled files comes from the manifest.
@@ -234,18 +237,8 @@ object Mor {
     * Orphaned by a lost commit race like any commit dir (swept by
     * expireSnapshots past the grace window). */
   private def writeDeltaCompact(table: LakeTable, winners: DataFrame): (Seq[DataFile], Long) = {
-    val shufflePartitions =
-      table.spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val n = math.max(1, math.min(table.numBuckets, shufflePartitions))
-    val dir = table.newCommitDataDir()
-    winners
-      .withColumn("_bucket", table.bucketExpr(col("repo"), col("path")))
-      .repartition(n, col("_bucket"))
-      .write.mode("overwrite").partitionBy("_bucket")
-      .options(Map("compression" -> MergeApply.deltaFileCodec,
-        "maxRecordsPerFile" -> table.snapshot.targetFileRows.toString))
-      .parquet(dir)
-    val files = table.listWrittenFiles(dir, table.snapshot.schemaId)
+    val files = table.writeFiles(
+      table.bucketRows(winners, base = false, route = Some(table.numBuckets)), base = false)
     (files, files.iterator.map(_.rows).sum)
   }
 }

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, LongType
   *                carries the PRE-image (the row as of `from`) and the
   *                tombstone's seq when retained.
   * Keys whose state is bit-identical (same winner seq) are NOT changes — a
-  * compaction/fold/rebucket commit inside the window contributes nothing.
+  * compaction/fold/rebucket commit inside the window contributes nothing. A
+  * window made ONLY of such rewrites is answered from snapshot metadata
+  * alone: the empty feed, with nothing read.
   *
   * Scale shape (the 100 TB contract): cost is O(files the window ADDED), not
   * O(table). Candidate keys are read from exactly the base/delta files that
@@ -89,7 +91,8 @@ object ChangeFeed {
     def emptyStats: FeedStats = FeedStats(0, 0, 0, 0, 0, 0L, 0, 0L,
       s2.files.size + s2.deltaFiles.size,
       s2.files.iterator.map(_.rows).sum + s2.deltaFiles.iterator.map(_.rows).sum)
-    if (fromVersion == toVersion) return (emptyFeed(table, s2), emptyStats)
+    if (fromVersion == toVersion || rewritesOnly(table, fromVersion, toVersion))
+      return (emptyFeed(table, s2), emptyStats)
     val s1 = table.snapshotAt(fromVersion)
 
     // ---- 1. files the window added (metadata-only diff)
@@ -228,6 +231,26 @@ object ChangeFeed {
       .filter(col(OpColName).isNotNull)
     (feed, stats)
   }
+
+  /** Metric keys of the commits that rewrite files without changing any
+    * key's state: a fold (full or partial), a delta-log compaction, a
+    * compaction (an expired tombstone was dead before and is absent after)
+    * and a rebucket. */
+  private val RewriteMetrics = Seq("morFolds", "deltaCompactions", "compactions", "rebuckets")
+
+  /** Whether every commit in `(from, to]` is such a rewrite, judged from the
+    * snapshots' cumulative metrics: each version's metric delta carries a
+    * rewrite key and holds no rows back (a fold that parks rows in
+    * `_pending` hides them until they drain). A missing intermediate
+    * snapshot answers false, and the feed takes its scanning path. */
+  private def rewritesOnly(table: LakeTable, from: Long, to: Long): Boolean =
+    try {
+      val metrics = (from to to).map(v => table.snapshotAt(v).metrics)
+      metrics.zip(metrics.tail).forall { case (prev, cur) =>
+        def delta(k: String): Long = cur.getOrElse(k, 0L) - prev.getOrElse(k, 0L)
+        RewriteMetrics.exists(delta(_) > 0L) && delta("pendingHeldBack") == 0L
+      }
+    } catch { case scala.util.control.NonFatal(_) => false }
 
   /** Zero changes, under the feed's output schema for `s`'s current schema. */
   private def emptyFeed(table: LakeTable, s: Snapshot): DataFrame = {

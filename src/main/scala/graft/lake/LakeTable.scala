@@ -25,7 +25,7 @@ import scala.jdk.CollectionConverters._
   *  - the shuffle-alignment unit for the merge join (both sides partitioned by
   *    the same function ⇒ co-located, skew-free since hot repos spread over
   *    all buckets via the path component of the hash), and
-  *  - the write-layout unit (`partitionBy("_bucket")`).
+  *  - the write-layout unit (one `_bucket=N/` directory per bucket).
   *
   * WITHIN a bucket, data is tracked per FILE with min/max statistics over
   * `_hkey = xxhash64(repo, path)` (an Iceberg-manifest analog, read straight
@@ -33,6 +33,13 @@ import scala.jdk.CollectionConverters._
   * at `targetFileRows`, so each covers a narrow, disjoint key slice — the
   * copy-on-write unit shrinks from a whole bucket to the files actually
   * containing delta keys.
+  *
+  * Every data file of every commit is written and listed here:
+  * [[bucketRows]] adds the layout columns (and routes rows by bucket when
+  * asked), [[writeFiles]] writes one commit's files — bucketed base files,
+  * bucketed (compacted) delta files or a flat delta append — and returns
+  * their manifest entries for [[commit]]. The COW merge, MOR appends, folds,
+  * delta-log compaction, compact and rebucket all write through it.
   *
   * Base-file reads plan from the snapshot's manifests alone: every scan goes
   * through a [[ManifestFileIndex]] built from the manifest entries (path,
@@ -299,85 +306,70 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     p.toString
   }
 
-  /** List the parquet files written under a commit data dir (`_bucket=N/`
-    * subdirs) and build manifest entries with per-file row counts and
-    * `_hkey` min/max stats straight from the Parquet footers. Small commits
-    * read footers on a driver thread pool (cheap metadata fetches); past
-    * [[LakeTable.DistributedFooterStatsMinFiles]] files the reads run as a
-    * small Spark job (Iceberg manifest-writer shape) — a bulk load/rebucket
-    * at cluster scale writes 10^4+ files, and a driver-serial footer pass
-    * would be the only O(files) driver step left in the commit. Both paths
-    * produce identical entries (asserted in FilePruningSpec). */
-  def listWrittenFiles(commitDir: String, schemaId: Int,
-      distributedMinFiles: Int = LakeTable.DistributedFooterStatsMinFiles): Seq[DataFile] = {
-    val root = Paths.get(dir).toAbsolutePath.normalize
-    val dirs = LakeTable.listDir(Paths.get(commitDir))
-      .filter(p => p.getFileName.toString.startsWith("_bucket="))
-    val targets: Seq[(Int, String)] = for {
-      p <- dirs
-      b = p.getFileName.toString.stripPrefix("_bucket=").toInt
-      f <- LakeTable.listDir(p) if f.getFileName.toString.endsWith(".parquet")
-    } yield (b, f.toAbsolutePath.normalize.toString)
-
-    val stats: Seq[(Int, String, Long, Long, Long, Long)] =
-      if (targets.size >= distributedMinFiles) {
-        // one shuffle-free stage: parallelize WITH slices (a repartition here
-        // cost a whole extra stage + exchange — measured ~2.5-8 s per replay
-        // when every commit crossed the old 512-file threshold, a fixed tax
-        // the 16-thread driver pool never paid; see BENCH/runs.md A/B)
-        val parallelism = math.max(1, math.min(targets.size / 64 + 1,
-          spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(targets, parallelism)
-          .mapPartitions { it =>
-            // executors build a plain local-FS conf; the session conf object
-            // is not serializable and carries nothing these reads need
-            val conf = new org.apache.hadoop.conf.Configuration()
-            it.map { case (b, pStr) =>
-              val p = Paths.get(pStr)
-              val (rows, minK, maxK) = LakeTable.footerStats(p, conf)
-              (b, pStr, rows, minK, maxK, Files.size(p))
-            }
-          }.collect().toSeq
-      } else {
-        // footer reads are independent metadata fetches — concurrent pool
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = LakeTable.metaPool
-        val conf = spark.sessionState.newHadoopConf()
-        Await.result(Future.sequence(targets.map { case (b, pStr) =>
-          Future {
-            val p = Paths.get(pStr)
-            val (rows, minK, maxK) = LakeTable.footerStats(p, conf)
-            (b, pStr, rows, minK, maxK, Files.size(p))
-          }
-        }), Duration.Inf)
-      }
-    stats.map { case (b, pStr, rows, minK, maxK, sz) =>
-      DataFile(b, root.relativize(Paths.get(pStr)).toString, schemaId, rows, minK, maxK,
-        bytes = sz)
-    }.filter(_.rows > 0)
+  /** The layout columns of one commit's rows: `_bucket` under `numBuckets`
+    * and, for base files, the `_hkey` sort/stats key. With `route` the rows
+    * are exchanged by `_bucket` to min(route, shuffle partitions) tasks, so
+    * a commit writes about one file per bucket and split, not tasks ×
+    * buckets. Delta files carry no `_hkey`: they are read wholesale. */
+  def bucketRows(rows: DataFrame, base: Boolean, route: Option[Int] = None,
+      numBuckets: Int = snap.numBuckets): DataFrame = {
+    val bucketed = rows.withColumn("_bucket", LakeTable.bucketExpr(col("repo"), col("path"), numBuckets))
+    val laidOut =
+      if (base) bucketed.withColumn(LakeTable.HkeyCol, hkeyExpr(col("repo"), col("path")))
+      else bucketed
+    route.fold(laidOut) { n =>
+      val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      laidOut.repartition(math.max(1, math.min(n, shufflePartitions)), col("_bucket"))
+    }
   }
 
-  /** Manifest entries for a FLAT commit dir (no `_bucket=N` layout) — the
-    * merge-on-read delta append's shape: delta event files are read wholesale
-    * and never pruned by bucket or key range, so they carry `bucket = -1`
-    * and the full key range instead of paying a per-bucket write fan-out and
-    * per-file stats reads on the streaming hot path. Row counts still come
-    * from the footers (a handful of files per batch). */
-  def listWrittenFilesFlat(commitDir: String, schemaId: Int): Seq[DataFile] = {
-    val root = Paths.get(dir).toAbsolutePath.normalize
+  /** Write one commit's data files into a fresh commit dir and return their
+    * manifest entries. Rows with a `_bucket` column ([[bucketRows]]) land in
+    * `_bucket=N/` dirs, others in one flat dir (the MOR append's shape: no
+    * exchange, no fan-out). Base files are sorted by (`_bucket`, `_hkey`)
+    * and zstd-compressed: they live until rewritten and dominate table bytes
+    * at rest. Delta files are snappy: written once, read once or twice (MOR
+    * reads, fold) and dropped, so encode speed beats ratio. Every file splits
+    * at `targetFileRows`, so a base file covers a narrow key slice. */
+  def writeFiles(rows: DataFrame, base: Boolean): Seq[DataFile] = {
+    val s = snap
+    val commitDir = newCommitDataDir()
+    val out = if (base) rows.sortWithinPartitions(col("_bucket"), col(LakeTable.HkeyCol)) else rows
+    val writer = out.write.mode("overwrite") // commitDir is fresh; overwrite = retry-safe
+      .option("compression", if (base) "zstd" else "snappy")
+      .option("maxRecordsPerFile", s.targetFileRows.toString)
+    if (rows.columns.contains("_bucket")) writer.partitionBy("_bucket").parquet(commitDir)
+    else writer.parquet(commitDir)
+    listFiles(commitDir, s.schemaId)
+  }
+
+  /** Manifest entries for a commit dir's parquet files, with row counts and
+    * sizes from the footers (read on a driver thread pool: independent
+    * metadata fetches). A file under `_bucket=N/` carries bucket N and its
+    * `_hkey` min/max; a flat file carries bucket -1 and the full key range
+    * (never pruned by bucket or key). Empty files are dropped. */
+  private def listFiles(commitDir: String, schemaId: Int): Seq[DataFile] = {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = LakeTable.metaPool
-    val futures = for {
-      f <- LakeTable.listDir(Paths.get(commitDir))
-      if f.getFileName.toString.endsWith(".parquet")
-    } yield Future {
-      val (rows, _, _) = LakeTable.footerStats(f, spark.sessionState.newHadoopConf())
-      val rel = root.relativize(f.toAbsolutePath.normalize).toString
-      DataFile(-1, rel, schemaId, rows, Long.MinValue, Long.MaxValue, bytes = Files.size(f))
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    def isParquet(p: Path): Boolean = p.getFileName.toString.endsWith(".parquet")
+    val targets: Seq[(Int, Path)] = LakeTable.listDir(Paths.get(commitDir)).flatMap { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith("_bucket="))
+        LakeTable.listDir(p).filter(isParquet).map(f => (name.stripPrefix("_bucket=").toInt, f))
+      else if (isParquet(p)) Seq((-1, p))
+      else Seq.empty
     }
-    Await.result(Future.sequence(futures), Duration.Inf).filter(_.rows > 0)
+    val conf = spark.sessionState.newHadoopConf()
+    Await.result(Future.traverse(targets) { case (b, f) =>
+      Future {
+        val (rows, minK, maxK) = LakeTable.footerStats(f, conf)
+        val (lo, hi) = if (b < 0) (Long.MinValue, Long.MaxValue) else (minK, maxK)
+        DataFile(b, root.relativize(f.toAbsolutePath.normalize).toString, schemaId, rows, lo, hi,
+          bytes = Files.size(f))
+      }
+    }, Duration.Inf).filter(_.rows > 0)
   }
 
 }
@@ -405,21 +397,9 @@ object LakeTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Commits writing at least this many files compute footer stats via a
-    * Spark job instead of the driver thread pool (see listWrittenFiles).
-    * Sized where the job WINS: the pool reads 4096 footers in ~2-3 s at 16
-    * threads, while even a shuffle-free job pays scheduling + collect
-    * latency — the round-5 512-file default put a measured ~2.5-8 s Spark
-    * job on EVERY bulk-replay commit and cost ~7 s per 32M-event replay
-    * (same-window A/B vs the pool, BENCH/runs.md). Tests drive both paths
-    * through `listWrittenFiles`' `distributedMinFiles` parameter. */
-  val DistributedFooterStatsMinFiles: Int = 4096
-
   /** (rowCount, min(_hkey), max(_hkey)) from one parquet footer. Missing
-    * stats degrade to the full range — pruning stays sound (over-inclusive).
-    * Static and conf-parameterized so it runs identically on the driver pool
-    * and inside the distributed footer-stats task. */
-  private[lake] def footerStats(
+    * stats degrade to the full range — pruning stays sound (over-inclusive). */
+  private def footerStats(
       file: Path, conf: org.apache.hadoop.conf.Configuration): (Long, Long, Long) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), conf)

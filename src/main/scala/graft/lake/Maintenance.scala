@@ -1,10 +1,13 @@
 package graft.lake
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 
-/** Table maintenance: bucket compaction (small-file merging + tombstone GC)
-  * and snapshot expiry (metadata + unreferenced-data cleanup).
+/** Table maintenance: bucket compaction (small-file merging + tombstone GC),
+  * rebucketing and snapshot expiry (metadata + unreferenced-data cleanup).
+  * Compact and rebucket are one rewrite body over `LakeTable.writeFiles`;
+  * rebucket rewrites every file under a new bucket count.
   *
   * A copy-on-write table accretes files two ways: each commit adds new files
   * for the keys it touched (old versions keep the old files — that's time
@@ -23,107 +26,87 @@ object Maintenance {
 
   /** Rewrite buckets holding more than `maxFilesPerBucket` files (or all
     * buckets, if `force`), dropping tombstones with `_seq` <=
-    * tombstoneHorizon. Commits one new snapshot. */
+    * tombstoneHorizon. Commits one new snapshot.
+    *
+    * Optimistic retry: compaction racing a live tail's merge commit loses the
+    * version CAS; since compaction is a pure rewrite, the safe recovery is to
+    * redo it wholesale against the refreshed snapshot (our output may be
+    * missing rows the winner just merged into the candidate files). */
   def compact(
       table: LakeTable,
       maxFilesPerBucket: Int = 1,
       tombstoneHorizon: Option[Long] = None,
       force: Boolean = false): CompactionResult =
-    // Optimistic retry: compaction racing a live tail's merge commit loses the
-    // version CAS; since compaction is a pure rewrite, the safe recovery is to
-    // redo it wholesale against the refreshed snapshot (our output may be
-    // missing rows the winner just merged into the candidate files).
-    LakeTable.withCommitRetry(table)(
-      compactOnce(table, maxFilesPerBucket, tombstoneHorizon, force))
-
-  private def compactOnce(
-      table: LakeTable,
-      maxFilesPerBucket: Int,
-      tombstoneHorizon: Option[Long],
-      force: Boolean): CompactionResult = {
-    val snap = table.snapshot
-    require(snap.deltaFiles.isEmpty,
-      "MOR table has unfolded delta files — run graft.ingest.Mor.fold first " +
-        "(compaction reads base files only; folding is itself the MOR compaction)")
-    val byBucket = snap.files.groupBy(_.bucket)
-    val candidates: Seq[DataFile] = byBucket.valuesIterator
-      .filter(fs => force || fs.size > maxFilesPerBucket)
-      .flatten.toSeq
-    if (candidates.isEmpty) return CompactionResult(0, 0L)
-
-    val base = table.readInternal(snap, candidates)
-    // count dropped tombstones in-flight with the rewrite (no second scan)
-    val obs = org.apache.spark.sql.Observation(
-      s"compact-${java.util.UUID.randomUUID()}")
-    val isExpired = tombstoneHorizon match {
-      case Some(h) => col(LakeTable.DeletedCol) && col(LakeTable.SeqCol) <= h
-      case None => lit(false)
+    LakeTable.withCommitRetry(table) {
+      val snap = requireFolded(table)
+      val candidates: Seq[DataFile] = snap.files.groupBy(_.bucket).valuesIterator
+        .filter(fs => force || fs.size > maxFilesPerBucket)
+        .flatten.toSeq
+      val buckets = candidates.map(_.bucket).distinct.size
+      if (candidates.isEmpty) CompactionResult(0, 0L)
+      else {
+        val (newFiles, dropped) =
+          rewrite(table, candidates, snap.numBuckets, buckets, tombstoneHorizon)
+        table.commit(candidates.map(_.path).toSet, newFiles, Map.empty,
+          Map("compactions" -> 1L, "tombstonesExpired" -> dropped))
+        CompactionResult(buckets, dropped)
+      }
     }
-    val buckets = candidates.map(_.bucket).distinct
-    val kept = base
-      .observe(obs, sum(when(isExpired, 1L).otherwise(0L)).as("dropped"))
-      .filter(!isExpired)
-    val routed = kept
-      .withColumn("_bucket", table.bucketExpr(col("repo"), col("path")))
-      .withColumn(LakeTable.HkeyCol, table.hkeyExpr(col("repo"), col("path")))
-      .repartition(math.max(1, math.min(buckets.size,
-        table.spark.conf.get("spark.sql.shuffle.partitions").toInt)), col("_bucket"))
-      .sortWithinPartitions(col("_bucket"), col(LakeTable.HkeyCol))
-    val commitDir = table.newCommitDataDir()
-    routed.write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("maxRecordsPerFile", snap.targetFileRows.toString)
-      .partitionBy("_bucket").parquet(commitDir)
-    val newFiles = table.listWrittenFiles(commitDir, snap.schemaId)
-    val dropped = obs.get.get("dropped") match {
-      case Some(v: java.lang.Long) => v.longValue()
-      case Some(v: Long) => v
-      case _ => 0L
-    }
-    table.commit(candidates.map(_.path).toSet, newFiles, Map.empty,
-      Map("compactions" -> 1L, "tombstonesExpired" -> dropped))
-    CompactionResult(buckets.size, dropped)
-  }
 
   final case class RebucketResult(oldBuckets: Int, newBuckets: Int, filesWritten: Int)
 
   /** Rewrite the WHOLE table under a new bucket count — the lift for the
     * create-time `numBuckets` as the table grows (bucket count bounds merge
     * parallelism and write layout; a table that grew 100× needs more buckets
-    * for strategy-3 merges to use more than `oldBuckets` tasks). Snapshot-
-    * atomic like compact: old snapshots keep reading their own files; readers
-    * and mergers pick up the new bucket function from the new snapshot.
-    * Safe beside a live tail via optimistic retry. */
+    * for strategy-3 merges to use more than `oldBuckets` tasks). This is
+    * compaction's rewrite over every file, under the new count and with no
+    * tombstone horizon. Snapshot-atomic like compact: old snapshots keep
+    * reading their own files; readers and mergers pick up the new bucket
+    * function from the new snapshot. Safe beside a live tail via optimistic
+    * retry. */
   def rebucket(table: LakeTable, newBuckets: Int): RebucketResult = {
     require(newBuckets > 0, "newBuckets must be positive")
-    LakeTable.withCommitRetry(table)(rebucketOnce(table, newBuckets))
+    LakeTable.withCommitRetry(table) {
+      val snap = requireFolded(table)
+      if (snap.numBuckets == newBuckets) RebucketResult(newBuckets, newBuckets, 0)
+      else {
+        val (newFiles, _) = rewrite(table, snap.files, newBuckets, newBuckets, None)
+        table.commit(snap.files.map(_.path).toSet, newFiles, Map.empty,
+          Map("rebuckets" -> 1L), newNumBuckets = Some(newBuckets))
+        RebucketResult(snap.numBuckets, newBuckets, newFiles.size)
+      }
+    }
   }
 
-  private def rebucketOnce(table: LakeTable, newBuckets: Int): RebucketResult = {
+  /** The current snapshot, which compact and rebucket may only rewrite once
+    * every merge-on-read delta has been folded (they read base files only). */
+  private def requireFolded(table: LakeTable): Snapshot = {
     val snap = table.snapshot
     require(snap.deltaFiles.isEmpty,
-      "MOR table has unfolded delta files — run graft.ingest.Mor.fold first")
-    val oldBuckets = snap.numBuckets
-    if (oldBuckets == newBuckets) return RebucketResult(oldBuckets, newBuckets, 0)
-    val spark = table.spark
-    val base = table.readInternal(snap, snap.files)
-    // the NEW bucket function — table.bucketExpr still reads the old count
-    val newBucket = LakeTable.bucketExpr(col("repo"), col("path"), newBuckets)
-    val routed = base
-      .withColumn("_bucket", newBucket)
-      .withColumn(LakeTable.HkeyCol, table.hkeyExpr(col("repo"), col("path")))
-      .repartition(math.max(1, math.min(newBuckets,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)), col("_bucket"))
-      .sortWithinPartitions(col("_bucket"), col(LakeTable.HkeyCol))
-    val commitDir = table.newCommitDataDir()
-    routed.write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("maxRecordsPerFile", snap.targetFileRows.toString)
-      .partitionBy("_bucket").parquet(commitDir)
-    val newFiles = table.listWrittenFiles(commitDir, snap.schemaId)
-    table.commit(snap.files.map(_.path).toSet, newFiles, Map.empty,
-      Map("rebuckets" -> 1L), newNumBuckets = Some(newBuckets))
-    RebucketResult(oldBuckets, newBuckets, newFiles.size)
+      "MOR table has unfolded delta files — run graft.ingest.Mor.fold first " +
+        "(compaction reads base files only; folding is itself the MOR compaction)")
+    snap
+  }
+
+  /** Rewrite `files` as base files bucketed under `numBuckets`, routed to
+    * `buckets` writing tasks, without the tombstones at or below
+    * `tombstoneHorizon` (counted in-flight with the rewrite, no second
+    * scan). Returns the new files and the tombstones dropped. */
+  private def rewrite(table: LakeTable, files: Seq[DataFile], numBuckets: Int, buckets: Int,
+      tombstoneHorizon: Option[Long]): (Seq[DataFile], Long) = {
+    val base = table.readInternal(table.snapshot, files)
+    val obs = Observation(s"compact-${java.util.UUID.randomUUID()}")
+    val kept = tombstoneHorizon.fold(base) { h =>
+      val isExpired = col(LakeTable.DeletedCol) && col(LakeTable.SeqCol) <= h
+      base.observe(obs, sum(when(isExpired, 1L).otherwise(0L)).as("dropped")).filter(!isExpired)
+    }
+    val newFiles = table.writeFiles(
+      table.bucketRows(kept, base = true, Some(buckets), numBuckets), base = true)
+    val dropped = if (tombstoneHorizon.isEmpty) 0L else obs.get.get("dropped") match {
+      case Some(v: Long) => v
+      case _ => 0L
+    }
+    (newFiles, dropped)
   }
 
   /** Drop snapshot metadata older than the last `keep` versions and delete

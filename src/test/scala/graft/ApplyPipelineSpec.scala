@@ -164,6 +164,44 @@ class ApplyPipelineSpec extends AnyFunSuite {
         lineageLine(0, 3, 0, 4, 5, -1, -1, -1, -1)))
   }
 
+  test("folds and maintenance pin their Spark jobs: partial, log-only and full folds, compact, rebucket") {
+    val cfg = gen.copy(seed = 14L)
+    val log = ChangeLog.readDF(spark, writeLog(cfg))
+    val mor = Ingest.IngestConfig(morMode = true)
+    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-pipe-maint"), numBuckets = 8)
+    def appendRange(from: Long, until: Long, step: Long): Unit =
+      (from until until by step).foreach(lo => Ingest.applyBatch(table,
+        log.filter(col("seq") >= lo && col("seq") < lo + step),
+        table.snapshot.committedBatchId + 1, mor))
+    Ingest.applyBatch(table, log.filter(col("seq") < 1000L), 0L)
+
+    appendRange(1000L, 2000L, 250L)
+    val (partialJobs, partial) = TestSpark.jobsDuring(
+      Mor.fold(table, minEventsPerBucket = table.snapshot.flatDeltaHist.get.values.max))
+    assert(partial.bucketsFolded === 1, "the partial fold rewrites one bucket")
+
+    appendRange(2000L, 3600L, 100L)
+    val compactionsBefore = table.snapshot.metrics.getOrElse("deltaCompactions", 0L)
+    val (logJobs, logTick) = TestSpark.jobsDuring(Mor.fold(table, minEventsPerBucket = Long.MaxValue))
+    assert(logTick.bucketsFolded === 0 && logTick.deltaFilesFolded === 0)
+    assert(table.snapshot.metrics("deltaCompactions") === compactionsBefore + 1,
+      "the tick compacts the delta log and rewrites no base file")
+
+    appendRange(3600L, 4000L, 400L)
+    val (fullJobs, _) = TestSpark.jobsDuring(Mor.fold(table))
+    assert(table.snapshot.deltaFiles.isEmpty)
+    val (compactJobs, _) = TestSpark.jobsDuring(Maintenance.compact(table, force = true))
+    val (rebucketJobs, _) = TestSpark.jobsDuring(Maintenance.rebucket(table, 16))
+
+    val oracle = Oracle.contentSha(Oracle.replay(ChangelogGen.eventsLocal(cfg)))
+      .map { case ((r, p), (sha, _)) => (r, p, sha) }.toSet
+    val got = table.read().select(col("repo"), col("path"), sha2(col("content"), 256))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(got === oracle)
+    assert((partialJobs, logJobs, fullJobs, compactJobs, rebucketJobs) === ((10, 4, 8, 2, 2)),
+      "Spark jobs of (partial fold, log-only fold tick, full fold, compact, rebucket)")
+  }
+
   test("a rebucket committing between a MOR append's write and its commit") {
     val cfg = gen.copy(seed = 11L)
     val log = ChangeLog.readDF(spark, writeLog(cfg))

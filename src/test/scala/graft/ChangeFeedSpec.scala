@@ -94,6 +94,8 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(v3 > v2)
     assert(ChangeFeed.changesBetween(table, v2, v3).isEmpty,
       "a fold commit is not a change")
+    assert(ChangeFeed.changesBetweenWithStats(table, v2, v3)._2.rowsInScope === 0,
+      "a fold-only window is answered from snapshot metadata")
     assert(feedRows(ChangeFeed.changesBetween(table, v1, v3)) === want)
   }
 
@@ -105,6 +107,8 @@ class ChangeFeedSpec extends AnyFunSuite {
     Maintenance.compact(table, force = true)
     val v3 = table.snapshot.version
     assert(ChangeFeed.changesBetween(table, v2, v3).isEmpty)
+    assert(ChangeFeed.changesBetweenWithStats(table, v2, v3)._2.rowsInScope === 0,
+      "a compaction-only window is answered from snapshot metadata")
     assert(feedRows(ChangeFeed.changesBetween(table, v1, v3)) === want)
 
     // tombstone-expiring compaction: deletes lose their trace in v4's files;
@@ -156,6 +160,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(table.snapshotAt(v3).numBuckets === 32 && table.snapshotAt(v1).numBuckets === 16)
     assert(ChangeFeed.changesBetween(table, v2, v3).isEmpty,
       "a rebucket commit is not a change")
+    assert(ChangeFeed.changesBetweenWithStats(table, v2, v3)._2.rowsInScope === 0)
     assert(feedRows(ChangeFeed.changesBetween(table, v1, v3)) === want)
   }
 

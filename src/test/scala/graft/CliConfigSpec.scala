@@ -26,14 +26,10 @@ class CliConfigSpec extends AnyFunSuite {
     assert(cfg("GRAFT_MOR" -> "0").streaming.copy(morMode = true) === IngestConfig.streamingDefault)
   }
 
-  test("fold cadence, fold threshold and raw appends map to their fields") {
-    val c = cfg("GRAFT_MOR_FOLD_EVERY" -> "7", "GRAFT_MOR_FOLD_MIN_PER_BUCKET" -> "0",
-      "GRAFT_MOR_RAW" -> "1").streaming
+  test("fold cadence and fold threshold map to their fields") {
+    val c = cfg("GRAFT_MOR_FOLD_EVERY" -> "7", "GRAFT_MOR_FOLD_MIN_PER_BUCKET" -> "0").streaming
     assert(c.morFoldEvery === 7)
     assert(c.morFoldMinEventsPerBucket === 0L)
-    assert(!c.morDedupPerBatch)
-    assert(!cfg("GRAFT_MOR_RAW" -> "true").streaming.morDedupPerBatch)
-    assert(cfg("GRAFT_MOR_RAW" -> "0").streaming.morDedupPerBatch)
   }
 
   test("GRAFT_SIGSTORE reaches streaming and replay; empty means none") {

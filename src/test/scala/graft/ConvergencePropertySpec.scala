@@ -121,13 +121,9 @@ class ConvergencePropertySpec extends AnyFunSuite {
       val bounds = (0 +: cuts.distinct.sorted :+ events.length).distinct
       val batches = bounds.sliding(2).map { case Seq(a, b) => events.slice(a, b) }.toVector
       val table = LakeTable.create(spark, TestSpark.tmpDir("graft-prop-mor"), numBuckets = 4)
-      // alternate per-batch-dedup and raw (Hudi-log-style) appends: the two
-      // write shapes must be freely mixable on one table
-      val cfgs = Seq(
-        Ingest.IngestConfig(morMode = true),
-        Ingest.IngestConfig(morMode = true, morDedupPerBatch = false))
-      batches.zipWithIndex.foreach { case (b, i) =>
-        Ingest.applyBatch(table, b.toDS().toDF(), cfg = cfgs(i % 2))
+      val mor = Ingest.IngestConfig(morMode = true)
+      batches.foreach { b =>
+        Ingest.applyBatch(table, b.toDS().toDF(), cfg = mor)
         // random fold points, randomly FULL or PARTIAL (threshold drawn so
         // that sometimes only dense buckets fold, sometimes nothing folds
         // and the delta log just compacts/no-ops) — every mix must converge
@@ -138,8 +134,7 @@ class ConvergencePropertySpec extends AnyFunSuite {
         }
       }
       // at-least-once: some suffix of the log arrives again as MOR appends
-      Ingest.applyBatch(table, events.drop(rnd.nextInt(events.length)).toDS().toDF(),
-        cfg = cfgs(trial % 2))
+      Ingest.applyBatch(table, events.drop(rnd.nextInt(events.length)).toDS().toDF(), cfg = mor)
       def liveSha = table.read()
         .select(col("repo"), col("path"), sha2(col("content"), 256))
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet

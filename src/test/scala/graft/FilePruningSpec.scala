@@ -30,23 +30,6 @@ class FilePruningSpec extends AnyFunSuite {
         udf(content).apply(col("id")).as("content")).as("after"))
   }
 
-  test("distributed footer stats produce manifests identical to the driver pool") {
-    val dir = TestSpark.tmpDir("graft-prune-dist")
-    val table = LakeTable.create(spark, dir, numBuckets = 4, targetFileRows = 100L)
-    MergeApply.merge(table, delta(0L until 2000L, "insert", id => id, id => s"v-$id"), Map.empty)
-    // the commit dir the merge just wrote (newest c* dir under data/)
-    val commitDir = LakeTable.listDir(java.nio.file.Paths.get(dir, "data"))
-      .maxBy(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
-    val viaPool = table.listWrittenFiles(commitDir.toString, table.schema.schemaId,
-      distributedMinFiles = Int.MaxValue)
-    val viaJob = table.listWrittenFiles(commitDir.toString, table.schema.schemaId,
-      distributedMinFiles = 1)
-    assert(viaPool.size > 4, "test needs a multi-file commit")
-    assert(viaJob.toSet === viaPool.toSet,
-      "executor-side footer stats must match the driver pool exactly")
-    assert(viaPool.forall(f => f.rows > 0 && f.bytes > 0 && f.minKey <= f.maxKey))
-  }
-
   test("a 1-key update rewrites exactly the one file containing the key") {
     val dir = TestSpark.tmpDir("graft-prune")
     val table = LakeTable.create(spark, dir, numBuckets = 4, targetFileRows = 500L)

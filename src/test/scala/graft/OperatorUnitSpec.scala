@@ -65,7 +65,7 @@ class OperatorUnitSpec extends AnyFunSuite {
     assert(n(FilterChain.opFilter(Seq("delete"))) === 0)
   }
 
-  test("dedup keeps the max-seq event per key; salted variant agrees") {
+  test("dedup keeps the max-seq event per key; the max_by form agrees") {
     import spark.implicits._
     val events = Seq(
       ev("insert", path = "p1", seq = 1, after = Some(row.copy(content = "v1"))),
@@ -79,11 +79,7 @@ class OperatorUnitSpec extends AnyFunSuite {
       .select(col("path"), col("seq"), col("after.content"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
     assert(d === Set(("p1", 5L, "v5"), ("p2", 2L, "w2")))
-    val ds = Dedup.lastWriterPerKeySalted(df, 4)
-      .select(col("path"), col("seq"), col("after.content"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(ds === d, "salted two-phase dedup must agree with the direct form")
-    // all three formulations agree (custom agg, max_by, salted)
+    // both formulations agree (custom agg, max_by)
     val dm = Dedup.lastWriterPerKeyMaxBy(df)
       .select(col("path"), col("seq"), col("after.content"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet

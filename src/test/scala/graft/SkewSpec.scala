@@ -2,7 +2,6 @@ package graft
 
 import graft.gen.{ChangelogGen, GenConfig, Oracle}
 import graft.ingest.Ingest
-import graft.ingest.Ingest.IngestConfig
 import graft.lake.LakeTable
 import graft.log.ChangeLog
 import org.apache.spark.sql.functions._
@@ -10,10 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew (north rule: hot-repo skew handled explicitly): an extreme power-law
   * changelog — one repo receives the overwhelming majority of events — must
-  * converge, with and without the explicit salting knobs. Hash-bucketing on
-  * (repo, path) spreads a hot repo's paths over all buckets; a hot single KEY
-  * collapses in the dedup's map-side partial aggregation; salting splits the
-  * residual reduce/write work.
+  * converge. Hash-bucketing on (repo, path) spreads a hot repo's paths over
+  * all buckets, and a hot single KEY collapses in the dedup's map-side
+  * partial aggregation.
   */
 class SkewSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -22,7 +20,7 @@ class SkewSpec extends AnyFunSuite {
     pathsPerRepo = 12, skew = 12.0, // repo 0 gets ~80%+ of all events
     nPartitions = 4, contentLen = 60)
 
-  test("extreme hot-repo skew converges (plain, salted dedup, salted write)") {
+  test("extreme hot-repo skew converges and spreads over every bucket") {
     import spark.implicits._
     val events = ChangelogGen.eventsLocal(cfg)
     // confirm the workload IS skewed: top repo holds > 60% of row events
@@ -33,17 +31,12 @@ class SkewSpec extends AnyFunSuite {
     val oracle = Oracle.contentSha(Oracle.replay(events))
       .map { case ((r, p), (sha, _)) => (r, p, sha) }.toSet
 
-    for (cfgI <- Seq(
-        IngestConfig(),                          // default path
-        IngestConfig(saltedDedup = 8),           // explicit two-phase salted dedup
-        IngestConfig(salt = 4))) {               // salted bucket-write repartition
-      val table = LakeTable.create(spark, TestSpark.tmpDir("graft-skew"), numBuckets = 8)
-      events.grouped(5000).foreach(b => Ingest.applyBatch(table, b.toDS().toDF()))
-      val got = table.read()
-        .select(col("repo"), col("path"), sha2(col("content"), 256))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      assert(got === oracle, s"skewed convergence failed for $cfgI")
-    }
+    val batched = LakeTable.create(spark, TestSpark.tmpDir("graft-skew"), numBuckets = 8)
+    events.grouped(5000).foreach(b => Ingest.applyBatch(batched, b.toDS().toDF()))
+    val got = batched.read()
+      .select(col("repo"), col("path"), sha2(col("content"), 256))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(got === oracle, "skewed convergence failed")
 
     // the hot repo's keys spread across ALL buckets (no single-bucket hotspot)
     val table = LakeTable.create(spark, TestSpark.tmpDir("graft-skew-b"), numBuckets = 8)
