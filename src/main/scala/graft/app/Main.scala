@@ -114,7 +114,7 @@ object Main {
       httpPort = env.get("GRAFT_HTTP_PORT").map(_.toInt).getOrElse(0))
   }
 
-  private def dispatch(spark: SparkSession, cli: CliConfig, args: Array[String]): Unit = args(0) match {
+  private[graft] def dispatch(spark: SparkSession, cli: CliConfig, args: Array[String]): Unit = args(0) match {
     case "gen" =>
       val dir = args(1)
       def a(i: Int, d: Long): Long = if (args.length > i) args(i).toLong else d
@@ -275,7 +275,9 @@ object Main {
     case "compact" =>
       val table = LakeTable.load(spark, args(1))
       val horizon = if (args.length > 2) Some(args(2).toLong) else None
-      val r = graft.lake.Maintenance.compact(table, tombstoneHorizon = horizon, force = true)
+      // buckets of one file are rewritten only to drop tombstones
+      val r = graft.lake.Maintenance.compact(table, tombstoneHorizon = horizon,
+        force = horizon.isDefined)
       println(s"compacted: buckets=${r.bucketsCompacted} tombstonesDropped=${r.tombstonesDropped}")
       report(spark, args(1))
 
@@ -357,7 +359,8 @@ object Main {
       |  changes <tableDir> <fromVersion> [toVersion]  # change data feed over (from, to]
       |  chain   <srcTable> <dstTable> [intervalSec]  # sync a derived table off the source's
       |                                     # change feed (interval ⇒ continuous; `stop <dst>` ends)
-      |  compact <tableDir> [tombstoneHorizonSeq]
+      |  compact <tableDir> [tombstoneHorizonSeq]  # merge multi-file buckets; with a horizon,
+      |                                     # rewrite every bucket without tombstones at or below it
       |  rebucket <tableDir> <newBuckets>
       |  expire  <tableDir> [keepSnapshots]
       |  verify  <logDir> <tableDir>

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.lake.{CommitConflictException, DataFile, FlatHistOp, ImageBinding, LakeTable,
-  Snapshot}
+  MorRead, Snapshot}
 import graft.model.Ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -359,7 +359,7 @@ object MergeApply {
     val m =
       if (om.nonEmpty) om
       else {
-        val r = table.spark.read.parquet(files.map(f => table.resolve(f.path)): _*)
+        val r = MorRead.deltaEvents(table, files, snap.numBuckets)
           .agg(countAggs.head, countAggs.tail: _*).collect()(0)
         r.getValuesMap[Any](r.schema.fieldNames.toSeq)
       }

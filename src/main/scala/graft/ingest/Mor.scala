@@ -82,7 +82,7 @@ object Mor {
       // and re-running the delta scan + LWW aggregate per consumer doubles
       // the fold's IO. Winner cardinality is per-key (not per-event) —
       // bounded by the backlog's distinct keys.
-      val winners = MorRead.deltaWinners(table, snap.deltaFiles)
+      val winners = MorRead.deltaWinners(table, snap.deltaFiles, snap.numBuckets)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try foldFull(table, winners, ImageBinding.imageFields(winners),
         snap.deltaFiles.map(_.path).toSet,
@@ -106,7 +106,7 @@ object Mor {
     // (repo+path only — column pruning keeps contents out). ----
     val flatCounts: Map[Int, Long] =
       if (flat.isEmpty) Map.empty
-      else snap.flatDeltaHist.getOrElse(MorRead.deltaEvents(table, flat)
+      else snap.flatDeltaHist.getOrElse(MorRead.deltaEvents(table, flat, snap.numBuckets)
         .groupBy(table.bucketExpr(col("repo"), col("path")).as("_b"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
@@ -136,7 +136,7 @@ object Mor {
       if (toCompact.size < CompactDeltasMinFiles)
         FoldResult(0, 0L, bucketsFolded = 0, eventsDeferred = snap.deltaRows)
       else {
-        val winners = MorRead.deltaWinners(table, toCompact)
+        val winners = MorRead.deltaWinners(table, toCompact, snap.numBuckets)
         compactDeltaLog(table, winners, toCompact.map(_.path).toSet,
           keptRows = labeledCounts.values.sum - fragmented.iterator.map(_.rows).sum,
           FlatHistOp.Sub(flatCounts))
@@ -146,7 +146,7 @@ object Mor {
       val foldRead = flat ++ labeled.filter(f => sel.contains(f.bucket))
       val keptRows = labeled.iterator
         .filterNot(f => sel.contains(f.bucket)).map(_.rows).sum
-      val winners = MorRead.deltaWinners(table, foldRead)
+      val winners = MorRead.deltaWinners(table, foldRead, snap.numBuckets)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
         val bucketOf = table.bucketExpr(col("repo"), col("path"))

@@ -123,8 +123,8 @@ object ChangeFeed {
     val candParts =
       Seq(addedBase -> s2, removedBase -> s1).collect { case (fs, s) if fs.nonEmpty =>
         table.readInternal(s, fs).select(col("repo"), col("path")) } ++
-      Seq(addedDelta, removedDelta).collect { case fs if fs.nonEmpty =>
-        MorRead.deltaEvents(table, fs).select(col("repo"), col("path")) }
+      Seq(addedDelta -> s2, removedDelta -> s1).collect { case (fs, s) if fs.nonEmpty =>
+        MorRead.deltaEvents(table, fs, s.numBuckets).select(col("repo"), col("path")) }
     if (candParts.isEmpty) // fence/metrics-only commits
       return (emptyFeed(table, s2), emptyStats)
     // materialized once: feeds the range aggregate and both semi joins

@@ -55,9 +55,13 @@ object ImageBinding {
   /** The resolved row: `sch`'s columns, `_seq` and `_deleted`. `d` names a
     * change-event field (`repo`, `path`, `op`, `seq`, `after.<field>`);
     * `base` names a base-row column, or is None where no base row can exist
-    * (the event is an insert or an absorbing tombstone). */
+    * (the event is an insert or an absorbing tombstone). `keysFromBase`:
+    * every row has a base row (a left-outer join from the base), so the keys
+    * are the base's plain columns, through which key filters reach the base
+    * scan; otherwise a key is the event's, else the base's. */
   def lwwColumns(sch: TableSchema, binding: Map[String, String],
-      d: String => Column, base: Option[String => Column]): Seq[Column] = {
+      d: String => Column, base: Option[String => Column],
+      keysFromBase: Boolean = false): Seq[Column] = {
     val isDel = d("op") === Ops.Delete
     def isKey(name: String) = name == "repo" || name == "path"
     base match {
@@ -75,7 +79,8 @@ object ImageBinding {
         val dWins = deltaWins(d, b)
         sch.columns.map { c =>
           val tp = TableSchema.toSpark(c.dataType)
-          if (isKey(c.name)) coalesce(d(c.name), b(c.name)).as(c.name)
+          if (isKey(c.name))
+            (if (keysFromBase) b(c.name) else coalesce(d(c.name), b(c.name))).as(c.name)
           else binding.get(c.name) match {
             case Some(f) =>
               when(dWins && !isDel, d(s"after.$f").cast(tp))

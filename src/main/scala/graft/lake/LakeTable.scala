@@ -48,11 +48,13 @@ import scala.jdk.CollectionConverters._
   * `repo = '<r>' AND path = '<p>'` opens only the files that can hold it:
   * bucket label == bucket(r, p) and minKey <= xxhash64(r, p) <= maxKey — the
   * test the copy-on-write merge already uses to pick files to rewrite. Any
-  * other filter reads every selected file. Merge-on-read DELTA files have
-  * one read, [[MorRead.deltaEvents]]: it still lists them through Spark's
-  * file source (inferring a merged schema), and key filters do not reach the
-  * base files a MOR read joins against deltas (its `coalesce(d.repo, b.repo)`
-  * projection blocks them).
+  * other filter reads every selected file. Merge-on-read DELTA files plan
+  * the same way: [[writeFiles]] records each delta file's event schema in its
+  * manifest entry, and their one read, [[MorRead.deltaEvents]], merges those
+  * schemas on the driver and scans through a [[ManifestFileIndex]] too
+  * (entries without a recorded schema fall back to a listing read). A keyed
+  * MOR read's filter reaches the base scan it joins against the deltas (one
+  * file opened) and the delta scan (flat files and the key's bucket only).
   *
   * Every data file carries three internal columns beyond the user schema:
   * `_seq` (log sequence number of the last writer — LWW conflict resolution),
@@ -124,13 +126,20 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
       // file columns read as nullable, as every file source reads them
       val dataSchema = StructType((fileSchema.sparkType.fields ++ LakeTable.internalFields)
         .map(_.copy(nullable = true)))
-      spark.baseRelationToDataFrame(HadoopFsRelation(
-          new ManifestFileIndex(this, s.numBuckets, fs), new StructType(), dataSchema,
-          None, new ParquetFileFormat, Map.empty)(spark))
-        .select(projection: _*)
+      manifestScan(s.numBuckets, fs, dataSchema).select(projection: _*)
     }
     parts.reduceOption(_ unionByName _).getOrElse(emptyInternal(cur))
   }
+
+  /** A Parquet scan of manifest `files` (written under `numBuckets`) with
+    * the given data schema, through a [[ManifestFileIndex]]: no listing, no
+    * footer read, and a pinned (repo, path) key keeps only the files that
+    * can hold it. */
+  private[lake] def manifestScan(numBuckets: Int, files: Seq[DataFile],
+      dataSchema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestFileIndex(this, numBuckets, files), new StructType(), dataSchema,
+      None, new ParquetFileFormat, Map.empty)(spark))
 
   private def emptyInternal(cur: TableSchema): DataFrame =
     spark.createDataFrame(
@@ -330,7 +339,10 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     * and zstd-compressed: they live until rewritten and dominate table bytes
     * at rest. Delta files are snappy: written once, read once or twice (MOR
     * reads, fold) and dropped, so encode speed beats ratio. Every file splits
-    * at `targetFileRows`, so a base file covers a narrow key slice. */
+    * at `targetFileRows`, so a base file covers a narrow key slice. A delta
+    * file's entry records its data schema (the rows' schema without
+    * `_bucket`), known here before the write, so delta reads need no
+    * footer. */
   def writeFiles(rows: DataFrame, base: Boolean): Seq[DataFile] = {
     val s = snap
     val commitDir = newCommitDataDir()
@@ -340,7 +352,9 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
       .option("maxRecordsPerFile", s.targetFileRows.toString)
     if (rows.columns.contains("_bucket")) writer.partitionBy("_bucket").parquet(commitDir)
     else writer.parquet(commitDir)
-    listFiles(commitDir, s.schemaId)
+    val eventSchema =
+      if (base) None else Some(StructType(rows.schema.filterNot(_.name == "_bucket")))
+    listFiles(commitDir, s.schemaId).map(_.copy(eventSchema = eventSchema))
   }
 
   /** Manifest entries for a commit dir's parquet files, with row counts and

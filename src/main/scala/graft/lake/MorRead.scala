@@ -2,6 +2,7 @@ package graft.lake
 
 import graft.ingest.{Dedup, MergeApply}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.functions._
 
 /** The merge-on-read resolver (the read half of MOR mode; the write half is
@@ -10,9 +11,11 @@ import org.apache.spark.sql.functions._
   * bootstrap and the fold's winners — goes through the functions below.
   *
   * Delta files are EVENT logs: (repo, path, op, seq, after-image).
-  *  - [[deltaEvents]] is the engine's one delta-file read. It still lists
-  *    the files and infers their merged schema (one job), because the image
-  *    struct may gain fields across batches.
+  *  - [[deltaEvents]] is the engine's one delta-file read. It plans from the
+  *    manifest like a base-file read: the merged read schema comes from the
+  *    schemas the entries recorded at write (the image struct may gain
+  *    fields across batches), and the scan goes through a
+  *    [[ManifestFileIndex]], so no listing and no schema-merge job.
   *  - [[deltaWinners]] is those events through the one LWW per-key aggregate
   *    (`Dedup.lastWriterPerKey`, the ingest dedup's too).
   *  - [[resolveOn]] joins winners against base files under the LWW column
@@ -24,7 +27,10 @@ import org.apache.spark.sql.functions._
   *  - '''broadcast''' (delta events ≤ `MergeApply.BroadcastDeltaMaxRows` and
   *    delta bytes ≤ `broadcastMaxBytes` — the common between-folds state):
   *    base LEFT OUTER broadcast(winners) + a keys-only anti-join insert
-  *    residue. The base is never shuffled.
+  *    residue. The base is never shuffled. The matched side's keys are the
+  *    base row's, so a `repo = ? AND path = ?` filter above the read reaches
+  *    the base scan (one file opened) and is inferred into the winners'
+  *    delta scan and the anti-join's base keys.
   *  - '''full-outer shuffle''' for large unfolded backlogs (full-outer
   *    broadcast joins are unsupported in Spark, so both sides exchange).
   * Read amplification is bounded by fold cadence.
@@ -48,20 +54,33 @@ object MorRead {
         catch { case _: java.io.IOException => Long.MaxValue / 1024 }
     }.foldLeft(0L)((a, b) => if (a + b < 0) Long.MaxValue else a + b)
 
-  /** The events of delta `files` as (repo, path, op, seq, after) — the one
-    * delta-file read (planning delta scans from the manifest changes here). */
-  def deltaEvents(table: LakeTable, files: Seq[DataFile]): DataFrame =
-    table.spark.read
-      .option("mergeSchema", "true") // image struct may gain fields across batches
-      .parquet(files.map(f => table.resolve(f.path)): _*)
-      .select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
+  /** The events of delta `files` (written under `numBuckets`, the bucket
+    * count of the snapshot they belong to) as (repo, path, op, seq, after)
+    * — the one delta-file read. The read schema is the merge of the schemas
+    * the manifest entries recorded at write (the image struct may gain
+    * fields across batches), built on the driver, and the files scan through
+    * a [[ManifestFileIndex]]: no listing, no footer, and a pinned key keeps
+    * only the flat files and the labeled ones of its bucket. Entries written
+    * before schemas were recorded read through a listing that infers the
+    * merged schema from the footers (one job). */
+  def deltaEvents(table: LakeTable, files: Seq[DataFile], numBuckets: Int): DataFrame = {
+    val recorded = files.flatMap(_.eventSchema)
+    val events =
+      if (recorded.size == files.size)
+        table.manifestScan(numBuckets, files,
+          SchemaBridge.asNullable(recorded.distinct.reduce(SchemaBridge.merge)))
+      else table.spark.read
+        .option("mergeSchema", "true")
+        .parquet(files.map(f => table.resolve(f.path)): _*)
+    events.select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
+  }
 
   /** The winning event per key across delta `files`. LWW over a SUBSET of
     * a snapshot's delta files is exact for the keys whose every delta file is
     * in the subset — max over a union commutes with partial maxima, so events
     * left in other files keep competing at read/fold time unchanged. */
-  def deltaWinners(table: LakeTable, files: Seq[DataFile]): DataFrame =
-    Dedup.lastWriterPerKey(deltaEvents(table, files))
+  def deltaWinners(table: LakeTable, files: Seq[DataFile], numBuckets: Int): DataFrame =
+    Dedup.lastWriterPerKey(deltaEvents(table, files, numBuckets))
 
   /** The buckets that can hold delta events, from METADATA only: labeled
     * delta files carry their bucket in the manifest; flat append files are
@@ -113,31 +132,33 @@ object MorRead {
       guard: Option[Set[Int]] = None,
       broadcastMaxBytes: Long = BroadcastDeltaMaxBytes): DataFrame = {
     if (deltaFiles.isEmpty) return withDeleted(s, table.readInternal(s, baseFiles))
-    val winners = deltaWinners(table, deltaFiles)
+    val winners = deltaWinners(table, deltaFiles, s.numBuckets)
     val (binding, _) = ImageBinding.bind(s, ImageBinding.imageFields(winners))
-    val d0 = guard.fold(winners) { tb =>
-      val bOf = table.bucketExpr(col("repo"), col("path"))
+    val d = guard.fold(winners) { tb =>
+      val bOf = LakeTable.bucketExpr(col("repo"), col("path"), s.numBuckets)
       winners.withColumn("seq", when(bOf.isin(tb.toSeq.map(Int.box): _*), col("seq"))
         .otherwise(raise_error(concat(
           lit("MOR bucket pruning: delta winner outside the touched bucket set, bucket="),
           bOf.cast("string")))))
-    }
+    }.alias("d")
     val b = table.readInternal(s, baseFiles).alias("b")
-    val d = d0.alias("d")
     val dCol = (n: String) => col(s"d.$n")
-    val resolved = ImageBinding.lwwColumns(s.schema, binding, dCol, Some(n => col(s"b.$n")))
+    val bCol = (n: String) => col(s"b.$n")
     val keyCond = col("b.repo") === col("d.repo") && col("b.path") === col("d.path")
     if (deltaFiles.iterator.map(_.rows).sum <= MergeApply.BroadcastDeltaMaxRows &&
         deltaBytes(table, deltaFiles) <= broadcastMaxBytes) {
       // the base keeps its scan partitioning (no exchange); full-outer is
       // decomposed into matched + insert residue like the COW merge's
-      // broadcast-incremental strategy
-      val matched = b.join(broadcast(d), keyCond, "left_outer").select(resolved: _*)
-      val baseKeys = table.readInternal(s, baseFiles).select(col("repo"), col("path"))
-      val inserts = d0.join(baseKeys, Seq("repo", "path"), "left_anti").alias("d")
+      // broadcast-incremental strategy. Every matched row has a base row, so
+      // its keys are the base's: a key filter above the read reaches the
+      // base scan (and, through the join keys, the winners' delta scan).
+      val matched = b.join(broadcast(d), keyCond, "left_outer")
+        .select(ImageBinding.lwwColumns(s.schema, binding, dCol, Some(bCol), keysFromBase = true): _*)
+      val inserts = d.join(b.select(bCol("repo"), bCol("path")), keyCond, "left_anti")
         .select(ImageBinding.lwwColumns(s.schema, binding, dCol, None): _*)
       matched.unionByName(inserts)
-    } else b.join(d, keyCond, "full_outer").select(resolved: _*)
+    } else b.join(d, keyCond, "full_outer")
+      .select(ImageBinding.lwwColumns(s.schema, binding, dCol, Some(bCol)): _*)
   }
 
   /** Internal rows with a non-null `_deleted`, as [[resolveOn]] returns them. */

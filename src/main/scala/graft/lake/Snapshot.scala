@@ -1,5 +1,7 @@
 package graft.lake
 
+import org.apache.spark.sql.types.{DataType, StructType}
+
 /** One data file in the manifest: a Parquet file holding rows of exactly one
   * bucket ([[LakeTable.bucketExpr]] of its keys), written under
   * `schemaId`, with min/max statistics over the rows' 64-bit key hash
@@ -23,7 +25,13 @@ final case class DataFile(
       * gates ([[MorRead]]) and compaction scheduling; 0 = unknown (legacy
       * metadata), callers must fall back to a stat or the conservative
       * non-broadcast shape. */
-    bytes: Long = 0L)
+    bytes: Long = 0L,
+    /** a DELTA file's data schema (its event columns), recorded when the
+      * file is listed: merge-on-read reads build their merged read schema
+      * from these on the driver instead of a schema-merge job over the
+      * footers. None for base files (their schema is `schemaId`'s) and for
+      * delta entries that predate it (read through a listing). */
+    eventSchema: Option[StructType] = None)
 
 /** An immutable table snapshot. Commits are atomic: the snapshot JSON is
   * written to a tmp file (fsynced), then published via hard-link
@@ -166,19 +174,22 @@ final case class Snapshot(
 }
 
 object Snapshot {
-  private[lake] def fileJson(f: DataFile): String = Json.obj(
+  private[lake] def fileJson(f: DataFile): String = Json.obj(Seq(
     "bucket" -> f.bucket.toString,
     "path" -> Json.quote(f.path),
     "schemaId" -> f.schemaId.toString,
     "rows" -> f.rows.toString,
     "minKey" -> f.minKey.toString,
     "maxKey" -> f.maxKey.toString,
-    "bytes" -> f.bytes.toString)
+    "bytes" -> f.bytes.toString) ++
+    f.eventSchema.toSeq.map(es => "eventSchema" -> Json.quote(es.json)): _*)
 
   private[lake] def fileFromJson(f: com.fasterxml.jackson.databind.JsonNode): DataFile =
     DataFile(Json.int(f, "bucket"), Json.str(f, "path"), Json.int(f, "schemaId"),
       Json.long(f, "rows"), Json.long(f, "minKey"), Json.long(f, "maxKey"),
-      bytes = if (f.has("bytes")) Json.long(f, "bytes") else 0L)
+      bytes = if (f.has("bytes")) Json.long(f, "bytes") else 0L,
+      eventSchema = Option(Json.str(f, "eventSchema"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType]))
 
   def fromJson(s: String): Snapshot = {
     val n = Json.parse(s)

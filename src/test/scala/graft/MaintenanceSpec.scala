@@ -59,6 +59,45 @@ class MaintenanceSpec extends AnyFunSuite {
         cfg = Ingest.IngestConfig())
   }
 
+  test("Main compact rewrites single-file buckets only to drop tombstones") {
+    import graft.ingest.MergeApply
+    import spark.implicits._
+    val tableDir = TestSpark.tmpDir("graft-comp-cli")
+    val table = LakeTable.create(spark, tableDir, numBuckets = 4)
+    def rows(ids: Range, op: String, seq: Long) =
+      ids.toDF("id").select(
+        concat(lit("r"), col("id") % 3).as("repo"), concat(lit("f"), col("id")).as("path"),
+        lit(op).as("op"), lit(seq).as("seq"),
+        struct(concat(lit("r"), col("id") % 3).as("repo"), concat(lit("f"), col("id")).as("path"),
+          lit("c0").as("commit"), lit("scala").as("lang"), lit(s"v$seq").as("content")).as("after"))
+    MergeApply.merge(table, rows(0 until 200, "insert", 1L), Map.empty)
+    MergeApply.merge(table, rows(0 until 200 by 3, "delete", 2L), Map.empty)
+    // a broadcast merge writes the matched rewrite and the insert residue
+    // as separate files of a bucket
+    MergeApply.merge(table,
+      rows(1 until 200 by 10, "update", 3L).union(rows(200 until 210, "insert", 3L)), Map.empty)
+    assert(table.snapshot.files.groupBy(_.bucket).values.exists(_.size > 1),
+      "fixture: a bucket with several files")
+    val expected = liveSha(table)
+    def compactCli(args: String*): graft.lake.Snapshot = {
+      graft.app.Main.dispatch(spark, graft.app.Main.cliConfig(Map.empty), ("compact" +: args).toArray)
+      LakeTable.load(spark, tableDir).snapshot
+    }
+    val first = compactCli(tableDir)
+    assert(first.version === table.snapshot.version + 1, "multi-file buckets compact")
+    assert(first.files.groupBy(_.bucket).values.forall(_.size == 1))
+    val second = compactCli(tableDir)
+    assert(second.version === first.version, "a second compact without a horizon commits nothing")
+    val tombstones = LakeTable.load(spark, tableDir).readAllInternal().filter(col("_deleted")).count()
+    assert(tombstones > 0)
+    val withHorizon = compactCli(tableDir, Long.MaxValue.toString)
+    assert(withHorizon.version === first.version + 1)
+    assert(withHorizon.metrics("tombstonesExpired") === tombstones)
+    val after = LakeTable.load(spark, tableDir)
+    assert(after.readAllInternal().filter(col("_deleted")).count() === 0)
+    assert(liveSha(after) === expected)
+  }
+
   private def liveSha(table: LakeTable): Set[(String, String, String)] =
     table.read().select(col("repo"), col("path"), sha2(col("content"), 256))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet

@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.{ChangelogGen, GenConfig, Oracle}
 import graft.ingest.{ChainApply, Ingest, MergeApply, Mor}
-import graft.lake.{ChangeFeed, LakeTable, Maintenance, Snapshot}
+import graft.lake.{ChangeFeed, DataFile, LakeTable, Maintenance, ManifestFileIndex, Snapshot}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -11,10 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** Base-file scans plan from the manifest: no listing job, and a read whose
-  * filter pins one (repo, path) key opens only the file(s) whose bucket and
-  * `_hkey` range can hold it — without ever changing an answer. Merge-on-read
-  * reads (which still list their delta files) have their Spark jobs pinned.
+/** Scans plan from the manifest: no listing job, and a read whose filter
+  * pins one (repo, path) key opens only the file(s) whose bucket and `_hkey`
+  * range can hold it — without ever changing an answer. Merge-on-read reads
+  * scan their delta files from the manifest too (with the schemas recorded at
+  * write), their Spark jobs are pinned, and a keyed one opens one base file.
   */
 class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -49,6 +50,50 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }.sum
 
   private def rowsOf(rows: Array[Row]): Seq[Seq[Any]] = rows.toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+
+  /** Files each scan of an executed plan read, split into base-file scans
+    * (their data schema carries `_seq`) and delta-file scans. */
+  private def scansRead(df: DataFrame): (Seq[Long], Seq[Long]) = {
+    val scans = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec =>
+      assert(s.relation.location.isInstanceOf[ManifestFileIndex], s"a listed scan:\n$s")
+      (s.relation.dataSchema.fieldNames.contains(LakeTable.SeqCol), s.metrics("numFiles").value)
+    }
+    (scans.collect { case (true, n) => n }, scans.collect { case (false, n) => n })
+  }
+
+  /** A keyed read of the merge-on-read snapshot `s` for each of `keys`
+    * equals the unpruned read filtered on the driver, builds its plan without
+    * a Spark job (no listing, no schema merge), scans through manifest
+    * indexes only, opens at most one base file per scan (one scan per schema
+    * group and join side) and, of the delta files, only the flat ones and
+    * the labeled ones of the key's bucket. (A scan whose join side turned
+    * out empty is dropped from the final adaptive plan; at least one key
+    * must show both kinds of scan.) */
+  private def assertKeyedMorReads(table: LakeTable, s: Snapshot,
+      keys: Seq[(String, String)], what: String): Unit = {
+    val all = table.read(s).collect()
+    val flat = s.deltaFiles.count(_.bucket < 0)
+    val scanned = keys.map { key =>
+      val (planJobs, df) = TestSpark.jobsDuring(keyed(table.read(s), key))
+      assert(planJobs === 0, s"$what: building the keyed read of $key ran a job")
+      val want = all.filter(r => r.getAs[String]("repo") == key._1 && r.getAs[String]("path") == key._2)
+      assert(rowsOf(df.collect()) === rowsOf(want), s"$what: keyed read of $key differs")
+      val bucket = spark.range(1).select(LakeTable.bucketExpr(lit(key._1), lit(key._2), s.numBuckets))
+        .head().getInt(0)
+      val (base, deltas) = scansRead(df)
+      assert(base.forall(_ <= 1L), s"$what: base files opened per scan for $key: $base")
+      val canHold = flat + s.deltaFiles.count(_.bucket == bucket)
+      assert(deltas.forall(_ <= canHold),
+        s"$what: delta files opened per scan for $key: $deltas (flat + key's bucket: $canHold)")
+      base.sum > 0L && deltas.sum > 0L
+    }
+    assert(scanned.contains(true), s"$what: no keyed read scanned base and delta files")
+  }
+
+  /** `s` as a snapshot written before delta schemas were recorded. */
+  private def legacyDeltas(s: Snapshot, keep: DataFile => Boolean = _ => false): Snapshot =
+    s.copy(deltaFiles = s.deltaFiles.map(f => if (keep(f)) f else f.copy(eventSchema = None)),
+      manifests = Seq.empty)
 
   /** Pruned keyed reads of live, tombstoned and absent keys equal the
     * unpruned read filtered on the driver. Returns the most files one keyed
@@ -154,6 +199,14 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .find(k => want.exists(w => (w._1, w._2) == k)).get
     val (keyedJobs, one) = TestSpark.jobsDuring(keyed(table.read(), key).collect())
     assert(shas(one) === want.filter(w => (w._1, w._2) == key))
+    val absent = ("repo-none", "src/none.scala")
+    val deleted = events.filter(e => e.seq > 2000L && e.op == "delete").map(e => (e.repo, e.path))
+      .find(k => !want.exists(w => (w._1, w._2) == k)).get
+    assertKeyedMorReads(table, s, Seq(key, deleted, absent) ++ all.take(3).map(r =>
+      (r.getAs[String]("repo"), r.getAs[String]("path"))), "MOR fixture")
+    // entries written before delta schemas were recorded read through a listing
+    assert(rowsOf(table.read(legacyDeltas(s)).collect()) === rowsOf(all))
+    assert(shas(keyed(table.read(legacyDeltas(s)), key).collect()) === shas(one))
 
     val (feedJobs, feed) = TestSpark.jobsDuring(ChangeFeed.changesBetween(table, v1, s.version).collect())
     val before = Oracle.replay(events.filter(_.seq <= 2000L)).rows
@@ -173,9 +226,59 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val (chainJobs, _) = TestSpark.jobsDuring(ChainApply.sync(table, dst))
     assert(shas(dst.read().collect()) === want)
 
-    // today's counts: a keyed MOR read still lists its delta files, merges
-    // their schemas and joins every delta-touched base file
-    assert((fullJobs, keyedJobs, feedJobs, chainJobs) === ((6, 6, 15, 18)),
+    // delta files scan from the manifest with their recorded schemas (no
+    // listing, no schema-merge job), and a keyed read's filter reaches the
+    // base scan; the keyed read's insert residue still runs its own anti-join
+    assert((fullJobs, keyedJobs, feedJobs, chainJobs) === ((5, 4, 12, 17)),
       "Spark jobs of (full read, keyed read, change-feed window, chain bootstrap)")
+  }
+
+  test("recorded delta schemas read like the footer merge across add_column and rename_column") {
+    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mscan-evo"), numBuckets = 8,
+      targetFileRows = 40L)
+    def withStars(df: DataFrame): DataFrame =
+      df.withColumn("after", col("after").withField("stars", (col("seq") * 10).cast("int")))
+    MergeApply.merge(table, delta(0L until 600L, "insert", 1L, "v1"), Map.empty)
+    MergeApply.appendDelta(table, delta(0L until 600L by 5, "update", 2L, "v2"), Map.empty)
+    table.evolveSchema(_.addColumn("stars", "int"))
+    MergeApply.appendDelta(table, withStars(delta(0L until 600L by 7, "update", 3L, "v3")), Map.empty)
+    // one dense bucket folds; the rest of the backlog becomes labeled deltas
+    Mor.fold(table, minEventsPerBucket = table.snapshot.flatDeltaHist.get.values.max)
+    table.evolveSchema(_.renameColumn("lang", "language"))
+    MergeApply.appendDelta(table,
+      withStars(delta(3L until 600L by 11, "update", 4L, "v4", "language")), Map.empty)
+    MergeApply.appendDelta(table, delta(0L until 600L by 13, "delete", 5L, ""), Map.empty)
+    MergeApply.appendDelta(table, delta(600L until 610L, "insert", 6L, "v6", "language"), Map.empty)
+    val s = table.snapshot
+    val images = s.deltaFiles.flatMap(_.eventSchema).map(_("after").dataType).distinct
+    assert(s.deltaFiles.forall(_.eventSchema.isDefined) && images.size >= 3,
+      s"fixture: delta files recording three image structs, got $images")
+    assert(s.deltaFiles.exists(_.bucket >= 0) && s.deltaFiles.exists(_.bucket < 0))
+
+    val all = table.read(s).collect()
+    Seq(legacyDeltas(s), legacyDeltas(s, _.bucket < 0)).foreach { legacy =>
+      assert(rowsOf(table.read(legacy).collect()) === rowsOf(all), "full read vs the listing read")
+    }
+    val byKey = all.map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
+    def row(id: Long): Option[Row] = byKey.get(keyOf(id))
+    assert(row(3L).map(r => (r.getAs[String]("content"), r.getAs[String]("language"),
+      r.getAs[Int]("stars"))) === Some(("v4-3", "scala", 40)))
+    assert(row(7L).map(r => (r.getAs[String]("content"), r.getAs[Int]("stars"))) === Some(("v3-7", 30)))
+    assert(row(5L).map(r => (r.getAs[String]("content"), r.getAs[Any]("stars"))) === Some(("v2-5", null)))
+    assert(row(13L).isEmpty && row(605L).map(_.getAs[String]("content")) === Some("v6-605"))
+
+    val keys = Seq(3L, 5L, 7L, 13L, 14L, 605L, 5000L).map(keyOf)
+    assertKeyedMorReads(table, s, keys, "schema evolution")
+    keys.foreach { k =>
+      assert(rowsOf(keyed(table.read(legacyDeltas(s)), k).collect()) ===
+        rowsOf(keyed(table.read(s), k).collect()), s"keyed read of $k vs the listing read")
+    }
+
+    // time travel across a rebucket: the old snapshot's labeled deltas prune
+    // under its own bucket count, not the table's
+    Mor.fold(table)
+    Maintenance.rebucket(table, 16)
+    assert(rowsOf(table.read(s).collect()) === rowsOf(all), "pre-rebucket snapshot")
+    assertKeyedMorReads(table, s, keys, "pre-rebucket snapshot")
   }
 }
