@@ -174,8 +174,8 @@ object Main {
       // catch-up replay from the rule's own offset fence. POST /stop (or a
       // stop marker in <ckptDir>/_graftctl) ends the whole pipeline.
       // every argument is checked before any table is created
-      val specs = ruleSpecs(args.drop(4).toSeq).filterOrElse(_ => args(3).toIntOption.isDefined,
-        s"maxFiles '${args(3)}' is not an integer")
+      val specs = ruleSpecs(args.drop(4).toSeq, cli.streaming.sigStoreDir)
+        .filterOrElse(_ => args(3).toIntOption.isDefined, s"maxFiles '${args(3)}' is not an integer")
       val rules = specs match {
         case Left(why) => System.err.println(s"tailrules: $why"); usage(); sys.exit(2)
         case Right(ok) => ok.map { case (name, dir) =>
@@ -329,15 +329,25 @@ object Main {
   }
 
   /** `name=tableDir` rule specs of `tailrules`: every name non-empty and
-    * unique, every table dir non-empty, at least one rule. */
-  def ruleSpecs(specs: Seq[String]): Either[String, Seq[(String, String)]] = {
+    * unique, every table dir non-empty and its own, at least one rule, and
+    * at most one rule when a signature store (`GRAFT_SIGSTORE`) is set —
+    * every rule would append to that one store. */
+  def ruleSpecs(specs: Seq[String],
+      sigStoreDir: Option[String] = None): Either[String, Seq[(String, String)]] = {
     val names = specs.map(_.takeWhile(_ != '='))
+    val dirs = specs.map(s => s.drop(s.indexOf('=') + 1))
+    val paths = dirs.map(d => java.nio.file.Paths.get(d).toAbsolutePath.normalize)
     if (specs.isEmpty) Left("at least one name=tableDir rule")
     else specs.find(!_.matches("[^=]+=.+")) match {
       case Some(bad) => Left(s"rule spec '$bad' is not name=tableDir")
       case None => names.diff(names.distinct).headOption match {
         case Some(dup) => Left(s"duplicate rule name '$dup'")
-        case None => Right(names.zip(specs.map(s => s.drop(s.indexOf('=') + 1))))
+        case None => paths.diff(paths.distinct).headOption match {
+          case Some(dup) => Left(s"two rules share table dir $dup")
+          case None if sigStoreDir.isDefined && specs.size > 1 =>
+            Left("GRAFT_SIGSTORE names one signature store, so it takes one rule")
+          case None => Right(names.zip(dirs))
+        }
       }
     }
   }
@@ -370,6 +380,7 @@ object Main {
       |  GRAFT_MOR_FOLD_EVERY=<n>           MOR fold cadence in micro-batches (default 2)
       |  GRAFT_MOR_FOLD_MIN_PER_BUCKET=<n>  cadence folds rewrite buckets with >= n events (default 16384)
       |  GRAFT_SIGSTORE=<dir>               maintain a near-dup signature store from run/tail/replay
+      |                                     # (and a one-rule tailrules)
       |  GRAFT_HTTP_PORT=<p>                tail/tailrules control plane port (default 0: ephemeral)
       |  SPARK_GRAFT_CPUS=<n>               local cores and shuffle partitions (default: every core)
       |  SPARK_GRAFT_MASTER=<url>           Spark master (default: local[SPARK_GRAFT_CPUS])

@@ -218,7 +218,16 @@ object Ingest {
       table: LakeTable,
       batch: DataFrame,
       batchId: Long = -1L,
-      cfg: IngestConfig = IngestConfig()): BatchMetrics = {
+      cfg: IngestConfig = IngestConfig()): BatchMetrics =
+    applyEvents(table, batch, batchId, cfg, commitIdle = true)
+
+  /** [[applyBatch]]; `commitIdle` = false for a replay, whose batch id is
+    * made up. A replay whose events are all fenced out, or whose rows all
+    * lose under LWW, changes no file, fence offset, schema, dead letter or
+    * held-back count, so it commits nothing and leaves no lineage line. A
+    * streaming batch commits even then, to record its batch id. */
+  private def applyEvents(table: LakeTable, batch: DataFrame, batchId: Long,
+      cfg: IngestConfig, commitIdle: Boolean): BatchMetrics = {
     val snap0 = table.refresh()
 
     if (batchId >= 0 && batchId <= snap0.committedBatchId) {
@@ -233,7 +242,7 @@ object Ingest {
     // job, write job, footer list) collapses to one fence-only commit that
     // still records the batchId for the exactly-once fence.
     if (batchIsPlanEmpty(batch)) {
-      LakeTable.withCommitRetry(table)(table.commit(
+      if (commitIdle) LakeTable.withCommitRetry(table)(table.commit(
         Set.empty, Seq.empty, Map.empty,
         Map("eventsSeen" -> 0L, "batches" -> 1L), batchId))
       return idle(batchId, table.snapshot.version)
@@ -274,8 +283,10 @@ object Ingest {
     val imageFields = ImageBinding.imageFields(batch)
     val (stats, write) =
       if (cfg.morMode) morWriter(table, batch, batchId, cfg, statAggs, isLiveRow)
-      else cowWriter(table, snap0, batch, batchId, statAggs, isLiveRow, imageFields)
+      else cowWriter(table, snap0, batch, batchId, statAggs, isLiveRow, imageFields, commitIdle)
 
+    if (!commitIdle && stats.unfenced == 0)
+      return BatchMetrics(batchId, stats.total, 0, 0, stats.total, 0, 0, 0, 0, snap0.version)
     if (stats.deadLetters > 0) appendDeadLetters(table, batch.filter(isDeadLetter), batchId)
 
     // A DDL only needs a BARRIER (batch split before/after it) when it
@@ -311,7 +322,7 @@ object Ingest {
       stats.total - stats.unfenced, results.map(_.eventsApplied).sum,
       results.map(_.tombstonesWritten).sum, results.map(_.conflictsLww).sum,
       stats.ddls.length, table.snapshot.version)
-    appendLineage(table, bm, stats.fence, stats.perPartRows)
+    if (table.snapshot.version != snap0.version) appendLineage(table, bm, stats.fence, stats.perPartRows)
     drainPending(table)
     bm
   }
@@ -361,8 +372,8 @@ object Ingest {
     * O(1) in the file count). Each segment holds back rows whose image
     * fields the current schema cannot resolve, dedups, and merges. */
   private def cowWriter(table: LakeTable, snap0: Snapshot, batch: DataFrame, batchId: Long,
-      statAggs: Seq[Column], isLiveRow: Column,
-      imageFields: Set[String]): (BatchStats, SegmentWriter) = {
+      statAggs: Seq[Column], isLiveRow: Column, imageFields: Set[String],
+      commitIdle: Boolean): (BatchStats, SegmentWriter) = {
     val bucketOf = table.bucketExpr(col("repo"), col("path"))
     val hkeyOf = table.hkeyExpr(col("repo"), col("path"))
     val literalHits = MergeApply.useLiteralManifest(snap0)
@@ -416,7 +427,8 @@ object Ingest {
           (if (heldTotal > 0) Map("pendingHeldBack" -> heldTotal) else Map.empty)
       MergeApply.merge(table, Dedup.lastWriterPerKey(live), fence,
         batchId = if (last) batchId else -1L, extraMetrics = extras,
-        selection = if (whole) selection(stats.rows - heldN) else None)
+        selection = if (whole) selection(stats.rows - heldN) else None,
+        commitIdle = commitIdle || stats.deadLetters > 0 || heldTotal > 0)
     }
     (stats, write)
   }
@@ -474,7 +486,7 @@ object Ingest {
   /** Batch replay of a whole changelog (the `Trigger.AvailableNow`-style
     * entry used by tests and the benchmark's batch mode). */
   def replayLog(table: LakeTable, log: DataFrame, cfg: IngestConfig = IngestConfig()): BatchMetrics =
-    applyBatch(table, log, batchId = table.snapshot.committedBatchId + 1, cfg)
+    applyEvents(table, log, table.snapshot.committedBatchId + 1, cfg, commitIdle = false)
 
   /** Apply one DDL event. Idempotence is guaranteed by the snapshot's
     * `ddlSeq` fence at the call site (a foreachBatch retry re-delivers the

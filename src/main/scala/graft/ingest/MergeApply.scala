@@ -247,6 +247,8 @@ object MergeApply {
     * @param fenceDelta per-log-partition max offsets covered by this delta's
     *                   source batch — committed atomically with the data
     * @param selection precomputed file selection (else one extra small job)
+    * @param commitIdle false: a merge that applies no row and moves no fence
+    *                   offset commits nothing
     */
   def merge(
       table: LakeTable,
@@ -265,7 +267,8 @@ object MergeApply {
       alsoNewDeltaFiles: Seq[DataFile] = Seq.empty,
       /** scheduling-histogram update for this commit (folds pass Sub of the
         * flat counts they consumed). */
-      flatHistOp: FlatHistOp = FlatHistOp.Keep): MergeResult = {
+      flatHistOp: FlatHistOp = FlatHistOp.Keep,
+      commitIdle: Boolean = true): MergeResult = {
     // Optimistic-concurrency retry (Iceberg semantics): losing a snapshot
     // version race to a concurrent committer (compaction, rebucket, another
     // writer) re-runs the merge against the REFRESHED snapshot — the passed-in
@@ -275,7 +278,7 @@ object MergeApply {
     var sel = selection
     LakeTable.withCommitRetry(table) {
       try mergeOnce(table, delta, fenceDelta, batchId, extraMetrics, sel,
-        alsoReplacePaths, alsoNewDeltaFiles, flatHistOp)
+        alsoReplacePaths, alsoNewDeltaFiles, flatHistOp, commitIdle)
       finally sel = None
     }
   }
@@ -399,11 +402,14 @@ object MergeApply {
       selection: Option[FileSelection],
       alsoReplacePaths: Set[String] = Set.empty,
       alsoNewDeltaFiles: Seq[DataFile] = Seq.empty,
-      flatHistOp: FlatHistOp = FlatHistOp.Keep): MergeResult = {
+      flatHistOp: FlatHistOp = FlatHistOp.Keep,
+      commitIdle: Boolean = true): MergeResult = {
     val snap = table.snapshot
     val sel = selection.getOrElse(selectFiles(table, delta))
+    val idle = !commitIdle && fenceDelta.forall { case (p, o) => snap.fence.getOrElse(p, -1L) >= o }
 
     if (sel.buckets.isEmpty && sel.deltaRowsHint == 0L) {
+      if (idle) return MergeResult(0, 0, 0, 0, 0, 0, 0, 0)
       // Nothing to apply — still advance the fence/lineage atomically (and
       // still swap the caller's delta files: a fold whose fold-side emptied
       // out after hold-back must not leave the dropped paths live).
@@ -545,6 +551,9 @@ object MergeApply {
     val upserts = metric("upserts"); val conflicts = metric("conflicts")
     val duplicates = metric("duplicates"); val noops = metric("noopUpdates")
     val maxSeq = longMetric(om, "maxSeq", -1L)
+    // every row lost under LWW: the rewrite equals the files it would
+    // replace, and its unreferenced files are swept like a lost race's
+    if (idle && applied == 0) return MergeResult(0, 0, 0, conflicts, duplicates, 0, 0, 0)
 
     val metricsDelta = Map(
       "eventsApplied" -> applied,

@@ -5,8 +5,10 @@ import graft.ingest.Ingest.IngestConfig
 import graft.lake.LakeTable
 import graft.log.ChangeLog
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicReference
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 /** Structured Streaming front-end: tail the durable changelog and apply each
@@ -16,11 +18,13 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
   * (SURVEY §3.1): the canal replication thread becomes the file-stream
   * source; the 100k-event handler buffer
   * (reference config/configure.go:13) becomes `maxFilesPerTrigger`;
-  * rule/consumer worker pools become shuffle parallelism; the best-effort
-  * `t_positions` save becomes TWO cooperating checkpoints — Spark's streaming
-  * checkpoint (source progress) and each LakeTable's offset fence (committed
-  * atomically WITH the data), so a crash between the two replays a batch that
-  * the fence then skips: exactly-once end-to-end.
+  * each rule factory's goroutine (reference rules/factory.go:182-217)
+  * becomes one driver task per rule and micro-batch, so the rules apply a
+  * batch concurrently; consumer worker pools become shuffle parallelism; the
+  * best-effort `t_positions` save becomes TWO cooperating checkpoints —
+  * Spark's streaming checkpoint (source progress) and each LakeTable's offset
+  * fence (committed atomically WITH the data), so a crash between the two
+  * replays a batch that the fence then skips: exactly-once end-to-end.
   *
   * Every entry point is one call of ONE driver loop over `Seq[Rule]` (the
   * reference's one canal dispatching to N registered rules,
@@ -105,22 +109,31 @@ object StreamIngest {
   private def oneRule(tableDir: String, cfg: IngestConfig): Rule =
     Rule(Paths.get(tableDir).getFileName.toString, tableDir, cfg)
 
-  /** The driver loop. Each micro-batch is read once (persisted when more than
-    * one rule applies it) and applied rule after rule; per-table batchId
-    * fencing makes a crash-retry idempotent PER RULE — tables that already
-    * committed the batch skip it, the rest apply it, with no cross-rule
-    * coordination. Rules apply sequentially, so a rule's freshness includes
-    * the applies before it.
+  /** The driver loop. The active rules apply each micro-batch concurrently,
+    * one task per rule on a driver pool of `rules.size` threads, and each
+    * rule reads the batch itself; per-table batchId fencing makes a
+    * crash-retry idempotent PER RULE — tables that already committed the
+    * batch skip it, the rest apply it, with no cross-rule coordination. So a
+    * rule's freshness is its own apply, and the batch ends with its slowest
+    * rule. The batch waits for every rule's task before it rethrows a
+    * failure: a rule that is committing is never abandoned because another
+    * one threw.
     *
-    * One lock serializes every apply — live batches, catch-up replays and
-    * the idle watcher — so a catch-up and a live batch of one rule never
-    * interleave. A failure of the idle watcher stops the query and is
-    * rethrown, like a failure inside a batch. */
+    * One lock serializes batches, catch-up replays and the idle watcher, so
+    * a catch-up and a live batch of one rule never interleave. A failure of
+    * the idle watcher stops the query and is rethrown, like a failure inside
+    * a batch. Two rules may not share a table dir (the second would see the
+    * first's commit of the batch and skip it) nor a signature store (their
+    * concurrent appends would collide in one parquet dir). */
   private def drive(spark: SparkSession, logDir: String, rules: Seq[Rule],
       checkpointDir: String, maxFilesPerTrigger: Int, trigger: Trigger,
       httpPort: Option[Int], oneTable: Boolean): Unit = {
     require(rules.nonEmpty, "at least one rule")
     require(rules.map(_.name).distinct.size == rules.size, "rule names must be unique")
+    def distinctDirs(dirs: Seq[String]) =
+      dirs.map(d => Paths.get(d).toAbsolutePath.normalize).distinct.size == dirs.size
+    require(distinctDirs(rules.map(_.tableDir)), "rules must write distinct table dirs")
+    require(distinctDirs(rules.flatMap(_.cfg.sigStoreDir)), "rules must maintain distinct signature stores")
     val ctl = pipelineHome(rules, checkpointDir, oneTable)
     // A bounded AvailableNow catch-up schedules no cadence folds and ends in
     // a full fold that self-heals the MOR histogram, so both are live-tail
@@ -186,6 +199,12 @@ object StreamIngest {
         s"/progress /stop${if (rules.size == 1) " /report /pause /start /state" else ""})")
       c
     }
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    val pool = Executors.newFixedThreadPool(rules.size, (task: Runnable) => {
+      val t = new Thread(task, s"graft-rule-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
     try {
       lock.synchronized(observe())
       val q = ChangeLog.readStream(spark, logDir, maxFilesPerTrigger).writeStream
@@ -196,17 +215,19 @@ object StreamIngest {
           // boundary stop: the batch has done nothing and is re-delivered on resume
           if (Files.exists(stop)) throw new GracefulStopException
           lock.synchronized {
-            val active = observe(skipping = batchId)
-            val shared = if (active.size > 1) batch.persist() else batch
-            try active.foreach { case ((r, table, cfg), caughtUp) =>
-              // a batch the catch-up replay just covered is fenced out at
-              // the scan instead of re-merged through LWW
-              Ingest.applyBatch(table, shared, batchId,
-                if (caughtUp) cfg.copy(orderedDelivery = true) else cfg)
-              if (live) foldOnCadence(spark, r.tableDir, r.cfg, batchId)
-            } finally if (active.size > 1) { shared.unpersist(blocking = false); () }
+            // each task carries the micro-batch's local properties (its
+            // batch id, call site and SQL execution root) and active session
+            val session = batch.sparkSession.asInstanceOf[classic.SparkSession]
+            awaitAll(observe(skipping = batchId).map { case ((r, table, cfg), caughtUp) =>
+              SQLExecution.withThreadLocalCaptured(session, pool) {
+                // a batch the catch-up replay just covered is fenced out at
+                // the scan instead of re-merged through LWW
+                Ingest.applyBatch(table, batch, batchId,
+                  if (caughtUp) cfg.copy(orderedDelivery = true) else cfg)
+                if (live) foldOnCadence(spark, r.tableDir, r.cfg, batchId)
+              }
+            })
           }
-          ()
         }
         .start()
       // idle-stream fallback: with no incoming data no batch boundary fires,
@@ -228,6 +249,7 @@ object StreamIngest {
       watcher.join()
       Option(watchFailure.get).foreach(t => throw t)
     } finally {
+      pool.shutdown()
       control.foreach { c => c.close(); Files.deleteIfExists(ctl.resolve("http.port")) }
       spark.streams.removeListener(listener)
       Files.deleteIfExists(stop)
@@ -235,6 +257,25 @@ object StreamIngest {
     // surface (and wait out) any in-flight async cadence fold: callers
     // observe quiesced tables when this returns
     rules.foreach(r => MorFolds.drain(r.tableDir))
+  }
+
+  /** Waits for every task, then rethrows the first failure with the others
+    * suppressed. An interrupt (a `stop()` of the query) does not abandon a
+    * task in flight: the wait goes on and the interrupt is restored after. */
+  private def awaitAll(tasks: Seq[CompletableFuture[Unit]]): Unit = {
+    var interrupted = false
+    def failure(t: CompletableFuture[Unit]): Option[Throwable] =
+      try { t.get(); None }
+      catch {
+        case e: ExecutionException => Some(e.getCause)
+        case _: InterruptedException => interrupted = true; failure(t)
+      }
+    val failures = tasks.flatMap(failure)
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** MOR compaction cadence after batch `batchId`: fold is idempotent and

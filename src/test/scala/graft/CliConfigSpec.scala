@@ -50,4 +50,18 @@ class CliConfigSpec extends AnyFunSuite {
       assert(Main.ruleSpecs(Seq("ok=/t/ok", bad)).left.exists(_.contains(s"'$bad'")), bad))
     assert(Main.ruleSpecs(Seq("a=/t/1", "b=/t/2", "a=/t/3")) === Left("duplicate rule name 'a'"))
   }
+
+  test("tailrules rule specs: two rules on one table dir are rejected, however the dir is spelled") {
+    assert(Main.ruleSpecs(Seq("a=/t/x", "b=/t/y/../x/")) === Left("two rules share table dir /t/x"))
+    val here = java.nio.file.Paths.get("rel").toAbsolutePath.normalize
+    assert(Main.ruleSpecs(Seq("a=rel", s"b=$here")) === Left(s"two rules share table dir $here"))
+    assert(Main.ruleSpecs(Seq("a=/t/x", "b=/t/xy")).isRight)
+  }
+
+  test("tailrules with GRAFT_SIGSTORE takes one rule: more would append to one store") {
+    val sigs = Some("/data/sigs")
+    assert(Main.ruleSpecs(Seq("a=/t/a"), sigs) === Right(Seq("a" -> "/t/a")))
+    assert(Main.ruleSpecs(Seq("a=/t/a", "b=/t/b"), sigs).left.exists(_.contains("GRAFT_SIGSTORE")))
+    assert(Main.ruleSpecs(Seq("a=/t/a", "b=/t/b")).isRight)
+  }
 }

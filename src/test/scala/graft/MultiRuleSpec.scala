@@ -9,6 +9,23 @@ import graft.streaming.StreamIngest.Rule
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** A meeting point for the filter UDFs of two rules, inside their tasks.
+  * Static, so the local-mode executors that run the UDFs share it. */
+object MultiRuleSpecHooks {
+  @volatile var met = new java.util.concurrent.CountDownLatch(2)
+  private val armed = Seq.fill(2)(new java.util.concurrent.atomic.AtomicBoolean(false))
+
+  def arm(): Unit = { met = new java.util.concurrent.CountDownLatch(2); armed.foreach(_.set(true)) }
+
+  /** Rule `i`'s first task waits up to 30 s for the other rule's. */
+  def meet(i: Int): Unit =
+    if (armed(i).compareAndSet(true, false)) {
+      met.countDown()
+      if (!met.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException(s"rule $i applied alone: the rules did not overlap")
+    }
+}
+
 /** Multi-rule pipeline (the reference's process layout: one canal, N
   * registered rules, each filtering and applying independently —
   * /root/reference/cobra/handler.go:77-101, /root/reference/rules/factory.go):
@@ -70,14 +87,46 @@ class MultiRuleSpec extends AnyFunSuite {
     Ingest.replayLog(tB, log, rules(1).cfg)
     assert(shaSet(LakeTable.load(spark, dirA)) === oracleA)
     assert(shaSet(LakeTable.load(spark, dirB)) === oracleB)
-    assert(LakeTable.load(spark, dirA).snapshot.version > vA, "replay commits a fence-only snapshot")
-    assert(LakeTable.load(spark, dirB).snapshot.version > vB, "replay commits a fence-only snapshot")
+    assert(LakeTable.load(spark, dirA).snapshot.version === vA, "a fenced-out replay commits nothing")
+    assert(LakeTable.load(spark, dirB).snapshot.version === vB, "a fenced-out replay commits nothing")
+  }
+
+  test("the rules of a micro-batch apply concurrently") {
+    // each rule's filter blocks its first task until the other rule's first
+    // task arrives: applied one after the other, the first rule times out
+    val logDir = TestSpark.tmpDir("graft-mrc-log")
+    val dirs = Seq("a", "b").map(n => TestSpark.tmpDir(s"graft-mrc-$n"))
+    ChangeLog.write(ChangelogGen.events(spark, cfg.copy(nEvents = 2000L)), logDir, segmentsPerPartition = 1)
+    dirs.foreach(LakeTable.create(spark, _, numBuckets = 4))
+    MultiRuleSpecHooks.arm()
+    val rules = dirs.zipWithIndex.map { case (d, i) =>
+      val meet = udf { (_: String) => MultiRuleSpecHooks.meet(i); true }
+      Rule(s"r$i", d, Ingest.IngestConfig(filter = FilterChain.passAll.add(meet(col("repo")))))
+    }
+    StreamIngest.runRulesAvailable(spark, logDir, rules, TestSpark.tmpDir("graft-mrc-ckpt"))
+    assert(MultiRuleSpecHooks.met.getCount === 0L, "both rules reached the meeting point")
+    val want = LakeTable.load(spark, dirs(0)).snapshot.fence
+    assert(want.nonEmpty && LakeTable.load(spark, dirs(1)).snapshot.fence === want)
+  }
+
+  test("two rules may not share a table dir or a signature store") {
+    val logDir = TestSpark.tmpDir("graft-mrx-log")
+    val dir = TestSpark.tmpDir("graft-mrx-t")
+    val ckpt = TestSpark.tmpDir("graft-mrx-ckpt")
+    val sameDir = Seq(Rule("a", dir), Rule("b", s"$dir/../${java.nio.file.Paths.get(dir).getFileName}/"))
+    val e1 = intercept[IllegalArgumentException](StreamIngest.runRulesAvailable(spark, logDir, sameDir, ckpt))
+    assert(e1.getMessage.contains("distinct table dirs"))
+    val sigs = Ingest.IngestConfig(sigStoreDir = Some(TestSpark.tmpDir("graft-mrx-sigs")))
+    val sameStore = Seq(Rule("a", TestSpark.tmpDir("graft-mrx-a"), sigs), Rule("b", dir, sigs))
+    val e2 = intercept[IllegalArgumentException](StreamIngest.runRulesAvailable(spark, logDir, sameStore, ckpt))
+    assert(e2.getMessage.contains("distinct signature stores"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "_graftctl")), "no pipeline started")
   }
 
   test("mixed write modes on one stream: a merge-on-read rule beside a copy-on-write rule") {
     // one canal, two rules, DIFFERENT write modes — the MOR rule takes the
     // fused append path while the COW rule runs the probe/merge path on the
-    // same shared (persisted) batches; both must converge independently
+    // same micro-batches, concurrently; both must converge independently
     val logDir = TestSpark.tmpDir("graft-mrm-log")
     val dirCow = TestSpark.tmpDir("graft-mrm-cow")
     val dirMor = TestSpark.tmpDir("graft-mrm-mor")

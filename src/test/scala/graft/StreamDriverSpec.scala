@@ -34,8 +34,8 @@ object StreamDriverSpecHooks {
 }
 
 /** The one stream driver: its run report stays parseable through a graceful
-  * stop, a rule that fails mid-batch leaves the rules that already
-  * committed that batch untouched when the batch is redelivered, a pause
+  * stop, a rule that fails mid-batch leaves the other rules to commit that
+  * batch, and untouched when the batch is redelivered, a pause
   * that skipped no batch costs nothing on resume, a failure of the idle
   * watcher ends the tail instead of hanging it, and a rule pipeline writes
   * its run report beside every rule's table. */
@@ -155,16 +155,17 @@ class StreamDriverSpec extends AnyFunSuite {
     assert(shaSet(tableDir) === oracle(cfg), "stop → resume loses nothing")
   }
 
-  test("a rule failing mid-batch: the rule that committed the batch skips its redelivery, the failed rule applies it once") {
+  /** Rules `a` and `b` on one stream; rule `failing` throws once in batch
+    * k, the last batch. The other rule commits k in that attempt; after a
+    * restart it skips k's redelivery and the failed rule applies k once. */
+  private def ruleFailsMidBatch(name: String, failing: String): Unit = {
     val cfg = GenConfig(seed = 53L, nEvents = 3000L, nRepos = 20, pathsPerRepo = 10,
       nPartitions = 2, contentLen = 60)
-    val logDir = TestSpark.tmpDir("graft-sd-fail-log")
-    val dirA = TestSpark.tmpDir("graft-sd-fail-a")
-    val dirB = TestSpark.tmpDir("graft-sd-fail-b")
-    val ckpt = TestSpark.tmpDir("graft-sd-fail-ckpt")
+    val logDir = TestSpark.tmpDir(s"graft-sd-$name-log")
+    val ckpt = TestSpark.tmpDir(s"graft-sd-$name-ckpt")
+    val dirs = Seq("a", "b").map(r => r -> TestSpark.tmpDir(s"graft-sd-$name-$r")).toMap
     ChangeLog.write(ChangelogGen.events(spark, cfg), logDir, segmentsPerPartition = 3)
-    LakeTable.create(spark, dirA, numBuckets = 4)
-    LakeTable.create(spark, dirB, numBuckets = 4)
+    dirs.values.foreach(LakeTable.create(spark, _, numBuckets = 4))
     // k is the LAST batch at 2 files per trigger, so the restart redelivers
     // k and nothing after it
     val segments = Files.walk(Paths.get(logDir)).iterator.asScala
@@ -176,10 +177,10 @@ class StreamDriverSpec extends AnyFunSuite {
         throw new IllegalStateException("injected rule failure")
       true
     }
-    // A applies before B in every batch, so A has committed k when B fails
-    val rules = Seq(
-      Rule("a", dirA, Ingest.IngestConfig()),
-      Rule("b", dirB, Ingest.IngestConfig(filter = FilterChain.passAll.add(failOnce(col("repo"))))))
+    val rules = Seq("a", "b").map(r => Rule(r, dirs(r),
+      if (r == failing) Ingest.IngestConfig(filter = FilterChain.passAll.add(failOnce(col("repo"))))
+      else Ingest.IngestConfig()))
+    val (failDir, okDir) = (dirs(failing), dirs(if (failing == "a") "b" else "a"))
 
     failBatch = k
     failArmed.set(true)
@@ -188,23 +189,32 @@ class StreamDriverSpec extends AnyFunSuite {
     assert(!failArmed.get, "the injected failure must have fired")
     assert(Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null)
       .exists(e => String.valueOf(e.getMessage).contains("injected rule failure")))
-    val a0 = LakeTable.load(spark, dirA).snapshot
-    assert(a0.committedBatchId === k, "rule A committed batch k before B failed")
-    assert(LakeTable.load(spark, dirB).snapshot.committedBatchId === k - 1, "rule B did not commit k")
+    // the batch waits for every rule before it fails
+    val ok0 = LakeTable.load(spark, okDir).snapshot
+    assert(ok0.committedBatchId === k, "the other rule committed batch k in the failed attempt")
+    assert(LakeTable.load(spark, failDir).snapshot.committedBatchId === k - 1, "the failed rule did not commit k")
 
     // restart from the same checkpoint: batch k is redelivered to both rules
     StreamIngest.runRulesAvailable(spark, logDir, rules, ckpt, maxFilesPerTrigger = 2)
-    val a1 = LakeTable.load(spark, dirA).snapshot
-    val b1 = LakeTable.load(spark, dirB).snapshot
-    assert(a1.version === a0.version, "the redelivered batch must not commit to A again")
-    assert(a1.metrics("eventsApplied") === a0.metrics("eventsApplied"))
-    assert(b1.committedBatchId === k)
-    // the same events through the same batches: B applied k exactly once
-    assert(b1.metrics("batches") === a1.metrics("batches"))
-    assert(b1.metrics("eventsApplied") === a1.metrics("eventsApplied"))
+    val ok1 = LakeTable.load(spark, okDir).snapshot
+    val failed1 = LakeTable.load(spark, failDir).snapshot
+    assert(ok1.version === ok0.version, "the redelivered batch must not commit to the other rule again")
+    assert(ok1.metrics("eventsApplied") === ok0.metrics("eventsApplied"))
+    assert(failed1.committedBatchId === k)
+    // the same events through the same batches: the failed rule applied k exactly once
+    assert(failed1.metrics("batches") === ok1.metrics("batches"))
+    assert(failed1.metrics("eventsApplied") === ok1.metrics("eventsApplied"))
     val want = oracle(cfg)
-    assert(shaSet(dirA) === want)
-    assert(shaSet(dirB) === want)
+    assert(shaSet(okDir) === want)
+    assert(shaSet(failDir) === want)
+  }
+
+  test("a rule failing mid-batch: the rule that committed the batch skips its redelivery, the failed rule applies it once") {
+    ruleFailsMidBatch("fail", failing = "b")
+  }
+
+  test("the first rule failing mid-batch: the second still commits the batch; the first applies it once on restart") {
+    ruleFailsMidBatch("failfirst", failing = "a")
   }
 
   test("a pause and a start on an idle tail skip no batch: a segment arriving after the start is applied") {
