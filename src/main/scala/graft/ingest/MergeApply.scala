@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.lake.{CommitConflictException, DataFile, FlatHistOp, ImageBinding, LakeTable,
-  MorRead, Snapshot}
+  MorRead, Snapshot, TableSchema}
 import graft.model.Ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -156,7 +156,7 @@ object MergeApply {
   def useLiteralManifest(snap: Snapshot): Boolean =
     snap.files.size <= LiteralManifestMaxFiles
 
-  /** Above this file count — when the snapshot is SEGMENTED — the planning
+  /** Above this file count the planning
     * lookup scans the manifest JSONL files as a DataFrame instead of building
     * a driver-side LocalRelation: LocalRelation rows are serialized into the
     * physical plan on the driver (10^6 entries ≈ 10^2 MB per planned query),
@@ -165,15 +165,13 @@ object MergeApply {
 
   /** The manifest as a broadcastable lookup table (bucket, minKey, maxKey,
     * file path). Small manifests ride a LocalRelation (compact binary rows);
-    * large segmented ones are scanned from their JSONL manifest files (see
+    * large ones are scanned from their JSONL manifest files (see
     * [[ScanManifestMinFiles]]). */
   def manifestDF(table: LakeTable, snap: Snapshot): DataFrame = {
     val spark = table.spark
-    val basePaths = graft.lake.Manifest.absolutePaths(
-      table.dir, snap, graft.lake.Manifest.BaseKind)
-    if (snap.files.size >= ScanManifestMinFiles && basePaths.nonEmpty) {
+    if (snap.files.size >= ScanManifestMinFiles) {
       spark.read.schema("bucket INT, path STRING, minKey BIGINT, maxKey BIGINT")
-        .json(basePaths: _*)
+        .json(graft.lake.Manifest.absolutePaths(table.dir, snap, graft.lake.Manifest.BaseKind): _*)
         .select(col("bucket").as("_mb"), col("minKey").as("_mmin"),
           col("maxKey").as("_mmax"), col("path").as("_mpath"))
     } else {
@@ -482,7 +480,9 @@ object MergeApply {
       // 164-207); set-orientedly that's a null-safe compare of the after-image
       // against the current row, surfaced as a metric
       val imageUnchanged = imageBinding
-        .map { case (c, f) => col(s"d.after.$f") <=> col(s"b.$c") }
+        .map { case (c, fs) =>
+          ImageBinding.imageValue(fs, TableSchema.toSpark(sch.find(c).get.dataType), dCol) <=> bCol(c)
+        }
         .reduceOption(_ && _).getOrElse(lit(false))
       joined.select(ImageBinding.lwwColumns(sch, imageBinding, dCol, Some(bCol)) ++ Seq(
         flag(dWins).as("_fApplied"),

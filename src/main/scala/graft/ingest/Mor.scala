@@ -101,8 +101,9 @@ object Mor {
     // ---- scheduling: ZERO-scan when metadata suffices — labeled backlog
     // off the manifest (bucket, rows), flat backlog off the snapshot's
     // transactional histogram (Snapshot.flatDeltaHist, maintained by the
-    // append job's observation pass). Histogram unknown (legacy metadata or
-    // numBuckets > HistMaxBuckets) ⇒ ONE narrow scan of the flat files
+    // append job's observation pass). Histogram unknown (numBuckets >
+    // HistMaxBuckets, an append that skipped or lost its observation, or a
+    // rebucket racing an append) ⇒ ONE narrow scan of the flat files
     // (repo+path only — column pruning keeps contents out). ----
     val flatCounts: Map[Int, Long] =
       if (flat.isEmpty) Map.empty

@@ -188,14 +188,8 @@ object ChangeFeed {
 
     // old rows projected to the CURRENT schema by column id (rename/widen-safe)
     val cur = s2.schema
-    val os = s1.schema
     val oldProjected = old0.select(
-      (cur.columns.map { c =>
-        os.findById(c.id) match {
-          case Some(oc) => col(oc.name).cast(TableSchema.toSpark(c.dataType)).as(c.name)
-          case None => lit(null).cast(TableSchema.toSpark(c.dataType)).as(c.name)
-        }
-      } :+ col(LakeTable.SeqCol) :+ col(LakeTable.DeletedCol)): _*)
+      cur.projectFrom(s1.schema) :+ col(LakeTable.SeqCol) :+ col(LakeTable.DeletedCol): _*)
 
     val o = oldProjected.join(candKeys, Seq("repo", "path"), "left_semi").alias("o")
     val n = new0.join(candKeys, Seq("repo", "path"), "left_semi").alias("n")

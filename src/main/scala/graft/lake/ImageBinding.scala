@@ -3,7 +3,7 @@ package graft.lake
 import graft.model.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The engine's last-writer-wins (LWW) column policy — ONE definition of
   * which image field feeds which column, shared by the copy-on-write merge
@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.StructType
   *    current-schema columns. An after-image written before a rename_column
   *    DDL carries the OLD field name; it resolves to the current column
   *    through the schema log's stable column ids instead of being silently
-  *    dropped.
+  *    dropped. A backlog merged across the rename carries both names, so a
+  *    column binds every field that maps to it and reads the first non-null
+  *    ([[imageValue]]).
   *  - [[lwwColumns]]: the row a change event and the base row resolve to. A
   *    delta wins on a strictly greater `seq` (equal is a duplicate and the
   *    base stands); a winning delete tombstones and nulls every non-key
@@ -23,23 +25,30 @@ import org.apache.spark.sql.types.StructType
   */
 object ImageBinding {
 
-  /** (column-name → image-field, unresolvable-image-fields). */
-  def bind(snap: Snapshot, imageFields: Set[String]): (Map[String, String], Set[String]) = {
+  /** (column-name → image-fields, unresolvable-image-fields). A column's
+    * fields are its exact name first, then its older names — each bound
+    * through the newest schema that used it — in descending schema id. A
+    * field binds to at most one column: an exact name match before an id
+    * match. */
+  def bind(snap: Snapshot, imageFields: Set[String]): (Map[String, Seq[String]], Set[String]) = {
     val cur = snap.schema
-    val byName: Map[String, String] =
-      imageFields.flatMap(f => cur.find(f).map(_.name -> f)).toMap
-    val byId: Map[String, String] = imageFields
-      .filterNot(byName.valuesIterator.contains)
-      .flatMap { f =>
-        snap.schemas.sortBy(-_.schemaId).iterator
-          .flatMap(_.find(f)).map(_.id).nextOption()
-          .flatMap(cur.findById)
-          .filterNot(c => byName.contains(c.name)) // exact name match wins
-          .map(_.name -> f)
-      }.toMap
-    val resolved = byName ++ byId
-    (resolved, imageFields -- resolved.values)
+    val (exact, other) = imageFields.partition(f => cur.find(f).isDefined)
+    // (column, the schema id that last named it so, field)
+    val older = other.toSeq.flatMap { f =>
+      snap.schemas.sortBy(-_.schemaId).iterator
+        .flatMap(sch => sch.find(f).map(c => (sch.schemaId, c.id))).nextOption()
+        .flatMap { case (schemaId, id) => cur.findById(id).map(c => (c.name, schemaId, f)) }
+    }
+    val bound = (exact.toSeq.map(f => (f, Int.MaxValue, f)) ++ older).groupBy(_._1)
+      .map { case (c, fs) => c -> fs.sortBy { case (_, schemaId, f) => (-schemaId, f) }.map(_._3) }
+    (bound, imageFields -- bound.valuesIterator.flatten)
   }
+
+  /** A column's value in a change event `d`: the first non-null of its bound
+    * image `fields`, each cast to the column type `tp`. An event was written
+    * under one schema, so at most one of its names is non-null. */
+  def imageValue(fields: Seq[String], tp: DataType, d: String => Column): Column =
+    coalesce(fields.map(f => d(s"after.$f").cast(tp)): _*)
 
   /** The field names of a change-event frame's `after` image. */
   def imageFields(events: DataFrame): Set[String] = events.schema("after").dataType match {
@@ -59,7 +68,7 @@ object ImageBinding {
     * every row has a base row (a left-outer join from the base), so the keys
     * are the base's plain columns, through which key filters reach the base
     * scan; otherwise a key is the event's, else the base's. */
-  def lwwColumns(sch: TableSchema, binding: Map[String, String],
+  def lwwColumns(sch: TableSchema, binding: Map[String, Seq[String]],
       d: String => Column, base: Option[String => Column],
       keysFromBase: Boolean = false): Seq[Column] = {
     val isDel = d("op") === Ops.Delete
@@ -70,8 +79,8 @@ object ImageBinding {
           val tp = TableSchema.toSpark(c.dataType)
           if (isKey(c.name)) d(c.name)
           else binding.get(c.name) match {
-            case Some(f) =>
-              when(!isDel, d(s"after.$f").cast(tp)).otherwise(lit(null).cast(tp)).as(c.name)
+            case Some(fs) =>
+              when(!isDel, imageValue(fs, tp, d)).otherwise(lit(null).cast(tp)).as(c.name)
             case None => lit(null).cast(tp).as(c.name)
           }
         } ++ Seq(d("seq").as(LakeTable.SeqCol), isDel.as(LakeTable.DeletedCol))
@@ -82,8 +91,8 @@ object ImageBinding {
           if (isKey(c.name))
             (if (keysFromBase) b(c.name) else coalesce(d(c.name), b(c.name))).as(c.name)
           else binding.get(c.name) match {
-            case Some(f) =>
-              when(dWins && !isDel, d(s"after.$f").cast(tp))
+            case Some(fs) =>
+              when(dWins && !isDel, imageValue(fs, tp, d))
                 .when(dWins && isDel, lit(null).cast(tp))
                 .otherwise(b(c.name)).as(c.name)
             case None => // not carried by the image: preserve the base value

@@ -16,8 +16,10 @@ object Json {
     val f = n.get(field)
     if (f == null || f.isNull) null else f.asText()
   }
-  def long(n: JsonNode, field: String): Long = n.get(field).asLong()
-  def int(n: JsonNode, field: String): Int = n.get(field).asInt()
+  def long(n: JsonNode, field: String): Long = required(n, field).asLong()
+  def int(n: JsonNode, field: String): Int = required(n, field).asInt()
+  private def required(n: JsonNode, field: String): JsonNode =
+    Option(n.get(field)).getOrElse(throw new TableFormatException(field, "is missing"))
   def arr(n: JsonNode, field: String): Seq[JsonNode] =
     Option(n.get(field)).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
   def objFields(n: JsonNode, field: String): Seq[(String, JsonNode)] =

@@ -51,10 +51,10 @@ import scala.jdk.CollectionConverters._
   * other filter reads every selected file. Merge-on-read DELTA files plan
   * the same way: [[writeFiles]] records each delta file's event schema in its
   * manifest entry, and their one read, [[MorRead.deltaEvents]], merges those
-  * schemas on the driver and scans through a [[ManifestFileIndex]] too
-  * (entries without a recorded schema fall back to a listing read). A keyed
-  * MOR read's filter reaches the base scan it joins against the deltas (one
-  * file opened) and the delta scan (flat files and the key's bucket only).
+  * schemas on the driver and scans through a [[ManifestFileIndex]] too. A
+  * keyed MOR read's filter reaches the base scan it joins against the deltas
+  * (one file opened) and the delta scan (flat files and the key's bucket
+  * only).
   *
   * Every data file carries three internal columns beyond the user schema:
   * `_seq` (log sequence number of the last writer — LWW conflict resolution),
@@ -63,6 +63,12 @@ import scala.jdk.CollectionConverters._
   * order-independent, fixing the reference's worker-pool reordering hazard,
   * SURVEY §4.3.2), and `_hkey` (the sort/stats key above; never read back,
   * only its footer statistics are).
+  *
+  * One table format: readers assume the metadata this build writes — every
+  * pointer lists manifests, every entry has a relative path and a positive
+  * size, every delta entry its event schema. The parsers ([[Snapshot]],
+  * [[Manifest]]) refuse older shapes with a [[TableFormatException]]; such a
+  * table is rebuilt with `replay` from its changelog.
   */
 class LakeTable private (val spark: SparkSession, val dir: String, @volatile private var snap: Snapshot) {
 
@@ -89,10 +95,8 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     * Murmur3), so within a bucket the key space is uniformly covered. */
   def hkeyExpr(repo: Column, path: Column): Column = xxhash64(repo, path)
 
-  /** Resolve a manifest-relative file path against the table root (absolute
-    * paths from pre-relative metadata still resolve as themselves). */
-  def resolve(path: String): String =
-    if (path.startsWith("/")) path else s"$dir/$path"
+  /** Resolve a manifest-relative file path against the table root. */
+  def resolve(path: String): String = s"$dir/$path"
 
   /** Public read: current rows under the current schema (tombstones and
     * internal columns hidden). */
@@ -117,16 +121,11 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     val groups = files.groupBy(_.schemaId)
     val parts = groups.toSeq.sortBy(_._1).map { case (schemaId, fs) =>
       val fileSchema = s.schemaById(schemaId)
-      val projection = cur.columns.map { c =>
-        fileSchema.findById(c.id) match {
-          case Some(fc) => col(fc.name).cast(TableSchema.toSpark(c.dataType)).as(c.name)
-          case None => lit(null).cast(TableSchema.toSpark(c.dataType)).as(c.name)
-        }
-      } ++ Seq(col("_seq"), col("_deleted"))
       // file columns read as nullable, as every file source reads them
       val dataSchema = StructType((fileSchema.sparkType.fields ++ LakeTable.internalFields)
         .map(_.copy(nullable = true)))
-      manifestScan(s.numBuckets, fs, dataSchema).select(projection: _*)
+      manifestScan(s.numBuckets, fs, dataSchema)
+        .select(cur.projectFrom(fileSchema) :+ col("_seq") :+ col("_deleted"): _*)
     }
     parts.reduceOption(_ unionByName _).getOrElse(emptyInternal(cur))
   }
@@ -214,9 +213,7 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
       (a.keySet ++ b.keySet).iterator
         .map(k => k -> (a.getOrElse(k, 0L) + sign * b.getOrElse(k, 0L)))
         .filter(_._2 > 0L).toMap
-    val flatRemain =
-      if (deltaRefs.nonEmpty) deltaRefs.exists(_.minBucket < 0)
-      else deltaEntries.nonEmpty && deltaEntries.exists(_.bucket < 0)
+    val flatRemain = deltaRefs.exists(_.minBucket < 0)
     // Keep is only honest when the commit adds no flat delta files; a caller
     // that appends flat deltas without accounting for them must poison the
     // histogram to unknown (scan fallback), never leave a stale exact value.
@@ -230,10 +227,7 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
         case FlatHistOp.Keep => cur.flatDeltaHist
         case FlatHistOp.Add(None) => None
         case FlatHistOp.Add(Some(h)) =>
-          val curHasFlat =
-            if (cur.manifests.nonEmpty)
-              cur.manifests.exists(r => r.kind == Manifest.DeltaKind && r.minBucket < 0)
-            else cur.deltaFiles.exists(_.bucket < 0)
+          val curHasFlat = cur.manifests.exists(r => r.kind == Manifest.DeltaKind && r.minBucket < 0)
           (if (curHasFlat) cur.flatDeltaHist else Some(Map.empty[Int, Long]))
             .map(histMerge(_, h, 1L))
         case FlatHistOp.Sub(h) => cur.flatDeltaHist.map(histMerge(_, h, -1L))
@@ -261,28 +255,21 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
   }
 
   /** Evolve one kind's manifest list for a commit; returns (pointer refs,
-    * hydrated entries in pointer order). A legacy inline snapshot (entries
-    * but no refs) is migrated wholesale on its first commit. Manifests
-    * written here before a LOST version race become orphans — swept by
-    * [[Maintenance.expireSnapshots]] after its grace window, like orphaned
-    * commit data dirs. */
+    * hydrated entries in pointer order). Manifests written here before a
+    * LOST version race become orphans — swept by [[Maintenance.expireSnapshots]]
+    * after its grace window, like orphaned commit data dirs. */
   private def evolveManifests(
       kind: String, curEntries: Seq[DataFile], curRefs: Seq[ManifestRef],
       replacedPaths: Set[String], newEntries: Seq[DataFile]): (Seq[ManifestRef], Seq[DataFile]) = {
     // fence-only / metadata-only commits (the streaming hot path's most
     // common shape) change no entries of this kind: reuse refs AND the
     // (possibly still-unhydrated) entry view untouched — zero manifest IO
-    if (curRefs.nonEmpty && replacedPaths.isEmpty && newEntries.isEmpty)
-      return (curRefs, curEntries)
-    val groups: Seq[(Option[ManifestRef], Seq[DataFile])] =
-      if (curRefs.nonEmpty) curRefs.map(r => (Some(r): Option[ManifestRef], Manifest.read(dir, r)))
-      else if (curEntries.nonEmpty) Seq((None, curEntries)) // legacy inline → segment now
-      else Seq.empty
+    if (replacedPaths.isEmpty && newEntries.isEmpty) return (curRefs, curEntries)
     val kept = Seq.newBuilder[ManifestRef]
     val rewritten = Seq.newBuilder[DataFile]
-    groups.foreach { case (refOpt, entries) =>
-      val touched = refOpt.isEmpty || entries.exists(e => replacedPaths.contains(e.path))
-      if (!touched) kept += refOpt.get
+    curRefs.foreach { r =>
+      val entries = Manifest.read(dir, r)
+      if (!entries.exists(e => replacedPaths.contains(e.path))) kept += r
       else rewritten ++= entries.filterNot(e => replacedPaths.contains(e.path))
     }
     val freshGroups = Seq(rewritten.result(), newEntries).filter(_.nonEmpty)
@@ -488,7 +475,9 @@ object LakeTable {
 
   /** Newest PARSEABLE snapshot: a snapshot file truncated by an OS crash
     * (pre-fsync era, or a torn copy) must not brick the table — skip it and
-    * fall back to the previous version. */
+    * fall back to the previous version. A pointer in an older build's shape
+    * is not torn: its refusal propagates rather than loading an older
+    * version. */
   private[lake] def latestSnapshot(dir: String): Option[Snapshot] = {
     val sd = snapshotsDir(dir)
     if (!Files.isDirectory(sd)) return None
@@ -501,6 +490,7 @@ object LakeTable {
       // torn away by the same crash is as unreadable as a torn pointer
       try Some(Snapshot.fromJson(Files.readString(sd.resolve(n))).hydrate(dir))
       catch {
+        case e: TableFormatException => throw e
         case e: Exception =>
           System.err.println(s"[lake] skipping unreadable snapshot $n: ${e.getMessage}")
           None

@@ -28,8 +28,8 @@ final case class ManifestRef(
       * hydration integrity check (one stat, no read): a truncated/torn
       * manifest is rejected at LOAD so the torn-crash fallback can skip the
       * pointer, instead of surfacing as a parse error deep inside the first
-      * query that forces entries. 0 = unknown (pre-round-5 metadata). */
-    bytes: Long = 0L) {
+      * query that forces entries. Always positive. */
+    bytes: Long) {
 
   def toJson: String = Json.obj(
     "path" -> Json.quote(path),
@@ -80,11 +80,13 @@ object Manifest {
     * opens stay bounded while steady-state commits stay O(changed files). */
   val MaxManifests = 64
 
+  /** A pointer's manifest reference; refuses a ref without a recorded size
+    * or with an absolute path (shapes of older builds). */
   def refFromJson(n: com.fasterxml.jackson.databind.JsonNode): ManifestRef =
-    ManifestRef(Json.str(n, "path"), Json.str(n, "kind"), Json.int(n, "fileCount"),
-      Json.long(n, "rows"), Json.int(n, "minBucket"), Json.int(n, "maxBucket"),
-      Json.long(n, "minKey"), Json.long(n, "maxKey"),
-      bytes = if (n.has("bytes")) Json.long(n, "bytes") else 0L)
+    ManifestRef(Snapshot.relativePath(Json.str(n, "path")), Json.str(n, "kind"),
+      Json.int(n, "fileCount"), Json.long(n, "rows"), Json.int(n, "minBucket"),
+      Json.int(n, "maxBucket"), Json.long(n, "minKey"), Json.long(n, "maxKey"),
+      Snapshot.positiveBytes(n))
 
   private def resolve(tableDir: String, relPath: String): Path =
     Paths.get(tableDir).resolve(relPath).toAbsolutePath.normalize
@@ -145,14 +147,15 @@ object Manifest {
   }
 
   /** Entries of one manifest — from the process-wide cache when seen before
-    * (immutable files make this exact), else one JSONL read. */
+    * (immutable files make this exact), else one JSONL read, refusing entries
+    * in the shapes older builds wrote ([[Snapshot.fileFromJson]]). */
   def read(tableDir: String, ref: ManifestRef): Seq[DataFile] = {
     val p = resolve(tableDir, ref.path)
     cacheGet(p.toString).getOrElse {
       diskReads.incrementAndGet()
       val lines = Files.readAllLines(p)
       val out = new scala.collection.mutable.ArrayBuffer[DataFile](lines.size())
-      lines.forEach { l => if (l.nonEmpty) out += Snapshot.fileFromJson(Json.parse(l)) }
+      lines.forEach { l => if (l.nonEmpty) out += Snapshot.fileFromJson(Json.parse(l), ref.kind) }
       val entries = out.toSeq
       cachePut(p.toString, entries)
       entries

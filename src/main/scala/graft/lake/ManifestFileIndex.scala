@@ -7,10 +7,10 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{StringType, StructType}
 
-/** Spark `FileIndex` over one snapshot's base-file manifest entries: the
-  * scan plans from the manifest alone, never listing or statting the data
-  * directories (a file is statted only when its entry predates recorded
-  * sizes, `bytes == 0`).
+/** Spark `FileIndex` over one snapshot's manifest entries (base or delta
+  * files): the scan plans from the manifest alone — each entry's relative
+  * path and recorded size — never listing or statting the data
+  * directories.
   *
   * '''Key pruning.''' When the pushed data filters pin `repo` and `path` to
   * string literals, only files that can hold that key are returned: bucket
@@ -29,15 +29,7 @@ final class ManifestFileIndex(table: LakeTable, numBuckets: Int, files: Seq[Data
 
   private lazy val statuses: Array[(DataFile, FileStatus)] = {
     val root = new Path(java.nio.file.Paths.get(table.dir).toAbsolutePath.normalize.toUri)
-    files.iterator.map { f =>
-      val p =
-        if (f.path.startsWith("/")) new Path(java.nio.file.Paths.get(f.path).toUri)
-        else new Path(root, f.path)
-      val len =
-        if (f.bytes > 0L) f.bytes
-        else java.nio.file.Files.size(java.nio.file.Paths.get(table.resolve(f.path)))
-      f -> new FileStatus(len, false, 0, 0L, 0L, p)
-    }.toArray
+    files.iterator.map(f => f -> new FileStatus(f.bytes, false, 0, 0L, 0L, new Path(root, f.path))).toArray
   }
 
   override def rootPaths: Seq[Path] = statuses.toSeq.map(_._2.getPath)

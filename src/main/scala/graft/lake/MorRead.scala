@@ -43,37 +43,17 @@ object MorRead {
     * broadcast and OOM every executor on every MOR read). */
   val BroadcastDeltaMaxBytes: Long = MergeApply.BroadcastDeltaMaxBytes
 
-  /** On-disk bytes of delta `files`: manifest `bytes` when recorded, else a
-    * driver-cheap stat; a failed stat counts as effectively infinite, so
-    * unknown sizes degrade to the safe (non-broadcast) shape, never an OOM. */
-  private def deltaBytes(table: LakeTable, files: Seq[DataFile]): Long =
-    files.iterator.map { f =>
-      if (f.bytes > 0L) f.bytes
-      else
-        try java.nio.file.Files.size(java.nio.file.Paths.get(table.resolve(f.path)))
-        catch { case _: java.io.IOException => Long.MaxValue / 1024 }
-    }.foldLeft(0L)((a, b) => if (a + b < 0) Long.MaxValue else a + b)
-
   /** The events of delta `files` (written under `numBuckets`, the bucket
     * count of the snapshot they belong to) as (repo, path, op, seq, after)
     * — the one delta-file read. The read schema is the merge of the schemas
     * the manifest entries recorded at write (the image struct may gain
     * fields across batches), built on the driver, and the files scan through
     * a [[ManifestFileIndex]]: no listing, no footer, and a pinned key keeps
-    * only the flat files and the labeled ones of its bucket. Entries written
-    * before schemas were recorded read through a listing that infers the
-    * merged schema from the footers (one job). */
-  def deltaEvents(table: LakeTable, files: Seq[DataFile], numBuckets: Int): DataFrame = {
-    val recorded = files.flatMap(_.eventSchema)
-    val events =
-      if (recorded.size == files.size)
-        table.manifestScan(numBuckets, files,
-          SchemaBridge.asNullable(recorded.distinct.reduce(SchemaBridge.merge)))
-      else table.spark.read
-        .option("mergeSchema", "true")
-        .parquet(files.map(f => table.resolve(f.path)): _*)
-    events.select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
-  }
+    * only the flat files and the labeled ones of its bucket. */
+  def deltaEvents(table: LakeTable, files: Seq[DataFile], numBuckets: Int): DataFrame =
+    table.manifestScan(numBuckets, files,
+      SchemaBridge.asNullable(files.flatMap(_.eventSchema).distinct.reduce(SchemaBridge.merge)))
+      .select(col("repo"), col("path"), col("op"), col("seq"), col("after"))
 
   /** The winning event per key across delta `files`. LWW over a SUBSET of
     * a snapshot's delta files is exact for the keys whose every delta file is
@@ -86,10 +66,11 @@ object MorRead {
     * delta files carry their bucket in the manifest; flat append files are
     * covered by the transactional per-bucket histogram
     * ([[Snapshot.flatDeltaHist]] — exact when present, see MorSpec's
-    * exact-vs-recount case). None = unknown (legacy metadata or an over-cap
-    * histogram) — callers must not prune. An empty set alongside live delta
-    * rows is a metadata inconsistency and also answers None (no pruning —
-    * correctness never rides a suspect histogram). */
+    * exact-vs-recount case). None = unknown (the histogram is over the cap,
+    * or an append's observation was lost) — callers must not prune. An
+    * empty set alongside live delta rows is a metadata inconsistency and
+    * also answers None (no pruning — correctness never rides a suspect
+    * histogram). */
   def touchedBuckets(s: Snapshot): Option[Set[Int]] = {
     val labeled = s.deltaFiles.iterator.filter(_.bucket >= 0).map(_.bucket).toSet
     val hasFlat = s.deltaFiles.exists(_.bucket < 0)
@@ -146,7 +127,7 @@ object MorRead {
     val bCol = (n: String) => col(s"b.$n")
     val keyCond = col("b.repo") === col("d.repo") && col("b.path") === col("d.path")
     if (deltaFiles.iterator.map(_.rows).sum <= MergeApply.BroadcastDeltaMaxRows &&
-        deltaBytes(table, deltaFiles) <= broadcastMaxBytes) {
+        deltaFiles.iterator.map(_.bytes).sum <= broadcastMaxBytes) {
       // the base keeps its scan partitioning (no exchange); full-outer is
       // decomposed into matched + insert residue like the COW merge's
       // broadcast-incremental strategy. Every matched row has a base row, so

@@ -21,17 +21,23 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final case class DataFile(
     bucket: Int, path: String, schemaId: Int, rows: Long,
     minKey: Long, maxKey: Long,
-    /** on-disk (compressed) file size — the byte input to broadcast-shape
-      * gates ([[MorRead]]) and compaction scheduling; 0 = unknown (legacy
-      * metadata), callers must fall back to a stat or the conservative
-      * non-broadcast shape. */
-    bytes: Long = 0L,
+    /** on-disk (compressed) file size, always positive — the byte input to
+      * broadcast-shape gates ([[MorRead]]), scan planning
+      * ([[ManifestFileIndex]]) and compaction scheduling. */
+    bytes: Long,
     /** a DELTA file's data schema (its event columns), recorded when the
       * file is listed: merge-on-read reads build their merged read schema
       * from these on the driver instead of a schema-merge job over the
-      * footers. None for base files (their schema is `schemaId`'s) and for
-      * delta entries that predate it (read through a listing). */
+      * footers. Always present on delta entries; None on base files (their
+      * schema is `schemaId`'s). */
     eventSchema: Option[StructType] = None)
+
+/** Table metadata in a shape this build does not write: a table from an older
+  * build. Readers carry no per-format fallbacks — like any sink state derived
+  * from the durable changelog, such a table is rebuilt with `replay`. */
+final class TableFormatException(field: String, problem: String) extends IllegalStateException(
+  s"table metadata field '$field' $problem: this build reads only the metadata it writes; " +
+    "rebuild the table with `replay` from its changelog")
 
 /** An immutable table snapshot. Commits are atomic: the snapshot JSON is
   * written to a tmp file (fsynced), then published via hard-link
@@ -80,20 +86,20 @@ final case class Snapshot(
       * and drops them. Empty for pure copy-on-write tables. */
     deltaFiles: Seq[DataFile] = Seq.empty,
     /** SEGMENTED manifest pointers (Iceberg manifest-list analog; see
-      * [[Manifest]]). Non-empty ⇒ the persisted snapshot carries ONLY these
-      * references — `files`/`deltaFiles` above are the HYDRATED view, filled
-      * from the (cached) manifest files at load time and equal to the
-      * concatenation of base / delta manifests' entries in pointer order.
-      * Empty ⇒ legacy inline snapshot (pre-segmentation tables, synthetic
-      * test snapshots, the empty v0). */
+      * [[Manifest]]). The persisted snapshot carries ONLY these references —
+      * `files`/`deltaFiles` above are the HYDRATED view, filled from the
+      * (cached) manifest files at load time and equal to the concatenation
+      * of base / delta manifests' entries in pointer order. Empty exactly
+      * when the table holds no file (the v0 of a new table). */
     manifests: Seq[ManifestRef] = Seq.empty,
     /** Per-bucket event histogram of the FLAT (unlabeled, bucket = -1) delta
       * files — maintained transactionally so partial-fold SCHEDULING reads
       * the whole backlog off metadata, zero scans: appends ADD their batch
       * histogram (computed on the append job's existing Observation pass),
       * folds SUBTRACT the flat counts they consumed, and any commit that
-      * leaves no flat delta file self-heals to Some(empty). None = unknown
-      * (legacy metadata, or numBuckets above [[Snapshot.HistMaxBuckets]]) —
+      * leaves no flat delta file self-heals to Some(empty). None = unknown:
+      * numBuckets above [[Snapshot.HistMaxBuckets]], or an append whose
+      * observation was lost (a batch that skipped it, a rebucket race) —
       * schedulers fall back to a narrow scan. Labeled delta files need no
       * histogram: their manifest entries carry (bucket, rows) directly.
       * Scheduling-only: an absent histogram can never lose data, folds
@@ -102,28 +108,18 @@ final case class Snapshot(
 
   def schema: TableSchema = schemas.find(_.schemaId == schemaId).get
   def schemaById(id: Int): TableSchema = schemas.find(_.schemaId == id).get
-  // segmented snapshots answer row counts from the pointer's manifest stats —
-  // no entry hydration (the /report + metrics path must stay IO-free)
-  def totalRows: Long =
-    if (manifests.nonEmpty)
-      manifests.iterator.filter(_.kind == Manifest.BaseKind).map(_.rows).sum
-    else files.iterator.map(_.rows).sum
-  def deltaRows: Long =
-    if (manifests.nonEmpty)
-      manifests.iterator.filter(_.kind == Manifest.DeltaKind).map(_.rows).sum
-    else deltaFiles.iterator.map(_.rows).sum
+  // row counts answer from the pointer's manifest stats — no entry
+  // hydration (the /report + metrics path must stay IO-free)
+  def totalRows: Long = manifests.iterator.filter(_.kind == Manifest.BaseKind).map(_.rows).sum
+  def deltaRows: Long = manifests.iterator.filter(_.kind == Manifest.DeltaKind).map(_.rows).sum
   def filesOf(buckets: Set[Int]): Seq[DataFile] = files.filter(f => buckets.contains(f.bucket))
 
-  /** The persisted pointer: segmented snapshots serialize manifest REFS, not
-    * file entries — snapshot bytes are O(#manifests), and `/report` serves
-    * position/lineage without inlining a million-file list. */
+  /** The persisted pointer: manifest REFS, never file entries — snapshot
+    * bytes are O(#manifests), and `/report` serves position/lineage without
+    * inlining a million-file list. */
   def toJson: String = {
-    val fileFields =
-      if (manifests.nonEmpty)
-        Seq("manifestList" -> Json.arrOf(manifests.map(_.toJson)))
-      else Seq(
-        "files" -> Json.arrOf(files.sortBy(f => (f.bucket, f.minKey, f.path)).map(Snapshot.fileJson)),
-        "deltaFiles" -> Json.arrOf(deltaFiles.sortBy(f => (f.bucket, f.minKey, f.path)).map(Snapshot.fileJson)))
+    require(manifests.nonEmpty || (files.isEmpty && deltaFiles.isEmpty),
+      "file entries persist only through manifests")
     Json.obj(Seq(
       "version" -> version.toString,
       "parentVersion" -> parentVersion.toString,
@@ -135,42 +131,37 @@ final case class Snapshot(
       "targetFileRows" -> targetFileRows.toString,
       "tsMillis" -> tsMillis.toString) ++
       flatDeltaHist.toSeq.map(h => "flatHist" -> Json.quote(
-        h.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString(","))) ++
-      fileFields ++ Seq(
+        h.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString(","))) ++ Seq(
+      "manifestList" -> Json.arrOf(manifests.map(_.toJson)),
       "fence" -> Json.obj(fence.toSeq.sortBy(_._1).map { case (p, o) => p.toString -> o.toString }: _*),
       "metrics" -> Json.obj(metrics.toSeq.sorted.map { case (k, v) => k -> v.toString }: _*),
       "schemas" -> Json.arrOf(schemas.map(_.toJson))): _*)
   }
 
-  /** Bind `files`/`deltaFiles` to LAZY views over the manifest files (no-op
-    * for inline snapshots): entries are read only when something first plans
-    * over them — a load, a fence-only commit, `/report` and the metrics
-    * surface do ZERO manifest IO (and size/isEmpty gates answer from the
-    * pointer's recorded counts). When entries ARE forced, IO cost is
+  /** Bind `files`/`deltaFiles` to LAZY views over the manifest files:
+    * entries are read only when something first plans over them — a load, a
+    * fence-only commit, `/report` and the metrics surface do ZERO manifest
+    * IO (and size/isEmpty gates answer from the pointer's recorded counts). When entries ARE forced, IO cost is
     * O(manifests not yet in the process cache). Manifest EXISTENCE is
     * checked eagerly (cheap stats): the torn-crash fallback in
     * [[LakeTable.latestSnapshot]] must reject a pointer whose manifests were
     * lost with it at LOAD time, not at first use deep inside a query. */
-  def hydrate(tableDir: String): Snapshot =
-    if (manifests.isEmpty) this
-    else {
-      manifests.foreach { r =>
-        val p = java.nio.file.Paths.get(tableDir).resolve(r.path)
-        if (!java.nio.file.Files.isRegularFile(p))
-          throw new java.io.IOException(s"manifest missing: ${r.path}")
-        // stat-level integrity (no read): a torn/truncated manifest has the
-        // wrong length; same-length corruption still surfaces (as a parse
-        // error) at first entry access
-        if (r.bytes > 0L && java.nio.file.Files.size(p) != r.bytes)
-          throw new java.io.IOException(
-            s"manifest torn: ${r.path} (${java.nio.file.Files.size(p)} bytes, expected ${r.bytes})")
-      }
-      copy(
-        files = new Manifest.LazyEntries(tableDir,
-          manifests.filter(_.kind == Manifest.BaseKind)),
-        deltaFiles = new Manifest.LazyEntries(tableDir,
-          manifests.filter(_.kind == Manifest.DeltaKind)))
+  def hydrate(tableDir: String): Snapshot = {
+    manifests.foreach { r =>
+      val p = java.nio.file.Paths.get(tableDir).resolve(r.path)
+      if (!java.nio.file.Files.isRegularFile(p))
+        throw new java.io.IOException(s"manifest missing: ${r.path}")
+      // stat-level integrity (no read): a torn/truncated manifest has the
+      // wrong length; same-length corruption still surfaces (as a parse
+      // error) at first entry access
+      if (java.nio.file.Files.size(p) != r.bytes)
+        throw new java.io.IOException(
+          s"manifest torn: ${r.path} (${java.nio.file.Files.size(p)} bytes, expected ${r.bytes})")
     }
+    copy(
+      files = new Manifest.LazyEntries(tableDir, manifests.filter(_.kind == Manifest.BaseKind)),
+      deltaFiles = new Manifest.LazyEntries(tableDir, manifests.filter(_.kind == Manifest.DeltaKind)))
+  }
 }
 
 object Snapshot {
@@ -184,34 +175,56 @@ object Snapshot {
     "bytes" -> f.bytes.toString) ++
     f.eventSchema.toSeq.map(es => "eventSchema" -> Json.quote(es.json)): _*)
 
-  private[lake] def fileFromJson(f: com.fasterxml.jackson.databind.JsonNode): DataFile =
-    DataFile(Json.int(f, "bucket"), Json.str(f, "path"), Json.int(f, "schemaId"),
-      Json.long(f, "rows"), Json.long(f, "minKey"), Json.long(f, "maxKey"),
-      bytes = if (f.has("bytes")) Json.long(f, "bytes") else 0L,
-      eventSchema = Option(Json.str(f, "eventSchema"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType]))
+  /** One manifest entry of a manifest of `kind`. Refuses the shapes older
+    * builds wrote: a size that is not positive, an absolute path, a delta
+    * entry without its event schema. */
+  private[lake] def fileFromJson(f: com.fasterxml.jackson.databind.JsonNode, kind: String): DataFile = {
+    val file = DataFile(Json.int(f, "bucket"), relativePath(Json.str(f, "path")),
+      Json.int(f, "schemaId"), Json.long(f, "rows"), Json.long(f, "minKey"), Json.long(f, "maxKey"),
+      positiveBytes(f),
+      Option(Json.str(f, "eventSchema")).map(DataType.fromJson(_).asInstanceOf[StructType]))
+    if (kind == Manifest.DeltaKind && file.eventSchema.isEmpty)
+      throw new TableFormatException("eventSchema", s"is missing from delta entry ${file.path}")
+    file
+  }
 
+  private[lake] def positiveBytes(n: com.fasterxml.jackson.databind.JsonNode): Long = {
+    val b = Json.long(n, "bytes")
+    if (b <= 0L) throw new TableFormatException("bytes", s"is $b, not a recorded size")
+    b
+  }
+
+  private[lake] def relativePath(p: String): String = {
+    if (p == null || java.nio.file.Paths.get(p).isAbsolute)
+      throw new TableFormatException("path", s"is $p, not relative to the table root")
+    p
+  }
+
+  /** Parse a snapshot pointer. Refuses inline file entries (the pointer
+    * shape before segmented manifests) and missing fields; the empty inline
+    * lists an older build wrote for a table without files still read. */
   def fromJson(s: String): Snapshot = {
     val n = Json.parse(s)
+    // an empty or torn file is an IO error (skipped as torn), not a shape
+    if (n == null || !n.isObject) throw new java.io.IOException(s"not a snapshot object: ${s.take(40)}")
+    Seq("files", "deltaFiles").foreach { k =>
+      if (Json.arr(n, k).nonEmpty) throw new TableFormatException(k, "holds inline file entries")
+    }
     Snapshot(
       version = Json.long(n, "version"),
       parentVersion = Json.long(n, "parentVersion"),
       schemaId = Json.int(n, "schemaId"),
       numBuckets = Json.int(n, "numBuckets"),
-      files = Json.arr(n, "files").map(fileFromJson),
-      deltaFiles =
-        if (n.has("deltaFiles")) Json.arr(n, "deltaFiles").map(fileFromJson) else Seq.empty,
-      manifests =
-        if (n.has("manifestList")) Json.arr(n, "manifestList").map(Manifest.refFromJson)
-        else Seq.empty,
+      files = Seq.empty,
+      manifests = Json.arr(n, "manifestList").map(Manifest.refFromJson),
       fence = Json.objFields(n, "fence").map { case (k, v) => k.toInt -> v.asLong() }.toMap,
       metrics = Json.objFields(n, "metrics").map { case (k, v) => k -> v.asLong() }.toMap,
       committedBatchId = Json.long(n, "committedBatchId"),
       schemas = Json.arr(n, "schemas").map(TableSchema.fromJsonNode),
       tsMillis = Json.long(n, "tsMillis"),
-      ddlSeq = if (n.has("ddlSeq")) Json.long(n, "ddlSeq") else -1L,
-      maxSeq = if (n.has("maxSeq")) Json.long(n, "maxSeq") else -1L,
-      targetFileRows = if (n.has("targetFileRows")) Json.long(n, "targetFileRows") else 1L << 20,
+      ddlSeq = Json.long(n, "ddlSeq"),
+      maxSeq = Json.long(n, "maxSeq"),
+      targetFileRows = Json.long(n, "targetFileRows"),
       flatDeltaHist =
         if (!n.has("flatHist")) None
         else Some(Json.str(n, "flatHist").split(',').iterator.filter(_.nonEmpty).map { kv =>

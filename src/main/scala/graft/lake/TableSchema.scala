@@ -1,5 +1,7 @@
 package graft.lake
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 /** ID-based table schema (Iceberg-style semantics, implemented from scratch):
@@ -18,6 +20,14 @@ final case class ColumnDef(id: Int, name: String, dataType: String)
 final case class TableSchema(schemaId: Int, columns: Seq[ColumnDef], lastColumnId: Int) {
   def find(name: String): Option[ColumnDef] = columns.find(_.name == name)
   def findById(id: Int): Option[ColumnDef] = columns.find(_.id == id)
+
+  /** This schema's columns over rows written under `older`: each column
+    * read BY ID (rename-safe) and cast to its current type (widen-safe); a
+    * column `older` lacks reads as null. */
+  def projectFrom(older: TableSchema): Seq[Column] = columns.map { c =>
+    val tp = TableSchema.toSpark(c.dataType)
+    older.findById(c.id).fold(lit(null).cast(tp))(oc => col(oc.name).cast(tp)).as(c.name)
+  }
 
   def sparkType: StructType =
     StructType(columns.map(c => StructField(c.name, TableSchema.toSpark(c.dataType))))

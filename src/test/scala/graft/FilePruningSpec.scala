@@ -112,7 +112,7 @@ class FilePruningSpec extends AnyFunSuite {
     val synthetic = (0 until 100000).map { i =>
       DataFile(bucket = i % 4, path = s"data/synthetic/f$i.parquet",
         schemaId = table.schema.schemaId, rows = 1L,
-        minKey = 10L + 2L * i, maxKey = 11L + 2L * i)
+        minKey = 10L + 2L * i, maxKey = 11L + 2L * i, bytes = 512L)
     }
     table.commit(Set.empty, synthetic, Map.empty, Map.empty)
     val snap = table.snapshot
@@ -121,7 +121,7 @@ class FilePruningSpec extends AnyFunSuite {
 
     val d = delta(Seq(77L), "update", _ => 99999L, id => s"u-$id")
     // receipt: the lookup's plan is O(1) in manifest size — above
-    // ScanManifestMinFiles a SEGMENTED snapshot plans a manifest-file SCAN
+    // ScanManifestMinFiles the snapshot plans a manifest-file SCAN
     // (no 100k-row LocalRelation serialized into the plan at all)
     assert(snap.manifests.nonEmpty, "committed snapshot must be segmented")
     val hits = MergeApply.fileHitsDF(table, snap, d,

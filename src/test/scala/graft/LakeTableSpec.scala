@@ -26,14 +26,111 @@ class LakeTableSpec extends AnyFunSuite {
   }
 
   test("snapshot JSON round-trip") {
+    val dir = TestSpark.tmpDir("graft-lake-json")
     val sch = TableSchema.base.addColumn("stars", "int")
-    val s = Snapshot(3L, 2L, sch.schemaId, 16,
-      Seq(DataFile(1, "data/c1-ab/_bucket=1/part-0.parquet", 0, 10L, -900L, 42L),
-        DataFile(5, "data/c2-cd/_bucket=5/part-1.parquet", 1, 2L, Long.MinValue, Long.MaxValue)),
+    val events = org.apache.spark.sql.types.StructType.fromDDL(
+      "repo STRING, path STRING, op STRING, seq BIGINT, after STRUCT<content: STRING>")
+    val base = Seq(DataFile(1, "data/c1-ab/_bucket=1/part-0.parquet", 0, 10L, -900L, 42L, 700L),
+      DataFile(5, "data/c2-cd/_bucket=5/part-1.parquet", 1, 2L, Long.MinValue, Long.MaxValue, 300L))
+    val deltas = Seq(DataFile(-1, "data/c3-ef/part-0.parquet", 1, 4L, Long.MinValue, Long.MaxValue,
+      200L, Some(events)))
+    val refs = Seq(Manifest.write(dir, base, Manifest.BaseKind),
+      Manifest.write(dir, deltas, Manifest.DeltaKind))
+    val s = Snapshot(3L, 2L, sch.schemaId, 16, Seq.empty,
       Map(0 -> 99L, 3 -> 42L), Map("eventsApplied" -> 7L), 4L,
-      Seq(TableSchema.base, sch), 123456789L, ddlSeq = 17L, targetFileRows = 4096L)
+      Seq(TableSchema.base, sch), 123456789L, ddlSeq = 17L, maxSeq = 18L, targetFileRows = 4096L,
+      manifests = refs, flatDeltaHist = Some(Map(2 -> 4L)))
     val rt = Snapshot.fromJson(s.toJson)
     assert(rt === s)
+    Manifest.clearCacheForTest()
+    val hydrated = rt.hydrate(dir)
+    assert(hydrated.files.toSeq === base && hydrated.deltaFiles.toSeq === deltas)
+    assert(hydrated.totalRows === 12L && hydrated.deltaRows === 4L)
+  }
+
+  /** A table whose newest pointer is `v1`, written over a fresh table's v0
+    * (or, with `v0`, over that pointer too), and whose manifest holds the
+    * `entry` line — the shapes an older build wrote. */
+  private def oldShapeTable(name: String, v1: String => String, entry: String,
+      v0: Option[String => String] = None): String = {
+    import java.nio.file.{Files, Paths}
+    val dir = TestSpark.tmpDir(name)
+    LakeTable.create(spark, dir, numBuckets = 4)
+    val m = Paths.get(dir, "manifests", "mf-old.jsonl")
+    Files.createDirectories(m.getParent)
+    Files.writeString(m, entry + "\n")
+    val ref = s"""{"path":"manifests/mf-old.jsonl","kind":"base","fileCount":"1","rows":"5",""" +
+      s""""minBucket":"0","maxBucket":"0","minKey":"0","maxKey":"9","bytes":"${Files.size(m)}"}"""
+    val tail = """"fence":{},"metrics":{},"schemas":[""" + TableSchema.base.toJson + "]}"
+    val head = (v: Int) => s"""{"version":"$v","parentVersion":"${v - 1}","schemaId":"0",""" +
+      """"numBuckets":"4","committedBatchId":"-1","ddlSeq":"-1","maxSeq":"-1",""" +
+      s""""targetFileRows":"1048576","tsMillis":"0","""
+    val pointer = (v: Int) => Paths.get(dir, "snapshots", f"v$v%012d.json")
+    v0.foreach(f => Files.writeString(pointer(0), head(0) + f(ref) + tail))
+    Files.writeString(pointer(1), head(1) + v1(ref) + tail)
+    dir
+  }
+
+  private val goodEntry =
+    """{"bucket":"0","path":"data/c1/f.parquet","schemaId":"0","rows":"5","minKey":"0","maxKey":"9","bytes":"64"}"""
+
+  test("metadata in an older build's shape is refused when parsed, naming the field") {
+    def refused(field: String)(body: => Any): Unit = {
+      val e = intercept[TableFormatException](body)
+      assert(e.getMessage.contains(s"'$field'") && e.getMessage.contains("rebuild the table with `replay`"),
+        e.getMessage)
+    }
+    val list = (r: String) => s""""manifestList":[$r],"""
+    // well-formed: loads, and its entry reads
+    val ok = oldShapeTable("graft-lake-fmt-ok", list, goodEntry)
+    assert(LakeTable.load(spark, ok).snapshot.files.map(_.path) === Seq("data/c1/f.parquet"))
+    // a pointer with inline entries (before segmented manifests): refused at
+    // load, not skipped as torn, not "not a LakeTable", and not v0 instead
+    refused("files")(LakeTable.load(spark,
+      oldShapeTable("graft-lake-fmt-inline", _ => s""""files":[$goodEntry],"deltaFiles":[],""", goodEntry)))
+    refused("deltaFiles")(LakeTable.load(spark, oldShapeTable("graft-lake-fmt-inline-d",
+      _ => s""""files":[],"deltaFiles":[$goodEntry],""", goodEntry)))
+    // a pointer whose every version is inline: still the refusal
+    val allInline = (_: String) => s""""files":[$goodEntry],"deltaFiles":[],"""
+    refused("files")(LakeTable.load(spark,
+      oldShapeTable("graft-lake-fmt-inline-all", allInline, goodEntry, v0 = Some(allInline))))
+    refused("files")(LakeTable.exists(
+      oldShapeTable("graft-lake-fmt-inline-ex", allInline, goodEntry, v0 = Some(allInline))))
+    // a ref without a recorded size
+    refused("bytes")(LakeTable.load(spark, oldShapeTable("graft-lake-fmt-refbytes",
+      r => list(r.replaceAll(""","bytes":"\d+"""", "")), goodEntry)))
+    refused("bytes")(LakeTable.load(spark, oldShapeTable("graft-lake-fmt-refzero",
+      r => list(r.replaceAll(""""bytes":"\d+"""", """"bytes":"0"""")), goodEntry)))
+    // entries: refused at the first read of the manifest
+    def firstRead(entry: String): Any = {
+      Manifest.clearCacheForTest()
+      LakeTable.load(spark, oldShapeTable("graft-lake-fmt-entry", list, entry))
+        .snapshot.files.toList
+    }
+    refused("bytes")(firstRead(goodEntry.replace(""","bytes":"64"""", "")))
+    refused("bytes")(firstRead(goodEntry.replace(""""bytes":"64"""", """"bytes":"0"""")))
+    refused("path")(firstRead(goodEntry.replace("data/c1/f.parquet", "/abs/data/c1/f.parquet")))
+    // a delta entry without its event schema
+    val deltaDir = oldShapeTable("graft-lake-fmt-noschema",
+      r => list(r.replace(""""kind":"base"""", """"kind":"delta"""")), goodEntry)
+    Manifest.clearCacheForTest()
+    refused("eventSchema")(LakeTable.load(spark, deltaDir).snapshot.deltaFiles.toList)
+  }
+
+  test("a table that starts with the older inline-empty v0 loads at every version") {
+    val emptyInline = (_: String) => """"files":[],"deltaFiles":[],"""
+    val dir = oldShapeTable("graft-lake-fmt-v0", r => s""""manifestList":[$r],""", goodEntry,
+      v0 = Some(emptyInline))
+    val t = LakeTable.load(spark, dir)
+    assert(t.snapshot.version === 1L && t.snapshot.files.size === 1)
+    assert(t.snapshotAt(0L).files.isEmpty && t.snapshotAt(0L).manifests.isEmpty)
+    assert(t.snapshotAt(1L).files.map(_.path) === Seq("data/c1/f.parquet"))
+    // this build's own v0 and an emptied table write an empty manifest list
+    val fresh = LakeTable.create(spark, TestSpark.tmpDir("graft-lake-fmt-v0new"), numBuckets = 4)
+    assert(fresh.snapshot.toJson.contains(""""manifestList":[]""") && !fresh.snapshot.toJson.contains("files"))
+    fresh.commit(Set.empty, Seq(DataFile(0, "data/c1/f.parquet", 0, 5L, 0L, 9L, 64L)), Map.empty, Map.empty)
+    val emptied = fresh.commit(Set("data/c1/f.parquet"), Seq.empty, Map.empty, Map.empty)
+    assert(emptied.manifests.isEmpty && LakeTable.load(spark, fresh.dir).snapshot.files.isEmpty)
   }
 
   test("atomic commit: version race loses with CommitConflictException") {
@@ -100,8 +197,10 @@ class LakeTableSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "snapshots", "v000000000002.json"),
       """{"version":"2","parentVer""")
+    // and one left empty: torn too, not a metadata shape to refuse
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "snapshots", "v000000000003.json"), "")
     val loaded = LakeTable.load(spark, dir)
-    assert(loaded.snapshot.version === 1L, "must skip the torn newest snapshot")
+    assert(loaded.snapshot.version === 1L, "must skip the torn newest snapshots")
     assert(loaded.snapshot.fence === Map(0 -> 7L))
     // and the next commit must still be able to advance (v2 exists but is junk
     // — the CAS collides; the writer surfaces the conflict rather than
@@ -143,7 +242,7 @@ class LakeTableSpec extends AnyFunSuite {
     def mkFiles(commit: Int, n: Int): Seq[DataFile] = (0 until n).map { i =>
       DataFile(bucket = i % 16, path = s"data/c$commit/_bucket=${i % 16}/f$i.parquet",
         schemaId = 0, rows = 10L, minKey = commit * 1000000L + 2L * i,
-        maxKey = commit * 1000000L + 2L * i + 1L)
+        maxKey = commit * 1000000L + 2L * i + 1L, bytes = 1024L)
     }
     // accrete 100k files over 20 commits (the steady-state shape: each commit
     // adds its own manifest; untouched manifests are reused by reference)
@@ -187,7 +286,7 @@ class LakeTableSpec extends AnyFunSuite {
     def mkFiles(commit: Int, n: Int): Seq[DataFile] = (0 until n).map { i =>
       DataFile(bucket = i % 16, path = s"data/c$commit/_bucket=${i % 16}/f$i.parquet",
         schemaId = 0, rows = 10L, minKey = commit * 1000000L + 2L * i,
-        maxKey = commit * 1000000L + 2L * i + 1L)
+        maxKey = commit * 1000000L + 2L * i + 1L, bytes = 1024L)
     }
     (1 to 20).foreach(c => t.commit(Set.empty, mkFiles(c, 5000), Map.empty, Map.empty))
     // cold process: drop the manifest cache so IO counting is honest
@@ -213,7 +312,7 @@ class LakeTableSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     val dir = TestSpark.tmpDir("graft-lake-mfgc")
     val t = LakeTable.create(spark, dir, numBuckets = 4)
-    def mkFiles(c: Int) = Seq(DataFile(0, s"data/c$c/f.parquet", 0, 5L, c * 100L, c * 100L + 9L))
+    def mkFiles(c: Int) = Seq(DataFile(0, s"data/c$c/f.parquet", 0, 5L, c * 100L, c * 100L + 9L, 64L))
     t.commit(Set.empty, mkFiles(1), Map.empty, Map.empty)                  // v1: manifest A
     t.commit(Set(s"data/c1/f.parquet"), mkFiles(2), Map.empty, Map.empty)  // v2: A rewritten→B
     t.commit(Set.empty, mkFiles(3), Map.empty, Map.empty)                  // v3: B reused + C
@@ -241,7 +340,7 @@ class LakeTableSpec extends AnyFunSuite {
     // disk corruption, and the reader must fall back, not brick the table
     val dir = TestSpark.tmpDir("graft-lake-tornmf")
     val t = LakeTable.create(spark, dir, numBuckets = 4)
-    def mkFiles(c: Int) = Seq(DataFile(0, s"data/c$c/f.parquet", 0, 5L, c * 100L, c * 100L + 9L))
+    def mkFiles(c: Int) = Seq(DataFile(0, s"data/c$c/f.parquet", 0, 5L, c * 100L, c * 100L + 9L, 64L))
     t.commit(Set.empty, mkFiles(1), Map.empty, Map.empty) // v1: manifest A
     t.commit(Set.empty, mkFiles(2), Map.empty, Map.empty) // v2: A reused + manifest B
     val v2 = t.snapshot

@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.{ChangelogGen, GenConfig, Oracle}
 import graft.ingest.{ChainApply, Ingest, MergeApply, Mor}
-import graft.lake.{ChangeFeed, DataFile, LakeTable, Maintenance, ManifestFileIndex, Snapshot}
+import graft.lake.{ChangeFeed, LakeTable, Maintenance, ManifestFileIndex, MorRead, Snapshot}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -90,11 +90,6 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(scanned.contains(true), s"$what: no keyed read scanned base and delta files")
   }
 
-  /** `s` as a snapshot written before delta schemas were recorded. */
-  private def legacyDeltas(s: Snapshot, keep: DataFile => Boolean = _ => false): Snapshot =
-    s.copy(deltaFiles = s.deltaFiles.map(f => if (keep(f)) f else f.copy(eventSchema = None)),
-      manifests = Seq.empty)
-
   /** Pruned keyed reads of live, tombstoned and absent keys equal the
     * unpruned read filtered on the driver. Returns the most files one keyed
     * read opened. */
@@ -137,7 +132,7 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(filesRead(byRepo) === table.snapshot.files.size)
   }
 
-  test("pruning never changes an answer: two schema groups, compaction, rebucket, legacy sizes") {
+  test("pruning never changes an answer: two schema groups, compaction, rebucket") {
     val rnd = new Random(4242L)
     val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mscan-prop"), numBuckets = 8,
       targetFileRows = 40L)
@@ -154,10 +149,6 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(evolved.files.size > 20)
     assert(assertPruningExact(table, evolved, rnd, "two schema groups") <= 2L,
       "a keyed read must open only the files whose range can hold the key")
-
-    // legacy manifest entries without recorded sizes: the index stats them
-    val legacy = evolved.copy(files = evolved.files.map(_.copy(bytes = 0L)), manifests = Seq.empty)
-    assertPruningExact(table, legacy, rnd, "zeroed sizes")
 
     Maintenance.compact(table, force = true)
     assertPruningExact(table, table.snapshot, rnd, "after compaction")
@@ -204,9 +195,6 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .find(k => !want.exists(w => (w._1, w._2) == k)).get
     assertKeyedMorReads(table, s, Seq(key, deleted, absent) ++ all.take(3).map(r =>
       (r.getAs[String]("repo"), r.getAs[String]("path"))), "MOR fixture")
-    // entries written before delta schemas were recorded read through a listing
-    assert(rowsOf(table.read(legacyDeltas(s)).collect()) === rowsOf(all))
-    assert(shas(keyed(table.read(legacyDeltas(s)), key).collect()) === shas(one))
 
     val (feedJobs, feed) = TestSpark.jobsDuring(ChangeFeed.changesBetween(table, v1, s.version).collect())
     val before = Oracle.replay(events.filter(_.seq <= 2000L)).rows
@@ -255,28 +243,46 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"fixture: delta files recording three image structs, got $images")
     assert(s.deltaFiles.exists(_.bucket >= 0) && s.deltaFiles.exists(_.bucket < 0))
 
+    // the one delta read equals Spark's own footer merge of the same files,
+    // field by field of the merged image
+    val footer = spark.read.option("mergeSchema", "true")
+      .parquet(s.deltaFiles.map(f => table.resolve(f.path)): _*)
+    val recorded = MorRead.deltaEvents(table, s.deltaFiles, s.numBuckets)
+    def imageTypes(df: DataFrame): Map[String, Any] =
+      df.schema("after").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+        .fields.map(f => f.name -> f.dataType).toMap
+    assert(imageTypes(recorded) === imageTypes(footer))
+    def flatEvents(df: DataFrame): Seq[Seq[Any]] = rowsOf(df.select(
+      Seq(col("repo"), col("path"), col("op"), col("seq")) ++
+        imageTypes(footer).keys.toSeq.sorted.map(f => col(s"after.$f").as(s"after_$f")): _*).collect())
+    assert(flatEvents(recorded) === flatEvents(footer), "recorded-schema read vs the footer merge")
+
     val all = table.read(s).collect()
-    Seq(legacyDeltas(s), legacyDeltas(s, _.bucket < 0)).foreach { legacy =>
-      assert(rowsOf(table.read(legacy).collect()) === rowsOf(all), "full read vs the listing read")
-    }
-    val byKey = all.map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
-    def row(id: Long): Option[Row] = byKey.get(keyOf(id))
+    def byKey(rows: Array[Row]): Map[(String, String), Row] =
+      rows.map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
+    val allByKey = byKey(all)
+    def row(id: Long): Option[Row] = allByKey.get(keyOf(id))
     assert(row(3L).map(r => (r.getAs[String]("content"), r.getAs[String]("language"),
       r.getAs[Int]("stars"))) === Some(("v4-3", "scala", 40)))
     assert(row(7L).map(r => (r.getAs[String]("content"), r.getAs[Int]("stars"))) === Some(("v3-7", 30)))
-    assert(row(5L).map(r => (r.getAs[String]("content"), r.getAs[Any]("stars"))) === Some(("v2-5", null)))
+    // key 5 was updated under `lang`, before the rename: its value survives
+    // a backlog that also holds `language` events
+    assert(row(5L).map(r => (r.getAs[String]("content"), r.getAs[String]("language"),
+      r.getAs[Any]("stars"))) === Some(("v2-5", "scala", null)))
     assert(row(13L).isEmpty && row(605L).map(_.getAs[String]("content")) === Some("v6-605"))
 
     val keys = Seq(3L, 5L, 7L, 13L, 14L, 605L, 5000L).map(keyOf)
     assertKeyedMorReads(table, s, keys, "schema evolution")
-    keys.foreach { k =>
-      assert(rowsOf(keyed(table.read(legacyDeltas(s)), k).collect()) ===
-        rowsOf(keyed(table.read(s), k).collect()), s"keyed read of $k vs the listing read")
-    }
+
+    // the final fold writes what the read resolved, key 5's value included
+    Mor.fold(table)
+    val folded = byKey(table.read().collect())
+    assert(folded.get(keyOf(5L)).map(r => (r.getAs[String]("content"), r.getAs[String]("language"))) ===
+      Some(("v2-5", "scala")))
+    assert(rowsOf(folded.values.toArray) === rowsOf(all), "the fold changes no row")
 
     // time travel across a rebucket: the old snapshot's labeled deltas prune
     // under its own bucket count, not the table's
-    Mor.fold(table)
     Maintenance.rebucket(table, 16)
     assert(rowsOf(table.read(s).collect()) === rowsOf(all), "pre-rebucket snapshot")
     assertKeyedMorReads(table, s, keys, "pre-rebucket snapshot")

@@ -478,6 +478,38 @@ class MorSpec extends AnyFunSuite {
       "no field arrives-before-its-DDL may be lost across a fold")
   }
 
+  test("a rename inside a MOR backlog keeps the old name's values, read and folded") {
+    // the backlog holds `lang` events (before rename_column lang → language)
+    // and `language` events (after it): the merged image carries both names,
+    // and the column reads whichever one its event was written under
+    import spark.implicits._
+    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mor-rename"), numBuckets = 8)
+    def ev(ids: Seq[Int], op: String, seq: Long, langCol: String, lang: String, tag: String) =
+      ids.toDF("id").select(
+        lit("r").as("repo"), concat(lit("f"), col("id")).as("path"), lit(op).as("op"),
+        lit(seq).as("seq"),
+        struct(lit("r").as("repo"), concat(lit("f"), col("id")).as("path"), lit("c0").as("commit"),
+          lit(lang).as(langCol), concat(lit(s"$tag-"), col("id")).as("content")).as("after"))
+    MergeApply.merge(table, ev(0 until 100, "insert", 1L, "lang", "L1", "v1"), Map.empty)
+    MergeApply.appendDelta(table, ev(Seq(5, 6), "update", 2L, "lang", "L2", "v2"), Map.empty)
+    table.evolveSchema(_.renameColumn("lang", "language"))
+    MergeApply.appendDelta(table, ev(Seq(7), "update", 3L, "language", "L3", "v3"), Map.empty)
+    val want = Map("f5" -> ("L2", "v2-5"), "f6" -> ("L2", "v2-6"), "f7" -> ("L3", "v3-7"),
+      "f8" -> ("L1", "v1-8"))
+    def check(what: String): Unit = {
+      val rows = table.read().collect().map(r =>
+        r.getAs[String]("path") -> (r.getAs[String]("language"), r.getAs[String]("content"))).toMap
+      assert(rows.size === 100, what)
+      want.foreach { case (k, v) => assert(rows.get(k) === Some(v), s"$what: $k") }
+    }
+    check("MOR read")
+    Mor.fold(table)
+    assert(table.refresh().deltaFiles.isEmpty)
+    assert(table.snapshot.metrics.getOrElse("pendingHeldBack", 0L) === 0L,
+      "no event may be parked for a field the schema resolves by id")
+    check("after the fold")
+  }
+
   test("MOR resolution preserves uncarried columns and absorbs stale replays after a delete") {
     val tableDir = TestSpark.tmpDir("graft-mor2-table")
     val table = LakeTable.create(spark, tableDir, numBuckets = 4)

@@ -13,9 +13,18 @@ side is this checkout as it stands. Each pair runs
 once on each side, alternating which side goes first, one run at a time.
 For every workload and end-to-end metric of BENCHMARK.json it prints each
 side's median and quartiles, how many pairs the change won (ties count for
-neither side), the parent's interquartile range, and whether a gain would be
-claimable: at least nine tenths of the pairs won AND the medians apart by more
-than the parent's IQR. Every run's JSON result is appended to DIR/runs.jsonl.
+neither side), the parent's interquartile range, whether a gain would be
+claimable (at least nine tenths of the pairs won AND the medians apart by more
+than the parent's IQR), and a no-regression verdict against the metric's
+`bound` in BENCHMARK.json:
+
+    ok          neither of the cases below
+    WORSE       the change's median is worse than the parent's by more than
+                the bound (a fraction of the parent's median)
+    unresolved  the parent's IQR is wider than the bound (as a fraction of its
+                median) and not every change run beats every parent run
+
+Every run's JSON result is appended to DIR/runs.jsonl.
 The script never modifies cdcbench/ or BENCHMARK.json.
 """
 import argparse
@@ -72,13 +81,26 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(par: list, chg: list, lower: bool, bound: float) -> str:
+    """No-regression verdict of one metric (see the module docstring)."""
+    pm, cm = statistics.median(par), statistics.median(chg)
+    worse_by = (cm - pm) / pm if lower else (pm - cm) / pm
+    if worse_by > bound:
+        return "WORSE"
+    p1, p3 = quartiles(par)
+    all_beat = max(chg) < min(par) if lower else min(chg) > max(par)
+    if (p3 - p1) / pm > bound and not all_beat:
+        return "unresolved"
+    return "ok"
+
+
 def report(workload: str, pairs: list, metrics: list) -> None:
     print(f"\n== {workload}: {len(pairs)} pairs")
     bad = [(i, s) for i, pr in enumerate(pairs) for s in ("parent", "change")
            if not pr[s].get("correct") or pr[s].get("failed", 0) != 0]
     print("   every run correct with 0 failed" if not bad else f"   INCORRECT/FAILED runs: {bad}")
     print(f"   {'metric':<16}{'parent median [q1, q3]':>32}{'change median [q1, q3]':>32}"
-          f"{'wins':>7}{'parent IQR':>12}  claimable")
+          f"{'wins':>7}{'parent IQR':>12}  {'verdict':<12}claimable")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         both = [(pr["parent"]["metrics"][name]["value"], pr["change"]["metrics"][name]["value"])
@@ -94,9 +116,10 @@ def report(workload: str, pairs: list, metrics: list) -> None:
         iqr = p3 - p1
         gain = (pm - cm) if lower else (cm - pm)
         claim = wins * 10 >= 9 * len(both) and gain > iqr
+        v = verdict(par, chg, lower, m["bound"])
         print(f"   {name:<16}{f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':>32}"
               f"{f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':>32}{f'{wins}/{len(both)}':>7}"
-              f"{iqr:>12.4g}  {'yes' if claim else 'no'} ({(cm / pm - 1) * 100:+.1f} %)")
+              f"{iqr:>12.4g}  {v:<12}{'yes' if claim else 'no'} ({(cm / pm - 1) * 100:+.1f} %)")
 
 
 def main():
