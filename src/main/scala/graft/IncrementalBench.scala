@@ -167,17 +167,17 @@ object IncrementalBench {
     // Bucket-pruned MOR read (round 5): with the backlog confined to one
     // bucket, resolution joins ONLY that bucket's base files — the other
     // 63/64 of the table passes through as a plain scan. Control: the same
-    // snapshot with the histogram knocked out (pruning impossible). Both
-    // forced to the full-outer (exchange) shape — the shape a large backlog
-    // takes, where pruning is the O(touched)-vs-O(table) difference.
+    // snapshot resolved against every base file (no pruning). Both forced to
+    // the full-outer (exchange) shape — the shape a large backlog takes,
+    // where pruning is the O(touched)-vs-O(table) difference.
     val ps = pt.refresh()
     def timedCount(df: org.apache.spark.sql.DataFrame): Double = {
       val t = System.nanoTime(); df.count(); (System.nanoTime() - t) / 1e9
     }
     val prunedReadSec = timedCount(
       graft.lake.MorRead.resolve(pt, ps, broadcastMaxBytes = 0L))
-    val blindReadSec = timedCount(
-      graft.lake.MorRead.resolve(pt, ps.copy(flatDeltaHist = None), broadcastMaxBytes = 0L))
+    val blindReadSec = timedCount(graft.lake.MorRead.resolveOn(pt, ps, ps.files, ps.deltaFiles,
+      broadcastMaxBytes = 0L).filter(!col(LakeTable.DeletedCol)))
     println(f"[incr] bucket-pruned MOR read (1-bucket backlog, full-outer shape): " +
       f"pruned $prunedReadSec%5.2f s vs blind $blindReadSec%5.2f s " +
       f"(ratio ${prunedReadSec / blindReadSec}%.3f)")
@@ -195,18 +195,17 @@ object IncrementalBench {
         minEventsPerBucket = math.max(1L, oneBucketKeys.size / 2L))
       require(rp.bucketsFolded == 1, s"expected a 1-bucket partial fold, got ${rp.bucketsFolded}")
     }
-    // Bucket-localized delta log (round 5): a big SCATTERED backlog compacts
-    // into per-bucket labeled files; a later dense 1-bucket burst then folds
-    // by reading ONLY its own labeled file + the fresh flat appends — cost
-    // must not scale with the total labeled backlog sitting in other buckets.
+    // Bucket-localized delta log: a big SCATTERED backlog is appended as
+    // bucket-labeled files; a later dense 1-bucket burst then folds by
+    // reading ONLY its bucket's files — cost must not scale with the total
+    // labeled backlog sitting in other buckets.
     val rnd4 = new scala.util.Random(13)
     val labeledBacklog = Iterator.continually(math.abs(rnd4.nextLong()) % nBase)
       .distinct.take(keysPerBatch * nBatches).toSeq
     MergeApply.appendDelta(pt, delta(labeledBacklog, "update", nBase * 55), Map.empty)
-    graft.ingest.Mor.fold(pt, minEventsPerBucket = Long.MaxValue / 2) // compaction tick → labels
     val ls = pt.refresh()
-    require(ls.deltaFiles.nonEmpty && ls.deltaFiles.forall(_.bucket >= 0),
-      "compaction tick must leave only labeled per-bucket delta files")
+    require(ls.deltaFiles.map(_.bucket).distinct.size > 1,
+      "a scattered backlog must land in the delta files of several buckets")
     MergeApply.appendDelta(pt, delta(oneBucketKeys, "update", nBase * 58), Map.empty)
     val (labeledOneBucketFoldSec, labeledOneBucketRows) = rewrittenBy {
       val rp = graft.ingest.Mor.fold(pt,

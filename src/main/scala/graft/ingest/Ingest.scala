@@ -41,8 +41,8 @@ object Ingest {
   final case class IngestConfig(
       filter: FilterChain = FilterChain.passAll,
       /** Merge-on-read mode (Hudi-MOR / Iceberg-v2 analog): row batches are
-        * APPENDED as bucketed delta event files (O(batch) write cost) instead
-        * of copy-on-write merged (O(touched files)); reads resolve deltas by
+        * APPENDED as bucket-labeled delta event files (O(batch) write cost)
+        * instead of copy-on-write merged (O(touched files)); reads resolve deltas by
         * LWW at query time and `Mor.fold` compacts them back into base files.
         * The streaming-throughput mode for high-frequency micro-batches whose
         * keys scatter across the whole table. Exactly-once, fences, DDL
@@ -65,16 +65,6 @@ object Ingest {
         * compacts the rest of the delta log; 0 keeps cadence folds
         * unconditional. */
       morFoldMinEventsPerBucket: Long = 0L,
-      /** Maintain the transactional per-bucket flat-delta histogram on each
-        * MOR append (numBuckets conditional sums riding the write job's
-        * Observation). The histogram buys zero-job fold scheduling and
-        * bucket-pruned reads on a LIVE tail; a bounded catch-up replay
-        * (AvailableNow) schedules no cadence folds and ends in a full fold
-        * that self-heals the histogram to exact-empty, so streaming entry
-        * points disable it there (measured ~15% of bulk-stream wall at 64
-        * buckets). Off ⇒ commits poison the histogram (Add(None)) and
-        * schedulers fall back to one narrow scan. */
-      morBatchHistogram: Boolean = true,
       /** Whether the source guarantees per-partition offset-ordered delivery
         * across micro-batches (a live binlog/Kafka tail, or a replay of a
         * fully-applied log). Only then may the offset fence FILTER rows —
@@ -282,7 +272,7 @@ object Ingest {
       PartitionLongAgg.partitionSum(col("partition"), lit(1L)).as("perPartRows"))
     val imageFields = ImageBinding.imageFields(batch)
     val (stats, write) =
-      if (cfg.morMode) morWriter(table, batch, batchId, cfg, statAggs, isLiveRow)
+      if (cfg.morMode) morWriter(table, batch, batchId, statAggs, isLiveRow)
       else cowWriter(table, snap0, batch, batchId, statAggs, isLiveRow, imageFields, commitIdle)
 
     if (!commitIdle && stats.unfenced == 0)
@@ -435,17 +425,17 @@ object Ingest {
 
   /** Merge-on-read: the delta write IS the stats job — the stats aggregate
     * rides its source scan as an Observation, so a micro-batch costs one
-    * distributed job (scan + dedup shuffle + flat parquet write).
+    * distributed job (scan + dedup shuffle + bucket-labeled parquet write).
     * Its segment step is the commit of the already-written delta files.
     * `eventsApplied`/`tombstonesWritten` count live events BEFORE the
     * per-batch dedup (the delta files hold what survives it). */
-  private def morWriter(table: LakeTable, batch: DataFrame, batchId: Long, cfg: IngestConfig,
+  private def morWriter(table: LakeTable, batch: DataFrame, batchId: Long,
       statAggs: Seq[Column], isLiveRow: Column): (BatchStats, SegmentWriter) = {
     val obs = Observation(s"mor-${java.util.UUID.randomUUID()}")
     // per-batch LWW dedup: one shuffle that shrinks the written delta by the
     // batch's key-duplication ratio (reads and folds dedup across files anyway)
     val live = batch.observe(obs, statAggs.head, statAggs.tail: _*).filter(isLiveRow)
-    val staged = MergeApply.writeDelta(table, Dedup.lastWriterPerKey(live), cfg.morBatchHistogram)
+    val staged = MergeApply.writeDelta(table, Dedup.lastWriterPerKey(live))
     // When the payload is EMPTY (all rows fenced/filtered) AQE's empty-
     // relation propagation can drop the CollectMetrics node and the
     // observation comes back empty, or never arrives (timeout): those

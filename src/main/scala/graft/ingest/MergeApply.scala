@@ -1,7 +1,7 @@
 package graft.ingest
 
-import graft.lake.{CommitConflictException, DataFile, FlatHistOp, ImageBinding, LakeTable,
-  MorRead, Snapshot, TableSchema}
+import graft.lake.{CommitConflictException, DataFile, ImageBinding, LakeTable, MorRead,
+  Snapshot, TableSchema}
 import graft.model.Ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -258,14 +258,6 @@ object MergeApply {
       /** extra manifest paths dropped in the SAME commit (Mor.fold removes
         * the folded delta files atomically with the rewritten base). */
       alsoReplacePaths: Set[String] = Set.empty,
-      /** delta EVENT files added in the SAME commit (a PARTIAL Mor.fold
-        * drops every old delta file and re-adds the unfolded remainder as a
-        * compacted delta — one atomic swap, no window where deferred events
-        * are unreadable). */
-      alsoNewDeltaFiles: Seq[DataFile] = Seq.empty,
-      /** scheduling-histogram update for this commit (folds pass Sub of the
-        * flat counts they consumed). */
-      flatHistOp: FlatHistOp = FlatHistOp.Keep,
       commitIdle: Boolean = true): MergeResult = {
     // Optimistic-concurrency retry (Iceberg semantics): losing a snapshot
     // version race to a concurrent committer (compaction, rebucket, another
@@ -276,18 +268,19 @@ object MergeApply {
     var sel = selection
     LakeTable.withCommitRetry(table) {
       try mergeOnce(table, delta, fenceDelta, batchId, extraMetrics, sel,
-        alsoReplacePaths, alsoNewDeltaFiles, flatHistOp, commitIdle)
+        alsoReplacePaths, commitIdle)
       finally sel = None
     }
   }
 
-  /** Merge-on-read WRITE half: append the batch as flat delta EVENT files —
-    * no base read, no file selection, no rewrite. Write cost is O(batch)
-    * regardless of how many base files the keys touch (the COW path
-    * rewrites every hit file; a full-key-range micro-batch makes that
-    * O(table) per batch — the reason streaming throughput trailed batch
-    * replay by ~7×). Reads resolve via [[graft.lake.MorRead]]; `Mor.fold`
-    * (compaction) turns the accumulated deltas into one ordinary COW merge.
+  /** Merge-on-read WRITE half: append the batch as delta EVENT files, one
+    * per bucket a write task holds — no base read, no file selection, no
+    * rewrite. Write cost is O(batch) regardless of how many base files the
+    * keys touch (the COW path rewrites every hit file; a full-key-range
+    * micro-batch makes that O(table) per batch — the reason streaming
+    * throughput trailed batch replay by ~7×). Reads resolve via
+    * [[graft.lake.MorRead]]; `Mor.fold` (compaction) turns the accumulated
+    * deltas into one ordinary COW merge.
     *
     * `delta` may carry several events per key: unlike [[merge]], the
     * one-row-per-key contract is NOT required here, because read resolution
@@ -313,83 +306,66 @@ object MergeApply {
       filesRewritten = 0, filesAdded = staged.files.size)
   }
 
-  /** Delta files written by [[writeDelta]], not yet committed: their events'
-    * delete count and max seq, and the per-bucket event histogram counted
-    * under `numBuckets` (None = unknown). */
-  final case class StagedDelta(files: Seq[DataFile], deletes: Long, maxSeq: Long,
-      hist: Option[Map[Int, Long]], numBuckets: Int) {
+  /** Delta files written by [[writeDelta]] under `numBuckets`, not yet
+    * committed, with their events' delete count and max seq. */
+  final case class StagedDelta(files: Seq[DataFile], deletes: Long, maxSeq: Long, numBuckets: Int) {
     def events: Long = files.iterator.map(_.rows).sum
   }
 
-  /** Write `delta` as flat delta files (`LakeTable.writeFiles` without
-    * layout columns). Delta EVENT files are read wholesale (never pruned by
-    * bucket or key: MorRead re-groups by key, fold re-derives layout), so
-    * the append does NO layout work at all: no repartition-by-bucket (one
-    * whole extra exchange per micro-batch), no bucket dirs (≈ numBuckets
-    * files + footer opens per batch), no sort — the rows are written as-is
-    * in their incoming partitioning (AQE has already coalesced small batches
-    * to a handful of partitions ⇒ a handful of files).
+  /** Write `delta` as bucket-labeled delta files: `LakeTable.bucketRows`
+    * adds `_bucket` and `LakeTable.writeFiles` writes each task's rows of a
+    * bucket into that bucket's dir, so every file's manifest entry names the
+    * bucket of every row it holds. No routing: the append adds no exchange,
+    * so a write task emits at most one file per bucket it holds (AQE has
+    * already coalesced a small batch to a handful of tasks). The labels are
+    * what keyed reads, bucket-pruned reads, partial folds and the change
+    * feed prune by.
     *
-    * The per-bucket histogram (`histogram`, up to [[Snapshot.HistMaxBuckets]])
-    * rides the write as conditional sums in one Observation and lands in the
-    * snapshot (Snapshot.flatDeltaHist), so fold scheduling never scans the
-    * flat backlog. */
-  private[ingest] def writeDelta(table: LakeTable, delta: DataFrame,
-      histogram: Boolean = true): StagedDelta = {
+    * The delete count and max seq ride the write as one Observation; a lost
+    * (AQE-pruned) or timed-out observation is recounted from the written
+    * files rather than read as zero. */
+  private[ingest] def writeDelta(table: LakeTable, delta: DataFrame): StagedDelta = {
     val snap = table.snapshot
-    val histN =
-      if (histogram && snap.numBuckets <= Snapshot.HistMaxBuckets) snap.numBuckets else 0
-    val countAggs = Seq(
+    val counts = Seq(
       sum(when(col("op") === Ops.Delete, 1L).otherwise(0L)).as("deletes"),
       max(col("seq")).as("maxSeq"))
-    val aggs = countAggs ++ (0 until histN)
-      .map(i => sum(when(col("_hb") === i, 1L).otherwise(0L)).as(s"_h$i"))
     val obs = Observation(s"mor-append-${java.util.UUID.randomUUID()}")
-    val files = table.writeFiles(
-      delta.withColumn("_hb", table.bucketExpr(col("repo"), col("path")))
-        .observe(obs, aggs.head, aggs.tail: _*)
-        .drop("_hb"),
-      base = false)
-    if (files.isEmpty) return StagedDelta(files, 0L, -1L, None, snap.numBuckets)
-    // A lost (AQE-pruned) or timed-out observation must not read as zero
-    // counts — an exact-but-wrong histogram that foldPartial would trust and
-    // pruned MOR reads would trip on. Recount from the written files instead
-    // and record the histogram as unknown (scan fallback).
+    val files = table.writeFiles(table.bucketRows(delta.observe(obs, counts.head, counts.tail: _*),
+      base = false, numBuckets = snap.numBuckets), base = false)
+    if (files.isEmpty) return StagedDelta(files, 0L, -1L, snap.numBuckets)
     val om = try observedMetrics(obs)
       catch { case _: java.util.concurrent.TimeoutException => Map.empty[String, Any] }
     val m =
       if (om.nonEmpty) om
       else {
         val r = MorRead.deltaEvents(table, files, snap.numBuckets)
-          .agg(countAggs.head, countAggs.tail: _*).collect()(0)
+          .agg(counts.head, counts.tail: _*).collect()(0)
         r.getValuesMap[Any](r.schema.fieldNames.toSeq)
       }
-    val hist =
-      if (histN == 0 || om.isEmpty) None
-      else Some((0 until histN).iterator.map(i => i -> longMetric(om, s"_h$i"))
-        .filter(_._2 > 0L).toMap)
-    StagedDelta(files, longMetric(m, "deletes"), longMetric(m, "maxSeq", -1L), hist,
-      snap.numBuckets)
+    StagedDelta(files, longMetric(m, "deletes"), longMetric(m, "maxSeq", -1L), snap.numBuckets)
   }
 
-  /** Commit staged delta files with the batch's fence. Delta files carry
-    * no bucket layout (`bucket = -1`), so a rebucket racing the append leaves
-    * them valid and a plain optimistic retry suffices; only the histogram,
-    * counted under the old layout, is wrong then — it is recorded as
-    * unknown. */
+  /** Commit staged delta files with the batch's fence. A rebucket that
+    * committed after the write leaves the files labeled under the old bucket
+    * count; they are re-staged under the new one first (read back, routed
+    * by `bucketRows`, rewritten), so a committed label never disagrees with
+    * its rows. */
   private[ingest] def commitDelta(table: LakeTable, staged: StagedDelta,
-      fenceDelta: Map[Int, Long], batchId: Long, extraMetrics: Map[String, Long]): Unit =
+      fenceDelta: Map[Int, Long], batchId: Long, extraMetrics: Map[String, Long]): Unit = {
+    var cur = staged
     LakeTable.withCommitRetry(table) {
-      val hist =
-        if (staged.files.isEmpty) FlatHistOp.Keep
-        else if (table.snapshot.numBuckets != staged.numBuckets) FlatHistOp.Add(None)
-        else FlatHistOp.Add(staged.hist)
+      val n = table.snapshot.numBuckets
+      if (cur.files.nonEmpty && cur.numBuckets != n)
+        cur = cur.copy(files = table.writeFiles(table.bucketRows(
+          MorRead.deltaEvents(table, cur.files, cur.numBuckets), base = false, numBuckets = n),
+          base = false), numBuckets = n)
       table.commit(Set.empty, Seq.empty, fenceDelta,
-        Map("deltaEventsAppended" -> staged.events,
-          "deltaFilesWritten" -> staged.files.size.toLong,
+        Map("deltaEventsAppended" -> cur.events,
+          "deltaFilesWritten" -> cur.files.size.toLong,
           "batches" -> 1L) ++ extraMetrics,
-        batchId, maxSeq = staged.maxSeq, newDeltaFiles = staged.files, flatHistOp = hist)
+        batchId, maxSeq = cur.maxSeq, newDeltaFiles = cur.files)
     }
+  }
 
   private def mergeOnce(
       table: LakeTable,
@@ -399,8 +375,6 @@ object MergeApply {
       extraMetrics: Map[String, Long],
       selection: Option[FileSelection],
       alsoReplacePaths: Set[String] = Set.empty,
-      alsoNewDeltaFiles: Seq[DataFile] = Seq.empty,
-      flatHistOp: FlatHistOp = FlatHistOp.Keep,
       commitIdle: Boolean = true): MergeResult = {
     val snap = table.snapshot
     val sel = selection.getOrElse(selectFiles(table, delta))
@@ -412,8 +386,7 @@ object MergeApply {
       // still swap the caller's delta files: a fold whose fold-side emptied
       // out after hold-back must not leave the dropped paths live).
       table.commit(alsoReplacePaths, Seq.empty, fenceDelta,
-        extraMetrics + ("batches" -> 1L), batchId, newDeltaFiles = alsoNewDeltaFiles,
-        flatHistOp = flatHistOp)
+        extraMetrics + ("batches" -> 1L), batchId)
       return MergeResult(0, 0, 0, 0, 0, 0, 0, 0)
     }
 
@@ -577,15 +550,13 @@ object MergeApply {
     val replaced = sel.files.map(_.path).toSet ++ alsoReplacePaths
     def commitFinal(): Unit =
       try {
-        table.commit(replaced, newFiles, fenceDelta, metricsDelta, batchId,
-          maxSeq = maxSeq, newDeltaFiles = alsoNewDeltaFiles, flatHistOp = flatHistOp)
+        table.commit(replaced, newFiles, fenceDelta, metricsDelta, batchId, maxSeq = maxSeq)
         ()
       } catch {
         case e: CommitConflictException =>
           val live = table.refresh().files.iterator.map(_.path).toSet
           if (sel.files.forall(f => live.contains(f.path)))
-            table.commit(replaced, newFiles, fenceDelta, metricsDelta,
-              batchId, maxSeq = maxSeq, newDeltaFiles = alsoNewDeltaFiles, flatHistOp = flatHistOp)
+            table.commit(replaced, newFiles, fenceDelta, metricsDelta, batchId, maxSeq = maxSeq)
           else throw e
       }
     commitFinal()

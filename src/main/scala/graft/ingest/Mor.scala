@@ -1,8 +1,7 @@
 package graft.ingest
 
-import graft.lake.{DataFile, FlatHistOp, ImageBinding, LakeTable, MorRead}
+import graft.lake.{DataFile, ImageBinding, LakeTable, MorRead}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Merge-on-read orchestration (the fold half; appends go through
@@ -24,21 +23,23 @@ import org.apache.spark.storage.StorageLevel
   * operation a cadence-triggered fold must never be. Instead, only buckets
   * whose backlog has reached `minEventsPerBucket` events fold (their base
   * rewrite is then amortized over a worthwhile batch of keys — Hudi's
-  * file-group compaction-scheduling shape). The delta log itself is
-  * bucket-localized: deferred winners are written as PER-BUCKET compacted
-  * delta files (`_bucket=N` layout, labels in the manifest), so a later
-  * partial fold of bucket set S reads ONLY the flat append files plus the
-  * labeled files of S — per-tick cost is O(recent appends + selected
-  * buckets), never O(total backlog) — and the scheduling backlog for
-  * labeled files comes straight off the manifest, no scan.
+  * file-group compaction-scheduling shape). The delta log is
+  * bucket-localized: every delta file carries its bucket in the manifest
+  * (appends and compactions alike), so scheduling reads the backlog per
+  * bucket straight off the manifest, no scan, and a fold of bucket set S
+  * reads ONLY the files labeled with S — per-tick cost is O(selected
+  * buckets), never O(total backlog). The files of other buckets stay as
+  * they are.
   *
-  * Label safety: bucket labels are PRUNING HINTS, not a correctness
-  * dependency. A fold of S replaces exactly the files it read, folds their
-  * `bucketExpr ∈ S` rows and re-defers the rest to the remainder write, so
-  * a mislabeled row is either rewritten or left live in a kept file (where
-  * LWW keeps it competing at read/fold time) — never dropped. Labels can
-  * only go stale through a rebucket, which refuses to run while delta files
-  * exist ([[graft.lake.LakeTable]] guards it).
+  * Label safety: labels are written by `LakeTable.writeFiles` from the rows
+  * themselves, and guarded where they are trusted. A bucket-pruned read and
+  * a partial fold both route every delta winner they read through
+  * [[graft.lake.MorRead.routedInto]]: a winner outside the labeled buckets
+  * fails the query or the fold, never silently drops or serves stale rows.
+  * Labels can only go stale through a rebucket, which refuses to run while
+  * delta files exist ([[graft.lake.LakeTable]] guards it) and whose race
+  * with an append re-stages the append's files under the new bucket count
+  * ([[MergeApply.commitDelta]]).
   */
 object Mor {
 
@@ -46,22 +47,21 @@ object Mor {
       deltaFilesFolded: Int, eventsFolded: Long,
       /** buckets whose base files were rewritten; -1 = unconditional fold. */
       bucketsFolded: Int = -1,
-      /** winner rows deferred to compacted per-bucket deltas (partial). */
+      /** delta rows a partial fold left in the delta log. */
       eventsDeferred: Long = 0L)
 
   /** When no bucket reaches the partial-fold threshold, a fold tick still
-    * compacts the fragmented part of the delta LOG (flat append files plus
-    * any bucket split across >1 labeled file — winners-only rewrite, no
-    * base rewrite) once this many such files have accumulated — bounding
-    * read amplification between real folds without paying any O(base) work. */
+    * compacts the delta LOG (winners-only rewrite, no base rewrite) once
+    * some bucket holds this many delta files: every bucket split across
+    * more than one file becomes one file — bounding the files a keyed read
+    * opens between real folds without paying any O(base) work. */
   val CompactDeltasMinFiles = 16
 
   /** Fold delta files into the base. Safe beside a live MOR tail: a
     * concurrent append between our read and commit just wins the version
     * race — merge's optimistic retry re-runs against the refreshed snapshot,
     * and deltas appended AFTER our read survive in the manifest (only the
-    * paths we read are dropped; deferred winners are re-added as compacted
-    * per-bucket delta files in the same commit).
+    * paths we read are dropped).
     *
     * Fold is MOR's RESOLVE point, so the cross-batch DDL hold-back happens
     * here (appends are schema-agnostic and never hold back): winners whose
@@ -85,99 +85,55 @@ object Mor {
       val winners = MorRead.deltaWinners(table, snap.deltaFiles, snap.numBuckets)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try foldFull(table, winners, ImageBinding.imageFields(winners),
-        snap.deltaFiles.map(_.path).toSet,
-        FlatHistOp.Sub(snap.flatDeltaHist.getOrElse(Map.empty)))
+        snap.deltaFiles.map(_.path).toSet)
       finally { winners.unpersist(blocking = false); () }
     } else foldPartial(table, snap, minEventsPerBucket)
   }
 
-  /** Partial fold: schedule by per-bucket backlog, fold only dense buckets,
-    * defer the rest as per-bucket compacted delta files. See class doc. */
+  /** Partial fold: schedule by per-bucket backlog off the manifest, fold
+    * only dense buckets; with none, compact the delta log. See class doc. */
   private def foldPartial(table: LakeTable, snap: graft.lake.Snapshot,
       minEventsPerBucket: Long): FoldResult = {
-    val labeled = snap.deltaFiles.filter(_.bucket >= 0)
-    val flat = snap.deltaFiles.filter(_.bucket < 0)
-
-    // ---- scheduling: ZERO-scan when metadata suffices — labeled backlog
-    // off the manifest (bucket, rows), flat backlog off the snapshot's
-    // transactional histogram (Snapshot.flatDeltaHist, maintained by the
-    // append job's observation pass). Histogram unknown (numBuckets >
-    // HistMaxBuckets, an append that skipped or lost its observation, or a
-    // rebucket racing an append) ⇒ ONE narrow scan of the flat files
-    // (repo+path only — column pruning keeps contents out). ----
-    val flatCounts: Map[Int, Long] =
-      if (flat.isEmpty) Map.empty
-      else snap.flatDeltaHist.getOrElse(MorRead.deltaEvents(table, flat, snap.numBuckets)
-        .groupBy(table.bucketExpr(col("repo"), col("path")).as("_b"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
-    val labeledCounts: Map[Int, Long] =
-      labeled.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
-    val backlog: Map[Int, Long] =
-      (flatCounts.keySet ++ labeledCounts.keySet).iterator
-        .map(b => b -> (flatCounts.getOrElse(b, 0L) + labeledCounts.getOrElse(b, 0L)))
-        .toMap
-
-    val sel = backlog.filter(_._2 >= minEventsPerBucket).keySet
+    def rowsOf(fs: Iterable[DataFile]): Long = fs.iterator.map(_.rows).sum
+    val byBucket = snap.deltaFiles.groupBy(_.bucket)
+    val sel = byBucket.collect { case (b, fs) if rowsOf(fs) >= minEventsPerBucket => b }.toSet
     if (sel.isEmpty) {
       // nothing dense enough to be worth a base rewrite: bound read
-      // amplification by compacting the FRAGMENTED part of the delta log —
-      // flat append files plus every labeled file of a bucket that is either
-      // split across >1 file or receiving new flat rows (absorbing those
-      // singletons keeps the invariant of ≤1 compacted file per bucket, so
-      // the delta log never exceeds numBuckets + recent-append files).
-      // Labeled singletons of quiet buckets stay untouched — the whole point
-      // of the per-bucket layout — so compaction cost is O(flat + touched
+      // amplification by merging every bucket split across >1 file into one
+      // file once some bucket has accumulated the threshold. Single-file
+      // buckets stay untouched, so compaction cost is O(fragmented
       // buckets' backlog), never O(total backlog).
-      val touched = flatCounts.keySet
-      val fragmented = labeled.groupBy(_.bucket).iterator
-        .filter { case (b, fs) => fs.size > 1 || touched.contains(b) }
-        .flatMap(_._2).toSeq
-      val toCompact = flat ++ fragmented
-      if (toCompact.size < CompactDeltasMinFiles)
+      if (byBucket.valuesIterator.forall(_.size < CompactDeltasMinFiles))
         FoldResult(0, 0L, bucketsFolded = 0, eventsDeferred = snap.deltaRows)
       else {
-        val winners = MorRead.deltaWinners(table, toCompact, snap.numBuckets)
-        compactDeltaLog(table, winners, toCompact.map(_.path).toSet,
-          keptRows = labeledCounts.values.sum - fragmented.iterator.map(_.rows).sum,
-          FlatHistOp.Sub(flatCounts))
+        val toCompact = byBucket.valuesIterator.filter(_.size > 1).flatten.toSeq
+        compactDeltaLog(table, MorRead.deltaWinners(table, toCompact, snap.numBuckets),
+          toCompact.map(_.path).toSet, keptRows = snap.deltaRows - rowsOf(toCompact))
       }
     } else {
-      // ---- file-group fold: read ONLY flat + selected buckets' files ----
-      val foldRead = flat ++ labeled.filter(f => sel.contains(f.bucket))
-      val keptRows = labeled.iterator
-        .filterNot(f => sel.contains(f.bucket)).map(_.rows).sum
-      val winners = MorRead.deltaWinners(table, foldRead, snap.numBuckets)
+      // ---- file-group fold: read ONLY the selected buckets' files; every
+      // winner must route into the selection (honest labels) ----
+      val foldRead = snap.deltaFiles.filter(f => sel.contains(f.bucket))
+      val winners = MorRead.routedInto(
+        MorRead.deltaWinners(table, foldRead, snap.numBuckets), sel, snap.numBuckets)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val bucketOf = table.bucketExpr(col("repo"), col("path"))
-        val inSel = bucketOf.isin(sel.toSeq: _*)
-        // remainder: winners of unselected buckets seen in the files we are
-        // about to drop (from flat appends; with honest labels, never from
-        // labeled files). Empty exactly when every backlogged bucket fell in
-        // the selection — then this IS a full fold of the files read.
-        val (remFiles, remRows) =
-          if ((backlog.keySet -- sel).isEmpty) (Seq.empty[DataFile], 0L)
-          else writeDeltaCompact(table, winners.filter(!inSel))
         val (resolvable, heldN) =
-          Ingest.holdBack(table, winners.filter(inSel), ImageBinding.imageFields(winners), -1L, 0)
+          Ingest.holdBack(table, winners, ImageBinding.imageFields(winners), -1L, 0)
         val extra = Map("morFolds" -> 1L, "morPartialFolds" -> 1L) ++
           (if (heldN > 0) Map("pendingHeldBack" -> heldN) else Map.empty)
         val r = MergeApply.merge(table, resolvable, Map.empty,
           extraMetrics = extra,
-          alsoReplacePaths = foldRead.map(_.path).toSet,
-          alsoNewDeltaFiles = remFiles,
-          flatHistOp = FlatHistOp.Sub(flatCounts))
+          alsoReplacePaths = foldRead.map(_.path).toSet)
         FoldResult(foldRead.size, r.eventsApplied,
-          bucketsFolded = sel.size, eventsDeferred = remRows + keptRows)
+          bucketsFolded = sel.size, eventsDeferred = snap.deltaRows - rowsOf(foldRead))
       } finally { winners.unpersist(blocking = false); () }
     }
   }
 
   /** Unconditional fold — every winner merges into base. */
   private def foldFull(table: LakeTable, winners: DataFrame,
-      imageFields: Set[String], deltaPaths: Set[String],
-      flatHistOp: FlatHistOp): FoldResult = {
+      imageFields: Set[String], deltaPaths: Set[String]): FoldResult = {
     // Empty-base fast selection (initial bulk load through MOR appends):
     // there are no base files to select against, so the selection scan would
     // only re-derive stats the delta manifests already carry — rows (an
@@ -197,46 +153,40 @@ object Mor {
       // every winner held back (schema fully behind): still drop the folded
       // delta files atomically — their rows are durably in _pending now
       graft.lake.LakeTable.withCommitRetry(table)(
-        table.commit(deltaPaths, Seq.empty, Map.empty, extra, flatHistOp = flatHistOp))
+        table.commit(deltaPaths, Seq.empty, Map.empty, extra))
       return FoldResult(deltaPaths.size, 0L)
     }
     val r = MergeApply.merge(table, resolvable, Map.empty,
       extraMetrics = extra,
       selection = emptyBaseSel,
-      alsoReplacePaths = deltaPaths,
-      flatHistOp = flatHistOp)
+      alsoReplacePaths = deltaPaths)
     FoldResult(deltaPaths.size, r.eventsApplied)
   }
 
-  /** Winners-only rewrite of (part of) the delta log (no base rewrite): N
-    * fragmented delta files become per-bucket compacted files. Read- and
-    * fold-equivalent by construction — LWW resolution over {winners} equals
+  /** Winners-only rewrite of (part of) the delta log (no base rewrite): the
+    * files of fragmented buckets become one compacted file per bucket. Read-
+    * and fold-equivalent by construction — LWW resolution over {winners} equals
     * LWW over the raw events they were reduced from, and events in files
     * kept out of (or appended concurrently with) the compaction keep
     * competing unchanged (max over a union commutes with partial maxima). */
   private def compactDeltaLog(table: LakeTable, winners: DataFrame,
-      deltaPaths: Set[String], keptRows: Long,
-      flatHistOp: FlatHistOp): FoldResult = {
+      deltaPaths: Set[String], keptRows: Long): FoldResult = {
     val (files, rows) = writeDeltaCompact(table, winners)
     graft.lake.LakeTable.withCommitRetry(table)(
       table.commit(deltaPaths, Seq.empty, Map.empty,
-        Map("deltaCompactions" -> 1L), newDeltaFiles = files,
-        flatHistOp = flatHistOp))
+        Map("deltaCompactions" -> 1L), newDeltaFiles = files))
     FoldResult(0, 0L, bucketsFolded = 0, eventsDeferred = rows + keptRows)
   }
 
   /** Write a winners DataFrame as PER-BUCKET compacted delta files
     * (`_bucket=N` dirs through `LakeTable.writeFiles`; routed to one task
     * per bucket group, so each bucket lands in one file) with bucket labels
-    * in their manifest entries. The labels
-    * are what buy partial folds their file-group pruning: the next fold of
-    * bucket set S reads only `_bucket∈S` files plus recent flat appends,
-    * and the scheduling backlog for labeled files comes from the manifest.
-    * Per-bucket fan-out is affordable HERE because compaction runs on the
-    * fold cadence, not per micro-batch (appends stay flat — that fan-out
-    * was the dominant per-batch fixed cost the round-4 flat layout removed).
-    * Orphaned by a lost commit race like any commit dir (swept by
-    * expireSnapshots past the grace window). */
+    * in their manifest entries. Routing is affordable HERE because
+    * compaction runs on the fold cadence, not per micro-batch: an append
+    * writes unrouted, one file per bucket per write task, and this is what
+    * merges those files back to one per bucket. Orphaned by a lost commit
+    * race like any commit dir (swept by expireSnapshots past the grace
+    * window). */
   private def writeDeltaCompact(table: LakeTable, winners: DataFrame): (Seq[DataFile], Long) = {
     val files = table.writeFiles(
       table.bucketRows(winners, base = false, route = Some(table.numBuckets)), base = false)
@@ -248,9 +198,8 @@ object Mor {
   * compaction shape) — a micro-batch SUBMITS its cadence fold and returns to
   * consuming; the fold runs on a per-table daemon thread against its OWN
   * table handle (the commit hard-link CAS + optimistic merge retry make a
-  * concurrent fold/append race safe by construction, and
-  * [[graft.lake.FlatHistOp]]'s relative Add/Sub keeps the scheduling
-  * histogram exact across the race). A tick that finds the previous fold
+  * concurrent fold/append race safe by construction: a fold drops only the
+  * files it read). A tick that finds the previous fold
   * still running SKIPS — the backlog simply rides to the next tick, so fold
   * pressure self-regulates instead of back-pressuring the source.
   *

@@ -34,9 +34,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, LongType
   * appear in `to`'s manifest but not `from`'s (every row that changed in the
   * window lives in such a file — COW rewrites carry it forward, MOR appends
   * are change events themselves). Both versions' states are then computed
-  * over file lists PRUNED by the candidates' per-bucket `_hkey` envelopes
-  * (manifest metadata only) and restricted to candidate keys, so the old
-  * state costs the touched neighborhoods, never a table scan. The one
+  * over file lists PRUNED by manifest metadata alone (base files by the
+  * candidates' per-bucket `_hkey` envelopes, delta files by bucket label)
+  * and restricted to candidate keys, so the old state costs the touched
+  * neighborhoods, never a table scan. The one
   * operation that can hide a change from added files is a compaction that
   * EXPIRED tombstones inside the window (the deleted key then appears in no
   * `to`-file); the cumulative `tombstonesExpired` metric detects exactly
@@ -171,8 +172,7 @@ object ChangeFeed {
           if (exact) containsInRange(hs, f.minKey, f.maxKey)
           else f.minKey <= hs(1) && f.maxKey >= hs(0)
         })
-      val pruneDelta = (files: Seq[DataFile]) => files.filter(f =>
-        f.bucket < 0 || byBucket.contains(f.bucket)) // flat appends carry no stats
+      val pruneDelta = (files: Seq[DataFile]) => files.filter(f => byBucket.contains(f.bucket))
       (pruneBase, pruneDelta)
     }
     val (pruneBase1, pruneDelta1) = pruners(_.getInt(0), s1.numBuckets)

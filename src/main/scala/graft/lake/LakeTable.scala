@@ -36,9 +36,9 @@ import scala.jdk.CollectionConverters._
   *
   * Every data file of every commit is written and listed here:
   * [[bucketRows]] adds the layout columns (and routes rows by bucket when
-  * asked), [[writeFiles]] writes one commit's files — bucketed base files,
-  * bucketed (compacted) delta files or a flat delta append — and returns
-  * their manifest entries for [[commit]]. The COW merge, MOR appends, folds,
+  * asked), [[writeFiles]] writes one commit's files — base files or delta
+  * files, each under its `_bucket=N/` dir — and returns their manifest
+  * entries for [[commit]]. The COW merge, MOR appends, folds,
   * delta-log compaction, compact and rebucket all write through it.
   *
   * Base-file reads plan from the snapshot's manifests alone: every scan goes
@@ -53,8 +53,7 @@ import scala.jdk.CollectionConverters._
   * manifest entry, and their one read, [[MorRead.deltaEvents]], merges those
   * schemas on the driver and scans through a [[ManifestFileIndex]] too. A
   * keyed MOR read's filter reaches the base scan it joins against the deltas
-  * (one file opened) and the delta scan (flat files and the key's bucket
-  * only).
+  * (one file opened) and the delta scan (the key's bucket's files only).
   *
   * Every data file carries three internal columns beyond the user schema:
   * `_seq` (log sequence number of the last writer — LWW conflict resolution),
@@ -168,10 +167,7 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
         * MOR mode); `replacedPaths` drops from the delta list too (a
         * compaction fold replaces base files and removes the folded deltas
         * in one atomic commit). */
-      newDeltaFiles: Seq[DataFile] = Seq.empty,
-      /** how this commit updates the flat-delta scheduling histogram
-        * ([[Snapshot.flatDeltaHist]]); appends Add, folds Sub. */
-      flatHistOp: FlatHistOp = FlatHistOp.Keep): Snapshot = {
+      newDeltaFiles: Seq[DataFile] = Seq.empty): Snapshot = {
     val cur = snap
     newNumBuckets.foreach { n =>
       require(n > 0, "bucket count must be positive")
@@ -206,32 +202,6 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     val (deltaRefs, deltaEntries) = evolveManifests(
       Manifest.DeltaKind, cur.deltaFiles, cur.manifests.filter(_.kind == Manifest.DeltaKind),
       replacedPaths, newDeltaFiles)
-    // ---- flat-delta scheduling histogram (Snapshot.flatDeltaHist) ----
-    // Manifest-ref stats (minBucket < 0 ⇔ ref holds flat files) keep these
-    // checks hydration-free on the fence-only hot path.
-    def histMerge(a: Map[Int, Long], b: Map[Int, Long], sign: Long): Map[Int, Long] =
-      (a.keySet ++ b.keySet).iterator
-        .map(k => k -> (a.getOrElse(k, 0L) + sign * b.getOrElse(k, 0L)))
-        .filter(_._2 > 0L).toMap
-    val flatRemain = deltaRefs.exists(_.minBucket < 0)
-    // Keep is only honest when the commit adds no flat delta files; a caller
-    // that appends flat deltas without accounting for them must poison the
-    // histogram to unknown (scan fallback), never leave a stale exact value.
-    val histOp =
-      if (flatHistOp == FlatHistOp.Keep && newDeltaFiles.exists(_.bucket < 0))
-        FlatHistOp.Add(None)
-      else flatHistOp
-    val nextFlatHist: Option[Map[Int, Long]] =
-      if (!flatRemain) Some(Map.empty) // exact by construction: nothing flat left
-      else histOp match {
-        case FlatHistOp.Keep => cur.flatDeltaHist
-        case FlatHistOp.Add(None) => None
-        case FlatHistOp.Add(Some(h)) =>
-          val curHasFlat = cur.manifests.exists(r => r.kind == Manifest.DeltaKind && r.minBucket < 0)
-          (if (curHasFlat) cur.flatDeltaHist else Some(Map.empty[Int, Long]))
-            .map(histMerge(_, h, 1L))
-        case FlatHistOp.Sub(h) => cur.flatDeltaHist.map(histMerge(_, h, -1L))
-      }
     val next = Snapshot(
       version = cur.version + 1,
       parentVersion = cur.version,
@@ -247,8 +217,7 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
       tsMillis = System.currentTimeMillis(),
       ddlSeq = math.max(ddlSeq, cur.ddlSeq),
       maxSeq = math.max(maxSeq, cur.maxSeq),
-      targetFileRows = cur.targetFileRows,
-      flatDeltaHist = nextFlatHist)
+      targetFileRows = cur.targetFileRows)
     LakeTable.writeSnapshotAtomic(dir, next)
     snap = next
     next
@@ -306,7 +275,8 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     * and, for base files, the `_hkey` sort/stats key. With `route` the rows
     * are exchanged by `_bucket` to min(route, shuffle partitions) tasks, so
     * a commit writes about one file per bucket and split, not tasks ×
-    * buckets. Delta files carry no `_hkey`: they are read wholesale. */
+    * buckets. Delta files carry no `_hkey`: reads prune them by bucket
+    * only. */
   def bucketRows(rows: DataFrame, base: Boolean, route: Option[Int] = None,
       numBuckets: Int = snap.numBuckets): DataFrame = {
     val bucketed = rows.withColumn("_bucket", LakeTable.bucketExpr(col("repo"), col("path"), numBuckets))
@@ -320,9 +290,9 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
   }
 
   /** Write one commit's data files into a fresh commit dir and return their
-    * manifest entries. Rows with a `_bucket` column ([[bucketRows]]) land in
-    * `_bucket=N/` dirs, others in one flat dir (the MOR append's shape: no
-    * exchange, no fan-out). Base files are sorted by (`_bucket`, `_hkey`)
+    * manifest entries. The rows carry the layout columns of [[bucketRows]]
+    * and land in `_bucket=N/` dirs, so every file holds one bucket's rows
+    * and its entry names that bucket. Base files are sorted by (`_bucket`, `_hkey`)
     * and zstd-compressed: they live until rewritten and dominate table bytes
     * at rest. Delta files are snappy: written once, read once or twice (MOR
     * reads, fold) and dropped, so encode speed beats ratio. Every file splits
@@ -337,8 +307,7 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     val writer = out.write.mode("overwrite") // commitDir is fresh; overwrite = retry-safe
       .option("compression", if (base) "zstd" else "snappy")
       .option("maxRecordsPerFile", s.targetFileRows.toString)
-    if (rows.columns.contains("_bucket")) writer.partitionBy("_bucket").parquet(commitDir)
-    else writer.parquet(commitDir)
+    writer.partitionBy("_bucket").parquet(commitDir)
     val eventSchema =
       if (base) None else Some(StructType(rows.schema.filterNot(_.name == "_bucket")))
     listFiles(commitDir, s.schemaId).map(_.copy(eventSchema = eventSchema))
@@ -347,8 +316,8 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
   /** Manifest entries for a commit dir's parquet files, with row counts and
     * sizes from the footers (read on a driver thread pool: independent
     * metadata fetches). A file under `_bucket=N/` carries bucket N and its
-    * `_hkey` min/max; a flat file carries bucket -1 and the full key range
-    * (never pruned by bucket or key). Empty files are dropped. */
+    * `_hkey` min/max (the full range for a delta file, which has no `_hkey`).
+    * Empty files are dropped. */
   private def listFiles(commitDir: String, schemaId: Int): Seq[DataFile] = {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
@@ -357,17 +326,14 @@ class LakeTable private (val spark: SparkSession, val dir: String, @volatile pri
     def isParquet(p: Path): Boolean = p.getFileName.toString.endsWith(".parquet")
     val targets: Seq[(Int, Path)] = LakeTable.listDir(Paths.get(commitDir)).flatMap { p =>
       val name = p.getFileName.toString
-      if (name.startsWith("_bucket="))
-        LakeTable.listDir(p).filter(isParquet).map(f => (name.stripPrefix("_bucket=").toInt, f))
-      else if (isParquet(p)) Seq((-1, p))
-      else Seq.empty
+      if (!name.startsWith("_bucket=")) Seq.empty
+      else LakeTable.listDir(p).filter(isParquet).map(f => (name.stripPrefix("_bucket=").toInt, f))
     }
     val conf = spark.sessionState.newHadoopConf()
     Await.result(Future.traverse(targets) { case (b, f) =>
       Future {
         val (rows, minK, maxK) = LakeTable.footerStats(f, conf)
-        val (lo, hi) = if (b < 0) (Long.MinValue, Long.MaxValue) else (minK, maxK)
-        DataFile(b, root.relativize(f.toAbsolutePath.normalize).toString, schemaId, rows, lo, hi,
+        DataFile(b, root.relativize(f.toAbsolutePath.normalize).toString, schemaId, rows, minK, maxK,
           bytes = Files.size(f))
       }
     }, Duration.Inf).filter(_.rows > 0)

@@ -142,11 +142,10 @@ object Maintenance {
     // commit-dir basenames referenced by any retained snapshot (base AND
     // merge-on-read delta files — both are live data). The commit dir is the
     // FIRST path segment under <table>/data, never a fixed parent-count walk:
-    // bucketed files sit at data/<commit>/_bucket=N/part.parquet but flat MOR
-    // delta files at data/<commit>/part.parquet (one level shallower), and a
-    // parent-count walk resolved the latter to "data" — live delta commit
-    // dirs then never entered the referenced set and were GC'd past the
-    // grace window (round-4 ADVICE, data loss).
+    // a walk tied to one layout depth resolves any other depth to "data" or
+    // below a commit dir, and live commit dirs then never enter the
+    // referenced set and are GC'd past the grace window (round-4 ADVICE,
+    // data loss, when MOR appends were written one level shallower).
     val dataRoot = dir.resolve("data").toAbsolutePath.normalize
     def commitDirOf(p: Path): Option[String] = {
       var cur = p.toAbsolutePath.normalize

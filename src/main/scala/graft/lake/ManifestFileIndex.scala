@@ -19,8 +19,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * copy-on-write merge trusts to pick the files it rewrites
   * (`MergeApply.fileHitExpr`). The key's bucket and `_hkey` are evaluated
   * through the table's own [[LakeTable.bucketExpr]] / [[LakeTable.hkeyExpr]],
-  * so the mapping has one definition. Files without a bucket label are always
-  * kept; any other filter returns every file.
+  * so the mapping has one definition. Any other filter returns every file.
   *
   * `numBuckets` must be the bucket count the files were written under (the
   * snapshot they belong to). */
@@ -39,9 +38,7 @@ final class ManifestFileIndex(table: LakeTable, numBuckets: Int, files: Seq[Data
     val selected = ManifestFileIndex.pinnedKey(dataFilters) match {
       case Some((repo, path)) =>
         val (bucket, hkey) = coordinates(repo, path)
-        statuses.filter { case (f, _) =>
-          f.bucket < 0 || (f.bucket == bucket && f.minKey <= hkey && hkey <= f.maxKey)
-        }
+        statuses.filter { case (f, _) => f.bucket == bucket && f.minKey <= hkey && hkey <= f.maxKey }
       case None => statuses
     }
     Seq(PartitionDirectory(InternalRow.empty, selected.map(_._2)))

@@ -49,7 +49,7 @@ object MorRead {
     * the manifest entries recorded at write (the image struct may gain
     * fields across batches), built on the driver, and the files scan through
     * a [[ManifestFileIndex]]: no listing, no footer, and a pinned key keeps
-    * only the flat files and the labeled ones of its bucket. */
+    * only the files of its bucket. */
   def deltaEvents(table: LakeTable, files: Seq[DataFile], numBuckets: Int): DataFrame =
     table.manifestScan(numBuckets, files,
       SchemaBridge.asNullable(files.flatMap(_.eventSchema).distinct.reduce(SchemaBridge.merge)))
@@ -62,41 +62,36 @@ object MorRead {
   def deltaWinners(table: LakeTable, files: Seq[DataFile], numBuckets: Int): DataFrame =
     Dedup.lastWriterPerKey(deltaEvents(table, files, numBuckets))
 
-  /** The buckets that can hold delta events, from METADATA only: labeled
-    * delta files carry their bucket in the manifest; flat append files are
-    * covered by the transactional per-bucket histogram
-    * ([[Snapshot.flatDeltaHist]] — exact when present, see MorSpec's
-    * exact-vs-recount case). None = unknown (the histogram is over the cap,
-    * or an append's observation was lost) — callers must not prune. An
-    * empty set alongside live delta rows is a metadata inconsistency and
-    * also answers None (no pruning — correctness never rides a suspect
-    * histogram). */
-  def touchedBuckets(s: Snapshot): Option[Set[Int]] = {
-    val labeled = s.deltaFiles.iterator.filter(_.bucket >= 0).map(_.bucket).toSet
-    val hasFlat = s.deltaFiles.exists(_.bucket < 0)
-    val t = if (!hasFlat) Some(labeled)
-            else s.flatDeltaHist.map(h => labeled ++ h.keySet)
-    t.filter(tb => tb.nonEmpty || s.deltaRows == 0L)
+  /** The buckets that hold delta events: the labels of the delta files'
+    * manifest entries, metadata only. */
+  def touchedBuckets(s: Snapshot): Set[Int] = s.deltaFiles.iterator.map(_.bucket).toSet
+
+  /** `winners` with a guard that fails the query when a winner routes
+    * outside `buckets` under `numBuckets` — a delta file whose label
+    * disagrees with its rows. No extra job: the check rides the projection. */
+  private[graft] def routedInto(winners: DataFrame, buckets: Set[Int], numBuckets: Int): DataFrame = {
+    val bOf = LakeTable.bucketExpr(col("repo"), col("path"), numBuckets)
+    winners.withColumn("seq", when(bOf.isin(buckets.toSeq.map(Int.box): _*), col("seq"))
+      .otherwise(raise_error(concat(
+        lit("MOR bucket labels: delta winner outside its files' labeled buckets, bucket="),
+        bOf.cast("string")))))
   }
 
   /** Current rows of a MOR snapshot.
     *
     * '''Bucket pruning''': base files whose bucket holds NO delta backlog
     * (per [[touchedBuckets]]) never enter the join — they pass through as a
-    * plain scan. Pruning trusts the manifest's bucket labels and the
-    * transactional flat histogram (both engine-written; rebucket refuses to
+    * plain scan. Pruning trusts the delta files' bucket labels (written by
+    * `LakeTable.writeFiles` from the rows themselves; rebucket refuses to
     * run while deltas exist), and because a silent mismatch would mean wrong
-    * results, the pruned plan guards every delta winner: one routing outside
-    * the touched set raise_errors (no extra job, no silent staleness). */
+    * results, the pruned plan guards every delta winner ([[routedInto]]):
+    * one routing outside the touched set fails the query. */
   def resolve(table: LakeTable, s: Snapshot,
       broadcastMaxBytes: Long = BroadcastDeltaMaxBytes): DataFrame = {
     val touched = touchedBuckets(s)
-    val (joinFiles, passFiles) = touched match {
-      case Some(tb) => s.files.partition(f => tb.contains(f.bucket))
-      case None => (s.files, Seq.empty[DataFile])
-    }
+    val (joinFiles, passFiles) = s.files.partition(f => touched.contains(f.bucket))
     val joined = resolveOn(table, s, joinFiles, s.deltaFiles,
-      touched.filter(_ => passFiles.nonEmpty), broadcastMaxBytes)
+      Some(touched).filter(_ => passFiles.nonEmpty), broadcastMaxBytes)
     val resolved =
       if (passFiles.isEmpty) joined
       else joined.unionByName(withDeleted(s, table.readInternal(s, passFiles)))
@@ -115,13 +110,7 @@ object MorRead {
     if (deltaFiles.isEmpty) return withDeleted(s, table.readInternal(s, baseFiles))
     val winners = deltaWinners(table, deltaFiles, s.numBuckets)
     val (binding, _) = ImageBinding.bind(s, ImageBinding.imageFields(winners))
-    val d = guard.fold(winners) { tb =>
-      val bOf = LakeTable.bucketExpr(col("repo"), col("path"), s.numBuckets)
-      winners.withColumn("seq", when(bOf.isin(tb.toSeq.map(Int.box): _*), col("seq"))
-        .otherwise(raise_error(concat(
-          lit("MOR bucket pruning: delta winner outside the touched bucket set, bucket="),
-          bOf.cast("string")))))
-    }.alias("d")
+    val d = guard.fold(winners)(routedInto(winners, _, s.numBuckets)).alias("d")
     val b = table.readInternal(s, baseFiles).alias("b")
     val dCol = (n: String) => col(s"d.$n")
     val bCol = (n: String) => col(s"b.$n")

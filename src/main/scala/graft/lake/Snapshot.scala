@@ -35,9 +35,10 @@ final case class DataFile(
 /** Table metadata in a shape this build does not write: a table from an older
   * build. Readers carry no per-format fallbacks — like any sink state derived
   * from the durable changelog, such a table is rebuilt with `replay`. */
-final class TableFormatException(field: String, problem: String) extends IllegalStateException(
-  s"table metadata field '$field' $problem: this build reads only the metadata it writes; " +
-    "rebuild the table with `replay` from its changelog")
+final class TableFormatException(field: String, problem: String, remedy: String = "")
+  extends IllegalStateException(
+    s"table metadata field '$field' $problem: this build reads only the metadata it writes; " +
+      s"${remedy}rebuild the table with `replay` from its changelog")
 
 /** An immutable table snapshot. Commits are atomic: the snapshot JSON is
   * written to a tmp file (fsynced), then published via hard-link
@@ -78,12 +79,13 @@ final case class Snapshot(
       * each file covers a narrow key range — the knob that makes min/max
       * pruning effective. */
     targetFileRows: Long = 1L << 20,
-    /** Merge-on-read delta files (Hudi-MOR / Iceberg-v2 analog): bucketed
-      * Parquet EVENT logs (repo, path, op, seq, after-image) appended by
-      * streaming micro-batches in MOR mode for O(batch) write cost. Reads
-      * resolve them against `files` by last-writer-wins at query time;
-      * compaction folds them into base files through the ordinary COW merge
-      * and drops them. Empty for pure copy-on-write tables. */
+    /** Merge-on-read delta files (Hudi-MOR / Iceberg-v2 analog): Parquet
+      * EVENT logs (repo, path, op, seq, after-image) appended by streaming
+      * micro-batches in MOR mode for O(batch) write cost, each holding the
+      * rows of the one bucket its entry names. Reads resolve them against
+      * `files` by last-writer-wins at query time; folds merge them into base
+      * files through the ordinary COW merge and drop them. Empty for pure
+      * copy-on-write tables. */
     deltaFiles: Seq[DataFile] = Seq.empty,
     /** SEGMENTED manifest pointers (Iceberg manifest-list analog; see
       * [[Manifest]]). The persisted snapshot carries ONLY these references —
@@ -91,20 +93,7 @@ final case class Snapshot(
       * (cached) manifest files at load time and equal to the concatenation
       * of base / delta manifests' entries in pointer order. Empty exactly
       * when the table holds no file (the v0 of a new table). */
-    manifests: Seq[ManifestRef] = Seq.empty,
-    /** Per-bucket event histogram of the FLAT (unlabeled, bucket = -1) delta
-      * files — maintained transactionally so partial-fold SCHEDULING reads
-      * the whole backlog off metadata, zero scans: appends ADD their batch
-      * histogram (computed on the append job's existing Observation pass),
-      * folds SUBTRACT the flat counts they consumed, and any commit that
-      * leaves no flat delta file self-heals to Some(empty). None = unknown:
-      * numBuckets above [[Snapshot.HistMaxBuckets]], or an append whose
-      * observation was lost (a batch that skipped it, a rebucket race) —
-      * schedulers fall back to a narrow scan. Labeled delta files need no
-      * histogram: their manifest entries carry (bucket, rows) directly.
-      * Scheduling-only: an absent histogram can never lose data, folds
-      * re-derive winners from the files themselves. */
-    flatDeltaHist: Option[Map[Int, Long]] = None) {
+    manifests: Seq[ManifestRef] = Seq.empty) {
 
   def schema: TableSchema = schemas.find(_.schemaId == schemaId).get
   def schemaById(id: Int): TableSchema = schemas.find(_.schemaId == id).get
@@ -129,9 +118,7 @@ final case class Snapshot(
       "ddlSeq" -> ddlSeq.toString,
       "maxSeq" -> maxSeq.toString,
       "targetFileRows" -> targetFileRows.toString,
-      "tsMillis" -> tsMillis.toString) ++
-      flatDeltaHist.toSeq.map(h => "flatHist" -> Json.quote(
-        h.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString(","))) ++ Seq(
+      "tsMillis" -> tsMillis.toString,
       "manifestList" -> Json.arrOf(manifests.map(_.toJson)),
       "fence" -> Json.obj(fence.toSeq.sortBy(_._1).map { case (p, o) => p.toString -> o.toString }: _*),
       "metrics" -> Json.obj(metrics.toSeq.sorted.map { case (k, v) => k -> v.toString }: _*),
@@ -177,7 +164,8 @@ object Snapshot {
 
   /** One manifest entry of a manifest of `kind`. Refuses the shapes older
     * builds wrote: a size that is not positive, an absolute path, a delta
-    * entry without its event schema. */
+    * entry without its event schema or without a bucket (an unfolded flat
+    * append). */
   private[lake] def fileFromJson(f: com.fasterxml.jackson.databind.JsonNode, kind: String): DataFile = {
     val file = DataFile(Json.int(f, "bucket"), relativePath(Json.str(f, "path")),
       Json.int(f, "schemaId"), Json.long(f, "rows"), Json.long(f, "minKey"), Json.long(f, "maxKey"),
@@ -185,6 +173,9 @@ object Snapshot {
       Option(Json.str(f, "eventSchema")).map(DataType.fromJson(_).asInstanceOf[StructType]))
     if (kind == Manifest.DeltaKind && file.eventSchema.isEmpty)
       throw new TableFormatException("eventSchema", s"is missing from delta entry ${file.path}")
+    if (kind == Manifest.DeltaKind && file.bucket < 0)
+      throw new TableFormatException("bucket", s"is ${file.bucket} on delta entry ${file.path}",
+        "fold the table with the build that wrote it, or ")
     file
   }
 
@@ -202,7 +193,8 @@ object Snapshot {
 
   /** Parse a snapshot pointer. Refuses inline file entries (the pointer
     * shape before segmented manifests) and missing fields; the empty inline
-    * lists an older build wrote for a table without files still read. */
+    * lists an older build wrote for a table without files still read, and
+    * an older build's `flatHist` field is ignored. */
   def fromJson(s: String): Snapshot = {
     val n = Json.parse(s)
     // an empty or torn file is an IO error (skipped as torn), not a shape
@@ -224,37 +216,6 @@ object Snapshot {
       tsMillis = Json.long(n, "tsMillis"),
       ddlSeq = Json.long(n, "ddlSeq"),
       maxSeq = Json.long(n, "maxSeq"),
-      targetFileRows = Json.long(n, "targetFileRows"),
-      flatDeltaHist =
-        if (!n.has("flatHist")) None
-        else Some(Json.str(n, "flatHist").split(',').iterator.filter(_.nonEmpty).map { kv =>
-          val i = kv.indexOf(':')
-          kv.substring(0, i).toInt -> kv.substring(i + 1).toLong
-        }.toMap))
+      targetFileRows = Json.long(n, "targetFileRows"))
   }
-
-  /** Ceiling on per-append histogram width: above this bucket count the
-    * observe-pass conditional sums stop being cheap and the snapshot field
-    * stops being small, so the histogram is disabled (None) and schedulers
-    * scan instead. */
-  val HistMaxBuckets = 256
-}
-
-/** How a commit updates [[Snapshot.flatDeltaHist]]. Add/Sub are RELATIVE
-  * (merged against the snapshot the commit finally lands on), so they stay
-  * correct across optimistic-concurrency retries and append/fold races:
-  * a fold subtracts exactly what it read, never zeroing counts a racing
-  * append added after the fold's snapshot. */
-sealed trait FlatHistOp
-object FlatHistOp {
-  /** Commit does not touch flat delta files. */
-  case object Keep extends FlatHistOp
-  /** Commit appends flat delta files carrying this per-bucket event
-    * histogram; None = histogram unavailable for this batch (bucket count
-    * over [[Snapshot.HistMaxBuckets]]) — poisons the running total to
-    * unknown until the next full sweep of flat files heals it. */
-  final case class Add(hist: Option[Map[Int, Long]]) extends FlatHistOp
-  /** Commit consumed flat delta files whose histogram at read time was
-    * `hist` (every fold/compaction reads ALL flat files of ITS snapshot). */
-  final case class Sub(hist: Map[Int, Long]) extends FlatHistOp
 }

@@ -135,18 +135,13 @@ object StreamIngest {
     require(distinctDirs(rules.map(_.tableDir)), "rules must write distinct table dirs")
     require(distinctDirs(rules.flatMap(_.cfg.sigStoreDir)), "rules must maintain distinct signature stores")
     val ctl = pipelineHome(rules, checkpointDir, oneTable)
-    // A bounded AvailableNow catch-up schedules no cadence folds and ends in
-    // a full fold that self-heals the MOR histogram, so both are live-tail
-    // only: the per-batch histogram Observation measured ~15% of bulk-stream
-    // wall at 64 buckets, and mid-replay folds +23% (each rewrites base the
-    // next fold rewrites again) on the 2M-event bulk stream (BENCH r6 A/Bs).
+    // Cadence folds are live-tail only: a bounded AvailableNow catch-up ends
+    // in a full fold, and mid-replay folds cost +23% on the 2M-event bulk
+    // stream (each rewrites base the next fold rewrites again; BENCH r6 A/B).
     val live = trigger != Trigger.AvailableNow()
     // ONE table handle per rule for the whole stream: applyBatch refreshes
     // the snapshot from disk at each batch top
-    val tables = rules.map { r =>
-      (r, LakeTable.load(spark, r.tableDir),
-        if (live) r.cfg else r.cfg.copy(morBatchHistogram = false))
-    }
+    val tables = rules.map(r => (r, LakeTable.load(spark, r.tableDir)))
     val stop = ctl.resolve("stop")
     Files.createDirectories(ctl)
     Files.deleteIfExists(stop) // a stale stop must not end a fresh run
@@ -167,8 +162,8 @@ object StreamIngest {
     // it. A catch-up marked without a skipped batch (a pause and a start on
     // an idle stream) would commit the next batch's id, and that batch
     // would then be skipped whole.
-    def observe(skipping: Long = -1L): Seq[((Rule, LakeTable, IngestConfig), Boolean)] =
-      tables.flatMap { case rt @ (r, table, cfg) =>
+    def observe(skipping: Long = -1L): Seq[((Rule, LakeTable), Boolean)] =
+      tables.flatMap { case rt @ (r, table) =>
         if (pauseRequested(r.tableDir)) {
           if (paused.add(r.name)) MorFolds.drain(r.tableDir) // nothing of it in flight
           if (skipping >= 0 && skipping > table.refresh().committedBatchId)
@@ -177,7 +172,7 @@ object StreamIngest {
         } else {
           val catchUp = Files.exists(catchupMarker(r.tableDir))
           if (catchUp) {
-            Ingest.replayLog(table, ChangeLog.readDF(spark, logDir), cfg.copy(orderedDelivery = true))
+            Ingest.replayLog(table, ChangeLog.readDF(spark, logDir), r.cfg.copy(orderedDelivery = true))
             Files.deleteIfExists(catchupMarker(r.tableDir))
           }
           paused.remove(r.name)
@@ -218,12 +213,12 @@ object StreamIngest {
             // each task carries the micro-batch's local properties (its
             // batch id, call site and SQL execution root) and active session
             val session = batch.sparkSession.asInstanceOf[classic.SparkSession]
-            awaitAll(observe(skipping = batchId).map { case ((r, table, cfg), caughtUp) =>
+            awaitAll(observe(skipping = batchId).map { case ((r, table), caughtUp) =>
               SQLExecution.withThreadLocalCaptured(session, pool) {
                 // a batch the catch-up replay just covered is fenced out at
                 // the scan instead of re-merged through LWW
                 Ingest.applyBatch(table, batch, batchId,
-                  if (caughtUp) cfg.copy(orderedDelivery = true) else cfg)
+                  if (caughtUp) r.cfg.copy(orderedDelivery = true) else r.cfg)
                 if (live) foldOnCadence(spark, r.tableDir, r.cfg, batchId)
               }
             })

@@ -112,11 +112,12 @@ class ApplyPipelineSpec extends AnyFunSuite {
     val table = LakeTable.create(spark, TestSpark.tmpDir("graft-pipe-mor"), numBuckets = 8)
     val got = applyOnce(table, log, 0L, Ingest.IngestConfig(morMode = true))
     // eventsApplied/tombstonesWritten count live events before the per-batch
-    // dedup; deltaEventsAppended counts what the delta files hold after it
+    // dedup; deltaEventsAppended counts what the delta files hold after it,
+    // written by one task as one file per bucket
     check(got, jobs = 2,
       Ingest.BatchMetrics(0, 4000, 0, 0, 0, 3996, 585, 0, 4, 5),
       Map("eventsSeen" -> 4000, "deadLetters" -> 0, "batches" -> 1, "eventsApplied" -> 3996,
-        "tombstonesWritten" -> 585, "deltaEventsAppended" -> 400, "deltaFilesWritten" -> 1),
+        "tombstonesWritten" -> 585, "deltaEventsAppended" -> 400, "deltaFilesWritten" -> 8),
       Seq(lineageLine(0, 5, -1, -1, 4000, 3996, 585, 0, 0),
         lineageLine(0, 5, 0, 3999, 786, -1, -1, -1, -1),
         lineageLine(0, 5, 1, 3996, 923, -1, -1, -1, -1),
@@ -176,8 +177,8 @@ class ApplyPipelineSpec extends AnyFunSuite {
     Ingest.applyBatch(table, log.filter(col("seq") < 1000L), 0L)
 
     appendRange(1000L, 2000L, 250L)
-    val (partialJobs, partial) = TestSpark.jobsDuring(
-      Mor.fold(table, minEventsPerBucket = table.snapshot.flatDeltaHist.get.values.max))
+    val densest = table.snapshot.deltaFiles.groupBy(_.bucket).values.map(_.map(_.rows).sum).max
+    val (partialJobs, partial) = TestSpark.jobsDuring(Mor.fold(table, minEventsPerBucket = densest))
     assert(partial.bucketsFolded === 1, "the partial fold rewrites one bucket")
 
     appendRange(2000L, 3600L, 100L)
@@ -199,8 +200,9 @@ class ApplyPipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got === oracle)
     // folds read their delta files from the manifest with recorded schemas
-    // (no schema-merge job)
-    assert((partialJobs, logJobs, fullJobs, compactJobs, rebucketJobs) === ((9, 3, 7, 2, 2)),
+    // (no schema-merge job); a partial fold reads only its buckets' files and
+    // writes no remainder
+    assert((partialJobs, logJobs, fullJobs, compactJobs, rebucketJobs) === ((7, 3, 7, 2, 2)),
       "Spark jobs of (partial fold, log-only fold tick, full fold, compact, rebucket)")
   }
 
@@ -239,8 +241,10 @@ class ApplyPipelineSpec extends AnyFunSuite {
     val snap = table.refresh()
     assert(snap.numBuckets === 16 && snap.metrics.get("rebuckets").contains(1L))
     assert(snap.committedBatchId === 1L && snap.deltaFiles.nonEmpty)
-    assert(snap.flatDeltaHist === None,
-      "a histogram counted under the old bucket layout must be recorded as unknown")
+    // the append's files were written under 8 buckets and re-staged under 16
+    assert(snap.deltaFiles.map(_.bucket).toSet.exists(_ >= 8),
+      s"delta labels ${snap.deltaFiles.map(_.bucket).distinct} must follow the 16-bucket layout")
+    assert(MorSpec.mislabeledRows(table, snap) === 0L, "a committed label must match its rows")
     Mor.fold(table)
     val oracle = Oracle.contentSha(Oracle.replay(ChangelogGen.eventsLocal(cfg)))
       .map { case ((r, p), (sha, _)) => (r, p, sha) }.toSet

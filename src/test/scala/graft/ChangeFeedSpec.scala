@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.{ChangelogGen, GenConfig, Oracle}
-import graft.ingest.{Ingest, Mor}
+import graft.ingest.{Ingest, MergeApply, Mor}
 import graft.lake.{ChangeFeed, LakeTable, Maintenance}
 import graft.model.{ChangeEvent, Ops}
 import org.apache.spark.sql.DataFrame
@@ -97,6 +97,35 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(ChangeFeed.changesBetweenWithStats(table, v2, v3)._2.rowsInScope === 0,
       "a fold-only window is answered from snapshot metadata")
     assert(feedRows(ChangeFeed.changesBetween(table, v1, v3)) === want)
+  }
+
+  test("MOR window touching one bucket reads only that bucket's delta files") {
+    import spark.implicits._
+    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-cdf-bucket"), numBuckets = 8)
+    def rows(ids: Seq[Int], seq: Long) = ids.toDF("id").select(
+      concat(lit("r"), col("id") % 3).as("repo"), concat(lit("f"), col("id")).as("path"),
+      lit(if (seq == 1L) "insert" else "update").as("op"), lit(seq).as("seq"),
+      struct(concat(lit("r"), col("id") % 3).as("repo"), concat(lit("f"), col("id")).as("path"),
+        lit("c0").as("commit"), lit("scala").as("lang"), concat(lit("v"), lit(seq)).as("content")).as("after"))
+    MergeApply.appendDelta(table, rows(0 until 200, 1L), Map.empty)
+    val v1 = table.snapshot.version
+    val b = spark.range(200).select(table.bucketExpr(concat(lit("r"), col("id") % 3),
+      concat(lit("f"), col("id"))).as("b")).as[Int].head()
+    val inB = spark.range(200).select(col("id").cast("int").as("id"))
+      .filter(table.bucketExpr(concat(lit("r"), col("id") % 3), concat(lit("f"), col("id"))) === b)
+      .as[Int].collect().toSeq.take(5)
+    MergeApply.appendDelta(table, rows(inB, 2L), Map.empty)
+    val (s1, s2) = (table.snapshotAt(v1), table.snapshot)
+    assert(s1.deltaFiles.map(_.bucket).distinct.size === 8, "fixture: every bucket holds deltas at v1")
+
+    val (feed, stats) = ChangeFeed.changesBetweenWithStats(table, v1, s2.version)
+    assert(feed.select(col("path"), col(ChangeFeed.OpColName)).as[(String, String)].collect().toSet ===
+      inB.map(id => (s"f$id", "update")).toSet)
+    assert(stats.addedDeltaFiles === s2.deltaFiles.size - s1.deltaFiles.size)
+    assert(stats.oldFilesRead === s1.deltaFiles.count(_.bucket == b) &&
+      stats.newFilesRead === s2.deltaFiles.count(_.bucket == b),
+      s"the feed must read only bucket $b's delta files: $stats")
+    assert(stats.newFilesRead < s2.deltaFiles.size)
   }
 
   test("compaction in the window adds zero changes; tombstone expiry falls back to removed files") {

@@ -32,14 +32,14 @@ class LakeTableSpec extends AnyFunSuite {
       "repo STRING, path STRING, op STRING, seq BIGINT, after STRUCT<content: STRING>")
     val base = Seq(DataFile(1, "data/c1-ab/_bucket=1/part-0.parquet", 0, 10L, -900L, 42L, 700L),
       DataFile(5, "data/c2-cd/_bucket=5/part-1.parquet", 1, 2L, Long.MinValue, Long.MaxValue, 300L))
-    val deltas = Seq(DataFile(-1, "data/c3-ef/part-0.parquet", 1, 4L, Long.MinValue, Long.MaxValue,
-      200L, Some(events)))
+    val deltas = Seq(DataFile(2, "data/c3-ef/_bucket=2/part-0.parquet", 1, 4L, Long.MinValue,
+      Long.MaxValue, 200L, Some(events)))
     val refs = Seq(Manifest.write(dir, base, Manifest.BaseKind),
       Manifest.write(dir, deltas, Manifest.DeltaKind))
     val s = Snapshot(3L, 2L, sch.schemaId, 16, Seq.empty,
       Map(0 -> 99L, 3 -> 42L), Map("eventsApplied" -> 7L), 4L,
       Seq(TableSchema.base, sch), 123456789L, ddlSeq = 17L, maxSeq = 18L, targetFileRows = 4096L,
-      manifests = refs, flatDeltaHist = Some(Map(2 -> 4L)))
+      manifests = refs)
     val rt = Snapshot.fromJson(s.toJson)
     assert(rt === s)
     Manifest.clearCacheForTest()
@@ -81,8 +81,9 @@ class LakeTableSpec extends AnyFunSuite {
         e.getMessage)
     }
     val list = (r: String) => s""""manifestList":[$r],"""
-    // well-formed: loads, and its entry reads
-    val ok = oldShapeTable("graft-lake-fmt-ok", list, goodEntry)
+    // well-formed: loads, and its entry reads; an older build's flat-delta
+    // histogram field is ignored
+    val ok = oldShapeTable("graft-lake-fmt-ok", r => list(r) + """"flatHist":"",""", goodEntry)
     assert(LakeTable.load(spark, ok).snapshot.files.map(_.path) === Seq("data/c1/f.parquet"))
     // a pointer with inline entries (before segmented manifests): refused at
     // load, not skipped as torn, not "not a LakeTable", and not v0 instead
@@ -115,6 +116,18 @@ class LakeTableSpec extends AnyFunSuite {
       r => list(r.replace(""""kind":"base"""", """"kind":"delta"""")), goodEntry)
     Manifest.clearCacheForTest()
     refused("eventSchema")(LakeTable.load(spark, deltaDir).snapshot.deltaFiles.toList)
+    // an unfolded flat append: a delta entry without a bucket
+    val events = org.apache.spark.sql.types.StructType.fromDDL("repo STRING, path STRING, op STRING, seq BIGINT")
+    val flatDir = oldShapeTable("graft-lake-fmt-flat",
+      r => list(r.replace(""""kind":"base"""", """"kind":"delta"""")),
+      goodEntry.replace(""""bucket":"0"""", """"bucket":"-1"""").stripSuffix("}") +
+        s""","eventSchema":${Json.quote(events.json)}}""")
+    Manifest.clearCacheForTest()
+    val flat = LakeTable.load(spark, flatDir)
+    refused("bucket")(flat.snapshot.deltaFiles.toList)
+    Manifest.clearCacheForTest()
+    val e = intercept[TableFormatException](flat.read())
+    assert(e.getMessage.contains("fold the table with the build that wrote it"), e.getMessage)
   }
 
   test("a table that starts with the older inline-empty v0 loads at every version") {

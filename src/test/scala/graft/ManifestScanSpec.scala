@@ -40,6 +40,10 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         concat(lit(s"$tag-"), col("id")).as("content")).as("after"))
   }
 
+  /** The most delta rows one bucket of `s` holds, off the manifest. */
+  private def densest(s: Snapshot): Long =
+    s.deltaFiles.groupBy(_.bucket).values.map(_.iterator.map(_.rows).sum).max
+
   private def keyed(df: DataFrame, key: (String, String)): DataFrame =
     df.filter(col("repo") === key._1 && col("path") === key._2)
 
@@ -65,14 +69,13 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * equals the unpruned read filtered on the driver, builds its plan without
     * a Spark job (no listing, no schema merge), scans through manifest
     * indexes only, opens at most one base file per scan (one scan per schema
-    * group and join side) and, of the delta files, only the flat ones and
-    * the labeled ones of the key's bucket. (A scan whose join side turned
-    * out empty is dropped from the final adaptive plan; at least one key
-    * must show both kinds of scan.) */
+    * group and join side) and, of the delta files, exactly those labeled
+    * with the key's bucket. (A scan whose join side turned out empty is
+    * dropped from the final adaptive plan; at least one key must show both
+    * kinds of scan.) */
   private def assertKeyedMorReads(table: LakeTable, s: Snapshot,
       keys: Seq[(String, String)], what: String): Unit = {
     val all = table.read(s).collect()
-    val flat = s.deltaFiles.count(_.bucket < 0)
     val scanned = keys.map { key =>
       val (planJobs, df) = TestSpark.jobsDuring(keyed(table.read(s), key))
       assert(planJobs === 0, s"$what: building the keyed read of $key ran a job")
@@ -82,9 +85,9 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         .head().getInt(0)
       val (base, deltas) = scansRead(df)
       assert(base.forall(_ <= 1L), s"$what: base files opened per scan for $key: $base")
-      val canHold = flat + s.deltaFiles.count(_.bucket == bucket)
-      assert(deltas.forall(_ <= canHold),
-        s"$what: delta files opened per scan for $key: $deltas (flat + key's bucket: $canHold)")
+      val ofBucket = s.deltaFiles.count(_.bucket == bucket)
+      assert(deltas.forall(_ == ofBucket),
+        s"$what: delta files opened per scan for $key: $deltas (the key's bucket holds $ofBucket)")
       base.sum > 0L && deltas.sum > 0L
     }
     assert(scanned.contains(true), s"$what: no keyed read scanned base and delta files")
@@ -168,16 +171,16 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val log = ChangelogGen.events(spark, cfg).toDF()
     val mor = Ingest.IngestConfig(morMode = true)
     val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mscan-mor"), numBuckets = 8)
-    // base files, then flat deltas that a partial fold splits into folded
-    // buckets and per-bucket compacted deltas, then more flat deltas
+    // base files, then deltas whose densest bucket a partial fold folds,
+    // then more deltas, so some buckets hold files of two appends
     Ingest.replayLog(table, log.filter(col("seq") <= 1000L))
     Ingest.replayLog(table, log.filter(col("seq") > 1000L && col("seq") <= 2000L), mor)
-    Mor.fold(table, minEventsPerBucket = table.snapshot.flatDeltaHist.get.values.max)
+    Mor.fold(table, minEventsPerBucket = densest(table.snapshot))
     val v1 = table.snapshot.version
     Ingest.replayLog(table, log.filter(col("seq") > 2000L), mor)
     val s = table.snapshot
-    assert(s.files.nonEmpty && s.deltaFiles.exists(_.bucket >= 0) && s.deltaFiles.exists(_.bucket < 0),
-      "fixture: base files, compacted per-bucket deltas and flat deltas")
+    assert(s.files.nonEmpty && s.deltaFiles.groupBy(_.bucket).values.exists(_.size > 1),
+      "fixture: base files and buckets holding several delta files")
 
     def shas(rows: Array[Row]): Set[(String, String, String)] = rows.map(r =>
       (r.getAs[String]("repo"), r.getAs[String]("path"), Oracle.sha256Hex(r.getAs[String]("content")))).toSet
@@ -230,8 +233,8 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     MergeApply.appendDelta(table, delta(0L until 600L by 5, "update", 2L, "v2"), Map.empty)
     table.evolveSchema(_.addColumn("stars", "int"))
     MergeApply.appendDelta(table, withStars(delta(0L until 600L by 7, "update", 3L, "v3")), Map.empty)
-    // one dense bucket folds; the rest of the backlog becomes labeled deltas
-    Mor.fold(table, minEventsPerBucket = table.snapshot.flatDeltaHist.get.values.max)
+    // one dense bucket folds; the rest of the backlog stays in its files
+    Mor.fold(table, minEventsPerBucket = densest(table.snapshot))
     table.evolveSchema(_.renameColumn("lang", "language"))
     MergeApply.appendDelta(table,
       withStars(delta(3L until 600L by 11, "update", 4L, "v4", "language")), Map.empty)
@@ -241,7 +244,6 @@ class ManifestScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val images = s.deltaFiles.flatMap(_.eventSchema).map(_("after").dataType).distinct
     assert(s.deltaFiles.forall(_.eventSchema.isDefined) && images.size >= 3,
       s"fixture: delta files recording three image structs, got $images")
-    assert(s.deltaFiles.exists(_.bucket >= 0) && s.deltaFiles.exists(_.bucket < 0))
 
     // the one delta read equals Spark's own footer merge of the same files,
     // field by field of the merged image

@@ -57,7 +57,7 @@ class MorSpec extends AnyFunSuite {
       shuffled.collect().map(_.toString).toSet)
   }
 
-  test("flat-delta scheduling histogram: exact on the snapshot, subtracted by folds, scan fallback above the cap") {
+  test("delta files from appends and compactions hold only their labeled bucket's rows") {
     import spark.implicits._
     def rows(ids: Seq[Int], op: String, seqBase: Long) =
       ids.toDF("id").select(
@@ -66,87 +66,54 @@ class MorSpec extends AnyFunSuite {
         struct(concat(lit("r"), col("id") % 7).as("repo"),
           concat(lit("f"), col("id")).as("path"), lit("c0").as("commit"),
           lit("scala").as("lang"), concat(lit("v"), col("id") + seqBase).as("content")).as("after"))
-    def recount(table: LakeTable): Map[Int, Long] = {
-      val flat = table.refresh().deltaFiles.filter(_.bucket < 0)
-      if (flat.isEmpty) Map.empty
-      else spark.read.option("mergeSchema", "true")
-        .parquet(flat.map(f => table.resolve(f.path)): _*)
-        .groupBy(table.bucketExpr(col("repo"), col("path")).as("_b"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    def assertLabeled(table: LakeTable, what: String): Unit = {
+      val s = table.refresh()
+      assert(s.deltaFiles.nonEmpty, s"$what: fixture must hold delta files")
+      assert(s.deltaFiles.forall(f => f.bucket >= 0 && f.bucket < s.numBuckets),
+        s"$what: labels ${s.deltaFiles.map(_.bucket).distinct}")
+      assert(MorSpec.mislabeledRows(table, s) === 0L, s"$what: a row outside its file's bucket")
     }
 
-    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mor-hist"),
+    // appendDelta: raw events (several per key) written by several tasks,
+    // at most one file per bucket per task
+    val table = LakeTable.create(spark, TestSpark.tmpDir("graft-mor-labels-append"),
       numBuckets = 8, targetFileRows = 512)
     MergeApply.merge(table, rows(0 until 200, "insert", 0L), Map.empty)
-    assert(table.refresh().flatDeltaHist === Some(Map.empty),
-      "no flat deltas ⇒ exact empty histogram")
-    // two appends with overlapping buckets (raw events, several per key)
     MergeApply.appendDelta(table, rows(0 until 120, "update", 1000L), Map.empty)
     MergeApply.appendDelta(table, rows(60 until 200, "update", 2000L), Map.empty)
-    val h = table.refresh().flatDeltaHist
-    assert(h.isDefined && h.get.values.sum === 260L)
-    assert(h.get === recount(table), "histogram must equal an actual scan")
+    assertLabeled(table, "appendDelta")
+    assert(table.snapshot.deltaFiles.map(_.bucket).distinct.size === 8)
+    assert(table.snapshot.deltaRows === 260L)
 
-    // a partial fold consumes every flat file: histogram returns to empty
-    // even though deferred winners remain (they are LABELED, not flat)
-    val r = Mor.fold(table, minEventsPerBucket = 40L)
-    assert(r.bucketsFolded >= 1)
-    val afterFold = table.refresh()
-    assert(afterFold.flatDeltaHist === Some(Map.empty))
-    assert(recount(table) === Map.empty)
-    // fresh appends re-accumulate from zero
-    MergeApply.appendDelta(table, rows(0 until 30, "update", 3000L), Map.empty)
-    val h2 = table.refresh().flatDeltaHist
-    assert(h2.isDefined && h2.get.values.sum === 30L && h2.get === recount(table))
+    // the compaction tick: some bucket reaches CompactDeltasMinFiles files,
+    // and every bucket split across files becomes one file
+    (0 until Mor.CompactDeltasMinFiles).foreach { i =>
+      MergeApply.appendDelta(table, rows((0 until 200).filter(_ % 16 == i), "update", 3000L), Map.empty)
+    }
+    val r = Mor.fold(table, minEventsPerBucket = Long.MaxValue)
+    assert(r.bucketsFolded === 0 && table.snapshot.metrics.get("deltaCompactions").contains(1L))
+    assertLabeled(table, "compaction")
+    assert(table.snapshot.deltaFiles.groupBy(_.bucket).values.forall(_.size == 1))
     Mor.fold(table)
-    assert(table.refresh().flatDeltaHist === Some(Map.empty))
-    assert(table.read().count() === 200L)
-
-    // above the histogram cap: appends record UNKNOWN (None) and the
-    // partial-fold scheduler's scan fallback still folds correctly
-    val big = LakeTable.create(spark, TestSpark.tmpDir("graft-mor-hist-big"),
-      numBuckets = graft.lake.Snapshot.HistMaxBuckets + 1, targetFileRows = 512)
-    MergeApply.merge(big, rows(0 until 100, "insert", 0L), Map.empty)
-    MergeApply.appendDelta(big, rows(0 until 100, "update", 1000L), Map.empty)
-    assert(big.refresh().flatDeltaHist === None, "over the cap ⇒ unknown")
-    val rb = Mor.fold(big, minEventsPerBucket = 1L)
-    assert(rb.eventsFolded > 0L)
-    assert(big.refresh().flatDeltaHist === Some(Map.empty),
-      "a full flat sweep heals the histogram to exact-empty")
-    val contents = big.read().select(col("path"), col("content")).collect()
+    val contents = table.read().select(col("path"), col("content")).collect()
       .map(x => x.getString(0) -> x.getString(1)).toMap
-    (0 until 100).foreach(id => assert(contents(s"f$id") === s"v${id + 1000}"))
+    (0 until 200).foreach(id => assert(contents(s"f$id") === s"v${id + 3000}"))
 
-    // the fused MOR batch path (Ingest.applyBatch's MOR segment writer, its
-    // own observation) must keep the histogram exact too — the round-5 CLI drive caught a stale
-    // Some(empty) here when only the manual appendDelta path carried it
-    val logDir = TestSpark.tmpDir("graft-mor-hist-log")
+    // the fused MOR batch path (Ingest.applyBatch's MOR segment writer)
+    val logDir = TestSpark.tmpDir("graft-mor-labels-log")
     ChangeLog.write(ChangelogGen.events(spark, cfg), logDir, segmentsPerPartition = 2)
-    val sDir = TestSpark.tmpDir("graft-mor-hist-stream")
+    val sDir = TestSpark.tmpDir("graft-mor-labels-batch")
     LakeTable.create(spark, sDir, numBuckets = 8)
     Ingest.applyBatch(LakeTable.load(spark, sDir), ChangeLog.readDF(spark, logDir),
       batchId = 0L, cfg = Ingest.IngestConfig(morMode = true))
-    val st = LakeTable.load(spark, sDir)
-    val sh = st.snapshot.flatDeltaHist
-    assert(sh.isDefined, "fused MOR batches must carry the histogram")
-    assert(sh.get === recount(st), "fused-path histogram must equal an actual scan")
-    assert(sh.get.values.sum === st.snapshot.deltaRows)
+    assertLabeled(LakeTable.load(spark, sDir), "applyBatch")
 
-    // bounded catch-up replays (AvailableNow) SUPPRESS the per-batch
-    // histogram (pure overhead there — no cadence folds to schedule), so
-    // their appends poison it to UNKNOWN; the final fold heals it to
-    // exact-empty, restoring zero-job scheduling for a tail that resumes
-    val aDir = TestSpark.tmpDir("graft-mor-hist-an")
+    // a bounded streaming catch-up (AvailableNow micro-batches)
+    val aDir = TestSpark.tmpDir("graft-mor-labels-an")
     LakeTable.create(spark, aDir, numBuckets = 8)
-    StreamIngest.runAvailable(spark, logDir, aDir, TestSpark.tmpDir("graft-mor-hist-ck"),
+    StreamIngest.runAvailable(spark, logDir, aDir, TestSpark.tmpDir("graft-mor-labels-ck"),
       maxFilesPerTrigger = 4, cfg = Ingest.IngestConfig(morMode = true))
-    val at = LakeTable.load(spark, aDir)
-    assert(at.snapshot.flatDeltaHist === None,
-      "AvailableNow appends record UNKNOWN (scan fallback), not a wrong exact value")
-    Mor.fold(at)
-    assert(at.refresh().flatDeltaHist === Some(Map.empty),
-      "the final fold heals the suppressed histogram to exact-empty")
+    assertLabeled(LakeTable.load(spark, aDir), "runAvailable")
   }
 
   test("bucket-localized delta log: labels in the manifest, file-group pruned partial folds") {
@@ -169,8 +136,8 @@ class MorSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     val byBucket = (0 until 400).groupBy(bucketOf)
 
-    // 1. scattered appends + a nothing-dense fold tick → per-bucket
-    //    compacted delta files whose manifest labels carry the bucket
+    // 1. scattered appends (labeled files, several per bucket) + a
+    //    nothing-dense fold tick → one compacted delta file per bucket
     (0 until Mor.CompactDeltasMinFiles).foreach { i =>
       MergeApply.appendDelta(table,
         rows((0 until 400).filter(_ % Mor.CompactDeltasMinFiles == i), "update", 1000L),
@@ -185,22 +152,23 @@ class MorSpec extends AnyFunSuite {
       "one compacted file per bucket")
     assert(labeledSnap.deltaRows === 400L)
 
-    // 2. dense flat appends into ONE bucket; partial fold must read only the
-    //    flat files + that bucket's labeled file — every other labeled file
-    //    survives IDENTICALLY (same path), and only that bucket's base files
-    //    are rewritten
+    // 2. dense appends into ONE bucket; partial fold must read only that
+    //    bucket's files — every other bucket's file survives IDENTICALLY
+    //    (same path), and only that bucket's base files are rewritten
     val dense = byBucket.maxBy(_._2.size)._1
     val denseKeys = byBucket(dense)
     MergeApply.appendDelta(table, rows(denseKeys, "update", 2000L), Map.empty)
     val before = table.refresh()
-    val flatFiles = before.deltaFiles.filter(_.bucket < 0)
-    val keptLabeled = before.deltaFiles.filter(f => f.bucket >= 0 && f.bucket != dense)
-    assert(flatFiles.nonEmpty && keptLabeled.nonEmpty)
+    val (denseFiles, keptLabeled) = before.deltaFiles.partition(_.bucket == dense)
+    assert(denseFiles.size >= 2 && keptLabeled.nonEmpty)
+    // the labels alone name the one bucket the dense append touched
+    val appended = before.deltaFiles.filterNot(f => labeledSnap.deltaFiles.exists(_.path == f.path))
+    assert(appended.nonEmpty && appended.map(_.bucket).toSet === Set(dense))
 
     val r = Mor.fold(table, minEventsPerBucket = (denseKeys.size + 1).toLong)
     assert(r.bucketsFolded === 1)
-    assert(r.deltaFilesFolded === flatFiles.size + 1,
-      "fold must read only the flat appends plus the dense bucket's labeled file")
+    assert(r.deltaFilesFolded === denseFiles.size,
+      "fold must read only the dense bucket's files")
     assert(r.eventsFolded === denseKeys.size.toLong)
     val after = table.refresh()
     assert(keptLabeled.map(_.path).toSet.subsetOf(after.deltaFiles.map(_.path).toSet),
@@ -208,9 +176,8 @@ class MorSpec extends AnyFunSuite {
     val rewritten = before.files.filterNot(f => after.files.exists(_.path == f.path))
     assert(rewritten.nonEmpty && rewritten.forall(_.bucket === dense))
 
-    // 3. scheduling off the manifest alone (no flat files): a second dense
-    //    bucket accumulated ≥ threshold in its labeled file — fold selects it
-    //    without any flat scan input
+    // 3. scheduling off the manifest alone: a second dense bucket
+    //    accumulated ≥ threshold in its labeled file — fold selects it
     val dense2 = byBucket.filter(_._1 != dense).maxBy(_._2.size)._1
     val r2 = Mor.fold(table,
       minEventsPerBucket = byBucket(dense2).size.toLong)
@@ -233,7 +200,7 @@ class MorSpec extends AnyFunSuite {
     assert(table.read().count() === 400L)
   }
 
-  test("partial fold rewrites only dense buckets; remainder stays as one compacted delta") {
+  test("partial fold rewrites only dense buckets; the remainder stays in its delta files") {
     import spark.implicits._
     val tableDir = TestSpark.tmpDir("graft-mor-partial")
     val table = LakeTable.create(spark, tableDir, numBuckets = 8, targetFileRows = 16)
@@ -268,24 +235,32 @@ class MorSpec extends AnyFunSuite {
     val rewritten = before.files.filterNot(f => after.files.exists(_.path == f.path))
     assert(rewritten.nonEmpty && rewritten.forall(_.bucket === dense),
       s"partial fold must rewrite only bucket $dense, got ${rewritten.map(_.bucket).distinct}")
-    // remainder is live as a compacted delta and reads resolve it
-    assert(after.deltaFiles.nonEmpty && after.deltaRows === sparseKeys.size.toLong)
+    // the remainder stays live in the sparse buckets' files and reads resolve it
+    assert(after.deltaFiles.map(_.bucket).toSet === sparse.toSet &&
+      after.deltaRows === sparseKeys.size.toLong)
     val contents = table.read().select(col("path"), col("content")).collect()
       .map(r2 => r2.getString(0) -> r2.getString(1)).toMap
     (denseKeys ++ sparseKeys).foreach { id =>
       assert(contents(s"f$id") === s"v${id + 1000}", s"update to f$id must be visible") }
     assert(contents.size === 400)
 
-    // threshold nobody reaches + fragmented log (< CompactDeltasMinFiles
-    // appends is a no-op; at the threshold the log compacts to one file)
-    (0 until Mor.CompactDeltasMinFiles).foreach { i =>
-      MergeApply.appendDelta(table, rows(Seq(400 + i), "insert", 2000L), Map.empty) }
-    assert(table.refresh().deltaFiles.size >= Mor.CompactDeltasMinFiles)
+    // threshold nobody reaches + a fragmented bucket: one-key inserts into
+    // one bucket. Below CompactDeltasMinFiles files in any bucket a tick is
+    // a no-op; at the threshold every split bucket compacts to one file
+    val frag = spark.range(400, 2000).select(col("id").cast("int").as("id"))
+      .filter(table.bucketExpr(concat(lit("r"), col("id") % 5), concat(lit("f"), col("id"))) === dense)
+      .as[Int].take(Mor.CompactDeltasMinFiles).toSeq
+    frag.init.foreach(id => MergeApply.appendDelta(table, rows(Seq(id), "insert", 2000L), Map.empty))
+    val quiet = Mor.fold(table, minEventsPerBucket = 1000L)
+    assert(quiet.bucketsFolded === 0 && table.refresh().deltaFiles.size === frag.size - 1 + sparse.size,
+      "a tick below the file threshold compacts nothing")
+    MergeApply.appendDelta(table, rows(Seq(frag.last), "insert", 2000L), Map.empty)
     val rc = Mor.fold(table, minEventsPerBucket = 1000L)
     assert(rc.bucketsFolded === 0 && rc.eventsFolded === 0L)
     val compacted = table.refresh()
-    assert(compacted.deltaFiles.size <= 8, // bounded by numBuckets
-      s"delta log must compact to <= numBuckets files, got ${compacted.deltaFiles.size}")
+    assert(compacted.deltaFiles.groupBy(_.bucket).values.forall(_.size == 1) &&
+      compacted.deltaFiles.size === 1 + sparse.size,
+      s"delta log must compact to one file per bucket, got ${compacted.deltaFiles.map(_.bucket)}")
     assert(table.read().count() === 400L + Mor.CompactDeltasMinFiles)
 
     // full fold still converges and empties the delta list
@@ -573,7 +548,7 @@ class MorSpec extends AnyFunSuite {
       "folded tombstone must absorb stale COW replays too")
   }
 
-  test("bucket-pruned MOR reads: untouched buckets bypass the join; a lying histogram fails loudly") {
+  test("bucket-pruned MOR reads: untouched buckets bypass the join; relabeled files fail") {
     import spark.implicits._
     val tableDir = TestSpark.tmpDir("graft-mor-prune")
     val table = LakeTable.create(spark, tableDir, numBuckets = 8)
@@ -596,40 +571,46 @@ class MorSpec extends AnyFunSuite {
     MergeApply.appendDelta(table, rows(targetIds.take(20), "update", 1000L), Map.empty)
     val s = table.refresh()
 
-    // metadata (flat histogram) names exactly the touched bucket
-    assert(graft.lake.MorRead.touchedBuckets(s) === Some(Set(targetBucket)))
+    // the delta files' labels alone name exactly the touched bucket
+    assert(graft.lake.MorRead.touchedBuckets(s) === Set(targetBucket))
 
-    // blind control: histogram knocked out → no pruning possible
-    val blind = s.copy(flatDeltaHist = None)
-    assert(graft.lake.MorRead.touchedBuckets(blind).isEmpty)
-    val expected = graft.lake.MorRead.resolve(table, blind, broadcastMaxBytes = 0L)
-      .collect().map(_.toString).toSet
+    // blind control: every base file resolved against the deltas, no pruning
+    val blind = graft.lake.MorRead.resolveOn(table, s, s.files, s.deltaFiles, broadcastMaxBytes = 0L)
+      .filter(!col(LakeTable.DeletedCol)).select(s.schema.columns.map(c => col(c.name)): _*)
+    val expected = blind.collect().map(_.toString).toSet
 
     // pruned full-outer shape: passthrough Union present, result identical
     val pruned = graft.lake.MorRead.resolve(table, s, broadcastMaxBytes = 0L)
     val prunedPlan = pruned.queryExecution.executedPlan.toString
-    val blindPlan = graft.lake.MorRead.resolve(table, blind, broadcastMaxBytes = 0L)
-      .queryExecution.executedPlan.toString
+    val blindPlan = blind.queryExecution.executedPlan.toString
     assert(prunedPlan.contains("Union"),
       s"pruned plan must carry the untouched-bucket passthrough branch:\n$prunedPlan")
     assert(!blindPlan.contains("Union"),
-      s"without metadata the whole base must enter the join (no passthrough):\n$blindPlan")
+      s"without pruning the whole base must enter the join (no passthrough):\n$blindPlan")
     assert(pruned.collect().map(_.toString).toSet === expected)
     // pruned broadcast shape agrees too
     assert(graft.lake.MorRead.resolve(table, s).collect().map(_.toString).toSet === expected)
     // and the public read (which routes through resolve) matches the oracle rows
     assert(table.read().count() === 400)
 
-    // a LYING histogram (backlog actually in targetBucket, metadata claims
-    // another) must fail the query — never silently serve stale passthrough
-    val lying = s.copy(flatDeltaHist = Some(Map(((targetBucket + 1) % 8) -> 20L)))
-    val e = intercept[Throwable] {
-      graft.lake.MorRead.resolve(table, lying, broadcastMaxBytes = 0L).collect()
-    }
+    // RELABELED delta entries (rows in targetBucket, labels naming another)
+    // must fail the read — never silently serve stale passthrough — and a
+    // partial fold that selects them by label must fail, not fold them
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("MOR bucket pruning")),
-      s"expected the pruning guard to fire, got: ${messages(e).mkString(" | ")}")
+    def assertGuard(e: Throwable): Unit =
+      assert(messages(e).exists(_.contains("MOR bucket labels")),
+        s"expected the label guard to fire, got: ${messages(e).mkString(" | ")}")
+    val other = (targetBucket + 1) % 8
+    val relabeled = s.deltaFiles.map(_.copy(bucket = other))
+    assertGuard(intercept[Throwable] {
+      graft.lake.MorRead.resolve(table, s.copy(deltaFiles = relabeled), broadcastMaxBytes = 0L).collect()
+    })
+    val lied = table.commit(s.deltaFiles.map(_.path).toSet, Seq.empty, Map.empty, Map.empty,
+      newDeltaFiles = relabeled)
+    assert(lied.deltaFiles.map(_.bucket).toSet === Set(other))
+    assertGuard(intercept[Throwable](Mor.fold(table, minEventsPerBucket = 1L)))
+    assert(table.refresh().version === lied.version, "a failed fold commits nothing")
   }
 
   test("async fold worker: in-flight submits skip; failures rethrow at drain and at the next submit") {
@@ -699,4 +680,15 @@ class MorSpec extends AnyFunSuite {
     assert(maxSeen.get() <= 1,
       s"one-in-flight-fold-per-table violated: ${maxSeen.get()} concurrent folds")
   }
+}
+
+object MorSpec {
+  /** Rows of `s`'s delta files whose bucket under `s.numBuckets` is not
+    * their file's label (one job). */
+  def mislabeledRows(table: LakeTable, s: graft.lake.Snapshot): Long =
+    s.deltaFiles.map { f =>
+      graft.lake.MorRead.deltaEvents(table, Seq(f), s.numBuckets)
+        .filter(LakeTable.bucketExpr(col("repo"), col("path"), s.numBuckets) =!= f.bucket)
+        .select(col("repo"), col("path"))
+    }.reduceOption(_ unionByName _).fold(0L)(_.count())
 }

@@ -3,6 +3,7 @@
 
     python3 tools/ab_pairs.py --workdir DIR [--parent-rev HEAD~1] [--pairs 10]
                               [--seed 9001] [--workloads replay_bulk,live_tail]
+                              [--per-layer lake.delta_files,streaming.jobs_per_batch]
 
 The parent revision is exported with `git archive` into DIR/parent (a plain
 copy of its tracked files, rebuilt only when the revision changes); the change
@@ -23,6 +24,12 @@ than the parent's IQR), and a no-regression verdict against the metric's
                 the bound (a fraction of the parent's median)
     unresolved  the parent's IQR is wider than the bound (as a fraction of its
                 median) and not every change run beats every parent run
+
+With --per-layer NAMES (a comma-separated list of BENCHMARK.json per-layer
+metric names), each workload then runs the same number of pairs again with
+`--trace 1`, and for each named metric the script prints each side's median
+and how many pairs the change had lower. These figures are outside the
+verdict: they locate a change, they do not judge it.
 
 Every run's JSON result is appended to DIR/runs.jsonl.
 The script never modifies cdcbench/ or BENCHMARK.json.
@@ -57,11 +64,11 @@ def export_parent(rev: str, workdir: Path) -> Path:
     return dest
 
 
-def run_once(side: Path, workload: str, seed: int, seconds: float) -> dict:
+def run_once(side: Path, workload: str, seed: int, seconds: float, trace: int = 0) -> dict:
     env = dict(os.environ)
     env.pop("CARGO_TARGET_DIR", None)  # each checkout builds into its own .bench_build
     cmd = [sys.executable, "cdcbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     t0 = time.time()
     p = subprocess.run(cmd, cwd=side, env=env, capture_output=True, text=True)
     last = p.stdout.strip().splitlines()[-1] if p.stdout.strip() else ""
@@ -122,6 +129,48 @@ def report(workload: str, pairs: list, metrics: list) -> None:
               f"{iqr:>12.4g}  {v:<12}{'yes' if claim else 'no'} ({(cm / pm - 1) * 100:+.1f} %)")
 
 
+def run_pairs(parent: Path, w: str, args, log: Path, trace: int) -> list:
+    """`args.pairs` pairs of workload `w`, alternating which side goes first."""
+    pairs = []
+    for i in range(args.pairs):
+        order = [("parent", parent), ("change", ROOT)]
+        if i % 2:
+            order.reverse()
+        pair = {}
+        for side, d in order:
+            pair[side] = run_once(d, w, args.seed, args.seconds, trace)
+            with open(log, "a") as f:
+                f.write(json.dumps({"workload": w, "pair": i, "side": side, "trace": trace,
+                                    "seed": args.seed, **pair[side]}) + "\n")
+        pairs.append(pair)
+        if trace:
+            print(f"[{w} traced pair {i + 1}/{args.pairs}]", flush=True)
+        else:
+            vals = {s: pair[s].get("metrics", {}) for s in pair}
+            brief = ", ".join(f"{s}={v.get('read_p50_ms', {}).get('value', float('nan')):.0f}"
+                              for s, v in vals.items())
+            print(f"[{w} pair {i + 1}/{args.pairs}] read_p50_ms {brief}", flush=True)
+    return pairs
+
+
+def report_layers(workload: str, pairs: list, names: list) -> None:
+    """Medians of per-layer metrics, per side; outside the verdict."""
+    print(f"\n== {workload}: per-layer medians over {len(pairs)} traced pairs "
+          f"(outside the verdict)")
+    print(f"   {'metric':<40}{'parent':>14}{'change':>14}{'change lower':>14}")
+    for name in names:
+        both = [(pr["parent"]["metrics"][name]["value"], pr["change"]["metrics"][name]["value"])
+                for pr in pairs
+                if name in pr["parent"].get("metrics", {}) and name in pr["change"].get("metrics", {})]
+        if not both:
+            print(f"   {name:<40} (not measured)")
+            continue
+        pm = statistics.median(a for a, _ in both)
+        cm = statistics.median(b for _, b in both)
+        lower = sum(1 for a, b in both if b < a)
+        print(f"   {name:<40}{pm:>14.4g}{cm:>14.4g}{f'{lower}/{len(both)}':>14}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workdir", required=True, help="directory for the parent copy and runs.jsonl")
@@ -130,34 +179,26 @@ def main():
     ap.add_argument("--seed", type=int, default=9001)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--workloads", default="replay_bulk,live_tail")
+    ap.add_argument("--per-layer", default="",
+                    help="comma-separated per-layer metrics to report from traced pairs")
     args = ap.parse_args()
+    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
+    layer_names = [n for n in args.per_layer.split(",") if n]
+    unknown = [n for n in layer_names if n not in {m["name"] for m in spec["per_layer"]}]
+    if unknown:
+        sys.exit(f"ab_pairs: not a per-layer metric of BENCHMARK.json: {', '.join(unknown)}")
 
     workdir = Path(args.workdir).resolve()
     workdir.mkdir(parents=True, exist_ok=True)
     parent = export_parent(args.parent_rev, workdir)
-    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     log = workdir / "runs.jsonl"
-    results = {}
-    for w in args.workloads.split(","):
-        pairs = []
-        for i in range(args.pairs):
-            order = [("parent", parent), ("change", ROOT)]
-            if i % 2:
-                order.reverse()
-            pair = {}
-            for side, d in order:
-                pair[side] = run_once(d, w, args.seed, args.seconds)
-                with open(log, "a") as f:
-                    f.write(json.dumps({"workload": w, "pair": i, "side": side,
-                                        "seed": args.seed, **pair[side]}) + "\n")
-            pairs.append(pair)
-            vals = {s: pair[s].get("metrics", {}) for s in pair}
-            brief = ", ".join(f"{s}={v.get('read_p50_ms', {}).get('value', float('nan')):.0f}"
-                              for s, v in vals.items())
-            print(f"[{w} pair {i + 1}/{args.pairs}] read_p50_ms {brief}", flush=True)
-        results[w] = pairs
+    workloads = args.workloads.split(",")
+    results = {w: run_pairs(parent, w, args, log, trace=0) for w in workloads}
+    traced = {w: run_pairs(parent, w, args, log, trace=1) for w in workloads} if layer_names else {}
     for w, pairs in results.items():
         report(w, pairs, spec["end_to_end"])
+    for w, pairs in traced.items():
+        report_layers(w, pairs, layer_names)
 
 
 if __name__ == "__main__":
